@@ -1184,19 +1184,6 @@ def containment_probe_indexed(
 
 # ------------------------------------------------------------ MinHash-LSH
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, n: int = 2, num_hashes: int = 32
-) -> DataFrame:
-    """MinHash signature per document: sig[i] = min over shingles of
-    xxhash64(shingle_hash, i), computed from the per-doc hashed shingle
-    array entirely JVM-side (nested higher-order functions) — no
-    shuffle beyond building the arrays, which callers reuse for
-    verification."""
-    return _signatures_from_arrays(
-        shingle_arrays_unordered(df, id_col, text_col, n), num_hashes
-    ).select("id", "sig")
-
-
 def _signatures_from_arrays(arrs: DataFrame, num_hashes: int) -> DataFrame:
     """sig[i] = min over shingle hashes h of mix64(h ^ seed_i) — the
     standard one-permutation-per-seed MinHash family, computed as one

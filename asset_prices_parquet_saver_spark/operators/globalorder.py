@@ -20,19 +20,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-#: Optional eager barrier on the offsets relation. ADVICE r12 flagged
-#: that the lazily-checkpointed `d` is consumed by both the
-#: broadcast-offsets build (separate driver thread) and the probe-side
-#: stages, which could in principle compute the range shuffle twice
-#: concurrently. MEASURED r13 (interleaved A/B at sf0.1, 32 cores, and
-#: a fresh-JVM stderr audit): the duplicate compute never fires locally
-#: (zero "Block rdd_N already exists" warnings; block-manager
-#: getOrCompute de-dupes) and the eager barrier costs ~8-10%
-#: (jaccard med 5.47 vs 4.15 s, rfm 3.01 vs 2.76 s) — so it stays OFF.
-#: Flip to True if a cluster profile ever shows racing duplicate
-#: stages here.
-_EAGER_OFFSETS = False
-
 
 def with_global_row_number(
     df: DataFrame,
@@ -65,17 +52,13 @@ def with_global_row_number(
     # Pin ONCE at the branch point: the offsets branch must see the
     # SAME partition boundaries as the data branch — two separate
     # executions of a range partitioner re-sample them, and without the
-    # barrier the plan also scans+shuffles the input twice. The
-    # checkpoint on `d` is LAZY; the EAGER barrier lives on the tiny
-    # offsets relation below, whose blocking job materializes `d`'s
-    # blocks as a side effect. The r12 all-lazy form raced instead:
-    # broadcast exchanges build on a separate driver thread, so the
-    # offsets job and the probe-side stages both found `d`
-    # un-materialized and computed the whole range shuffle + sort
-    # TWICE concurrently (driver-confirmed regressions across the
-    # globalorder family: jaccard rank-encode 2.4→4.6 s, rfm/ntile/
-    # pack). One blocking job per call — one FEWER than the pre-r12
-    # eager-`d` form, which paid separate checkpoint and offsets jobs.
+    # pin the plan also scans+shuffles the input twice. The checkpoint
+    # is LAZY: building the query runs no job. The first action
+    # materializes `d`'s blocks, and the tiny offsets aggregate and the
+    # probe side both read them. An eager barrier on the offsets
+    # relation measured 8-10% slower (interleaved A/B at sf0.1) and the
+    # duplicate compute it guarded against never fired locally (the
+    # block manager's getOrCompute de-dupes concurrent readers).
     d = d.withColumn(
         "__lrn", F.row_number().over(local).cast("long")
     ).localCheckpoint(eager=False)
@@ -93,13 +76,7 @@ def with_global_row_number(
             Window.unboundedPreceding, Window.unboundedFollowing
         )
         proj.append(F.sum("__cnt").over(whole).alias(total_col))
-    # EAGER: runs the ≤ num_partitions-row offsets job NOW, through
-    # `d`'s lazy checkpoint — after this line every consumer (broadcast
-    # build, probe side) reads materialized blocks; nothing can race a
-    # recompute of the range shuffle.
     offsets = counts.select(*proj)
-    if _EAGER_OFFSETS:
-        offsets = offsets.localCheckpoint()
     return (
         d.join(F.broadcast(offsets), "__pid")
         .withColumn(rn_col, F.col("__lrn") + F.col("__off"))
@@ -168,8 +145,6 @@ def with_grouped_row_number(
         )
         proj.append(F.sum("__cnt").over(whole).alias(cnt_col))
     offsets = counts.select(*proj)
-    if _EAGER_OFFSETS:
-        offsets = offsets.localCheckpoint()
     return (
         d.join(F.broadcast(offsets), ["__pid", *group_cols])
         .withColumn(rn_col, F.col("__lrn") + F.col("__off"))
@@ -206,11 +181,9 @@ def with_global_cumsum(
         .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    # same barrier rationale as with_global_row_number: one execution of
-    # the range partitioner shared by both branches — lazy checkpoint on
-    # `d`, EAGER on the tiny offsets relation below (whose job
-    # materializes `d`; the all-lazy r12 form let the broadcast thread
-    # and the probe side race a duplicate compute of the range shuffle)
+    # same pin rationale as with_global_row_number: one execution of
+    # the range partitioner shared by both branches, through a lazy
+    # checkpoint on `d` that the first action materializes
     d = d.withColumn("__lcum", F.sum(value_col).over(local)).localCheckpoint(
         eager=False
     )
@@ -222,8 +195,6 @@ def with_global_cumsum(
     offsets = totals.select(
         "__pid", F.coalesce(F.sum("__tot").over(prev), F.lit(0)).alias("__off")
     )
-    if _EAGER_OFFSETS:
-        offsets = offsets.localCheckpoint()
     return (
         d.join(F.broadcast(offsets), "__pid")
         .withColumn(cum_col, F.col("__lcum") + F.col("__off"))

@@ -1,10 +1,18 @@
 """Similarity search over embeddings (X3; SURVEY §2.11).
 
-Brute-force cosine top-k is the correctness baseline (query side
-broadcast → no shuffle of the big side; the window top-k shuffles only
-(query_id, candidates)). The LSH-bucketed variant is the scale path: at
-100 TB the corpus side is hash-bucketed by sign-pattern so each query
-only scans its bucket's candidates.
+Brute-force cosine top-k is the correctness baseline; LSH top-k is the
+scale path, where each query only scores the corpus vectors that share
+one of its hyperplane buckets. Both run ONE blocked kernel
+(``_blocked_topk``), the partition-local top-k with a pruning bound that
+REPOSE (ICDE 2021) merges globally: the corpus is hash-grouped into row
+blocks, the collected query set is broadcast to every block, and each
+block scores all its (query, vector) pairs with one matmul — the LSH
+variant masks them to pairs whose bucket codes, computed in the same
+kernel from the fixed-seed planes, collide in any table. A block emits
+only its per-query top-k (plus a one-rounding-unit slack), so only
+B·q·k narrow rows reach the global window rank. The block count comes
+from the optimized plan's size estimate, so building either query runs
+no Spark job and depends on no core count.
 
 Kernels: all pair scoring runs as Arrow-batched numpy (one matmul or
 einsum per batch inside ``mapInPandas``) — the interpreted
@@ -43,6 +51,33 @@ def auto_num_blocks(
     return max(min_blocks, math.ceil(max(int(n_rows), 1) / rows_per_block))
 
 
+def blocks_for_plan_size(
+    size_in_bytes: int, row_bytes: int, rows_per_block: int
+) -> int:
+    """:func:`auto_num_blocks` from the optimizer's size estimate: rows
+    ≈ ``size_in_bytes / row_bytes``. File scans report on-disk bytes
+    against Spark's default per-row width, which overestimates the row
+    count for vector columns — the error lands on the safe side (more,
+    smaller blocks), never on a larger per-task matrix."""
+    rows = -(-int(size_in_bytes) // max(int(row_bytes), 1))
+    return auto_num_blocks(rows, rows_per_block)
+
+
+def plan_num_blocks(df: DataFrame, rows_per_block: int) -> int:
+    """Block count for ``df`` without running a Spark job: the optimized
+    plan's ``sizeInBytes`` divided by Spark's own per-row size estimate
+    (8 bytes of row overhead plus each column's default width), fed to
+    :func:`blocks_for_plan_size`. No core count enters, so the blocking
+    — and with it the block-local top-k — is the same on every cluster.
+    A plan with no size estimate (an RDD-backed relation reports
+    ``spark.sql.defaultSizeInBytes``) falls back to one count."""
+    jdf = df._jdf
+    size = int(jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    if size >= jdf.sparkSession().sessionState().conf().defaultSizeInBytes():
+        return auto_num_blocks(df.count(), rows_per_block)
+    return blocks_for_plan_size(size, 8 + jdf.schema().defaultSize(), rows_per_block)
+
+
 def _rowwise_cosine(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
     """Score candidate pairs: every column but the two vectors passes
     through; appends ``raw_cosine``.  One einsum per Arrow batch.
@@ -73,37 +108,45 @@ def _rowwise_cosine(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
     return df.mapInPandas(gen, schema + ", raw_cosine double")
 
 
-def cosine_topk(
+#: corpus rows per top-k block: the q×block score matrix and the
+#: block's collected vectors are the per-task memory
+_TOPK_ROWS_PER_BLOCK = 65536
+
+
+def _blocked_topk(
     emb: DataFrame,
     queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_decimals: int = 6,
-    num_blocks: int | None = None,
-    rows_per_block: int = 65536,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    round_decimals: int,
+    num_blocks: int | None,
+    rows_per_block: int,
+    lsh: tuple[int, int, int | None] | None = None,
 ) -> DataFrame:
-    """Exact top-k nearest corpus vectors per query vector by cosine.
+    """The one top-k kernel behind :func:`cosine_topk` and
+    :func:`ann_lsh_topk`: partition-local top-k with a pruning bound,
+    merged by one global rank (the REPOSE scheme).
 
-    Output: query_id, vec_id, cosine (rounded), rank. Rank is computed
-    on the *rounded* similarity with id tie-break, so the result set is
-    deterministic across engines and partitionings.
+    The corpus is hash-grouped into ~``rows_per_block`` row blocks
+    (:func:`plan_num_blocks` unless ``num_blocks`` is given); the probe
+    set is collected into one row and broadcast to every block. Per
+    block, one matmul scores every (query, corpus) pair. With ``lsh =
+    (num_planes, num_tables, max_planes)`` the candidates are masked to
+    pairs whose bucket codes — from the fixed-seed :func:`lsh_planes`,
+    the first ``num_planes`` of a ``max_planes`` tensor when set — are
+    equal in ANY table; a pair colliding in several tables is one
+    candidate. Self-matches (equal ids) and zero-norm vectors (cosine
+    undefined) are never candidates. Each block emits only its per-query
+    top-k, so the output is B·q·k narrow rows, not a candidate set; the
+    JVM-side ``F.round`` + window rank picks the exact final k.
 
-    Execution: the corpus is hash-grouped into row blocks of ~
-    ``rows_per_block`` vectors (``num_blocks`` overrides the auto
-    sizing); the (small, broadcast) query set is scored against each
-    block with one numpy matmul, and each task emits only its block's
-    per-query top-k — the global top-k is a subset of the union, so the
-    JVM-side window rank over B·q·k rows reproduces the exact answer.
-    The corpus is never shuffled; scoring parallelism = the block
-    count, which grows with the corpus while per-task memory stays
-    constant (~rows_per_block·dim·8 bytes + the q×block score matrix).
-    """
+    Ids are assumed unique on each side (a corpus id is one vector)."""
     import numpy as np
     import pandas as pd
 
     if num_blocks is None:
-        num_blocks = auto_num_blocks(emb.count(), rows_per_block)
+        num_blocks = plan_num_blocks(emb, rows_per_block)
     e = emb.select(
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(num_blocks)).alias("block"),
         F.col(id_col).alias("vec_id"),
@@ -116,25 +159,54 @@ def cosine_topk(
         )
         .agg(F.collect_list(F.struct("query_id", "qv")).alias("probes"))
     )
-    cross = blocks.crossJoin(F.broadcast(q_all)).repartition(num_blocks)
+    cross = blocks.crossJoin(F.broadcast(q_all))
+    slack = 10.0 ** -round_decimals
+
+    def vectors(rows, id_name, vec_name):
+        """(ids, vectors, norms) of the non-zero-norm rows."""
+        if not len(rows):
+            return np.empty(0, "int64"), np.empty((0, 0)), np.empty(0)
+        ids = np.array([r[id_name] for r in rows], dtype="int64")
+        X = np.array([r[vec_name] for r in rows], dtype="float64")
+        n = np.linalg.norm(X, axis=1)
+        ok = n > 0
+        return ids[ok], X[ok], n[ok]
+
+    def codes(X, planes):
+        """(n, T) bucket codes: bit p of table t = sign(x · planes[t, p])."""
+        bits = (X @ planes.reshape(-1, X.shape[1]).T) > 0
+        weights = 1 << np.arange(planes.shape[1], dtype="int64")
+        return bits.reshape(len(X), *planes.shape[:2]) @ weights
 
     def score(batches):
+        probe = planes = None  # the broadcast row is identical in every block
         for pdf in batches:
             for items, probes in zip(pdf["items"], pdf["probes"]):
-                if not len(items) or not len(probes):
+                if probe is None:
+                    probe = vectors(probes, "query_id", "qv")
+                    if lsh is not None and len(probe[0]):
+                        num_planes, num_tables, max_planes = lsh
+                        planes = lsh_planes(
+                            max_planes or num_planes, num_tables, probe[1].shape[1]
+                        )[:, :num_planes, :]
+                        qcodes = codes(probe[1], planes)
+                qids, Q, qn = probe
+                ids, A, an = vectors(items, "vec_id", "v")
+                if not len(qids) or not len(ids):
                     continue
-                ids = np.array([it["vec_id"] for it in items])
-                qids = np.array([p["query_id"] for p in probes])
-                A = np.array([it["v"] for it in items])
-                Q = np.array([p["qv"] for p in probes])
-                An = A / np.linalg.norm(A, axis=1, keepdims=True)
-                Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-                S = Qn @ An.T  # (q, n)
+                S = (Q @ A.T) / (qn[:, None] * an[None, :])  # (q, n)
+                cand = ids[None, :] != qids[:, None]
+                if planes is not None:
+                    acodes = codes(A, planes)
+                    hit = np.zeros_like(cand)
+                    for t in range(acodes.shape[1]):
+                        hit |= qcodes[:, t, None] == acodes[None, :, t]
+                    cand &= hit
                 Sr = np.round(S, round_decimals)
                 out_q, out_i, out_c = [], [], []
                 for qi in range(len(qids)):
-                    mask = ids != qids[qi]
-                    cand_ids, r, raw = ids[mask], Sr[qi][mask], S[qi][mask]
+                    m = cand[qi]
+                    cand_ids, r, raw = ids[m], Sr[qi][m], S[qi][m]
                     # block-local top-k under the final window's order
                     # (rounded desc, then id asc) — widened by one unit
                     # in the last rounded place: np.round is half-EVEN
@@ -146,15 +218,15 @@ def cosine_topk(
                     order = np.lexsort((cand_ids, -r))
                     if len(order) > k:
                         kth = r[order[k - 1]]
-                        order = order[r[order] >= kth - 10.0 ** -round_decimals]
+                        order = order[r[order] >= kth - slack]
                     out_q.append(np.full(len(order), qids[qi]))
                     out_i.append(cand_ids[order])
                     out_c.append(raw[order])
                 yield pd.DataFrame(
                     {
-                        "query_id": np.concatenate(out_q) if out_q else np.array([], "int64"),
-                        "vec_id": np.concatenate(out_i) if out_i else np.array([], "int64"),
-                        "raw_cosine": np.concatenate(out_c) if out_c else np.array([], "float64"),
+                        "query_id": np.concatenate(out_q),
+                        "vec_id": np.concatenate(out_i),
+                        "raw_cosine": np.concatenate(out_c),
                     }
                 )
 
@@ -172,6 +244,38 @@ def cosine_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "vec_id", "cosine", "rank")
+    )
+
+
+def cosine_topk(
+    emb: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    round_decimals: int = 6,
+    num_blocks: int | None = None,
+    rows_per_block: int = _TOPK_ROWS_PER_BLOCK,
+) -> DataFrame:
+    """Exact top-k nearest corpus vectors per query vector by cosine.
+
+    Output: query_id, vec_id, cosine (rounded), rank. Rank is computed
+    on the *rounded* similarity with id tie-break, so the result set is
+    deterministic across engines and partitionings. A query is never
+    its own neighbour; zero-norm vectors have no cosine and take no
+    part.
+
+    Execution: :func:`_blocked_topk` with no candidate mask — the
+    broadcast query set is scored against each ~``rows_per_block``
+    corpus block with one numpy matmul, and each task emits only its
+    block's per-query top-k (the global top-k is a subset of the
+    union). The corpus is never shuffled wide; the block count comes
+    from the optimized plan's size estimate (no Spark job, no core
+    count), and per-task memory stays ~rows_per_block·dim·8 bytes plus
+    the q×block score matrix as the corpus grows.
+    """
+    return _blocked_topk(
+        emb, queries, k, id_col, vec_col, round_decimals, num_blocks, rows_per_block
     )
 
 
@@ -624,7 +728,8 @@ def auto_num_planes(
 
 def lsh_planes(num_planes: int, num_tables: int, dim: int):
     """The fixed-seed hyperplane tensor (num_tables, num_planes, dim)
-    every worker derives identically inside :func:`_with_buckets`.
+    every worker derives identically inside :func:`_with_buckets` and
+    the LSH mask of :func:`_blocked_topk`.
 
     Exposed so the correctness oracle can inline the SAME constants into
     SQL: the planes are data-independent, so a DuckDB mirror computing
@@ -709,14 +814,21 @@ def ann_lsh_topk(
     num_tables: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    num_blocks: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: multi-table random-hyperplane LSH.
 
     Candidates = corpus vectors sharing the query's bucket in ANY of the
-    ``num_tables`` independent tables (union → distinct), reranked by
-    exact cosine. Per-query work ≈ num_tables · n / 2^num_planes; recall
-    grows with num_tables — the standard recall/cost dial. Corpus side
-    shuffles on (table, bucket); queries broadcast.
+    ``num_tables`` independent tables, reranked by exact cosine.
+    Per-query work ≈ num_tables · n / 2^num_planes; recall grows with
+    num_tables — the standard recall/cost dial.
+
+    Execution: :func:`_blocked_topk` with the LSH collision mask — the
+    same blocked kernel as :func:`cosine_topk`. Each corpus block
+    computes its own and the broadcast queries' bucket codes in the
+    kernel and keeps only the colliding pairs' block-local top-k; no
+    vector is copied per table, the corpus never shuffles on a bucket
+    key, and only (query_id, vec_id, cosine) rows reach the global rank.
 
     ``num_planes=None`` → :func:`auto_num_planes` from one corpus
     count: per-query candidate cost stays CONSTANT as the corpus grows
@@ -726,40 +838,9 @@ def ann_lsh_topk(
     if num_planes is None:
         num_planes = auto_num_planes(emb.count())
         max_planes = AUTO_PLANES_HI
-    e = _with_buckets(
-        emb.select(F.col(id_col).alias("vec_id"), to_double_array(vec_col).alias("v")),
-        "vec_id",
-        "v",
-        num_planes,
-        num_tables,
-        max_planes=max_planes,
-    )
-    q = _with_buckets(
-        queries.select(
-            F.col(id_col).alias("query_id"), to_double_array(vec_col).alias("qv")
-        ),
-        "query_id",
-        "qv",
-        num_planes,
-        num_tables,
-        max_planes=max_planes,
-    )
-    cand = (
-        e.join(F.broadcast(q), ["table", "bucket"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "qv", "vec_id", "v")
-    )
-    # dedupe after scoring (narrow rows) — see ann_ivf_topk.
-    scored = _rowwise_cosine(cand, "qv", "v").select(
-        "query_id", "vec_id", F.round("raw_cosine", 6).alias("cosine")
-    ).distinct()
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
+    return _blocked_topk(
+        emb, queries, k, id_col, vec_col, 6, num_blocks, _TOPK_ROWS_PER_BLOCK,
+        lsh=(num_planes, num_tables, max_planes),
     )
 
 

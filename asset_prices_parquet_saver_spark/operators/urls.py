@@ -248,18 +248,6 @@ def append_url_index(
     spark.catalog.refreshTable(table)
 
 
-def compact_url_index(
-    spark, table: str, num_buckets: int = 32
-) -> tuple[int, int]:
-    """Fold the seen-set's accumulated append files — the shared
-    rewrite→verify→swap CAS body, keyed on ``canon``."""
-    from asset_prices_parquet_saver_spark.operators.incremental_dedup import (
-        _compact_bucketed_index,
-    )
-
-    return _compact_bucketed_index(spark, table, num_buckets, ("canon",))
-
-
 def run_streaming_frontier(
     spark,
     docs_stream: DataFrame,

@@ -146,12 +146,3 @@ def fetch_yfinance_bars(symbols: DataFrame, per_symbol_delay: float = 0.5) -> Da
 
     return symbols.repartition(32, "symbol").mapInPandas(fetch, RAW_BAR_SCHEMA)
 
-
-def fetch_eodhd_symbols(exchanges: list[str] | None = None) -> DataFrame:
-    """EODHD exchange symbol lists (download_historical_price.py:166-203;
-    default exchanges at :178). Network fetch is not available in this
-    environment — load symbol lists from Parquet fixtures instead."""
-    raise FetcherUnavailable(
-        "EODHD fetch requires network access; load symbol lists from "
-        "Parquet fixtures instead"
-    )

@@ -154,10 +154,6 @@ def _spec_snapshot(mv_table: str) -> tuple[int | None, dict]:
         ) from None
 
 
-def _read_spec(mv_table: str) -> dict:
-    return _spec_snapshot(mv_table)[1]
-
-
 def _state_cols(aggs: list[list]) -> list[tuple]:
     """Flatten the agg spec into hidden state columns:
     (state_col, combine_kind, input_col, params). ``params`` is the

@@ -16,3 +16,15 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def pin_seam(monkeypatch):
+    """Setter for the ``functions.pins.ENABLED`` seam; monkeypatch puts
+    the original value back when the test ends, pass or fail."""
+    from asset_prices_parquet_saver_spark.functions import pins
+
+    def set_seam(value: bool) -> None:
+        monkeypatch.setattr(pins, "ENABLED", value)
+
+    return set_seam

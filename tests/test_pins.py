@@ -18,7 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from asset_prices_parquet_saver_spark.functions import pins
 from asset_prices_parquet_saver_spark.operators.analytics import basket_rules
 from asset_prices_parquet_saver_spark.operators.text import pmi_cooccurrence
 
@@ -27,16 +26,14 @@ def _rows(df, *sort_cols):
     return [tuple(r) for r in df.orderBy(*sort_cols).collect()]
 
 
-def _with_seam(value: bool, fn):
-    old = pins.ENABLED
-    pins.ENABLED = value
-    try:
-        return fn()
-    finally:
-        pins.ENABLED = old
+def _on_and_off(pin_seam, fn):
+    pin_seam(True)
+    on = fn()
+    pin_seam(False)
+    return on, fn()
 
 
-def test_basket_rules_pin_is_result_identical(spark):
+def test_basket_rules_pin_is_result_identical(spark, pin_seam):
     baskets = spark.createDataFrame(
         [
             (1, "a"), (1, "b"), (1, "c"),
@@ -51,10 +48,11 @@ def test_basket_rules_pin_is_result_identical(spark):
         basket_rules(baskets, "o", "it", min_support=0.2),
         "antecedent", "consequent",
     )
-    assert _with_seam(True, build) == _with_seam(False, build)
+    on, off = _on_and_off(pin_seam, build)
+    assert on == off
 
 
-def test_pmi_totals_fold_is_result_identical(spark):
+def test_pmi_totals_fold_is_result_identical(spark, pin_seam):
     docs = spark.createDataFrame(
         [
             (1, "the quick brown fox jumps the fox"),
@@ -68,7 +66,8 @@ def test_pmi_totals_fold_is_result_identical(spark):
         pmi_cooccurrence(docs, "doc_id", "text", window=2, min_count=1, k=50),
         "a", "b",
     )
-    assert _with_seam(True, build) == _with_seam(False, build)
+    on, off = _on_and_off(pin_seam, build)
+    assert on == off
 
 
 def test_basket_rules_plan_has_no_duplicated_scan(spark, sf_dir):

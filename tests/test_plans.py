@@ -112,13 +112,44 @@ def test_media_meta_prunes_payload_column(spark, sf_dir):
     assert read_schema, "expected a parquet scan"
 
 
+def _subtree(plan: str, node: str) -> str:
+    """The lines of the first ``node`` operator and everything under it
+    in a ``toString`` plan tree (children are indented deeper)."""
+    lines = plan.splitlines()
+    start = next(i for i, ln in enumerate(lines) if node in ln)
+    depth = lines[start].index(node)
+    out = [lines[start]]
+    for ln in lines[start + 1:]:
+        body = ln.lstrip(" :|+-")
+        if len(ln) - len(body) <= depth:
+            break
+        out.append(ln)
+    return "\n".join(out)
+
+
 def test_similarity_queries_broadcast_query_side(spark, sf_dir):
     """ANN candidate joins broadcast the (tiny) probe side — the corpus
     must shuffle at most on its bucket/cell key, never be broadcast."""
-    for name in ("ann_lsh_topk", "ann_ivf_topk"):
-        plan = _plan(QUERIES[name](spark, sf_dir))
-        assert "BroadcastHashJoin" in plan, name
-        assert "CartesianProduct" not in plan, name
+    plan = _plan(QUERIES["ann_ivf_topk"](spark, sf_dir))
+    assert "BroadcastHashJoin" in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_ann_lsh_topk_broadcasts_probes_into_one_kernel(spark, sf_dir):
+    """LSH top-k scores collisions inside the blocked kernel: the
+    collected probe aggregate is the broadcast build side of a nested
+    loop join with the corpus blocks, the corpus is never broadcast,
+    and one MapInPandas does all the work — no (table, bucket) join."""
+    plan = _plan(QUERIES["ann_lsh_topk"](spark, sf_dir))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin BuildRight" in plan
+    build = _subtree(plan, "BroadcastExchange")
+    assert "collect_list(struct(query_id" in build  # the probe aggregate
+    assert "items" not in build and "block" not in build  # not the corpus
+    assert plan.count("BroadcastExchange") == 1
+    assert plan.count("MapInPandas") == 1
+    assert "HashJoin" not in plan and "SortMergeJoin" not in plan
+    assert "bucket" not in plan and "table#" not in plan
 
 
 def test_cosine_topk_never_shuffles_vectors_wide(spark, sf_dir):

@@ -72,21 +72,15 @@ def no_auto_broadcast(spark):
 
 @pytest.mark.parametrize("name", SCALE_QUERIES)
 def test_scaling_dims_shuffle_join_when_broadcast_impossible(
-    spark, sf_dir, name, no_auto_broadcast
+    spark, sf_dir, name, no_auto_broadcast, pin_seam
 ):
     # build with the shared-subtree pin seam OFF: a pinned query's
     # final plan reads the fact join from a checkpointed ExistingRDD,
     # hiding the join strategy this lint exists to check — the
     # unpinned form plans the identical join subtree inline (the pin
     # never changes strategy, only how many times the subtree runs)
-    from asset_prices_parquet_saver_spark.functions import pins
-
-    old = pins.ENABLED
-    pins.ENABLED = False
-    try:
-        df = QUERIES[name](spark, sf_dir)
-    finally:
-        pins.ENABLED = old
+    pin_seam(False)
+    df = QUERIES[name](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     if name != "nation_trade_pagerank":
         # the scaling-dim joins fall back to a shuffle strategy...
@@ -169,9 +163,7 @@ _BROADCAST_ALLOWLIST: dict[tuple[str, str], int] = {
     ("asset_prices_parquet_saver_spark/operators/similarity.py",
      'corpus.join(F.broadcast(probes), "cell")'): 2,
     ("asset_prices_parquet_saver_spark/operators/similarity.py",
-     'cross = blocks.crossJoin(F.broadcast(q_all)).repartition(num_blocks)'): 1,
-    ("asset_prices_parquet_saver_spark/operators/similarity.py",
-     'e.join(F.broadcast(q), ["table", "bucket"])'): 1,
+     'cross = blocks.crossJoin(F.broadcast(q_all))'): 1,
     ("asset_prices_parquet_saver_spark/operators/similarity.py",
      'pairs = sigs.join(F.broadcast(q), sigs["id"] != q["query_id"]).select('): 2,
     ("asset_prices_parquet_saver_spark/operators/similarity.py",
