@@ -4,15 +4,16 @@ Brute-force cosine top-k is the correctness baseline; LSH top-k is the
 scale path, where each query only scores the corpus vectors that share
 one of its hyperplane buckets. Both run ONE blocked kernel
 (``_blocked_topk``), the partition-local top-k with a pruning bound that
-REPOSE (ICDE 2021) merges globally: the corpus is hash-grouped into row
-blocks, the collected query set is broadcast to every block, and each
-block scores all its (query, vector) pairs with one matmul — the LSH
-variant masks them to pairs whose bucket codes, computed in the same
-kernel from the fixed-seed planes, collide in any table. A block emits
-only its per-query top-k (plus a one-rounding-unit slack), so only
-B·q·k narrow rows reach the global window rank. The block count comes
-from the optimized plan's size estimate, so building either query runs
-no Spark job and depends on no core count.
+REPOSE (ICDE 2021) merges globally: the corpus is hash-grouped into
+blocks, the collected query set is broadcast to every block, and the
+exact variant scores all of a block's (query, vector) pairs with one
+matmul, while the LSH variant computes the block's bucket codes from
+the fixed-seed planes in the same kernel and scores only the pairs
+whose codes collide in some table. A block emits only its per-query
+top-k (plus a one-rounding-unit slack), so only B·q·k narrow rows reach
+the global window rank. The block count comes from the optimized
+plan's size estimate in bytes, so building either query runs no Spark
+job and depends on no core count.
 
 Kernels: all pair scoring runs as Arrow-batched numpy (one matmul or
 einsum per batch inside ``mapInPandas``) — the interpreted
@@ -51,31 +52,33 @@ def auto_num_blocks(
     return max(min_blocks, math.ceil(max(int(n_rows), 1) / rows_per_block))
 
 
-def blocks_for_plan_size(
-    size_in_bytes: int, row_bytes: int, rows_per_block: int
-) -> int:
-    """:func:`auto_num_blocks` from the optimizer's size estimate: rows
-    ≈ ``size_in_bytes / row_bytes``. File scans report on-disk bytes
-    against Spark's default per-row width, which overestimates the row
-    count for vector columns — the error lands on the safe side (more,
-    smaller blocks), never on a larger per-task matrix."""
-    rows = -(-int(size_in_bytes) // max(int(row_bytes), 1))
-    return auto_num_blocks(rows, rows_per_block)
+#: optimized-plan leaves whose ``sizeInBytes`` says nothing about the
+#: vector payload: an RDD reports ``spark.sql.defaultSizeInBytes`` (scaled
+#: down by any Project above it), a local relation counts one element per
+#: array
+_UNSIZED_LEAVES = ("LogicalRDD", "LocalRelation")
 
 
-def plan_num_blocks(df: DataFrame, rows_per_block: int) -> int:
-    """Block count for ``df`` without running a Spark job: the optimized
-    plan's ``sizeInBytes`` divided by Spark's own per-row size estimate
-    (8 bytes of row overhead plus each column's default width), fed to
-    :func:`blocks_for_plan_size`. No core count enters, so the blocking
-    — and with it the block-local top-k — is the same on every cluster.
-    A plan with no size estimate (an RDD-backed relation reports
-    ``spark.sql.defaultSizeInBytes``) falls back to one count."""
+def plan_num_blocks(df: DataFrame, vec_col: str, block_bytes: int) -> int:
+    """Block count for ``df`` from a byte target per block:
+    ``max(8, ceil(size / block_bytes))``, with ``size`` the optimized
+    plan's ``sizeInBytes`` — for a file scan the on-disk bytes, which
+    for float vectors is about their stored width. No Spark job runs
+    and no core count enters, so the blocking (and with it the
+    block-local top-k) is the same on every cluster. A plan over an
+    RDD or local relation has no usable estimate; one job sums the
+    vectors' actual bytes instead (8 per id plus the element width per
+    element)."""
     jdf = df._jdf
-    size = int(jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if size >= jdf.sparkSession().sessionState().conf().defaultSizeInBytes():
-        return auto_num_blocks(df.count(), rows_per_block)
-    return blocks_for_plan_size(size, 8 + jdf.schema().defaultSize(), rows_per_block)
+    plan = jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    kinds = {leaves.apply(i).getClass().getSimpleName() for i in range(leaves.length())}
+    if kinds & set(_UNSIZED_LEAVES):
+        width = jdf.schema().apply(vec_col).dataType().elementType().defaultSize()
+        size = df.select(F.sum(8 + width * F.size(vec_col))).first()[0] or 0
+    else:
+        size = int(plan.stats().sizeInBytes())
+    return auto_num_blocks(size, block_bytes)  # bytes in, bytes per block
 
 
 def _rowwise_cosine(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
@@ -108,9 +111,10 @@ def _rowwise_cosine(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
     return df.mapInPandas(gen, schema + ", raw_cosine double")
 
 
-#: corpus rows per top-k block: the q×block score matrix and the
-#: block's collected vectors are the per-task memory
-_TOPK_ROWS_PER_BLOCK = 65536
+#: corpus bytes per top-k block (as the plan estimates them: ~65536
+#: float32 vectors at dim 64); the block's vectors and its q×block
+#: score matrix are the kernel's working set
+_TOPK_BLOCK_BYTES = 16 << 20
 
 
 def _blocked_topk(
@@ -121,32 +125,40 @@ def _blocked_topk(
     vec_col: str,
     round_decimals: int,
     num_blocks: int | None,
-    rows_per_block: int,
+    block_bytes: int,
     lsh: tuple[int, int, int | None] | None = None,
 ) -> DataFrame:
     """The one top-k kernel behind :func:`cosine_topk` and
     :func:`ann_lsh_topk`: partition-local top-k with a pruning bound,
     merged by one global rank (the REPOSE scheme).
 
-    The corpus is hash-grouped into ~``rows_per_block`` row blocks
+    The corpus is hash-grouped into blocks of ~``block_bytes``
     (:func:`plan_num_blocks` unless ``num_blocks`` is given); the probe
-    set is collected into one row and broadcast to every block. Per
-    block, one matmul scores every (query, corpus) pair. With ``lsh =
-    (num_planes, num_tables, max_planes)`` the candidates are masked to
-    pairs whose bucket codes — from the fixed-seed :func:`lsh_planes`,
-    the first ``num_planes`` of a ``max_planes`` tensor when set — are
-    equal in ANY table; a pair colliding in several tables is one
-    candidate. Self-matches (equal ids) and zero-norm vectors (cosine
-    undefined) are never candidates. Each block emits only its per-query
-    top-k, so the output is B·q·k narrow rows, not a candidate set; the
-    JVM-side ``F.round`` + window rank picks the exact final k.
+    set is collected into one row and broadcast to every block. With
+    ``lsh=None`` one matmul per block scores every (query, corpus)
+    pair. With ``lsh = (num_planes, num_tables, max_planes)`` the block
+    first computes its bucket codes — from the fixed-seed
+    :func:`lsh_planes`, the first ``num_planes`` of a ``max_planes``
+    tensor when set — and groups its rows by code per table; each query
+    then scores only the union of the rows that share its code in ANY
+    table (a pair colliding in several tables is one candidate), about
+    ``num_tables · block / 2^num_planes`` dot products. Self-matches
+    (equal ids) and zero-norm vectors (cosine undefined) are never
+    candidates. Each block emits only its per-query top-k, so the
+    output is B·q·k narrow rows, not a candidate set; the JVM-side
+    ``F.round`` + window rank picks the exact final k.
+
+    A task holds the blocks that the groupBy's shuffle puts in its
+    partition (AQE may coalesce small ones), converted to pandas one
+    Arrow batch of up to ``spark.sql.execution.arrow.maxRecordsPerBatch``
+    blocks at a time; the blocks themselves are scored one by one.
 
     Ids are assumed unique on each side (a corpus id is one vector)."""
     import numpy as np
     import pandas as pd
 
     if num_blocks is None:
-        num_blocks = plan_num_blocks(emb, rows_per_block)
+        num_blocks = plan_num_blocks(emb, vec_col, block_bytes)
     e = emb.select(
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(num_blocks)).alias("block"),
         F.col(id_col).alias("vec_id"),
@@ -178,6 +190,30 @@ def _blocked_topk(
         weights = 1 << np.arange(planes.shape[1], dtype="int64")
         return bits.reshape(len(X), *planes.shape[:2]) @ weights
 
+    def all_pairs(Q, qn, A, an):
+        """Per query: every block row and its cosine, one matmul."""
+        S = (Q @ A.T) / (qn[:, None] * an[None, :])  # (q, n)
+        every = np.arange(len(A))
+        for qi in range(len(Q)):
+            yield every, S[qi]
+
+    def colliding_pairs(Q, qn, qcodes, A, an, planes):
+        """Per query: the block rows sharing its code in any table, and
+        their cosines — only those pairs are scored."""
+        acodes = codes(A, planes)
+        tables = []
+        for t in range(acodes.shape[1]):
+            rows = np.argsort(acodes[:, t], kind="stable")
+            sorted_codes = acodes[rows, t]
+            lo = np.searchsorted(sorted_codes, qcodes[:, t], "left")
+            hi = np.searchsorted(sorted_codes, qcodes[:, t], "right")
+            tables.append((rows, lo, hi))
+        for qi in range(len(Q)):
+            idx = np.unique(
+                np.concatenate([rows[lo[qi] : hi[qi]] for rows, lo, hi in tables])
+            )
+            yield idx, (A[idx] @ Q[qi]) / (an[idx] * qn[qi])
+
     def score(batches):
         probe = planes = None  # the broadcast row is identical in every block
         for pdf in batches:
@@ -194,19 +230,16 @@ def _blocked_topk(
                 ids, A, an = vectors(items, "vec_id", "v")
                 if not len(qids) or not len(ids):
                     continue
-                S = (Q @ A.T) / (qn[:, None] * an[None, :])  # (q, n)
-                cand = ids[None, :] != qids[:, None]
-                if planes is not None:
-                    acodes = codes(A, planes)
-                    hit = np.zeros_like(cand)
-                    for t in range(acodes.shape[1]):
-                        hit |= qcodes[:, t, None] == acodes[None, :, t]
-                    cand &= hit
-                Sr = np.round(S, round_decimals)
+                pairs = (
+                    all_pairs(Q, qn, A, an)
+                    if planes is None
+                    else colliding_pairs(Q, qn, qcodes, A, an, planes)
+                )
                 out_q, out_i, out_c = [], [], []
-                for qi in range(len(qids)):
-                    m = cand[qi]
-                    cand_ids, r, raw = ids[m], Sr[qi][m], S[qi][m]
+                for qid, (idx, raw) in zip(qids, pairs):
+                    keep = ids[idx] != qid
+                    cand_ids, raw = ids[idx][keep], raw[keep]
+                    r = np.round(raw, round_decimals)
                     # block-local top-k under the final window's order
                     # (rounded desc, then id asc) — widened by one unit
                     # in the last rounded place: np.round is half-EVEN
@@ -219,7 +252,7 @@ def _blocked_topk(
                     if len(order) > k:
                         kth = r[order[k - 1]]
                         order = order[r[order] >= kth - slack]
-                    out_q.append(np.full(len(order), qids[qi]))
+                    out_q.append(np.full(len(order), qid))
                     out_i.append(cand_ids[order])
                     out_c.append(raw[order])
                 yield pd.DataFrame(
@@ -255,7 +288,7 @@ def cosine_topk(
     vec_col: str = "embedding",
     round_decimals: int = 6,
     num_blocks: int | None = None,
-    rows_per_block: int = _TOPK_ROWS_PER_BLOCK,
+    block_bytes: int = _TOPK_BLOCK_BYTES,
 ) -> DataFrame:
     """Exact top-k nearest corpus vectors per query vector by cosine.
 
@@ -266,16 +299,15 @@ def cosine_topk(
     part.
 
     Execution: :func:`_blocked_topk` with no candidate mask — the
-    broadcast query set is scored against each ~``rows_per_block``
-    corpus block with one numpy matmul, and each task emits only its
-    block's per-query top-k (the global top-k is a subset of the
-    union). The corpus is never shuffled wide; the block count comes
-    from the optimized plan's size estimate (no Spark job, no core
-    count), and per-task memory stays ~rows_per_block·dim·8 bytes plus
-    the q×block score matrix as the corpus grows.
+    broadcast query set is scored against each ~``block_bytes`` corpus
+    block with one numpy matmul, and each task emits only its block's
+    per-query top-k (the global top-k is a subset of the union). The
+    corpus is never shuffled wide, and the block count comes from the
+    optimized plan's size estimate (no Spark job, no core count), so a
+    block's matrix stays the same size as the corpus grows.
     """
     return _blocked_topk(
-        emb, queries, k, id_col, vec_col, round_decimals, num_blocks, rows_per_block
+        emb, queries, k, id_col, vec_col, round_decimals, num_blocks, block_bytes
     )
 
 
@@ -814,21 +846,23 @@ def ann_lsh_topk(
     num_tables: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    num_blocks: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: multi-table random-hyperplane LSH.
 
     Candidates = corpus vectors sharing the query's bucket in ANY of the
     ``num_tables`` independent tables, reranked by exact cosine.
-    Per-query work ≈ num_tables · n / 2^num_planes; recall grows with
-    num_tables — the standard recall/cost dial.
+    Per-query work ≈ num_tables · n / 2^num_planes dot products, plus
+    the corpus's own codes (n · num_tables · num_planes dot products per
+    call, shared by all queries); recall grows with num_tables — the
+    standard recall/cost dial.
 
     Execution: :func:`_blocked_topk` with the LSH collision mask — the
     same blocked kernel as :func:`cosine_topk`. Each corpus block
     computes its own and the broadcast queries' bucket codes in the
-    kernel and keeps only the colliding pairs' block-local top-k; no
-    vector is copied per table, the corpus never shuffles on a bucket
-    key, and only (query_id, vec_id, cosine) rows reach the global rank.
+    kernel, scores only the colliding pairs and keeps their block-local
+    top-k; no vector is copied per table, the corpus never shuffles on
+    a bucket key, and only (query_id, vec_id, cosine) rows reach the
+    global rank.
 
     ``num_planes=None`` → :func:`auto_num_planes` from one corpus
     count: per-query candidate cost stays CONSTANT as the corpus grows
@@ -839,7 +873,7 @@ def ann_lsh_topk(
         num_planes = auto_num_planes(emb.count())
         max_planes = AUTO_PLANES_HI
     return _blocked_topk(
-        emb, queries, k, id_col, vec_col, 6, num_blocks, _TOPK_ROWS_PER_BLOCK,
+        emb, queries, k, id_col, vec_col, 6, None, _TOPK_BLOCK_BYTES,
         lsh=(num_planes, num_tables, max_planes),
     )
 

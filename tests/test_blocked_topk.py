@@ -11,9 +11,11 @@ vector whose bucket code equals the query's in at least one table.
 
 from __future__ import annotations
 
+import math
 from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import Row
 
@@ -101,18 +103,26 @@ def test_cosine_topk_matches_bruteforce_at_rounding_midpoint(spark, k, num_block
     assert (0, 5, 0.007813, 2) in got
     if k == 3:
         assert (0, 6, 0.007813, 3) in got  # the exact tie breaks on id
-    assert not {r for r in got if 3 in (r[0], r[1])}  # zero norm
+    # zero-norm vectors yield no rows at any block count (the old kernel
+    # emitted NaN rows, ranked first, whenever a block held <= k candidates)
+    assert not {r for r in got if 3 in (r[0], r[1])}
     assert all(qid != vid for qid, vid, _, _ in got)
 
 
-@pytest.mark.parametrize("num_blocks", [1, 23])
-def test_ann_lsh_topk_matches_bruteforce_on_hand_corpus(spark, num_blocks):
-    emb = _frame(spark, HAND)
-    queries = {i: HAND[i] for i in HAND_QUERIES}
-    q = _frame(spark, queries)
-    got = _rows(
-        sim.ann_lsh_topk(emb, q, k=3, num_planes=2, num_tables=3, num_blocks=num_blocks)
+def _lsh_topk(spark, corpus, queries, k, lsh, num_blocks):
+    """The shared kernel with the LSH mask, at a pinned block count."""
+    return _rows(
+        sim._blocked_topk(
+            _frame(spark, corpus), _frame(spark, queries), k, "vec_id",
+            "embedding", 6, num_blocks, sim._TOPK_BLOCK_BYTES, lsh=lsh,
+        )
     )
+
+
+@pytest.mark.parametrize("num_blocks", [1, 23])
+def test_lsh_kernel_matches_bruteforce_on_hand_corpus(spark, num_blocks):
+    queries = {i: HAND[i] for i in HAND_QUERIES}
+    got = _lsh_topk(spark, HAND, queries, 3, (2, 3, None), num_blocks)
     assert got == _reference(HAND, queries, 3, sim.lsh_planes(2, 3, 5))
 
 
@@ -136,63 +146,93 @@ def _random_corpus():
 
 
 @pytest.mark.parametrize("num_blocks", [1, 23])
-@pytest.mark.parametrize("num_planes", [8, None])
-def test_ann_lsh_topk_matches_bruteforce_over_collisions(spark, num_planes, num_blocks):
+@pytest.mark.parametrize("auto", [False, True])
+def test_lsh_kernel_matches_bruteforce_over_collisions(spark, auto, num_blocks):
     corpus, queries = _random_corpus()
-    planes = (
-        sim.lsh_planes(8, 4, 8)
-        if num_planes
-        else sim.lsh_planes(sim.AUTO_PLANES_HI, 4, 8)[:, : sim.auto_num_planes(len(corpus))]
-    )
-    got = _rows(
-        sim.ann_lsh_topk(
-            _frame(spark, corpus), _frame(spark, queries), k=4,
-            num_planes=num_planes, num_tables=4, num_blocks=num_blocks,
-        )
-    )
+    if auto:  # what ann_lsh_topk(num_planes=None) hands the kernel
+        lsh = (sim.auto_num_planes(len(corpus)), 4, sim.AUTO_PLANES_HI)
+        planes = sim.lsh_planes(sim.AUTO_PLANES_HI, 4, 8)[:, : lsh[0]]
+    else:
+        lsh = (8, 4, None)
+        planes = sim.lsh_planes(8, 4, 8)
+    got = _lsh_topk(spark, corpus, queries, 4, lsh, num_blocks)
     assert got == _reference(corpus, queries, 4, planes)
-    if num_planes:
+    if not auto:
         assert not {r for r in got if r[0] in (200, 999)}  # zero norm, no collision
         # a pair colliding in all four tables is still one row
         assert _collisions(corpus[0], corpus[100], planes) == 4
         assert [r[1] for r in got if r[0] == 0].count(100) == 1
 
 
-def test_blocks_for_plan_size():
-    # rows ~ ceil(size / row_bytes); the block size stays constant
-    assert sim.blocks_for_plan_size(0, 24, 65536) == 8
-    assert sim.blocks_for_plan_size(798_695, 24, 65536) == 8
-    assert sim.blocks_for_plan_size(24 * 65536 * 100, 24, 65536) == 100
-    assert sim.blocks_for_plan_size(24 * 65536 * 100 + 1, 24, 65536) == 101
-    assert sim.blocks_for_plan_size(10**12, 24, 65536) == 635_783
-
-
-def test_plan_num_blocks_reads_the_optimizer_estimate(spark, sf_dir):
-    e = read_table(spark, sf_dir, "embeddings")
-    stats = e._jdf.queryExecution().optimizedPlan().stats()
-    row_bytes = 8 + e._jdf.schema().defaultSize()
-    assert sim.plan_num_blocks(e, 64) == sim.blocks_for_plan_size(
-        int(stats.sizeInBytes()), row_bytes, 64
+def test_ann_lsh_topk_auto_planes(spark):
+    corpus, queries = _random_corpus()
+    got = _rows(
+        sim.ann_lsh_topk(
+            _frame(spark, corpus), _frame(spark, queries), k=4, num_planes=None
+        )
     )
-    # an RDD-backed frame has no estimate: one count sizes it
-    unsized = _frame(spark, {i: [1.0, float(i)] for i in range(40)})
-    assert sim.plan_num_blocks(unsized, 4) == 10
+    planes = sim.lsh_planes(sim.AUTO_PLANES_HI, 4, 8)[:, : sim.auto_num_planes(len(corpus))]
+    assert got == _reference(corpus, queries, 4, planes)
+
+
+def _jobs_in(sc, group, fn):
+    """(fn's result, Spark jobs it ran) under a fresh job group."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_plan_num_blocks_sizes_from_plan_bytes(spark, sf_dir):
+    e = read_table(spark, sf_dir, "embeddings")
+    size = int(e._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    sc = spark.sparkContext
+    got, jobs = _jobs_in(
+        sc, "sizing-plan",
+        lambda: [
+            sim.plan_num_blocks(e, "embedding", sim._TOPK_BLOCK_BYTES),
+            sim.plan_num_blocks(e, "embedding", 1024),
+            sim.plan_num_blocks(e.unionByName(e), "embedding", 1024),
+            sim.plan_num_blocks(e.filter("vec_id < 0"), "embedding", size),
+        ],
+    )
+    assert jobs == []
+    assert got[0] == 8  # the parallelism floor
+    assert got[1] == math.ceil(size / 1024) > 8
+    assert got[2] == math.ceil(2 * size / 1024)
+    assert got[3] == 8
+
+
+def test_plan_num_blocks_measures_rdd_and_local_frames(spark):
+    # 40 rows of (id, 2 doubles) = 40 * (8 + 2 * 8) bytes; 10 blocks of 96
+    rows = [Row(vec_id=i, embedding=[1.0, float(i)], tag="x") for i in range(40)]
+    rdd_backed = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, tag string"
+    ).select("vec_id", "embedding")
+    local = spark.createDataFrame(pd.DataFrame([r.asDict() for r in rows])).select(
+        "vec_id", "embedding"
+    )
+    sc = spark.sparkContext
+    got, jobs = _jobs_in(
+        sc, "sizing-rdd", lambda: sim.plan_num_blocks(rdd_backed, "embedding", 96)
+    )
+    # the projected RDD takes the measuring job, not its scaled default
+    # size (which would ask for ~1e12 blocks)
+    assert got == 10 and jobs
+    assert sim.plan_num_blocks(local, "embedding", 96) == 10
 
 
 def test_topk_build_fires_no_spark_job(spark, sf_dir):
     e = read_table(spark, sf_dir, "embeddings")
     q = e.filter("vec_id < 8")
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    sc.setJobGroup("topk-build", "build only")
-    try:
-        sim.cosine_topk(e, q, k=5)
-        sim.ann_lsh_topk(e, q, k=5, num_planes=8)
-        built = list(tracker.getJobIdsForGroup("topk-build"))
-        sc.setJobGroup("topk-probe", "the group sees a job")
-        e.count()
-        assert list(tracker.getJobIdsForGroup("topk-probe"))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    _, built = _jobs_in(
+        sc, "topk-build",
+        lambda: (sim.cosine_topk(e, q, k=5), sim.ann_lsh_topk(e, q, k=5, num_planes=8)),
+    )
     assert built == []
+    _, probed = _jobs_in(sc, "topk-probe", e.count)
+    assert probed  # the group does see jobs
