@@ -18,39 +18,6 @@ from asset_prices_parquet_saver_spark.functions.pins import pin as _pin
 from asset_prices_parquet_saver_spark.functions.pandas_ops import spread
 from asset_prices_parquet_saver_spark.operators.similarity import auto_num_blocks
 
-# Session-scoped memo for the shared LSH front end (see minhash_dedup):
-# the pair stage (shingles -> signatures -> band pairs -> verified
-# jaccard) and the connected-component labels are identical across the
-# dedup query family (pair listing, end-to-end dedup, cluster report),
-# so a run that executes several of them rebuilds the same relation
-# from scratch each time. Keyed by (applicationId, input plan
-# semanticHash, data-version token, every parameter); values are
-# localCheckpointed, so a hit is a truncated-lineage scan, not a
-# recompute. FIFO-bounded via similarity.memo_put and dropped with the
-# process. The data-version token (similarity.data_version_token:
-# digest of the plan's sorted file listing) guards the
-# incremental/streaming corpus case — semanticHash alone is a pure
-# 32-bit PLAN hash that cannot see the files under a path changing.
-# Residual caveat: a plan not backed by files (in-memory relation)
-# keys on the plan hash only, so memo=True there requires the input to
-# be immutable for the process lifetime — which is why memo defaults
-# to False everywhere in the library surface.
-_LSH_MEMO: dict[tuple, DataFrame] = {}
-
-
-def _lsh_memo_key(df: DataFrame, *params) -> tuple:
-    from asset_prices_parquet_saver_spark.operators.similarity import (
-        data_version_token,
-    )
-
-    return (
-        df.sparkSession.sparkContext.applicationId,
-        df.semanticHash(),
-        data_version_token(df),
-        *params,
-    )
-
-
 # ---------------------------------------------------------------- exact
 
 def exact_dedup(df: DataFrame, cols: list[str], tie_break: str) -> DataFrame:
@@ -209,12 +176,6 @@ def _shingle_set(txt, n: int, ws) -> set:
     return set(w) if n == 1 else {" ".join(w[j : j + n]) for j in range(len(w) - n + 1)}
 
 
-#: per-task shingle→hash memo toggle (hash-identical either way; see
-#: _hashed_shingle_rows). Module-level so an interleaved A/B can flip
-#: it between same-process runs — the kernel captures it at build time.
-_SHINGLE_MEMO = True
-
-
 def _hashed_shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int):
     """Shared first stage of the shingle pipelines: ``(sh, docs)`` where
     ``docs`` is (id, hs: array<long>) — one hashed-shingle-set row per
@@ -228,8 +189,6 @@ def _hashed_shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int):
 
     from asset_prices_parquet_saver_spark.functions.pandas_ops import chunked
 
-    use_memo = _SHINGLE_MEMO  # captured at kernel-BUILD time (A/B seam)
-
     def hash_shingles(batches):
         ws = _re.compile(r"\s+", _re.ASCII)
         # per-task shingle→hash memo (guide §4.5 heavyweight-init
@@ -240,7 +199,7 @@ def _hashed_shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int):
         # runaway vocabulary clears the memo rather than growing it.
         memo: dict[str, int] = {}
 
-        def h_memo(s: str) -> int:
+        def h(s: str) -> int:
             v = memo.get(s)
             if v is None:
                 v = int.from_bytes(
@@ -253,14 +212,6 @@ def _hashed_shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int):
                 memo[s] = v
             return v
 
-        def h_plain(s: str) -> int:
-            return int.from_bytes(
-                hashlib.blake2b(s.encode(), digest_size=8).digest(),
-                "big",
-                signed=True,
-            )
-
-        h = h_memo if use_memo else h_plain
         for pdf in batches:
             ids, arrs = [], []
             for doc_id, txt in zip(pdf[id_col], pdf[text_col]):
@@ -1351,7 +1302,6 @@ def minhash_dedup(
     bands: int = 8,
     threshold: float = 0.5,
     hash_family: str = "xxhash64",
-    memo: bool = False,
 ) -> DataFrame:
     """X2 scale path end-to-end: LSH candidates, then exact Jaccard
     verification *only on candidates* (array_intersect — no row
@@ -1369,14 +1319,6 @@ def minhash_dedup(
             f"minhash banding: bands={bands} must divide num_hashes="
             f"{num_hashes} (rows_per_band >= 1, no dropped signature rows)"
         )
-    if memo:
-        key = _lsh_memo_key(
-            df, "pairs", id_col, text_col, n, num_hashes, bands,
-            threshold, hash_family,
-        )
-        hit = _LSH_MEMO.get(key)
-        if hit is not None:
-            return hit
     rows_per_band = num_hashes // bands
     if hash_family == "md5":
         arrs = _portable_signature_arrays(
@@ -1396,14 +1338,7 @@ def minhash_dedup(
     cand = lsh_candidate_pairs(
         arrs.filter(F.col("n_sh") > 0).select("id", "sig"), bands, rows_per_band
     )
-    pairs = _verified_jaccard(cand, arrs.select("id", "arr", "n_sh"), threshold)
-    if memo:
-        # materialize once; later family members scan the checkpoint
-        pairs = pairs.localCheckpoint()
-        from asset_prices_parquet_saver_spark.operators.similarity import memo_put
-
-        memo_put(_LSH_MEMO, key, pairs)
-    return pairs
+    return _verified_jaccard(cand, arrs.select("id", "arr", "n_sh"), threshold)
 
 
 # ------------------------------------------- clusters / end-to-end dedup
@@ -1473,42 +1408,6 @@ def connected_components(
     return labels
 
 
-def _components_memo(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    num_hashes: int,
-    bands: int,
-    threshold: float,
-    hash_family: str,
-    memo: bool,
-) -> DataFrame:
-    """Shared pairs -> connected-components stage of the dedup family,
-    memoized alongside the pair relation (the CC labels are a pure
-    function of the same inputs, and the iterative min-label loop is
-    the other repeated cost)."""
-    if memo:
-        key = _lsh_memo_key(
-            df, "cc", id_col, text_col, n, num_hashes, bands,
-            threshold, hash_family,
-        )
-        hit = _LSH_MEMO.get(key)
-        if hit is not None:
-            return hit
-    pairs = minhash_dedup(
-        df, id_col, text_col, n, num_hashes, bands, threshold,
-        hash_family, memo=memo,
-    )
-    comp = connected_components(pairs)
-    if memo:
-        comp = comp.localCheckpoint()
-        from asset_prices_parquet_saver_spark.operators.similarity import memo_put
-
-        memo_put(_LSH_MEMO, key, comp)
-    return comp
-
-
 def fuzzy_dedup(
     df: DataFrame,
     id_col: str,
@@ -1518,7 +1417,6 @@ def fuzzy_dedup(
     num_hashes: int = 32,
     bands: int = 8,
     hash_family: str = "xxhash64",
-    memo: bool = False,
 ) -> DataFrame:
     """End-to-end fuzzy dedup (the LLM-corpus pipeline composition):
     MinHash-LSH candidates → exact-Jaccard verification → connected
@@ -1528,9 +1426,10 @@ def fuzzy_dedup(
     makes the whole composition engine-portable (see
     :func:`minhash_dedup`) — the oracle then reproduces even the
     connected components, via a recursive-CTE transitive closure."""
-    comp = _components_memo(
-        df, id_col, text_col, n, num_hashes, bands, threshold,
-        hash_family, memo,
+    comp = connected_components(
+        minhash_dedup(
+            df, id_col, text_col, n, num_hashes, bands, threshold, hash_family
+        )
     )
     losers = comp.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col)
@@ -1550,7 +1449,6 @@ def fuzzy_dedup_keep_best(
     num_hashes: int = 32,
     bands: int = 8,
     hash_family: str = "xxhash64",
-    memo: bool = False,
 ) -> DataFrame:
     """:func:`fuzzy_dedup` with a QUALITY-AWARE survivor policy: each
     near-dup component keeps its best-``score`` member (ties → minimum
@@ -1561,14 +1459,15 @@ def fuzzy_dedup_keep_best(
     ``df``'s columns. Rows in no near-dup pair survive untouched.
 
     Scale shape: identical to :func:`fuzzy_dedup` up to the component
-    relation (LSH bands → exact verify → CC, memo-shared with it);
+    relation (LSH bands → exact verify → CC);
     the winner election is ONE combinable max-of-struct aggregate per
     component — (score, −id) lexicographic max, so the argmax is
     deterministic with no window over the corpus — plus the same
     anti-join."""
-    comp = _components_memo(
-        df, id_col, text_col, n, num_hashes, bands, threshold,
-        hash_family, memo,
+    comp = connected_components(
+        minhash_dedup(
+            df, id_col, text_col, n, num_hashes, bands, threshold, hash_family
+        )
     )
     scored = df.select(F.col(id_col).alias("id"), score.alias("s"))
     # pinned: labeled feeds both the winner election and the loser
@@ -1724,7 +1623,6 @@ def dedup_cluster_report(
     num_hashes: int = 32,
     bands: int = 8,
     hash_family: str = "xxhash64",
-    memo: bool = False,
 ) -> DataFrame:
     """Corpus duplication profile: the cluster-size histogram of the
     near-duplicate graph — (cluster_size, n_clusters), singletons
@@ -1735,9 +1633,10 @@ def dedup_cluster_report(
     the histogram is two further map-side-combinable aggregations
     (component → size, size → count) over id-width rows — free at any
     scale next to the pair generation that precedes it."""
-    comp = _components_memo(
-        df, id_col, text_col, n, num_hashes, bands, threshold,
-        hash_family, memo,
+    comp = connected_components(
+        minhash_dedup(
+            df, id_col, text_col, n, num_hashes, bands, threshold, hash_family
+        )
     )
     labeled = (
         df.select(F.col(id_col).alias("id"))
@@ -1806,8 +1705,7 @@ def window_rows(
 
 
 def duplicated_spans(
-    df: DataFrame, id_col: str, text_col: str, k: int = 5,
-    memo: bool = False,
+    df: DataFrame, id_col: str, text_col: str, k: int = 5
 ) -> DataFrame:
     """Exact substring dedup — maximal per-document token spans covered
     by ``k``-token windows that occur verbatim in ≥ 2 DISTINCT
@@ -1824,7 +1722,9 @@ def duplicated_spans(
     gaps-and-islands prefix-max window per document — every shuffle is
     O(windows), nothing all-pairs, no driver-side state. Reference
     analogue: none (X2 family, SURVEY §2.11)."""
-    wins = _window_rows_memo(df, id_col, text_col, k, memo)
+    # barrier: the window relation feeds both the duplicated-hash
+    # aggregate and the winners join below, so the kernel runs once
+    wins = window_rows(df, id_col, text_col, k).localCheckpoint()
     dup_h = (
         wins.groupBy("h")
         .agg(F.min("id").alias("lo"), F.max("id").alias("hi"))
@@ -1833,36 +1733,6 @@ def duplicated_spans(
     )
     hits = wins.join(dup_h, "h").select("id", "pos")
     return _merge_spans(hits, k)
-
-
-#: session-scoped memo for the checkpointed window relation: the spans
-#: / excision / duplication-report queries all start from the same
-#: kernel pass, and an unmemoized per-call localCheckpoint would both
-#: recompute it and pin O(corpus windows) blocks per call in a
-#: long-lived process (the ADVICE-r8 memo discipline — FIFO-bounded,
-#: evictions unpersisted, data-version-keyed so a mutated corpus can
-#: never replay a stale checkpoint). Cleared by bench._clear_memos.
-_WINDOW_MEMO: dict[tuple, DataFrame] = {}
-
-
-def _window_rows_memo(
-    df: DataFrame, id_col: str, text_col: str, k: int, memo: bool
-) -> DataFrame:
-    from asset_prices_parquet_saver_spark.operators.similarity import memo_put
-
-    if not memo:
-        # opt-in memo discipline (library default False, like the rest
-        # of the dedup family); the localCheckpoint barrier still pays
-        # off within a single call (spans feed both the winners join
-        # and the excision/report consumers).
-        return window_rows(df, id_col, text_col, k).localCheckpoint()
-    key = _lsh_memo_key(df, "windows", id_col, text_col, k)
-    hit = _WINDOW_MEMO.get(key)
-    if hit is not None:
-        return hit
-    wins = window_rows(df, id_col, text_col, k).localCheckpoint()
-    memo_put(_WINDOW_MEMO, key, wins)
-    return wins
 
 
 def _merge_spans(hits: DataFrame, k: int) -> DataFrame:
@@ -1897,8 +1767,7 @@ def _merge_spans(hits: DataFrame, k: int) -> DataFrame:
 
 
 def excise_duplicated_spans(
-    df: DataFrame, id_col: str, text_col: str, k: int = 5,
-    memo: bool = False,
+    df: DataFrame, id_col: str, text_col: str, k: int = 5
 ) -> DataFrame:
     """Apply exact substring dedup: rebuild each affected document's
     text with every duplicated span's tokens removed (the curation step
@@ -1911,7 +1780,7 @@ def excise_duplicated_spans(
     id), so excision is one equi-join plus an Arrow-batched rebuild
     kernel over the matched documents only — the corpus outside the
     duplicated set is never rewritten."""
-    spans = duplicated_spans(df, id_col, text_col, k, memo=memo)
+    spans = duplicated_spans(df, id_col, text_col, k)
     return excise_spans(df, id_col, text_col, spans)
 
 
@@ -1967,8 +1836,7 @@ def excise_spans(
 
 
 def duplication_report(
-    df: DataFrame, id_col: str, text_col: str, group_col: str, k: int = 5,
-    memo: bool = False,
+    df: DataFrame, id_col: str, text_col: str, group_col: str, k: int = 5
 ) -> DataFrame:
     """Corpus duplication profile by slice: per group (source,
     language), the share of tokens sitting inside cross-document
@@ -1981,7 +1849,7 @@ def duplication_report(
     on top of it this is one per-doc combinable fold, one equi-join
     back to the (id, group, token-count) relation, and one group
     aggregate."""
-    spans = duplicated_spans(df, id_col, text_col, k, memo=memo)
+    spans = duplicated_spans(df, id_col, text_col, k)
     per_doc = spans.groupBy("id").agg(
         F.sum("span_tokens").alias("dup_tokens")
     )
@@ -2261,7 +2129,6 @@ def duplicate_aware_weights(
     num_hashes: int = 32,
     bands: int = 8,
     hash_family: str = "xxhash64",
-    memo: bool = False,
 ) -> DataFrame:
     """Duplicate-aware sampling weights — the "downweight, don't drop"
     curation policy (SemDeDup / D4-style): every document gets weight
@@ -2273,12 +2140,13 @@ def duplicate_aware_weights(
     Returns (id, cluster_size, weight), weight rounded to 6 decimals.
 
     Scale shape: identical to :func:`dedup_cluster_report` up to the
-    component labels (memo-shared); then one combinable size aggregate
+    component labels; then one combinable size aggregate
     over id-width rows and an id-keyed join back. Reference analogue:
     none (X2/X4 family, SURVEY §2.11)."""
-    comp = _components_memo(
-        df, id_col, text_col, n, num_hashes, bands, threshold,
-        hash_family, memo,
+    comp = connected_components(
+        minhash_dedup(
+            df, id_col, text_col, n, num_hashes, bands, threshold, hash_family
+        )
     )
     # pinned: labeled feeds both the size aggregate and the weight
     # probe — unpinned, the id scan + left join ran once per consumer

@@ -406,54 +406,6 @@ def cosine_pairs(
     ).filter(F.col("cosine") >= threshold)
 
 
-#: session-scoped memo for the LSH pair relation (the dedup._LSH_MEMO
-#: pattern): embedding_near_pairs_lsh and semantic_dedup share an
-#: identical (corpus, params) front end — a run executing both should
-#: build the bucketed/verified pair relation once.
-_PAIR_MEMO: dict[tuple, DataFrame] = {}
-
-#: hard cap on memo entries: the memo is bounded by the number of
-#: distinct (corpus, param) combinations a process touches — normally a
-#: handful — but nothing should grow without bound in a long-lived
-#: service process, so inserts FIFO-evict past this.
-_MEMO_MAX_ENTRIES = 32
-
-
-def data_version_token(df: DataFrame) -> str:
-    """Digest of the sorted file listing behind a plan — the
-    data-version component of a memo key. ``semanticHash`` alone is a
-    pure PLAN hash: two scans of the same path before and after the
-    files changed (the incremental/streaming corpus scenario) hash
-    identically, and it is only a 32-bit digest. Parquet files are
-    immutable by convention (writers create new files; the manifest
-    layer swaps path sets), so the path SET is a faithful version
-    token; plans not backed by files (in-memory test frames) return a
-    constant and fall back to plan-hash-only keying."""
-    import hashlib as _hashlib
-
-    try:
-        files = df.inputFiles()
-    except Exception:  # non-file-backed plans (local relations, streams)
-        files = []
-    return _hashlib.md5("\n".join(sorted(files)).encode()).hexdigest()
-
-
-def memo_put(memo: dict, key: tuple, value: DataFrame) -> None:
-    """Insert with FIFO eviction at ``_MEMO_MAX_ENTRIES`` — keeps
-    long-lived processes from accumulating checkpointed relations.
-    Evicted entries are best-effort ``unpersist()``-ed: dropping only
-    the Python reference would leave the localCheckpoint blocks in
-    executor storage until JVM GC, so the cap would bound the dict but
-    not the block-manager footprint of a long-lived process."""
-    if len(memo) >= _MEMO_MAX_ENTRIES:
-        evicted = memo.pop(next(iter(memo)))
-        try:
-            evicted.unpersist()
-        except Exception:
-            pass  # a dead session's blocks are already gone
-    memo[key] = value
-
-
 def cosine_pairs_lsh(
     emb: DataFrame,
     threshold: float,
@@ -462,7 +414,6 @@ def cosine_pairs_lsh(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_decimals: int = 6,
-    memo: bool = False,
 ) -> DataFrame:
     """Embedding near-dup pairs, LSH-bucketed (the scale path for
     :func:`cosine_pairs`): candidates are pairs sharing a bucket in any
@@ -477,18 +428,6 @@ def cosine_pairs_lsh(
     quadratic past n ≈ 2^J·occupancy. Planes then come from the shared
     ``AUTO_PLANES_HI`` tensor prefix so the oracle can replay J from
     COUNT(*) over the same inlined constants."""
-    key = None
-    if memo:
-        key = (
-            emb.sparkSession.sparkContext.applicationId,
-            emb.semanticHash(),
-            data_version_token(emb),
-            threshold, num_planes, num_tables, id_col, vec_col,
-            round_decimals,
-        )
-        hit = _PAIR_MEMO.get(key)
-        if hit is not None:
-            return hit
     max_planes = None
     if num_planes is None:
         num_planes = auto_num_planes(emb.count())
@@ -524,7 +463,7 @@ def cosine_pairs_lsh(
     # duplicates are bit-identical and collapse in a distinct over three
     # narrow columns — ~40× fewer shuffle bytes than deduping the
     # vector-carrying candidate rows before verification.
-    pairs = (
+    return (
         _rowwise_cosine(cand, "va", "vb")
         .select(
             "id_a",
@@ -534,10 +473,6 @@ def cosine_pairs_lsh(
         .filter(F.col("cosine") >= threshold)
         .distinct()
     )
-    if memo:
-        pairs = pairs.localCheckpoint()
-        memo_put(_PAIR_MEMO, key, pairs)
-    return pairs
 
 
 def semantic_dedup(
@@ -547,7 +482,6 @@ def semantic_dedup(
     num_tables: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    memo: bool = False,
 ) -> DataFrame:
     """Embedding-space near-duplicate removal (the semantic twin of
     ``dedup.fuzzy_dedup``): LSH-bucketed cosine near-pairs → connected
@@ -560,9 +494,7 @@ def semantic_dedup(
         connected_components,
     )
 
-    pairs = cosine_pairs_lsh(
-        emb, threshold, num_planes, num_tables, id_col, vec_col, memo=memo
-    )
+    pairs = cosine_pairs_lsh(emb, threshold, num_planes, num_tables, id_col, vec_col)
     comp = connected_components(pairs)
     losers = comp.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col)

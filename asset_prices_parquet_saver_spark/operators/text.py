@@ -1114,13 +1114,6 @@ def positional_index(
     ).select("term", "id", (F.col("pos0") + 1).alias("pos"))
 
 
-#: memo of checkpointed query-term postings, FIFO-bounded with
-#: unpersist-on-evict (similarity.memo_put) so repeated ad-hoc
-#: phrase/proximity queries in a long-lived process don't accumulate
-#: checkpoint blocks.
-_POSTINGS_MEMO: dict = {}
-
-
 def term_postings(
     df: DataFrame, id_col: str, text_col: str, terms: tuple
 ) -> DataFrame:
@@ -1128,32 +1121,12 @@ def term_postings(
     the ``localCheckpoint`` barrier — so ONE tokenize pass feeds every
     downstream join branch, but only the query terms' postings ever
     materialize (corpus-size-independent for selective terms; the
-    unfiltered form would checkpoint corpus × tokens rows per query).
-    Memoized per (app, plan, data-version, terms) with FIFO
-    unpersist-on-evict."""
-    from asset_prices_parquet_saver_spark.operators.similarity import (
-        data_version_token,
-        memo_put,
-    )
-
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        df.semanticHash(),
-        data_version_token(df),
-        id_col,
-        text_col,
-        tuple(sorted(set(terms))),
-    )
-    hit = _POSTINGS_MEMO.get(key)
-    if hit is not None:
-        return hit
-    idx = (
+    unfiltered form would checkpoint corpus × tokens rows per query)."""
+    return (
         positional_index(df, id_col, text_col)
         .filter(F.col("term").isin(*terms))
         .localCheckpoint()
     )
-    memo_put(_POSTINGS_MEMO, key, idx)
-    return idx
 
 
 def _phrase_hits(idx: DataFrame, terms: list) -> DataFrame:

@@ -2448,7 +2448,7 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents")
-    return dedup_ops.duplicated_spans(d, "doc_id", "text", k=5, memo=True).select(
+    return dedup_ops.duplicated_spans(d, "doc_id", "text", k=5).select(
         F.col("id").alias("doc_id"), "span_start", "span_end", "span_tokens"
     )
 
@@ -2512,9 +2512,7 @@ def substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def substring_dedup_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents")
-    return dedup_ops.excise_duplicated_spans(
-        d, "doc_id", "text", k=5, memo=True
-    ).select(
+    return dedup_ops.excise_duplicated_spans(d, "doc_id", "text", k=5).select(
         F.col("id").alias("doc_id"), "clean_text", "n_tokens", "n_removed"
     )
 
@@ -2823,9 +2821,7 @@ def token_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def substring_dup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents")
-    return dedup_ops.duplication_report(
-        d, "doc_id", "text", "source", k=5, memo=True
-    ).select(
+    return dedup_ops.duplication_report(d, "doc_id", "text", "source", k=5).select(
         F.col("grp").alias("source"),
         "n_docs",
         "n_tokens",
@@ -3232,7 +3228,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents")
     return dedup_ops.minhash_dedup(
         d, "doc_id", "text", n=2, num_hashes=32, bands=8, threshold=0.5,
-        hash_family="md5", memo=True,
+        hash_family="md5",
     )
 
 
@@ -4111,9 +4107,7 @@ def embedding_near_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     linearly instead of the fixed-J quadratic blowup the sf1 decade
     measured (exponent 1.25 at pinned 6 planes)."""
     e = read_table(spark, sf_dir, "embeddings")
-    return sim_ops.cosine_pairs_lsh(
-        e, threshold=0.45, num_planes=None, num_tables=8, memo=True
-    )
+    return sim_ops.cosine_pairs_lsh(e, threshold=0.45, num_planes=None, num_tables=8)
 
 
 # --- X2/X3 composition: embedding-space near-dup REMOVAL — the
@@ -4142,7 +4136,7 @@ def embedding_near_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "embeddings")
     return sim_ops.semantic_dedup(
-        e, threshold=0.45, num_planes=None, num_tables=8, memo=True
+        e, threshold=0.45, num_planes=None, num_tables=8
     ).select("vec_id", "label")
 
 
@@ -4529,14 +4523,14 @@ def asof_tolerance_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fuzzy_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents")
     return dedup_ops.fuzzy_dedup(
-        d, "doc_id", "text", threshold=0.5, hash_family="md5", memo=True
+        d, "doc_id", "text", threshold=0.5, hash_family="md5"
     ).select("doc_id", "n_chars")
 
 
 # --- X2 fuzzy dedup with the QUALITY-AWARE survivor policy (keep the
 # LONGEST variant of each near-dup cluster, ties -> min id) — the
 # curation rule min-id can't express. Shares the md5 CTE chain and the
-# memoized Spark component relation with fuzzy_dedup_documents; the
+# Spark component pipeline with fuzzy_dedup_documents; the
 # oracle elects winners with a window over full component membership
 # (comp label = min of self and all reachable ids — the same fixpoint
 # the Spark min-label propagation converges to).
@@ -4582,7 +4576,7 @@ def fuzzy_dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return dedup_ops.fuzzy_dedup_keep_best(
         d, "doc_id", "text", score=F.size(words(F.col("text"))),
-        threshold=0.5, hash_family="md5", memo=True,
+        threshold=0.5, hash_family="md5",
     ).select("doc_id", "n_chars")
 
 
@@ -4708,7 +4702,7 @@ def embedding_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents")
     return dedup_ops.dedup_cluster_report(
-        d, "doc_id", "text", threshold=0.5, hash_family="md5", memo=True
+        d, "doc_id", "text", threshold=0.5, hash_family="md5"
     )
 
 
@@ -9429,7 +9423,7 @@ def cdc_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- X2/X4 duplicate-aware sampling weights (SemDeDup / D4-style
 # "downweight, don't drop"): every document weighted 1/cluster_size
 # under the SAME md5-portable MinHash-LSH → verify → CC component
-# relation as fuzzy_dedup_documents (memo-shared) — the oracle replays
+# relation as fuzzy_dedup_documents — the oracle replays
 # the full pipeline including the transitive closure, so the driver
 # hash certifies the weights end-to-end.
 @q(
@@ -9465,7 +9459,7 @@ def dup_aware_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.py duplicate_aware_weights)."""
     d = read_table(spark, sf_dir, "documents")
     return dedup_ops.duplicate_aware_weights(
-        d, "doc_id", "text", threshold=0.5, hash_family="md5", memo=True
+        d, "doc_id", "text", threshold=0.5, hash_family="md5"
     )
 
 

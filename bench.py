@@ -250,58 +250,14 @@ def _sf_of(sf_dir: str) -> float | None:
     return float(m.group(1)) if m else None
 
 
-def _clear_memos() -> None:
-    """Reset the session-scoped LSH memos between timing samples.
-
-    Several registered queries run with ``memo=True``
-    (minhash_lsh_pairs, fuzzy_dedup_documents, dedup_cluster_sizes,
-    embedding_near_pairs_lsh, semantic_dedup_embeddings): within one
-    Spark app the first execution localCheckpoints the shared pair/CC
-    relations, so without this reset samples 2..N — and the sf1
-    superlinearity repeat-confirmation — would time a checkpoint scan,
-    not the query, and a genuinely superlinear memoized query could
-    never be confirmed. Every recorded number is therefore a COLD
-    (memo-empty) measurement; the warm path is reported separately as
-    ``memo_warm`` so the memo win stays visible without polluting the
-    cross-round comparisons."""
-    from asset_prices_parquet_saver_spark.operators import (
-        dedup,
-        similarity,
-        text,
-    )
-
-    # POP + UNPERSIST, not .clear(): dropping only the Python
-    # references leaves every memoized localCheckpoint's blocks in the
-    # block manager until a JVM GC happens to run — across a ~600-
-    # sample bench that accumulation is what OOM'd the sf1 decade
-    # (java heap, near_dup_pair_report) and is the long-run elevation
-    # mechanism NOTES recorded for pii_redaction in the r9 driver run.
-    for memo in (
-        dedup._LSH_MEMO,
-        # substring-dedup family memoizes its checkpointed window
-        # relation
-        dedup._WINDOW_MEMO,
-        similarity._PAIR_MEMO,
-        # phrase/proximity memoize their term-filtered postings
-        # checkpoint
-        text._POSTINGS_MEMO,
-    ):
-        while memo:
-            _, df = memo.popitem()
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # a dead session's blocks are already gone
-
-
 def _reclaim(spark) -> None:
     """Deterministically release orphaned checkpoint blocks.
 
-    Queries that localCheckpoint internally WITHOUT memoizing (BFS /
-    pagerank lineage truncation, jaccard candidate barriers, gated
-    write-path queries) leave RDD blocks whose cleanup normally waits
-    on (1) Python GC dropping the py4j proxy, (2) a JVM GC collecting
-    the Java RDD, (3) the async ContextCleaner unpersisting the blocks.
+    Queries that localCheckpoint internally (BFS / pagerank lineage
+    truncation, jaccard candidate barriers, gated write-path queries)
+    leave RDD blocks whose cleanup normally waits on (1) Python GC
+    dropping the py4j proxy, (2) a JVM GC collecting the Java RDD,
+    (3) the async ContextCleaner unpersisting the blocks.
     None of those are prompt under steady allocation, so a long bench
     accumulates heap until the biggest sf1 query tips over. One
     explicit collect on each side between timed sections converts that
@@ -336,7 +292,6 @@ def _time_queries(
         fn = QUERIES[name]
         samples = []
         for _ in range(runs):
-            _clear_memos()  # every sample is cold — see _clear_memos
             t0 = time.perf_counter()
             # noop sink, NOT .count(): count() collapses to a row-count
             # aggregate and Catalyst PRUNES every computed column, so a
@@ -456,26 +411,6 @@ def main() -> None:
     timings, spreads, mins1 = _time_queries(spark, sf_dir, runs)
     total = round(sum(timings.values()), 3)
 
-    # Warm-path metric for the memoized dedup/LSH family: the headline
-    # numbers above are COLD (memo cleared per sample — _clear_memos);
-    # this block populates the shared pair/CC memo once, then times
-    # each family member against it. Labeled separately so the memo
-    # win is visible without contaminating scaling/regression math.
-    memoized = [
-        "minhash_lsh_pairs",
-        "fuzzy_dedup_documents",
-        "dedup_cluster_sizes",
-        "embedding_near_pairs_lsh",
-        "semantic_dedup_embeddings",
-    ]
-    memo_warm: dict[str, float] = {}
-    _clear_memos()
-    for name in memoized:  # populate pass (untimed)
-        QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    for name in memoized:
-        t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-        memo_warm[name] = round(time.perf_counter() - t0, 3)
     out = {
         "metric": "headline_queries_total",
         "value": total,
@@ -487,9 +422,6 @@ def main() -> None:
         # max−min across the median-of-N samples, per query: the noise
         # floor for cross-round comparisons (detail file only)
         "spread": spreads,
-        # warm-path (memo-hit) seconds for the memoized family; the
-        # headline numbers are cold by construction
-        "memo_warm": memo_warm,
         # per-query MIN of the sample set (detail only): the
         # stall-robust estimator the sf1 exponents compare against
         "queries_min": mins1,
@@ -610,12 +542,9 @@ def main() -> None:
             # host whose wall-clock oscillates 5-10x between windows, a
             # single cold run conflates VM-churn stalls and first-run
             # shuffle-file effects with genuine superlinearity; the MIN
-            # of two back-to-back runs is the reproducible number. The
-            # memo clear keeps the second run honest for the memoized
-            # dedup family (a memo hit would time a checkpoint scan).
+            # of two back-to-back runs is the reproducible number.
             best = float("inf")
             for rep in range(2):
-                _clear_memos()
                 _reclaim(spark)  # sf1 runs are the heap high-water mark
                 t0 = time.perf_counter()
                 QUERIES[name](spark, sf3_dir).write.mode("overwrite").format(
@@ -650,7 +579,6 @@ def main() -> None:
                 for d_, sfd in (("t1", sf_dir), ("t3", sf3_dir)):
                     best = float("inf")
                     for _ in range(2):
-                        _clear_memos()
                         t0 = time.perf_counter()
                         QUERIES[name](spark, sfd).write.mode(
                             "overwrite"
@@ -788,7 +716,6 @@ def main() -> None:
         for name in list(regressions):
             samples = []
             for _ in range(3):
-                _clear_memos()
                 t0 = time.perf_counter()
                 QUERIES[name](spark, sf_dir).write.mode("overwrite").format(
                     "noop"

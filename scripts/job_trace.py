@@ -2,10 +2,10 @@
 """Per-JOB wall-time attribution for one or more headline queries.
 
 profile_queries.py counts jobs/stages; this script names them: it runs
-each query's noop-sink action once (memo-cleared, bench discipline) in a
-UI-enabled session and prints every Spark job the query triggered —
-duration, stage count/names (call sites) — so a 30-job query can be read
-as "which phase pays". Diagnostic tooling only; never touched by bench.
+each query's noop-sink action once in a UI-enabled session and prints
+every Spark job the query triggered — duration, stage count/names (call
+sites) — so a 30-job query can be read as "which phase pays".
+Diagnostic tooling only; never touched by bench.
 
 Usage:
     python scripts/job_trace.py [--out FILE] name [name ...]
@@ -23,8 +23,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from asset_prices_parquet_saver_spark.plans import QUERIES  # noqa: E402
 from asset_prices_parquet_saver_spark.session import get_spark  # noqa: E402
-
-from bench import _clear_memos  # noqa: E402
 
 
 def _api(base: str, path: str):
@@ -50,7 +48,6 @@ def main() -> None:
     QUERIES["embedding_near_pairs_lsh"](spark, sf_dir).count()
     out: dict[str, list] = {}
     for name in args.names:
-        _clear_memos()
         group = f"trace-{name}"
         sc.setJobGroup(group, name)
         QUERIES[name](spark, sf_dir).write.mode("overwrite").format(

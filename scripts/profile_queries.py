@@ -2,8 +2,8 @@
 """Per-query profiling harness for the optimization rounds.
 
 For each named headline query (default: every bench HEADLINE entry) this
-runs the noop-sink action once cold (memo-cleared, same discipline as
-bench.py) and records wall seconds plus the number of Spark JOBS and
+runs the noop-sink action once cold (same discipline as bench.py)
+and records wall seconds plus the number of Spark JOBS and
 STAGES the query triggered. Job count exposes hidden eager actions
 (localCheckpoint barriers, write-path gate bodies); stage count is a
 proxy for exchange count. Output: one JSON object on stdout, optionally
@@ -26,7 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from asset_prices_parquet_saver_spark.plans import QUERIES  # noqa: E402
 from asset_prices_parquet_saver_spark.session import get_spark  # noqa: E402
 
-from bench import HEADLINE, _clear_memos, _reclaim  # noqa: E402
+from bench import HEADLINE, _reclaim  # noqa: E402
 
 
 def main() -> None:
@@ -48,7 +48,6 @@ def main() -> None:
             _reclaim(spark)
         best = None
         for r in range(args.runs):
-            _clear_memos()
             group = f"prof-{name}-{r}"
             sc.setJobGroup(group, name)
             t0 = time.perf_counter()

@@ -295,39 +295,6 @@ def test_chunking_skips_empty_documents(spark):
     assert sorted(r["chunk_text"] for r in rows) == ["one two", "three"]
 
 
-def test_lsh_memo_shares_pair_stage_across_family(spark, sf_dir):
-    """memo=True: the pair relation and the component labels are built
-    once per (corpus, params) and reused — identical results, same
-    checkpointed object on a second call — and a different corpus or
-    parameter set never hits the wrong entry."""
-    from asset_prices_parquet_saver_spark.operators import dedup
-    from asset_prices_parquet_saver_spark.sources.tables import read_table
-
-    dedup._LSH_MEMO.clear()
-    d = read_table(spark, sf_dir, "documents")
-    plain = dedup.minhash_dedup(d, "doc_id", "text", hash_family="md5")
-    memo1 = dedup.minhash_dedup(d, "doc_id", "text", hash_family="md5", memo=True)
-    memo2 = dedup.minhash_dedup(d, "doc_id", "text", hash_family="md5", memo=True)
-    assert memo2 is memo1  # second call is a cache hit, not a rebuild
-    rows = lambda df: sorted(map(repr, df.collect()))
-    assert rows(memo1) == rows(plain)
-
-    # the cluster report and fuzzy dedup reuse the SAME memoized stages
-    before = set(dedup._LSH_MEMO)
-    rep = dedup.dedup_cluster_report(d, "doc_id", "text", hash_family="md5", memo=True)
-    fuz = dedup.fuzzy_dedup(d, "doc_id", "text", hash_family="md5", memo=True)
-    assert len(dedup._LSH_MEMO) == len(before) + 1  # only the cc entry was added
-    assert rows(rep) == rows(dedup.dedup_cluster_report(d, "doc_id", "text", hash_family="md5"))
-    assert rows(fuz.select("doc_id")) == rows(
-        dedup.fuzzy_dedup(d, "doc_id", "text", hash_family="md5").select("doc_id")
-    )
-
-    # different params -> different key, no false sharing
-    other = dedup.minhash_dedup(d, "doc_id", "text", threshold=0.9, memo=True, hash_family="md5")
-    assert other is not memo1
-    dedup._LSH_MEMO.clear()
-
-
 def test_winnowing_guarantee_shared_passage(spark):
     """The winnowing guarantee (Schleimer et al. 2003, Thm. on t =
     w + k - 1): any shared word run of at least window + k - 1 words
@@ -468,9 +435,6 @@ def test_term_postings_materializes_only_query_terms(spark):
     # 20 docs x 2 query-term postings, NOT 20 x ~52 token postings
     assert idx.count() == 40
     assert set(r["term"] for r in idx.collect()) == {"alpha", "beta"}
-    # memo: same (plan, terms) returns the same checkpointed relation
-    again = text_ops.term_postings(df, "doc_id", "text", ("beta", "alpha"))
-    assert again is idx
 
 
 def test_indexed_phrase_and_proximity_match_adhoc_and_bucket_prune(spark):
@@ -711,10 +675,9 @@ def test_duplicated_spans_merges_adjacent_islands(spark):
     assert spans == {(0, 1, 5), (0, 7, 11), (1, 1, 5), (1, 7, 11)}
 
 
-def test_duplicated_spans_memo_keys_on_columns(spark):
-    """ADVICE-r9: the window memo must key on (id_col, text_col) —
-    same DataFrame + same k with a DIFFERENT text column must not
-    replay the first call's cached window relation."""
+def test_duplicated_spans_follows_text_column(spark):
+    """Spans come from the named text column: the same DataFrame and k
+    with a DIFFERENT text column yields that column's spans."""
     from pyspark.sql import Row
 
     df = spark.createDataFrame(
@@ -724,9 +687,9 @@ def test_duplicated_spans_memo_keys_on_columns(spark):
         ],
         "doc_id long, text string, other string",
     )
-    dup_text = dedup.duplicated_spans(df, "doc_id", "text", k=5, memo=True)
+    dup_text = dedup.duplicated_spans(df, "doc_id", "text", k=5)
     assert dup_text.count() == 2  # both docs share the run in `text`
-    dup_other = dedup.duplicated_spans(df, "doc_id", "other", k=5, memo=True)
+    dup_other = dedup.duplicated_spans(df, "doc_id", "other", k=5)
     assert dup_other.count() == 0  # `other` has no cross-doc run
 
 

@@ -152,6 +152,30 @@ def test_ann_lsh_topk_broadcasts_probes_into_one_kernel(spark, sf_dir):
     assert "bucket" not in plan and "table#" not in plan
 
 
+def test_semantic_dedup_edges_run_cosine_kernel_once(spark, sf_dir, monkeypatch):
+    """connected_components unions the LSH pair relation with its mirror
+    into an edge list. Both branches read the same pair subtree, so the
+    executed edge plan scores pairs in ONE MapInPandas and the mirror
+    branch reuses its shuffle output (ReusedExchange) rather than
+    re-running the cosine kernel."""
+    frame_cls = type(spark.range(1))
+    checkpointed = []
+    real = frame_cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpointed.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    QUERIES["semantic_dedup_embeddings"](spark, sf_dir)
+    edges = next(df for df in checkpointed if df.columns == ["src", "dst"])
+    plan = _plan(edges)
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("MapInPandas") == 1
+    assert "ReusedExchange" in final
+
+
 def test_cosine_topk_never_shuffles_vectors_wide(spark, sf_dir):
     """Exact top-k: one shuffle groups the corpus into blocks; the rank
     window then shuffles only (query_id, vec_id, cosine) rows."""
