@@ -4,7 +4,7 @@
 |---|---|---|
 | ``parquet_details.py --symbol S`` | ``details`` | head/tail/schema; top-N files by mtime when no symbol given (parquet_details.py:15-38) |
 | ``compare_parquet.py --symbol S`` | ``compare`` | schema diff + the row-level data diff the reference left as a TODO (compare_parquet.py:101-102) |
-| ``download_historical_price.py`` | ``ingest`` | symbol universe → fetch → normalize → partitioned prices write (§3.1); needs a network SDK, else exits with the FetcherUnavailable message |
+| ``download_historical_price.py`` | ``ingest`` | symbol universe → fetch → normalize → (source, day)-partitioned prices write that ``live`` upserts into (§3.1); needs a network SDK, else exits with the FetcherUnavailable message |
 | ``update_live_price.py`` | ``live`` | Structured Streaming upsert loop (§3.2); same gating |
 
 Run as ``python -m asset_prices_parquet_saver_spark <subcommand>``.
@@ -58,7 +58,7 @@ def _cmd_ingest(args) -> int:
     from asset_prices_parquet_saver_spark.operators.normalize import normalize_bars
     from asset_prices_parquet_saver_spark.operators.symbols import union_universe
     from asset_prices_parquet_saver_spark.sources import fetchers
-    from asset_prices_parquet_saver_spark.sources.prices import write_prices
+    from asset_prices_parquet_saver_spark.sources.prices_daily import write_prices_daily
 
     spark = get_spark(app_name="ingest")
     symbols = spark.createDataFrame(
@@ -88,7 +88,7 @@ def _cmd_ingest(args) -> int:
     except fetchers.FetcherUnavailable as exc:
         print(f"error: {exc}", file=sys.stderr)
         return 2
-    write_prices(normalize_bars(raw, args.source), args.output)
+    write_prices_daily(normalize_bars(raw, args.source), args.output)
     return 0
 
 

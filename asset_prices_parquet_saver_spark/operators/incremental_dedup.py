@@ -23,8 +23,8 @@ Per batch (one pass, fully parallel):
 5. survivors' signature rows are appended to the index.
 
 At 100 TB: the index table should be bucketed by its band keys (store
-the exploded (band, bucket, id) form via ``write_prices_bucketed``-
-style bucketing) so step 2 is a shuffle of the BATCH only; the
+the exploded (band, bucket, id) form with ``DataFrameWriter.bucketBy``
+on (band, bucket)) so step 2 is a shuffle of the BATCH only; the
 verification join fetches only colliding index rows.
 """
 

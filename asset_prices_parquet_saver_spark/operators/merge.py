@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from asset_prices_parquet_saver_spark.schema import BAR_SCHEMA, BAR_VALUE_COLUMNS
+from asset_prices_parquet_saver_spark.schema import BAR_VALUE_COLUMNS
 
 
 def keep_latest(df: DataFrame, keys: list[str], order_by: list) -> DataFrame:
@@ -48,41 +48,35 @@ def latest_ticks_per_day(ticks: DataFrame) -> DataFrame:
     )
 
 
-def upsert_live_prices(prices: DataFrame, ticks: DataFrame, source: str = "alpaca") -> DataFrame:
-    """Merge live ticks into the bar table (J4).
+def upsert_live_prices(existing: DataFrame, latest: DataFrame) -> DataFrame:
+    """Merge one source's reduced ticks into its bars (J4).
+
+    ``existing`` holds the source's bars with at least (symbol, day,
+    timestamp, value columns); ``latest`` is :func:`latest_ticks_per_day`
+    output, or a projection of it keeping (symbol, day, price).
 
     Exactly the reference's semantics (update_live_price.py:250-274):
     existing (symbol, day) row → only adj_close replaced; new day →
     new row with all other value columns NULL and timestamp = the day
-    (midnight UTC, matching the normalized index at :239-252).
+    (midnight UTC, matching the normalized index at :239-252). Returns
+    (symbol, day, timestamp, value columns).
     """
-    latest = latest_ticks_per_day(ticks).select(
+    joined = existing.alias("p").join(latest.alias("t"), ["symbol", "day"], "full_outer")
+    return joined.select(
         F.col("symbol"),
         F.col("day"),
-        F.col("price").alias("__new_adj_close"),
-    )
-    pr = prices.filter(F.col("source") == source).withColumn(
-        "day", F.to_date("timestamp")
-    )
-    other = prices.filter(F.col("source") != source)
-
-    joined = pr.alias("p").join(latest.alias("t"), ["symbol", "day"], "full_outer")
-    merged = joined.select(
-        F.lit(source).alias("source"),
-        F.col("symbol"),
         F.coalesce(F.col("p.timestamp"), F.col("day").cast("timestamp")).alias(
             "timestamp"
         ),
         *[
             (
-                F.coalesce(F.col("t.__new_adj_close"), F.col(f"p.{c}")).alias(c)
+                F.coalesce(F.col("t.price"), F.col(f"p.{c}")).alias(c)
                 if c == "adj_close"
                 else F.col(f"p.{c}").alias(c)
             )
             for c in BAR_VALUE_COLUMNS
         ],
     )
-    return other.unionByName(merged.select([f.name for f in BAR_SCHEMA.fields]))
 
 
 def last_price_per_symbol(prices: DataFrame) -> DataFrame:

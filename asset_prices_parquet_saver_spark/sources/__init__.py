@@ -2,9 +2,9 @@
 the symbol-status table, and (stubbed) network fetchers."""
 
 from asset_prices_parquet_saver_spark.sources.tables import load_tables, read_table
-from asset_prices_parquet_saver_spark.sources.prices import (
-    read_prices,
-    write_prices,
+from asset_prices_parquet_saver_spark.sources.prices_daily import (
+    read_prices_daily,
+    write_prices_daily,
 )
 from asset_prices_parquet_saver_spark.sources.status import (
     append_status,
@@ -15,8 +15,8 @@ from asset_prices_parquet_saver_spark.sources.status import (
 __all__ = [
     "load_tables",
     "read_table",
-    "read_prices",
-    "write_prices",
+    "read_prices_daily",
+    "write_prices_daily",
     "append_status",
     "read_status",
     "write_status",

@@ -1,9 +1,12 @@
-"""Day-partitioned prices layout + partition-pruned incremental merge.
+"""The ``prices`` dataset (SURVEY §1.5, §7.1): one table, partitioned by
+(source, day), written by bulk ingest and upserted by the live stream.
 
-The flat ``prices`` layout (sources/prices.py) rewrites the whole
-dataset per merge — fine for bulk loads, absurd for a 60-second live
-tick loop at 100 TB. This layout partitions by (source, day) so the
-live upsert (J4, update_live_price.py:250-274) becomes:
+Replaces the reference's one-Parquet-file-per-(symbol, source) layout
+(download_historical_price.py:74-82, :429, :455), which
+update_live_price.py:200-297 read-modify-writes in place. Here symbol is
+a data column, so day partitions hold all symbols (no small-files
+problem), and the live upsert (J4, update_live_price.py:250-274)
+becomes:
 
 1. reduce the batch to last-tick-per-(symbol, day);
 2. read ONLY the affected day partitions (partition pruning — the
@@ -15,35 +18,46 @@ live upsert (J4, update_live_price.py:250-274) becomes:
 
 Per-batch cost is O(ticks + affected-day partition size), independent
 of total dataset size — the property the reference got from per-symbol
-files, without the small-files problem (day partitions hold all
-symbols; compaction keeps file counts bounded).
+files. Each write replaces a touched partition with one file, so the
+layout needs no compaction. The reference hand-rolls atomicity via
+tmp-file + os.replace (download_historical_price.py:429-432); Spark's
+output-commit protocol gives the same guarantee per partition.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from asset_prices_parquet_saver_spark.operators.merge import latest_ticks_per_day
+from asset_prices_parquet_saver_spark.operators.merge import (
+    latest_ticks_per_day,
+    upsert_live_prices,
+)
 from asset_prices_parquet_saver_spark.schema import BAR_SCHEMA, BAR_VALUE_COLUMNS
 
 #: data columns stored inside each partition file
 _DATA_COLUMNS = ["symbol", "timestamp", *BAR_VALUE_COLUMNS]
 
 
-def write_prices_daily(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_prices_daily(df: DataFrame, path: str) -> None:
     """Write bars partitioned by (source, day); day derives from the
     bar timestamp. One shuffle keyed on the partition columns so each
-    output partition is a single task's write."""
+    output partition is a single task's write.
+
+    NOTE: the write is a dynamic partition overwrite (set per write, so
+    foreign sessions behave the same): it replaces ONLY the
+    (source, day) partitions present in ``df`` and leaves every other
+    partition in place — a rebuild from a frame that lacks some day
+    keeps that day's old data. For a true full replace, clear the path
+    first."""
     (
         df.withColumn("day", F.to_date("timestamp"))
         .repartition("source", "day")
         .sortWithinPartitions("symbol", "timestamp")
         .select("source", "day", *_DATA_COLUMNS)
-        .write.partitionBy("source", "day")
-        .mode(mode)
+        .write.option("partitionOverwriteMode", "dynamic")
+        .partitionBy("source", "day")
+        .mode("overwrite")
         .parquet(path)
     )
 
@@ -54,15 +68,20 @@ def read_prices_daily(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def _dataset_exists(path: str) -> bool:
+def _dataset_exists(spark: SparkSession, path: str) -> bool:
     """True iff a prices dataset was ever written at ``path`` (any
     non-marker entry in the directory — partition dirs in practice).
-    Local-FS check, consistent with sources/manifest.py; on an object
-    store this becomes a prefix listing."""
-    if not os.path.isdir(path):
+    Asks the path's Hadoop FileSystem, so plain paths and ``file://``,
+    ``hdfs://`` or ``s3a://`` URIs all resolve; listing errors
+    propagate."""
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if not fs.exists(p):
         return False
     return any(
-        not n.startswith((".", "_")) for n in os.listdir(path)
+        not st.getPath().getName().startswith((".", "_"))
+        for st in fs.listStatus(p)
     )
 
 
@@ -83,110 +102,27 @@ def merge_ticks_incremental(
     # localCheckpoint: `latest` feeds BOTH the affected-day collect and
     # the merge/write job — without materializing it the row_number
     # window over the tick batch runs twice per 60-second epoch
-    latest = (
-        latest_ticks_per_day(ticks)
-        .select("symbol", "day", F.col("price").alias("__new_adj_close"))
-        .localCheckpoint()
-    )
+    latest = latest_ticks_per_day(ticks).select("symbol", "day", "price").localCheckpoint()
     # the affected-day list is tiny (days-per-batch), collect is cheap
     # and becomes the partition-pruning predicate
     days = [r.day for r in latest.select("day").distinct().collect()]
     if not days:
         return []
 
-    # EXPLICIT first-write detection — never catch read errors here: an
+    # EXPLICIT existence check — never catch read errors here: an
     # AnalysisException from a corrupt or permission-denied store must
     # propagate, not be mistaken for "nothing on disk yet" and silently
-    # rebuild the dataset from this one batch (the durability path is
-    # the last place to guess)
-    if _dataset_exists(path):
-        existing = (
-            read_prices_daily(spark, path)
-            .filter((F.col("source") == source) & (F.col("day").isin(days)))
-            .select("day", *_DATA_COLUMNS)
+    # rebuild the touched days from this one batch (the durability path
+    # is the last place to guess). A missing dataset merges against an
+    # empty frame of the same columns.
+    if _dataset_exists(spark, path):
+        existing = read_prices_daily(spark, path).filter(
+            (F.col("source") == source) & (F.col("day").isin(days))
         )
     else:
-        existing = None
-
-    if existing is None:
-        merged = latest.select(
-            F.col("symbol"),
-            F.col("day"),
-            F.col("day").cast("timestamp").alias("timestamp"),
-            *[
-                (
-                    F.col("__new_adj_close") if c == "adj_close" else F.lit(None).cast("double")
-                ).alias(c)
-                for c in BAR_VALUE_COLUMNS
-            ],
+        existing = spark.createDataFrame([], BAR_SCHEMA).withColumn(
+            "day", F.to_date("timestamp")
         )
-    else:
-        # KEEP IN SYNC with operators/merge.upsert_live_prices: this is
-        # the day-partitioned twin of the flat layout's coalesce-merge
-        # (differs only in the day-derived timestamp fallback); a
-        # semantics change to either must land in both or the two
-        # layouts silently diverge.
-        joined = existing.alias("p").join(latest.alias("t"), ["symbol", "day"], "full_outer")
-        merged = joined.select(
-            F.col("symbol"),
-            F.col("day"),
-            F.coalesce(F.col("p.timestamp"), F.col("day").cast("timestamp")).alias(
-                "timestamp"
-            ),
-            *[
-                (
-                    F.coalesce(F.col("t.__new_adj_close"), F.col(f"p.{c}")).alias(c)
-                    if c == "adj_close"
-                    else F.col(f"p.{c}").alias(c)
-                )
-                for c in BAR_VALUE_COLUMNS
-            ],
-        )
-
-    out = merged.withColumn("source", F.lit(source)).select(
-        "source", "day", *_DATA_COLUMNS
-    )
-    # dynamic overwrite replaces exactly the partitions present in
-    # `out` — all other (source, day) directories are untouched
-    # (spark.sql.sources.partitionOverwriteMode=dynamic is pinned in
-    # session.get_spark; set per-write here for foreign sessions)
-    (
-        out.repartition("source", "day")
-        .sortWithinPartitions("symbol", "timestamp")
-        .write.option("partitionOverwriteMode", "dynamic")
-        .partitionBy("source", "day")
-        .mode("overwrite")
-        .parquet(path)
-    )
+    merged = upsert_live_prices(existing, latest).withColumn("source", F.lit(source))
+    write_prices_daily(merged, path)
     return days
-
-
-def run_live_upsert_incremental(
-    spark: SparkSession,
-    ticks_stream: DataFrame,
-    prices_path: str,
-    source: str = "alpaca",
-    trigger_seconds: int | None = 60,
-    checkpoint_dir: str | None = None,
-    available_now: bool = False,
-):
-    """Streaming wrapper: the T1-T7 pipeline of streaming.live but with
-    the partition-pruned merge as the ``foreachBatch`` sink."""
-    from asset_prices_parquet_saver_spark.streaming.live import (
-        dedupe_ticks_with_watermark,
-    )
-
-    def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        merge_ticks_incremental(spark, prices_path, batch, source=source)
-
-    deduped = dedupe_ticks_with_watermark(ticks_stream)
-    writer = deduped.writeStream.outputMode("update").foreachBatch(merge_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -23,7 +23,7 @@ def read_status(spark: SparkSession, path: str) -> DataFrame:
     (permissions, corruption) propagates instead of being swallowed
     into "no status rows" — a silently-empty read would disable every
     blacklist and re-fetch known-bad symbols (the same forbidden
-    pattern prices_daily documents for its first-write detection)."""
+    pattern prices_daily documents for its existence check)."""
     from asset_prices_parquet_saver_spark.sources import manifest
 
     return manifest.read_versioned(spark, path, schema=SYMBOL_STATUS_SCHEMA)

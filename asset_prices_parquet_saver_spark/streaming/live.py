@@ -25,9 +25,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from asset_prices_parquet_saver_spark.operators.merge import upsert_live_prices
-from asset_prices_parquet_saver_spark.schema import BAR_SCHEMA
-
 
 def dedupe_ticks_with_watermark(
     ticks: DataFrame, lateness: str = "1 day"
@@ -72,30 +69,23 @@ def run_live_upsert(
     checkpoint_dir: str | None = None,
     available_now: bool = False,
     on_batch: Callable[[DataFrame, int], None] | None = None,
-    layout: str = "daily",
 ):
     """Start the live upsert query (T1/T3): every micro-batch merges its
-    ticks into the prices dataset with the reference's last-write-wins-
-    per-(symbol, day) semantics (J4).
+    ticks into the (source, day)-partitioned prices dataset that
+    ``ingest`` writes, with the reference's last-write-wins-per-
+    (symbol, day) semantics (J4).
 
-    ``layout='daily'`` (default, the scale path): the sink is the
-    partition-pruned incremental merge into a (source, day)-partitioned
-    dataset — per-batch cost O(ticks + touched-day partitions),
-    committed by Spark's dynamic partition overwrite, no driver
-    filesystem calls (works against HDFS/S3 warehouses).
-
-    ``layout='flat'``: whole-dataset rewrite committed through the
-    manifest protocol (sources/manifest.py) — each batch writes an
-    immutable snapshot directory and atomically publishes a one-file
-    pointer to it. No directory renames, no window where the table is
-    missing, crash-of-writer leaves only an orphan snapshot that the
-    next commit numbers past and garbage-collects; the only atomic
-    primitive is single-object publish, which object stores have.
+    The sink is the partition-pruned incremental merge
+    (:func:`~..sources.prices_daily.merge_ticks_incremental`): per-batch
+    cost O(ticks + touched-day partitions), committed by Spark's dynamic
+    partition overwrite. Per batch the driver makes one existence check
+    and one listing of the dataset root through the path's Hadoop
+    FileSystem (so HDFS/S3 warehouses work) and collects the batch's
+    affected days; everything else runs as Spark jobs. ``on_batch``, if
+    given, runs after each batch's merge with the batch and its epoch id.
     """
-    if layout not in ("daily", "flat"):
-        raise ValueError(f"unknown layout {layout!r}: expected 'daily' or 'flat'")
 
-    def merge_batch_daily(batch: DataFrame, epoch_id: int) -> None:
+    def merge_batch(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
         from asset_prices_parquet_saver_spark.sources.prices_daily import (
@@ -106,38 +96,6 @@ def run_live_upsert(
         if on_batch is not None:
             on_batch(batch, epoch_id)
 
-    def merge_batch_flat(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        from asset_prices_parquet_saver_spark.sources import manifest
-
-        # Derived rewrite, so it follows manifest.py's lost-update
-        # contract: pin expect_version to the snapshot the merge plan
-        # read (an out-of-band committer — compaction, a second stream
-        # — would otherwise be silently folded away) and retry against
-        # the fresh state on conflict. txn makes a replayed epoch after
-        # crash-restart a no-op instead of an extra rewrite.
-        for attempt in range(3):
-            v = manifest.current_version(prices_path)
-            prices = manifest.read_versioned(
-                spark, prices_path, schema=BAR_SCHEMA, version=v
-            )
-            merged = upsert_live_prices(prices, batch, source=source)
-            try:
-                manifest.commit_versioned(
-                    merged,
-                    prices_path,
-                    txn=(f"live-{source}", epoch_id),
-                    expect_version=v,
-                )
-                break
-            except manifest.CommitConflict:
-                if attempt == 2:
-                    raise
-        if on_batch is not None:
-            on_batch(batch, epoch_id)
-
-    merge_batch = merge_batch_daily if layout == "daily" else merge_batch_flat
     deduped = dedupe_ticks_with_watermark(ticks_stream)
     writer = deduped.writeStream.outputMode("update").foreachBatch(merge_batch)
     if checkpoint_dir:

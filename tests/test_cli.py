@@ -9,7 +9,7 @@ from pyspark.sql import Row
 
 from asset_prices_parquet_saver_spark import cli
 from asset_prices_parquet_saver_spark.schema import BAR_SCHEMA
-from asset_prices_parquet_saver_spark.sources.prices import write_prices
+from asset_prices_parquet_saver_spark.sources.prices_daily import write_prices_daily
 
 
 def _bar(source, symbol, day, close):
@@ -35,7 +35,7 @@ def prices_path(spark, tmp_path):
         _bar("alpaca", "AAPL", 3, 11.0),
         _bar("yfinance", "AAPL", 2, 10.5),
     ]
-    write_prices(spark.createDataFrame(bars, BAR_SCHEMA), path)
+    write_prices_daily(spark.createDataFrame(bars, BAR_SCHEMA), path)
     return path
 
 

@@ -14,7 +14,6 @@ from asset_prices_parquet_saver_spark.schema import BAR_SCHEMA, LIVE_TRADE_SCHEM
 from asset_prices_parquet_saver_spark.sources.prices_daily import (
     merge_ticks_incremental,
     read_prices_daily,
-    run_live_upsert_incremental,
     write_prices_daily,
 )
 
@@ -94,34 +93,21 @@ def test_incremental_merge_first_write(spark, tmp_path):
     assert len(rows) == 1 and rows[0].adj_close == 5.0
 
 
-def test_incremental_streaming_end_to_end(spark, tmp_path):
-    path = str(tmp_path / "daily")
-    ticks_dir = tmp_path / "ticks"
-    ticks_dir.mkdir()
-    write_prices_daily(
-        spark.createDataFrame([_bar("alpaca", "AAPL", 2, 10.0)], BAR_SCHEMA), path
+def test_merge_into_file_uri_dataset_keeps_existing_bars(spark, tmp_path):
+    """A ``file://`` URI names an existing dataset too: the merge must
+    read the touched day, not take it for a first write and replace the
+    partition with the batch alone."""
+    path = (tmp_path / "daily").as_uri()
+    seed = [_bar("alpaca", "AAPL", 2, 10.0), _bar("alpaca", "MSFT", 2, 20.0)]
+    write_prices_daily(spark.createDataFrame(seed, BAR_SCHEMA), path)
+    ticks = spark.createDataFrame(
+        [_tick("AAPL", 11.0, 2024, 1, 2, 15, 0, 0)], LIVE_TRADE_SCHEMA
     )
-    batch = spark.createDataFrame(
-        [
-            _tick("AAPL", 11.0, 2024, 1, 2, 15, 0, 0),
-            _tick("AAPL", 9.0, 2024, 1, 2, 9, 0, 0),  # earlier, must lose
-        ],
-        LIVE_TRADE_SCHEMA,
-    )
-    batch.coalesce(1).write.mode("append").parquet(str(ticks_dir))
-    q = run_live_upsert_incremental(
-        spark,
-        spark.readStream.schema(LIVE_TRADE_SCHEMA).parquet(str(ticks_dir)),
-        path,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        available_now=True,
-    )
-    q.awaitTermination(120)
-    rows = {
-        (r.symbol, str(r.day)): r for r in read_prices_daily(spark, path).collect()
-    }
-    assert rows[("AAPL", "2024-01-02")].adj_close == 11.0
-    assert rows[("AAPL", "2024-01-02")].open == 1.0
+    merge_ticks_incremental(spark, path, ticks)
+    out = {r.symbol: r for r in read_prices_daily(spark, path).collect()}
+    assert set(out) == {"AAPL", "MSFT"}
+    assert (out["AAPL"].adj_close, out["AAPL"].open) == (11.0, 1.0)
+    assert out["MSFT"].adj_close == 20.0
 
 
 def test_corrupt_store_raises_instead_of_rebuilding(spark, tmp_path):

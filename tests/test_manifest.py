@@ -283,40 +283,6 @@ def test_first_commit_leaves_legacy_files_for_inflight_readers(spark, tmp_path):
     assert not any(n.endswith(".parquet") for n in os.listdir(t))
 
 
-def test_compact_prices_crash_recovery(spark, tmp_path):
-    """The two-rename swap has a crash window where the dataset lives
-    only under .old; recover_compaction must restore it, and a stale
-    .old from a crash after the swap must be cleared instead of wedging
-    the next run with ENOTEMPTY."""
-    import shutil
-
-    from asset_prices_parquet_saver_spark.sources import prices
-
-    from pyspark.sql import functions as F
-
-    from asset_prices_parquet_saver_spark.schema import BAR_SCHEMA
-
-    path = str(tmp_path / "prices")
-    base = spark.createDataFrame([("AAPL", "alpaca")], "symbol string, source string")
-    for f in BAR_SCHEMA.fields:
-        if f.name not in ("symbol", "source"):
-            base = base.withColumn(f.name, F.lit(None).cast(f.dataType))
-    prices.write_prices(base, path)
-    rows = prices.read_prices(spark, path).count()
-    # crash window 1: path renamed away, staging half-written
-    os.replace(path, path + ".old")
-    os.makedirs(path + ".compact", exist_ok=True)
-    assert prices.recover_compaction(path) is True
-    assert prices.read_prices(spark, path).count() == rows
-    assert not os.path.exists(path + ".old")
-    # crash window 2: stale .old next to a live path -> cleared, not fatal
-    shutil.copytree(path, path + ".old")
-    assert prices.recover_compaction(path) is False
-    assert not os.path.exists(path + ".old")
-    prices.compact_prices(spark, path)  # full run still works
-    assert prices.read_prices(spark, path).count() == rows
-
-
 def test_status_write_read_roundtrip(spark, tmp_path):
     """write_status persists atomically through the manifest (no parquet
     self-overwrite dance) and read_status of a missing table is a typed

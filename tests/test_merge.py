@@ -12,6 +12,7 @@ import datetime
 
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from asset_prices_parquet_saver_spark.operators.merge import (
     last_price_per_symbol,
@@ -42,13 +43,20 @@ def _tick(symbol, day, hour, price, us=0):
     )
 
 
+def _upsert(prices, ticks):
+    """The J4 merge as the live sink calls it: one source's bars keyed
+    by day against the batch's last tick per (symbol, day)."""
+    existing = prices.withColumn("day", F.to_date("timestamp"))
+    return upsert_live_prices(existing, latest_ticks_per_day(ticks))
+
+
 def test_update_existing_date_overwrites_only_adj_close(spark):
     prices = spark.createDataFrame(
         [_bar("AAPL", 2, open=1.0, high=2.0, low=0.5, adj_close=1.5, volume=9.0)],
         BAR_SCHEMA,
     )
     ticks = spark.createDataFrame([_tick("AAPL", 2, 15, 99.0)])
-    out = upsert_live_prices(prices, ticks).collect()
+    out = _upsert(prices, ticks).collect()
     assert len(out) == 1
     row = out[0]
     assert row.adj_close == 99.0
@@ -60,7 +68,7 @@ def test_update_existing_date_overwrites_only_adj_close(spark):
 def test_new_date_appends_null_padded_row(spark):
     prices = spark.createDataFrame([_bar("AAPL", 2, adj_close=1.0)], BAR_SCHEMA)
     ticks = spark.createDataFrame([_tick("AAPL", 3, 10, 50.0)])
-    out = {r.timestamp.day: r for r in upsert_live_prices(prices, ticks).collect()}
+    out = {r.timestamp.day: r for r in _upsert(prices, ticks).collect()}
     assert set(out) == {2, 3}
     new = out[3]
     assert new.adj_close == 50.0
@@ -72,7 +80,7 @@ def test_last_write_wins_within_date(spark):
     ticks = spark.createDataFrame(
         [_tick("AAPL", 2, 10, 1.0), _tick("AAPL", 2, 15, 2.0), _tick("AAPL", 2, 12, 3.0)]
     )
-    out = upsert_live_prices(prices, ticks).collect()
+    out = _upsert(prices, ticks).collect()
     assert len(out) == 1
     assert out[0].adj_close == 2.0  # 15:00 is latest
 
@@ -89,7 +97,14 @@ def test_invalid_ticks_filtered(spark):
     assert len(out) == 1 and out[0].price == 1.0
 
 
-def test_other_sources_untouched(spark):
+def test_other_sources_untouched(spark, tmp_path):
+    from asset_prices_parquet_saver_spark.sources.prices_daily import (
+        merge_ticks_incremental,
+        read_prices_daily,
+        write_prices_daily,
+    )
+
+    path = str(tmp_path / "prices")
     prices = spark.createDataFrame(
         [
             _bar("AAPL", 2, adj_close=1.0),
@@ -97,9 +112,10 @@ def test_other_sources_untouched(spark):
         ],
         BAR_SCHEMA,
     )
+    write_prices_daily(prices, path)
     ticks = spark.createDataFrame([_tick("AAPL", 2, 15, 99.0)])
-    out = upsert_live_prices(prices, ticks, source="alpaca")
-    by_source = {r.source: r for r in out.collect()}
+    merge_ticks_incremental(spark, path, ticks, source="alpaca")
+    by_source = {r.source: r for r in read_prices_daily(spark, path).collect()}
     assert by_source["alpaca"].adj_close == 99.0
     assert by_source["yfinance"].adj_close == 7.0
 
@@ -137,7 +153,7 @@ def test_property_upsert_invariants(spark, ticks):
         for s, d, h, us, p in ticks
     ]
     prices = spark.createDataFrame([], BAR_SCHEMA)
-    out = upsert_live_prices(prices, spark.createDataFrame(tick_rows)).collect()
+    out = _upsert(prices, spark.createDataFrame(tick_rows)).collect()
     # ≤1 row per (symbol, date)
     keys = [(r.symbol, r.timestamp.date()) for r in out]
     assert len(keys) == len(set(keys))

@@ -1,20 +1,10 @@
-"""Skew helpers and dataset maintenance (compaction, bucketing)."""
+"""Skew helpers: salted joins and aggregates, two-phase distinct."""
 
 from __future__ import annotations
 
-import datetime
-import glob
-
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from asset_prices_parquet_saver_spark.operators import skew
-from asset_prices_parquet_saver_spark.schema import BAR_SCHEMA
-from asset_prices_parquet_saver_spark.sources.prices import (
-    compact_prices,
-    read_prices,
-    write_prices,
-)
 from asset_prices_parquet_saver_spark.sources.tables import read_table
 
 
@@ -73,86 +63,6 @@ def test_salt_is_deterministic(spark):
     assert s1 == s2  # hash-derived, not rand(): stable under task retry
 
 
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    import datetime as _dt
-
-    from asset_prices_parquet_saver_spark.sources.prices import (
-        write_prices_bucketed,
-    )
-
-    # warehouse dir is a static conf — tables land in ./spark-warehouse
-    # (gitignored); drop catalog entries AND stale dirs for idempotence
-    import shutil
-
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for t in ("t_alp", "t_yf"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)
-    bars = [
-        Row(
-            source=s,
-            symbol=f"SYM{i % 5}",
-            timestamp=_dt.datetime(2024, 1, 1 + i % 10),
-            open=1.0,
-            high=2.0,
-            low=0.5,
-            adj_close=float(i),
-            volume=1.0,
-            trade_count=None,
-            vwap=None,
-        )
-        for i in range(50)
-        for s in ("alpaca", "yfinance")
-    ]
-    df = spark.createDataFrame(bars, BAR_SCHEMA)
-    write_prices_bucketed(df.filter(F.col("source") == "alpaca"), "t_alp", 4)
-    write_prices_bucketed(df.filter(F.col("source") == "yfinance"), "t_yf", 4)
-    a = spark.table("t_alp").groupBy("symbol").agg(F.sum("adj_close").alias("sa"))
-    b = spark.table("t_yf").groupBy("symbol").agg(F.sum("adj_close").alias("sb"))
-    joined = a.join(b, "symbol")
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    # matching bucketing on the join/group key: aggregation and join
-    # run in place — no shuffle exchange anywhere (a BroadcastExchange
-    # of the already-aggregated 5-row side is fine and is not a shuffle)
-    assert "Exchange hashpartitioning" not in plan, plan
-    assert "Bucketed: true" in plan
-    assert joined.count() == 5
-
-
-def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
-    path = str(tmp_path / "prices")
-    bars = [
-        Row(
-            source="alpaca",
-            symbol=f"SYM{i % 7}",
-            timestamp=datetime.datetime(2024, 1, 1 + i % 28),
-            open=1.0,
-            high=2.0,
-            low=0.5,
-            adj_close=float(i),
-            volume=1.0,
-            trade_count=None,
-            vwap=None,
-        )
-        for i in range(196)
-    ]
-    # fragment: one write per symbol group → many small files
-    df = spark.createDataFrame(bars, BAR_SCHEMA)
-    for i in range(7):
-        write_prices(df.filter(F.col("symbol") == f"SYM{i}"), path, mode="append")
-    before = read_prices(spark, path)
-    rows_before = {(r.symbol, r.timestamp, r.adj_close) for r in before.collect()}
-    files_before = len(glob.glob(f"{path}/source=*/*.parquet"))
-
-    compact_prices(spark, path)
-
-    after = read_prices(spark, path)
-    rows_after = {(r.symbol, r.timestamp, r.adj_close) for r in after.collect()}
-    files_after = len(glob.glob(f"{path}/source=*/*.parquet"))
-    assert rows_after == rows_before
-    assert files_after < files_before
-
-
 def test_two_phase_distinct_ignores_nulls_like_count_distinct(spark):
     df = spark.createDataFrame(
         [("k", 1), ("k", 2), ("k", None), ("k", None)], "g string, v int"
@@ -169,77 +79,3 @@ def test_salted_sum_preserves_subcent_precision(spark):
     )
     [r] = skew.salted_sum_count(df, ["g"], "v").collect()
     assert abs(r["total"] - 1.0469) < 1e-9
-
-
-def _bar(i: int, sym: str = None) -> Row:
-    return Row(
-        source="alpaca",
-        symbol=sym or f"SYM{i % 3}",
-        timestamp=datetime.datetime(2024, 2, 1 + i % 27),
-        open=1.0,
-        high=2.0,
-        low=0.5,
-        adj_close=float(i),
-        volume=1.0,
-        trade_count=None,
-        vwap=None,
-    )
-
-
-def test_compact_prices_detects_concurrent_writer(spark, tmp_path):
-    """A write landing between the staging rewrite and the swap was
-    historically DISCARDED (single-writer by protocol). The CAS check
-    must abort with CommitConflict, keep the concurrent write, and let
-    a retry compact the merged state."""
-    from asset_prices_parquet_saver_spark.sources import prices as prices_mod
-    from asset_prices_parquet_saver_spark.sources.manifest import CommitConflict
-    import pytest
-
-    path = str(tmp_path / "prices")
-    df = spark.createDataFrame([_bar(i) for i in range(30)], BAR_SCHEMA)
-    for i in range(3):
-        write_prices(df.filter(F.col("adj_close") % 3 == i), path, mode="append")
-    base_rows = {(r.symbol, r.timestamp, r.adj_close) for r in read_prices(spark, path).collect()}
-
-    late = spark.createDataFrame([_bar(1000, "LATE")], BAR_SCHEMA)
-    prices_mod._test_pre_swap_hook = lambda: write_prices(late, path, mode="append")
-    try:
-        with pytest.raises(CommitConflict):
-            compact_prices(spark, path)
-    finally:
-        prices_mod._test_pre_swap_hook = None
-
-    # nothing lost: the original rows AND the concurrent write are live,
-    # the staging dir is gone, and the lock was released
-    got = {(r.symbol, r.timestamp, r.adj_close) for r in read_prices(spark, path).collect()}
-    assert got == base_rows | {("LATE", datetime.datetime(2024, 2, 2), 1000.0)}
-    import os
-    assert not os.path.exists(path + ".compact")
-    assert not os.path.exists(path + ".compact.lock")
-
-    # retry on the quiesced table succeeds and keeps everything
-    compact_prices(spark, path)
-    got2 = {(r.symbol, r.timestamp, r.adj_close) for r in read_prices(spark, path).collect()}
-    assert got2 == got
-
-
-def test_compact_prices_lock_excludes_second_compactor(spark, tmp_path):
-    """Two concurrent compactions interleaving their renames would
-    destroy the dataset; the O_EXCL lock must make the second fail
-    fast with CommitConflict."""
-    from asset_prices_parquet_saver_spark.sources.manifest import CommitConflict
-    import os
-    import pytest
-
-    path = str(tmp_path / "prices")
-    write_prices(spark.createDataFrame([_bar(i) for i in range(5)], BAR_SCHEMA), path)
-    lock = path + ".compact.lock"
-    fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    os.close(fd)
-    try:
-        with pytest.raises(CommitConflict):
-            compact_prices(spark, path)
-    finally:
-        os.remove(lock)
-    compact_prices(spark, path)  # lock released -> works again
-    assert read_prices(spark, path).count() == 5

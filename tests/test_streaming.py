@@ -8,7 +8,6 @@ import datetime
 from pyspark.sql import Row
 
 from asset_prices_parquet_saver_spark.schema import BAR_SCHEMA, LIVE_TRADE_SCHEMA
-from asset_prices_parquet_saver_spark.sources.prices import write_prices
 from asset_prices_parquet_saver_spark.sources.prices_daily import (
     read_prices_daily,
     write_prices_daily,
@@ -66,9 +65,21 @@ def _assert_merged(out):
     assert ("BAD", datetime.date(2024, 1, 2)) not in out  # P7 filter
 
 
+def _run_live(spark, prices_path, ticks_dir, ckpt):
+    stream = spark.readStream.schema(LIVE_TRADE_SCHEMA).parquet(str(ticks_dir))
+    query = run_live_upsert(
+        spark, stream, prices_path, checkpoint_dir=str(ckpt), available_now=True
+    )
+    query.awaitTermination(120)
+    return {
+        (r.symbol, r.timestamp.date()): r
+        for r in read_prices_daily(spark, prices_path).collect()
+    }
+
+
 def test_streaming_upsert_end_to_end_daily_default(spark, tmp_path):
-    """Default sink: partition-pruned incremental merge (no driver-FS
-    calls; dynamic partition overwrite commits only touched days)."""
+    """The live sink: partition-pruned incremental merge, dynamic
+    partition overwrite commits only touched days."""
     prices_path = str(tmp_path / "prices")
     ticks_dir = tmp_path / "ticks"
     ticks_dir.mkdir()
@@ -76,52 +87,41 @@ def test_streaming_upsert_end_to_end_daily_default(spark, tmp_path):
     write_prices_daily(_seed(spark), prices_path)
     _write_batch(spark, ticks_dir)
 
-    stream = spark.readStream.schema(LIVE_TRADE_SCHEMA).parquet(str(ticks_dir))
-    query = run_live_upsert(
-        spark,
-        stream,
-        prices_path,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        available_now=True,
-    )
-    query.awaitTermination(120)
-
-    out = {
-        (r.symbol, r.timestamp.date()): r
-        for r in read_prices_daily(spark, prices_path).collect()
-    }
+    out = _run_live(spark, prices_path, ticks_dir, tmp_path / "ckpt")
     _assert_merged(out)
+    # every row sits in the day partition of its own bar date
+    assert all(r.day == d for (_, d), r in out.items())
 
 
-def test_streaming_upsert_end_to_end_flat_layout(spark, tmp_path):
-    """Flat layout: manifest-committed snapshots. Seeds a LEGACY plain
-    parquet dir — the first batch must absorb it into version 1."""
-    from asset_prices_parquet_saver_spark.sources import manifest
+def test_ingest_then_live_upsert_same_dataset(spark, tmp_path, monkeypatch):
+    """The reference's workflow: ``live`` upserts into the very dataset
+    ``ingest`` wrote (update_live_price.py:200-297 rewrites the files
+    download_historical_price.py produced)."""
+    from asset_prices_parquet_saver_spark import cli
+    from asset_prices_parquet_saver_spark.sources import fetchers
 
+    raw = spark.createDataFrame(
+        [
+            ("aapl", datetime.datetime(2024, 1, 2), 1.0, 2.0, 0.5, 1.5, 9.0),
+            ("msft", datetime.datetime(2024, 1, 2), 3.0, 4.0, 2.5, 3.5, 7.0),
+        ],
+        "symbol string, timestamp timestamp, open double, high double, "
+        "low double, close double, volume double",
+    )
+    monkeypatch.setattr(fetchers, "fetch_alpaca_bars", lambda universe: raw)
     prices_path = str(tmp_path / "prices")
+    rc = cli.main(
+        ["ingest", "--source", "alpaca", "--symbols", "AAPL,MSFT", "--output", prices_path]
+    )
+    assert rc == 0
+
     ticks_dir = tmp_path / "ticks"
     ticks_dir.mkdir()
-
-    write_prices(_seed(spark), prices_path)
     _write_batch(spark, ticks_dir)
-
-    stream = spark.readStream.schema(LIVE_TRADE_SCHEMA).parquet(str(ticks_dir))
-    query = run_live_upsert(
-        spark,
-        stream,
-        prices_path,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        available_now=True,
-        layout="flat",
-    )
-    query.awaitTermination(120)
-
-    out = {
-        (r.symbol, r.timestamp.date()): r
-        for r in manifest.read_versioned(spark, prices_path, BAR_SCHEMA).collect()
-    }
+    out = _run_live(spark, prices_path, ticks_dir, tmp_path / "ckpt")
     _assert_merged(out)
-    assert manifest.current_version(prices_path) >= 1
+    msft = out[("MSFT", datetime.date(2024, 1, 2))]
+    assert (msft.open, msft.adj_close) == (3.0, 3.5)  # untouched by the batch
 
 
 def test_flat_manifest_crash_recovery(spark, tmp_path):
@@ -134,8 +134,6 @@ def test_flat_manifest_crash_recovery(spark, tmp_path):
     from asset_prices_parquet_saver_spark.sources import manifest
 
     prices_path = str(tmp_path / "prices")
-    ticks_dir = tmp_path / "ticks"
-    ticks_dir.mkdir()
 
     # committed seed at version 1
     seed = _seed(spark)
@@ -150,23 +148,20 @@ def test_flat_manifest_crash_recovery(spark, tmp_path):
     # reader is unaffected by the orphan
     assert manifest.read_versioned(spark, prices_path, BAR_SCHEMA).count() == seed.count()
 
-    _write_batch(spark, ticks_dir)
-    stream = spark.readStream.schema(LIVE_TRADE_SCHEMA).parquet(str(ticks_dir))
-    query = run_live_upsert(
-        spark,
-        stream,
-        prices_path,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        available_now=True,
-        layout="flat",
+    bar = seed.first().asDict()
+    grown = seed.unionByName(
+        spark.createDataFrame(
+            [{**bar, "timestamp": datetime.datetime(2024, 1, 3), "adj_close": 2.5}],
+            BAR_SCHEMA,
+        )
     )
-    query.awaitTermination(120)
+    manifest.commit_versioned(grown, prices_path)
 
     out = {
-        (r.symbol, r.timestamp.date()): r
+        r.timestamp.date(): r.adj_close
         for r in manifest.read_versioned(spark, prices_path, BAR_SCHEMA).collect()
     }
-    # seeded history survived AND the merge applied
-    _assert_merged(out)
+    # seeded history survived AND the new commit applied
+    assert out == {datetime.date(2024, 1, 2): 1.5, datetime.date(2024, 1, 3): 2.5}
     assert manifest.current_version(prices_path) == 8  # numbered past orphan
     assert not os.path.exists(orphan)  # orphan GC'd post-publish
