@@ -16,6 +16,7 @@ from asset_prices_parquet_saver_spark.sources.prices_daily import (
     read_prices_daily,
     write_prices_daily,
 )
+from asset_prices_parquet_saver_spark.streaming.live import run_live_upsert
 
 
 def _bar(source, symbol, day, close):
@@ -108,6 +109,38 @@ def test_merge_into_file_uri_dataset_keeps_existing_bars(spark, tmp_path):
     assert set(out) == {"AAPL", "MSFT"}
     assert (out["AAPL"].adj_close, out["AAPL"].open) == (11.0, 1.0)
     assert out["MSFT"].adj_close == 20.0
+
+
+def test_incremental_streaming_end_to_end(spark, tmp_path):
+    """The live stream's partition-pruned merge keeps the latest tick per
+    (symbol, day) and the seeded bar's open."""
+    path = str(tmp_path / "daily")
+    ticks_dir = tmp_path / "ticks"
+    ticks_dir.mkdir()
+    write_prices_daily(
+        spark.createDataFrame([_bar("alpaca", "AAPL", 2, 10.0)], BAR_SCHEMA), path
+    )
+    batch = spark.createDataFrame(
+        [
+            _tick("AAPL", 11.0, 2024, 1, 2, 15, 0, 0),
+            _tick("AAPL", 9.0, 2024, 1, 2, 9, 0, 0),  # earlier, must lose
+        ],
+        LIVE_TRADE_SCHEMA,
+    )
+    batch.coalesce(1).write.mode("append").parquet(str(ticks_dir))
+    q = run_live_upsert(
+        spark,
+        spark.readStream.schema(LIVE_TRADE_SCHEMA).parquet(str(ticks_dir)),
+        path,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    q.awaitTermination(120)
+    rows = {
+        (r.symbol, str(r.day)): r for r in read_prices_daily(spark, path).collect()
+    }
+    assert rows[("AAPL", "2024-01-02")].adj_close == 11.0
+    assert rows[("AAPL", "2024-01-02")].open == 1.0
 
 
 def test_corrupt_store_raises_instead_of_rebuilding(spark, tmp_path):
