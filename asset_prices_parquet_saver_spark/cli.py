@@ -148,39 +148,30 @@ def _cmd_live(args) -> int:
 
 def _cmd_dedup(args) -> int:
     """Incremental corpus dedup (X2 extension surface): dedupe a batch
-    of documents against a persistent signature index, append survivors
-    to the output corpus table — both manifest append-log commits."""
+    of documents against the persistent signature index and append the
+    survivors to the output corpus, then their signatures to the index
+    — both manifest append-log commits, through the same per-batch
+    step as every streaming micro-batch
+    (:func:`~asset_prices_parquet_saver_spark.operators.
+    incremental_dedup.run_incremental_dedup`)."""
     from asset_prices_parquet_saver_spark.operators import incremental_dedup as inc
-    from asset_prices_parquet_saver_spark.sources import manifest
 
     spark = get_spark(app_name="dedup")
     docs = spark.read.parquet(args.docs)
     n_in = docs.count()
-    index = manifest.read_versioned(spark, args.index, schema=inc.INDEX_SCHEMA)
-    survivors, new_rows = inc.dedup_increment(
-        docs,
-        index,
-        id_col=args.id_col,
-        text_col=args.text_col,
-        threshold=args.threshold,
-    )
-    survivors = survivors.localCheckpoint()
-    new_rows = new_rows.localCheckpoint()
-    # Crash recovery = re-run the command, made SAFE by a txn id (the
-    # same protocol as run_streaming_dedup's epochs): without it, a
-    # re-run after a crash between the two commits would recompute the
-    # identical survivors (the index still lacks this batch) and append
-    # them to the corpus a SECOND time. The txn identity is CONTENT-
-    # addressed (batch_txn: an order-independent fingerprint of the
-    # batch's id+text rows), so BOTH replay scenarios no-op — a re-run
-    # inside the crash window (corpus landed, index didn't: the corpus
-    # append skips, the index append executes) AND a re-run of the same
-    # batch after full success (both skip; an index-version epoch would
-    # have advanced and re-appended here). Corpus commits before index:
-    # the reverse order could drop survivors (indexed, never appended).
-    # params fold into the txn id: the SAME batch re-run with a
-    # corrected --threshold computes different survivors and must not
-    # no-op against the prior run's txn record
+    # Crash recovery = re-run the command, made SAFE by a txn id on
+    # both commits: without it, a re-run after a crash between the two
+    # commits would recompute the identical survivors (the index still
+    # lacks this batch) and append them to the corpus a SECOND time.
+    # The txn identity is CONTENT-addressed (batch_txn: an
+    # order-independent fingerprint of the batch's id+text rows), so
+    # BOTH replay scenarios no-op — a re-run inside the crash window
+    # (corpus landed, index didn't: the corpus append skips, the index
+    # append executes) AND a re-run of the same batch after full
+    # success (both skip; an index-version epoch would have advanced
+    # and re-appended here). params fold into the txn id: the SAME
+    # batch re-run with a corrected --threshold computes different
+    # survivors and must not no-op against the prior run's txn record
     txn = inc.batch_txn(
         docs, args.id_col, args.text_col, params=(args.threshold,)
     )
@@ -188,8 +179,17 @@ def _cmd_dedup(args) -> int:
     # colliding) batch makes both commits silently no-op, so the skip
     # must at least be observable/grep-able against the manifest txn map
     print(f"txn {txn[0]} epoch {txn[1]}")
-    manifest.commit_append(survivors, args.output, txn=txn)
-    manifest.commit_append(new_rows, args.index, txn=txn)
+    survivors = inc.run_incremental_dedup(
+        spark,
+        docs,
+        args.index,
+        args.output,
+        id_col=args.id_col,
+        text_col=args.text_col,
+        threshold=args.threshold,
+        corpus_txn=txn,
+        index_txn=txn,
+    )
     n_out = survivors.count()
     print(f"accepted {n_out}/{n_in} documents ({n_in - n_out} near-duplicates dropped)")
     return 0

@@ -962,8 +962,9 @@ def lsh_ensemble_containment(
 
 
 #: persisted ensemble-index row: one row per (corpus doc, band) with
-#: the shingle array denormalized in (the band-index space/time trade —
-#: see incremental_dedup.BAND_INDEX_SCHEMA) so probes verify inline.
+#: the shingle array denormalized in (the standard LSH-index space/time
+#: trade: ×bands array copies buy a single-join probe path) so probes
+#: verify inline.
 ENSEMBLE_INDEX_SCHEMA = (
     "p int, band int, bucket long, id long, arr array<long>, n_sh int"
 )
@@ -988,14 +989,14 @@ def build_ensemble_index(
     build the stratified index over the 100 TB corpus ONCE, then every
     benchmark/probe batch (:func:`containment_probe_indexed`) shuffles
     only itself; index files are read bucket-in-place (the
-    ``dedup_increment_bucketed`` probe discipline). Each row carries
-    the doc's shingle array so candidate verification happens inline
-    on the join output — no second corpus join, no corpus re-scan.
+    ``incremental_dedup.substring_increment_bucketed`` probe
+    discipline). Each row carries the doc's shingle array so
+    candidate verification happens inline on the join output — no
+    second corpus join, no corpus re-scan.
 
     The banding parameters (threshold, q_min, num_hashes, max_stratum,
     n, hash_family) are part of the index's identity: probes MUST pass
-    the same values or their band keys address a different layout —
-    same contract as ``dedup_increment_bucketed``'s bands/num_hashes."""
+    the same values or their band keys address a different layout."""
     from asset_prices_parquet_saver_spark.functions.hints import (
         bounded_broadcast,
     )
@@ -1253,17 +1254,13 @@ def _portable_signature_arrays(
     )
 
 
-def banded_keys(
-    sig: DataFrame, bands: int = 8, rows_per_band: int = 4, carry: tuple = ()
-) -> DataFrame:
+def banded_keys(sig: DataFrame, bands: int = 8, rows_per_band: int = 4) -> DataFrame:
     """(id, band, bucket) rows: one LSH band bucket per (doc, band);
     bucket key = xxhash64(band_id, slice of signature). The join key
     shape shared by the batch self-join and the incremental
-    new-vs-index join. ``carry`` columns pass through unchanged (the
-    bucketed index stores shingle arrays alongside the band keys)."""
+    new-vs-index join."""
     return sig.select(
         "id",
-        *carry,
         F.explode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
@@ -1275,7 +1272,7 @@ def banded_keys(
                 ),
             )
         ).alias("bb"),
-    ).select("id", *carry, "bb.band", "bb.bucket")
+    ).select("id", "bb.band", "bb.bucket")
 
 
 def lsh_candidate_pairs(sig: DataFrame, bands: int = 8, rows_per_band: int = 4) -> DataFrame:

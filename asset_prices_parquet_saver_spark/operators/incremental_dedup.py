@@ -20,12 +20,21 @@ Per batch (one pass, fully parallel):
    sequential greedy it may drop a doc whose matched predecessor was
    itself dropped, which is the accepted trade for a one-pass parallel
    rule and usually the better dedup anyway);
-5. survivors' signature rows are appended to the index.
+5. the survivors are materialized once; they go to the corpus and
+   their signature rows to the index (:func:`run_incremental_dedup`,
+   the one per-batch step of the CLI ``dedup`` command and of every
+   :func:`run_streaming_dedup` micro-batch).
 
-At 100 TB: the index table should be bucketed by its band keys (store
-the exploded (band, bucket, id) form with ``DataFrameWriter.bucketBy``
-on (band, bucket)) so step 2 is a shuffle of the BATCH only; the
-verification join fetches only colliding index rows.
+This is the only near-dup index layout. A metastore-bucketed band
+index (the probe reads index buckets in place) and a manifest band
+index (pbucket-clustered segments) were measured against it and
+deleted. On 4 cores, 6 batches of 4000 documents (20% edited
+near-duplicates) into an index growing to about 20k documents, all
+three layouts kept the same survivors; with the index rows derived
+from the materialized survivors (one probe per batch) this layout was
+as fast as either band layout or faster. Indexes larger than about 20k
+documents were not measured: if a workload at that scale appears,
+measure it before bringing back a banded layout.
 """
 
 from __future__ import annotations
@@ -43,13 +52,14 @@ from asset_prices_parquet_saver_spark.operators.dedup import (
 from asset_prices_parquet_saver_spark.functions.portable_hash import md5_int60
 from asset_prices_parquet_saver_spark.sources import manifest
 from asset_prices_parquet_saver_spark.sources.warehouse import (
+    ensure_bucketed_table,
     heal_table_location,
 )
 
 #: fault-injection seam (tests only): runs between the staging rewrite
-#: and the pre-publish drift check of :func:`compact_band_index`, i.e.
-#: inside the window where a concurrent append would historically have
-#: been lost.
+#: and the pre-publish drift check of :func:`compact_window_index`,
+#: i.e. inside the window where a concurrent append would historically
+#: have been lost.
 _test_pre_publish_hook = None
 
 #: signature-index schema (see minhash_dedup's arrs frame)
@@ -69,14 +79,15 @@ def _lock_path(spark: SparkSession, table: str, kind: str) -> str:
     return os.path.join(wh, f"{table.replace('.', '__')}.{kind}.lock")
 
 
-def _band_table_lock(spark: SparkSession, table: str):
-    """One advisory lock per band-index table, shared by appenders
-    (:func:`dedup_increment_bucketed`) and the compactor
-    (:func:`compact_band_index`): with both sides holding it, no append
-    can land inside the compactor's rewrite→verify→swap window, closing
-    the check-then-act race on a local filesystem. (On an object-store
-    catalog the answer is an Iceberg/Delta snapshot commit instead —
-    see dedup_increment_bucketed's docstring.)"""
+def _table_lock(spark: SparkSession, table: str):
+    """One advisory lock per bucketed index table, shared by appenders
+    (:func:`_append_windows`, ``urls.append_url_index``) and the
+    compactor (:func:`compact_window_index`): with both sides holding
+    it, no append can land inside the compactor's rewrite→verify→swap
+    window, closing the check-then-act race on a local filesystem. (On
+    an object-store catalog the answer is an Iceberg/Delta snapshot
+    commit instead.) The lock file keeps its ``band_index`` name, so
+    writers of earlier builds still exclude the same file."""
     return manifest.path_lock(_lock_path(spark, table, "band_index"))
 
 
@@ -111,8 +122,13 @@ def dedup_increment(
 ) -> tuple[DataFrame, DataFrame]:
     """One incremental step. Returns ``(survivors, new_index_rows)``:
     the accepted subset of ``new_docs`` (original columns) and their
-    signature rows to append to the index. Pure transformation — the
-    caller owns persistence (see :func:`run_incremental_dedup`)."""
+    signature rows to append to the index. The caller owns persistence
+    (see :func:`run_incremental_dedup`).
+
+    The survivors come back checkpointed, and the index rows join that
+    checkpoint with the batch's checkpointed signatures, so writing or
+    reading either output never re-runs the LSH probe, the verification
+    or the index scan."""
     if bands > num_hashes or num_hashes % bands != 0:
         # bands > num_hashes makes rows_per_band 0: every doc would
         # share every band bucket and candidate generation degenerates
@@ -168,7 +184,12 @@ def dedup_increment(
         threshold,
     )
     losers = pairs.select(F.col("id_a").alias(id_col)).distinct()
-    survivors = new_docs.join(losers, id_col, "left_anti")
+    # materialize ONCE: the corpus commit, the index rows and the
+    # caller's reads all start from this checkpoint, so the probe runs
+    # once per batch. Index rows derived from the lazy survivors plan
+    # would re-run the band joins, the verification and the index
+    # scans for the index commit.
+    survivors = new_docs.join(losers, id_col, "left_anti").localCheckpoint()
     new_rows = new_sig.join(
         survivors.select(F.col(id_col).alias("id")), "id", "left_semi"
     )
@@ -260,24 +281,37 @@ def run_incremental_dedup(
     spark: SparkSession,
     new_docs: DataFrame,
     index_path: str,
+    corpus_path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
     hash_family: str = "xxhash64",
-    epoch: tuple[str, int] | None = None,
+    corpus_txn: tuple[str, int] | None = None,
+    index_txn: tuple[str, int] | None = None,
     n: int = 2,
     num_hashes: int = 32,
     bands: int = 8,
 ) -> DataFrame:
-    """Dedup ``new_docs`` against the manifest-committed index at
-    ``index_path``, append the survivors' signatures as a new snapshot
-    commit, and return the survivors. The commit is atomic — a crash
-    mid-step leaves the previous index version live. Replaying the same
-    batch is safe: equal-id self-matches are excluded in
-    :func:`dedup_increment`, so the recomputed survivor set is identical
-    even if the index commit already landed, and passing
-    ``epoch=(app_id, epoch_id)`` (from foreachBatch) makes the index
-    commit itself idempotent via the manifest txn record."""
+    """The per-batch step: dedup ``new_docs`` against the
+    manifest-committed index at ``index_path``, append the survivors to
+    the corpus at ``corpus_path`` and their signature rows to the
+    index, and return the (materialized) survivors.
+
+    Each append is an O(batch) append-log commit; the manifest's
+    segment list grows by one (compact with
+    ``manifest.compact_versioned`` when small segments accumulate).
+    ``corpus_txn`` / ``index_txn`` (``(app_id, epoch)``) make each
+    commit idempotent via the manifest txn record: a replayed batch
+    skips any commit that already landed.
+
+    Crash safety across the two commits: the corpus commits FIRST, and
+    the survivor set is replay-deterministic (equal-id self-matches are
+    excluded in :func:`dedup_increment`, so a batch whose index rows
+    already landed recomputes the same survivors). A crash between the
+    commits re-runs the batch, skips the applied corpus append via its
+    txn record, and applies the missing index append. The reverse
+    order could lose documents: indexed, so a replay drops their
+    near-duplicates, but never appended to the corpus."""
     index = manifest.read_versioned(spark, index_path, schema=INDEX_SCHEMA)
     survivors, new_rows = dedup_increment(
         new_docs,
@@ -290,426 +324,9 @@ def run_incremental_dedup(
         bands=bands,
         hash_family=hash_family,
     )
-    # localCheckpoint BEFORE the commit: the index append evaluates the
-    # whole banding/join/verification pipeline (new_rows derives from
-    # survivors), and the caller's first action on the returned
-    # survivors would otherwise re-execute it all a second time — the
-    # streaming twin checkpoints both outputs for the same reason.
-    survivors = survivors.localCheckpoint()
-    # append-log commit: O(batch) — only the new signature rows are
-    # written; the manifest's segment list grows by one. Compact with
-    # manifest.compact_versioned when small segments accumulate.
-    manifest.commit_append(new_rows, index_path, txn=epoch)
+    manifest.commit_append(survivors, corpus_path, txn=corpus_txn)
+    manifest.commit_append(new_rows, index_path, txn=index_txn)
     return survivors
-
-
-#: bucketed band-index schema: one row per (surviving doc, band), the
-#: shingle array denormalized in so verification never touches a second
-#: table (the standard LSH-index space/time trade: ×bands array copies
-#: buy a single-join probe path)
-BAND_INDEX_SCHEMA = "band int, bucket long, id long, arr array<long>, n_sh int"
-
-
-def ensure_band_index(
-    spark: SparkSession, table: str, num_buckets: int = 32
-) -> None:
-    """Create the physically bucketed signature index if absent: a
-    managed table bucketed by (band, bucket) — the join keys of the
-    per-batch LSH probe — so index files are already hash-partitioned
-    on disk and the probe join never shuffles the index side.
-
-    Crash recovery: if the index is missing but its ``_compacting``
-    staging table exists, a compaction died between its DROP and
-    RENAME — the staging table holds the ONLY copy of the index, so
-    rename it into place. Creating a fresh empty index there would
-    silently forget the whole dedup history and re-accept every
-    previously-seen near-duplicate."""
-    if not spark.catalog.tableExists(table):
-        heal_table_location(spark, table)  # orphaned dir from a killed run
-        staging = f"{table}_compacting"
-        if spark.catalog.tableExists(staging):
-            spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-            return
-        (
-            spark.createDataFrame([], BAND_INDEX_SCHEMA)
-            .write.bucketBy(num_buckets, "band", "bucket")
-            .sortBy("band", "bucket")
-            .mode("overwrite")
-            .saveAsTable(table)
-        )
-
-
-def _banded_losers(
-    nb: DataFrame, ib: DataFrame, threshold: float, id_col: str
-) -> DataFrame:
-    """Shared probe of a banded batch against a banded index: the
-    batch (hash side, hinted shuffle_hash) joins the index on
-    (band, bucket) — in place for a metastore-bucketed index, one
-    exchange for a manifest segment scan — plus the batch-internal
-    smaller-id-predecessor self join; inline Jaccard verification on
-    the carried shingle arrays. Equal-id matches excluded — see
-    dedup_increment."""
-    inter = F.size(F.array_intersect("arr_new", "arr_prev"))
-    jac = inter / (F.col("n_new") + F.col("n_prev") - inter)
-    losers_old = (
-        nb.alias("a")
-        .hint("shuffle_hash")
-        .join(ib.alias("b"), ["band", "bucket"])
-        .filter(F.col("a.id") != F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_new"),
-            F.col("a.arr").alias("arr_new"),
-            F.col("a.n_sh").alias("n_new"),
-            F.col("b.arr").alias("arr_prev"),
-            F.col("b.n_sh").alias("n_prev"),
-        )
-        .filter(jac >= F.lit(threshold))
-        .select(F.col("id_new").alias(id_col))
-    )
-    losers_new = (
-        nb.alias("a")
-        .join(nb.alias("b"), ["band", "bucket"])
-        .filter(F.col("b.id") < F.col("a.id"))
-        .select(
-            F.col("a.id").alias("id_new"),
-            F.col("a.arr").alias("arr_new"),
-            F.col("a.n_sh").alias("n_new"),
-            F.col("b.arr").alias("arr_prev"),
-            F.col("b.n_sh").alias("n_prev"),
-        )
-        .filter(jac >= F.lit(threshold))
-        .select(F.col("id_new").alias(id_col))
-    )
-    return losers_old.unionByName(losers_new).distinct()
-
-
-def dedup_increment_bucketed(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    band_table: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    n: int = 2,
-    num_hashes: int = 32,
-    bands: int = 8,
-    hash_family: str = "xxhash64",
-    num_buckets: int = 32,
-) -> DataFrame:
-    """Incremental dedup against a PHYSICALLY BUCKETED band index —
-    the 100 TB shape of :func:`dedup_increment`: the index is a managed
-    table bucketed by (band, bucket), so the per-batch LSH probe join
-    reads index buckets in place and shuffles ONLY the batch side
-    (plan-asserted in tests/test_plans.py). The batch builds the hash
-    side of a shuffled-hash join; the index streams through it — no
-    exchange and no sort of the O(corpus) side, per batch cost
-    O(batch + colliding index rows).
-
-    The index row carries the doc's shingle array, so candidate
-    verification happens inline on the join output instead of
-    re-joining (and re-shuffling) a second signatures table.
-
-    Appends survivors' band rows to the index and returns survivors.
-    vs the manifest variants: bucketing needs the session catalog
-    (a metastore), whose appends are not single-file-atomic commits.
-    :func:`dedup_increment_manifest_banded` keeps the same banded
-    layout under the manifest protocol (atomic, epoch-idempotent,
-    CAS-compacted) at the cost of one index exchange per probe; an
-    Iceberg bucket-transform partition spec gives both properties at
-    once. A torn write here is recoverable: the band index is
-    derivable, and a re-run only re-appends rows whose equal-id
-    matches are excluded anyway."""
-    ensure_band_index(spark, band_table, num_buckets)
-    if bands > num_hashes or num_hashes % bands != 0:
-        raise ValueError(
-            f"bands={bands} must divide num_hashes={num_hashes} "
-            "(rows_per_band = num_hashes // bands >= 1; see dedup_increment)"
-        )
-    rows_per_band = num_hashes // bands
-    new_sig = signature_frame(
-        new_docs, id_col, text_col, n, num_hashes, hash_family
-    ).localCheckpoint()
-    nb = banded_keys(
-        new_sig.filter(F.col("n_sh") > 0), bands, rows_per_band,
-        carry=("arr", "n_sh"),
-    ).localCheckpoint()  # reused: probe join, self join, index append
-    ib = spark.table(band_table)
-    losers = _banded_losers(nb, ib, threshold, id_col)
-    survivors = new_docs.join(losers, id_col, "left_anti").localCheckpoint()
-    new_rows = nb.join(
-        survivors.select(F.col(id_col).alias("id")), "id", "left_semi"
-    ).select("band", "bucket", "id", "arr", "n_sh")
-    # the table lock is shared with compact_band_index: an append can
-    # never land inside the compactor's rewrite→verify→swap window
-    with _band_table_lock(spark, band_table):
-        (
-            new_rows.write.bucketBy(num_buckets, "band", "bucket")
-            .sortBy("band", "bucket")
-            .mode("append")
-            .saveAsTable(band_table)
-        )
-    # the append may run in a cloned session (streaming foreachBatch);
-    # drop THIS session's cached table relation so the next probe sees
-    # the new files instead of a stale (possibly empty) listing
-    spark.catalog.refreshTable(band_table)
-    return survivors
-
-
-def compact_band_index(
-    spark: SparkSession, table: str, num_buckets: int = 32
-) -> tuple[int, int]:
-    """Compact the bucketed band index's accumulated append files.
-
-    Every :func:`dedup_increment_bucketed` append writes a fresh file
-    per (task, bucket), so after B batches the probe scan opens
-    O(B × buckets) small files — the classic small-files decay of any
-    append-log index. Rewrite into a staging table with ONE file per
-    non-empty bucket: repartition by the COMPUTED bucket id
-    (``pmod(hash(band, bucket), num_buckets)``, the writer's own
-    Murmur3-pmod bucket expression — asserted aligned in the test), so
-    all rows of a bucket land on one task and the bucketed writer
-    emits a single file for it. Repartitioning on the raw key columns
-    is NOT equivalent: the write-side task layout doesn't preserve the
-    shuffle's partition-per-bucket mapping, and each task then spills
-    one file per bucket it happens to hold.
-
-    Multi-writer safety, two layers:
-
-    1. **vs appenders** — a batch APPENDED to the index during the
-       rewrite would be silently dropped from the folded table (the
-       lost-update the manifest CAS exists for). The compactor records
-       the table's file listing at read time, then takes the SAME
-       advisory lock every :func:`dedup_increment_bucketed` append
-       holds (:func:`_band_table_lock`) and re-verifies the listing
-       under it before the swap: an append that landed during the
-       rewrite raises :class:`~..sources.manifest.CommitConflict`
-       (staging discarded, live index untouched — best-effort
-       maintenance, re-run); an append that arrives after lock
-       acquisition blocks until the swap completes, so the historical
-       check-then-act LOST-UPDATE window between re-verify and DROP is
-       closed. Residual race, read-side: an appender's PROBE scan
-       (``spark.table(index)`` read while computing losers/survivors)
-       runs outside any lock, so a scan in flight across the
-       DROP/RENAME swap can fail transiently on deleted files — a
-       retryable read error, not a lost update. Holding the table lock
-       across the probe read would close it at the cost of serializing
-       every probe with compaction; on plain Parquet we accept the
-       transient instead (an Iceberg/Delta snapshot read is the
-       zero-cost fix).
-    2. **vs other compactors** — a whole-run ``_COMPACTOR.lock``
-       serializes compactions, so two concurrent compactors can never
-       interleave their staging rewrites or DROP/RENAME swaps (lock
-       order: compactor lock, then table lock — appenders take only
-       the latter, so no deadlock).
-
-    On an Iceberg / Delta catalog this whole function is a
-    rewrite-data-files action with a snapshot commit and a zero-width
-    window instead.
-
-    Returns ``(files_before, files_after)``."""
-    return _compact_bucketed_index(spark, table, num_buckets, ("band", "bucket"))
-
-
-def _compact_bucketed_index(
-    spark: SparkSession,
-    table: str,
-    num_buckets: int,
-    key_cols: tuple[str, ...],
-) -> tuple[int, int]:
-    """Shared rewrite→verify→swap compaction for any metastore table
-    bucketed on ``key_cols`` (the band index and the substring window
-    index) — one body so the multi-writer/crash-recovery guarantees
-    documented on :func:`compact_band_index` can never diverge between
-    the two layouts."""
-    from asset_prices_parquet_saver_spark.sources.manifest import CommitConflict
-
-    staging = f"{table}_compacting"
-    # Recover a crashed predecessor FIRST: if the index is gone but the
-    # staging table exists, the previous compaction died between DROP
-    # and RENAME and staging holds the only copy — renaming it into
-    # place must precede the stale-staging drop below, which is safe
-    # only once the main table exists. heal first: the killed run may
-    # also have orphaned the main table's directory, which would block
-    # the rename into place.
-    if not spark.catalog.tableExists(table) and spark.catalog.tableExists(staging):
-        heal_table_location(spark, table)
-        spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-    with manifest.path_lock(_lock_path(spark, table, "compactor")):
-        spark.sql(f"DROP TABLE IF EXISTS {staging}")
-        heal_table_location(spark, staging)  # orphaned staging dir
-        cur = spark.table(table)
-        expect = sorted(cur.inputFiles())
-        files_before = len(expect)
-        bucket_id = F.pmod(F.hash(*key_cols), F.lit(num_buckets))
-        (
-            cur.repartition(num_buckets, bucket_id)
-            .write.bucketBy(num_buckets, *key_cols)
-            .sortBy(*key_cols)
-            .mode("overwrite")
-            .saveAsTable(staging)
-        )
-        if _test_pre_publish_hook is not None:
-            _test_pre_publish_hook()
-        with _band_table_lock(spark, table):
-            # refresh first: the catalog caches the relation's file
-            # index, and a stale listing here would false-pass the
-            # drift check
-            spark.catalog.refreshTable(table)
-            if sorted(spark.table(table).inputFiles()) != expect:
-                spark.sql(f"DROP TABLE IF EXISTS {staging}")
-                raise CommitConflict(
-                    f"{table}: index files changed during compaction — a "
-                    "concurrent append landed; the rewrite was discarded "
-                    "(re-run to compact the new state)"
-                )
-            spark.sql(f"DROP TABLE {table}")
-            spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-    return files_before, len(spark.table(table).inputFiles())
-
-
-#: manifest-banded index schema: the band rows plus the writer's
-#: physical bucket id, carried as a real column so segments stay
-#: clustered and zone-mapped on it
-BAND_MANIFEST_SCHEMA = (
-    "pbucket int, band int, bucket long, id long, arr array<long>, n_sh int"
-)
-
-
-def _with_pbucket(rows: DataFrame, num_buckets: int) -> DataFrame:
-    return rows.withColumn(
-        "pbucket", F.pmod(F.hash("band", "bucket"), F.lit(num_buckets))
-    ).select("pbucket", "band", "bucket", "id", "arr", "n_sh")
-
-
-def dedup_increment_manifest_banded(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    index_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    n: int = 2,
-    num_hashes: int = 32,
-    bands: int = 8,
-    hash_family: str = "xxhash64",
-    num_buckets: int = 32,
-    epoch: tuple[str, int] | None = None,
-) -> DataFrame:
-    """The band index ON the manifest protocol — closing the one gap of
-    :func:`dedup_increment_bucketed`: its metastore appends are not
-    single-file-atomic commits, so a crash can leave a torn append and
-    a replay double-appends. Here the index is a manifest table whose
-    rows carry the physical bucket id (``pbucket = pmod(hash(band,
-    bucket), num_buckets)``) as a manifest-tracked column; every append
-    is one atomic snapshot commit, idempotent under ``epoch`` replay
-    via the txn record, and rows are clustered on pbucket before the
-    commit (the :func:`~..operators.similarity.build_ivf_index`
-    pattern) so each segment holds one file per bucket and parquet
-    footer min/max prune by pbucket.
-
-    Trade vs the metastore-bucketed variant: without catalog bucket
-    metadata Spark cannot prove the index side's partitioning, so the
-    probe join exchanges the index scan once per batch (the batch side
-    stays the hinted hash side). The metastore variant keeps the
-    in-place probe; an Iceberg bucket-transform spec gives both. Same
-    probe/verification semantics (shared :func:`_banded_losers`), same
-    survivor set — asserted in tests."""
-    survivors, new_rows = _manifest_banded_rows(
-        spark, new_docs, index_path, id_col, text_col, threshold,
-        n, num_hashes, bands, hash_family, num_buckets,
-    )
-    _commit_banded_rows(new_rows, index_path, num_buckets, epoch)
-    return survivors
-
-
-def _manifest_banded_rows(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    index_path: str,
-    id_col: str,
-    text_col: str,
-    threshold: float,
-    n: int,
-    num_hashes: int,
-    bands: int,
-    hash_family: str,
-    num_buckets: int,
-) -> tuple[DataFrame, DataFrame]:
-    """Pure compute half of the manifest-banded increment: returns
-    (survivors, pbucket-tagged index rows), BOTH localCheckpointed so
-    the caller can order its commits freely (the streaming twin
-    commits the corpus first) without either output lazily re-reading
-    the index mid-update."""
-    if bands > num_hashes or num_hashes % bands != 0:
-        raise ValueError(
-            f"bands={bands} must divide num_hashes={num_hashes} "
-            "(rows_per_band = num_hashes // bands >= 1; see dedup_increment)"
-        )
-    rows_per_band = num_hashes // bands
-    new_sig = signature_frame(
-        new_docs, id_col, text_col, n, num_hashes, hash_family
-    ).localCheckpoint()
-    nb = banded_keys(
-        new_sig.filter(F.col("n_sh") > 0), bands, rows_per_band,
-        carry=("arr", "n_sh"),
-    ).localCheckpoint()
-    ib = manifest.read_versioned(
-        spark, index_path, schema=BAND_MANIFEST_SCHEMA
-    ).drop("pbucket")
-    losers = _banded_losers(nb, ib, threshold, id_col)
-    survivors = new_docs.join(losers, id_col, "left_anti").localCheckpoint()
-    new_rows = _with_pbucket(
-        nb.join(
-            survivors.select(F.col(id_col).alias("id")), "id", "left_semi"
-        ).select("band", "bucket", "id", "arr", "n_sh"),
-        num_buckets,
-    ).localCheckpoint()
-    return survivors, new_rows
-
-
-def _commit_banded_rows(
-    new_rows: DataFrame,
-    index_path: str,
-    num_buckets: int,
-    epoch: tuple[str, int] | None,
-) -> None:
-    # cluster the segment on the physical bucket (one file per
-    # non-empty bucket) and commit atomically; epoch replay no-ops
-    manifest.commit_append(
-        new_rows.repartition(num_buckets, F.col("pbucket"))
-        .sortWithinPartitions("band", "bucket"),
-        index_path,
-        txn=epoch,
-        stats_cols=["pbucket"],
-    )
-
-
-def compact_band_index_manifest(
-    spark: SparkSession, index_path: str, num_buckets: int = 32
-) -> tuple[int, int]:
-    """Fold the manifest-banded index's accumulated append segments
-    into one pbucket-clustered snapshot. The rewrite is pinned to the
-    version it read (``expect_version``): a concurrent append raises
-    :class:`~..sources.manifest.CommitConflict` inside the manifest's
-    own commit lock — a zero-width swap window, no DROP/RENAME, no
-    advisory-lock choreography (the property the metastore variant
-    needs two lock files to approximate).
-
-    Returns ``(segments_before, segments_after)``."""
-    v = manifest.current_version(index_path)
-    before = manifest.segment_count(index_path)
-    cur = manifest.read_versioned(
-        spark, index_path, version=v, schema=BAND_MANIFEST_SCHEMA
-    )
-    folded = cur.repartition(num_buckets, F.col("pbucket")).sortWithinPartitions(
-        "band", "bucket"
-    )
-    if _test_pre_publish_hook is not None:
-        _test_pre_publish_hook()
-    manifest.commit_versioned(
-        folded, index_path, expect_version=v, stats_cols=["pbucket"]
-    )
-    return before, manifest.segment_count(index_path)
 
 
 def run_streaming_dedup(
@@ -726,69 +343,31 @@ def run_streaming_dedup(
     n: int = 2,
     num_hashes: int = 32,
     bands: int = 8,
-    index_kind: str = "signatures",
-    num_buckets: int = 32,
 ):
     """Streaming corpus ingestion with online dedup: every micro-batch
-    is deduplicated against the signature index, survivors are appended
-    to the corpus table, and their signatures to the index — both via
-    O(batch) append-log commits tagged with the foreachBatch epoch
-    (Delta-style manifest txn records), so a replayed epoch skips any
-    commit that already landed instead of double-appending.
-
-    Crash-safety across the two commits: the corpus commit goes FIRST,
-    and the dedup computation is replay-deterministic (equal-id
-    self-matches are excluded), so every crash point replays to the
-    same survivor set — a crash between the commits re-runs the batch,
-    skips the already-applied corpus append via its txn record, and
-    applies the missing index append. No window loses documents.
-
-    ``index_kind``: ``"signatures"`` (the flat INDEX_SCHEMA manifest
-    table, default) or ``"banded"`` — the pbucket-clustered band index
-    (:func:`dedup_increment_manifest_banded`'s layout), giving every
-    micro-batch the zone-mapped one-file-per-bucket segments and the
-    CAS-compactable snapshot protocol; same survivor semantics."""
-    if index_kind not in ("signatures", "banded"):
-        raise ValueError(
-            f"index_kind must be 'signatures' or 'banded', got {index_kind!r}"
-        )
+    runs :func:`run_incremental_dedup` with both commits tagged with
+    the foreachBatch epoch (Delta-style manifest txn records), so a
+    replayed epoch skips any commit that already landed instead of
+    double-appending, and a crash between the commits loses no
+    document."""
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
-        if index_kind == "banded":
-            survivors, new_rows = _manifest_banded_rows(
-                spark, batch, index_path, id_col, text_col, threshold,
-                n, num_hashes, bands, hash_family, num_buckets,
-            )
-            manifest.commit_append(
-                survivors, corpus_path, txn=("dedup-corpus", epoch_id)
-            )
-            _commit_banded_rows(
-                new_rows, index_path, num_buckets, ("dedup-index", epoch_id)
-            )
-            return
-        index = manifest.read_versioned(spark, index_path, schema=INDEX_SCHEMA)
-        survivors, new_rows = dedup_increment(
+        run_incremental_dedup(
+            spark,
             batch,
-            index,
-            id_col,
-            text_col,
-            threshold,
+            index_path,
+            corpus_path,
+            id_col=id_col,
+            text_col=text_col,
+            threshold=threshold,
+            hash_family=hash_family,
+            corpus_txn=("dedup-corpus", epoch_id),
+            index_txn=("dedup-index", epoch_id),
             n=n,
             num_hashes=num_hashes,
             bands=bands,
-            hash_family=hash_family,
-        )
-        # materialize both outputs before the first commit so neither
-        # lazily re-reads the index mid-way through its own update
-        survivors = survivors.localCheckpoint()
-        new_rows = new_rows.localCheckpoint()
-        manifest.commit_append(
-            survivors, corpus_path, txn=("dedup-corpus", epoch_id)
-        )
-        manifest.commit_append(
-            new_rows, index_path, txn=("dedup-index", epoch_id)
         )
 
     writer = docs_stream.writeStream.outputMode("append").foreachBatch(handle)
@@ -803,7 +382,7 @@ def run_streaming_dedup(
 
 #: window-index schema: one row per (window hash, owning doc). The id
 #: is carried so a REPLAYED batch's own windows never self-match
-#: (epoch idempotence — the band index's equal-id-exclusion rule).
+#: (epoch idempotence — the signature index's equal-id-exclusion rule).
 WINDOW_INDEX_SCHEMA = "h long, id long"
 
 
@@ -814,22 +393,32 @@ def ensure_window_index(
     absent: a managed table bucketed by ``h`` — the probe join key —
     so index files are hash-partitioned on disk and the per-batch
     probe reads them in place (no exchange, no sort of the O(corpus)
-    side). Same crash-window recovery as :func:`ensure_band_index`:
-    a ``_compacting`` staging orphan holds the ONLY copy of the index
-    and must be renamed back, never shadowed by an empty re-create."""
-    if not spark.catalog.tableExists(table):
-        heal_table_location(spark, table)  # orphaned dir from a killed run
-        staging = f"{table}_compacting"
-        if spark.catalog.tableExists(staging):
-            spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-            return
+    side). A ``_compacting`` staging orphan left by a crashed
+    :func:`compact_window_index` holds the ONLY copy of the index and
+    is renamed back, never shadowed by an empty re-create
+    (:func:`~asset_prices_parquet_saver_spark.sources.warehouse.
+    ensure_bucketed_table`)."""
+    ensure_bucketed_table(spark, table, WINDOW_INDEX_SCHEMA, ("h",), num_buckets)
+
+
+def _append_windows(
+    spark: SparkSession, wins: DataFrame, window_table: str, num_buckets: int
+) -> None:
+    """Append (h, id) window rows to the bucketed index under the
+    table lock shared with :func:`compact_window_index`, then refresh
+    THIS session's relation cache: the append may run in a cloned
+    session (streaming foreachBatch), which invalidates only the
+    clone's cache, and the next probe would otherwise see a stale
+    (possibly empty) listing."""
+    with _table_lock(spark, window_table):
         (
-            spark.createDataFrame([], WINDOW_INDEX_SCHEMA)
+            wins.select("h", "id")
             .write.bucketBy(num_buckets, "h")
             .sortBy("h")
-            .mode("overwrite")
-            .saveAsTable(table)
+            .mode("append")
+            .saveAsTable(window_table)
         )
+    spark.catalog.refreshTable(window_table)
 
 
 def substring_increment_bucketed(
@@ -863,11 +452,11 @@ def substring_increment_bucketed(
     hash side and the bucketed index streams through IN PLACE
     (plan-asserted: one exchange — the batch's — `Bucketed: true` on
     the index scan); per-batch cost is O(batch windows + colliding
-    index rows), never O(corpus). Same metastore-append caveats as
-    :func:`dedup_increment_bucketed` (non-atomic appends; replays are
-    harmless for results via the equal-id exclusion but grow the
-    index until a compaction — the manifest/Iceberg discussion there
-    applies verbatim)."""
+    index rows), never O(corpus). The appends are metastore writes,
+    not single-file-atomic commits: replays are harmless for results
+    via the equal-id exclusion but grow the index until a
+    :func:`compact_window_index` (an Iceberg/Delta table gives atomic
+    appends)."""
     from asset_prices_parquet_saver_spark.operators.dedup import (
         _merge_spans,
         window_rows,
@@ -878,7 +467,7 @@ def substring_increment_bucketed(
     idx = spark.table(window_table)
     # INNER join, not semi: a semi join must hash-build its RIGHT side
     # (Spark rejects build-left for semi), which would build the
-    # O(corpus) index per task — the band-index probe shape (batch as
+    # O(corpus) index per task — the in-place probe shape (batch as
     # the hinted build side, index streamed in place) needs inner +
     # the downstream distinct
     hits_corpus = (
@@ -900,28 +489,109 @@ def substring_increment_bucketed(
     hits = hits_corpus.unionByName(hits_batch).distinct()
     spans = _merge_spans(hits, k).localCheckpoint()
     if append_windows:
-        with _band_table_lock(spark, window_table):
-            (
-                wins.select("h", "id")
-                .write.bucketBy(num_buckets, "h")
-                .sortBy("h")
-                .mode("append")
-                .saveAsTable(window_table)
-            )
-        # cloned-session append (streaming foreachBatch) invalidates
-        # only the clone's relation cache — refresh the probe session's
-        spark.catalog.refreshTable(window_table)
+        _append_windows(spark, wins, window_table, num_buckets)
     return spans
 
 
 def compact_window_index(
     spark: SparkSession, table: str, num_buckets: int = 32
 ) -> tuple[int, int]:
-    """Compact the substring window index's accumulated append files —
-    the same small-files decay and the same rewrite→verify→swap
-    protocol as :func:`compact_band_index` (shared body:
-    :func:`_compact_bucketed_index`), keyed on ``h``."""
-    return _compact_bucketed_index(spark, table, num_buckets, ("h",))
+    """Compact the substring window index's accumulated append files.
+
+    Every :func:`_append_windows` append writes a fresh file per
+    (task, bucket), so after B batches the probe scan opens
+    O(B × buckets) small files — the classic small-files decay of any
+    append-log index. Rewrite into a staging table with ONE file per
+    non-empty bucket: repartition by the COMPUTED bucket id
+    (``pmod(hash(h), num_buckets)``, the writer's own Murmur3-pmod
+    bucket expression), so all rows of a bucket land on one task and
+    the bucketed writer emits a single file for it. Repartitioning on
+    the raw key column is NOT equivalent: the write-side task layout
+    doesn't preserve the shuffle's partition-per-bucket mapping, and
+    each task then spills one file per bucket it happens to hold.
+
+    Multi-writer safety, two layers:
+
+    1. **vs appenders** — a batch APPENDED to the index during the
+       rewrite would be silently dropped from the folded table (the
+       lost-update the manifest CAS exists for). The compactor records
+       the table's file listing at read time, then takes the SAME
+       advisory lock every append holds (:func:`_table_lock`) and
+       re-verifies the listing under it before the swap: an append
+       that landed during the rewrite raises
+       :class:`~..sources.manifest.CommitConflict` (staging discarded,
+       live index untouched — best-effort maintenance, re-run); an
+       append that arrives after lock acquisition blocks until the
+       swap completes, so the historical check-then-act LOST-UPDATE
+       window between re-verify and DROP is closed. Residual race,
+       read-side: an appender's PROBE scan (``spark.table(index)``
+       read while computing spans) runs outside any lock, so a scan in
+       flight across the DROP/RENAME swap can fail transiently on
+       deleted files — a retryable read error, not a lost update.
+       Holding the table lock across the probe read would close it at
+       the cost of serializing every probe with compaction; on plain
+       Parquet we accept the transient instead (an Iceberg/Delta
+       snapshot read is the zero-cost fix).
+    2. **vs other compactors** — a whole-run ``_COMPACTOR.lock``
+       serializes compactions, so two concurrent compactors can never
+       interleave their staging rewrites or DROP/RENAME swaps (lock
+       order: compactor lock, then table lock — appenders take only
+       the latter, so no deadlock).
+
+    Crash recovery: a compaction that died between its DROP and
+    RENAME leaves the only copy of the index in the ``_compacting``
+    staging table; both this function and :func:`ensure_window_index`
+    rename it back into place.
+
+    On an Iceberg / Delta catalog this whole function is a
+    rewrite-data-files action with a snapshot commit and a zero-width
+    window instead.
+
+    Returns ``(files_before, files_after)``."""
+    from asset_prices_parquet_saver_spark.sources.manifest import CommitConflict
+
+    staging = f"{table}_compacting"
+    # Recover a crashed predecessor FIRST: if the index is gone but the
+    # staging table exists, the previous compaction died between DROP
+    # and RENAME and staging holds the only copy — renaming it into
+    # place must precede the stale-staging drop below, which is safe
+    # only once the main table exists. heal first: the killed run may
+    # also have orphaned the main table's directory, which would block
+    # the rename into place.
+    if not spark.catalog.tableExists(table) and spark.catalog.tableExists(staging):
+        heal_table_location(spark, table)
+        spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
+    with manifest.path_lock(_lock_path(spark, table, "compactor")):
+        spark.sql(f"DROP TABLE IF EXISTS {staging}")
+        heal_table_location(spark, staging)  # orphaned staging dir
+        cur = spark.table(table)
+        expect = sorted(cur.inputFiles())
+        files_before = len(expect)
+        bucket_id = F.pmod(F.hash("h"), F.lit(num_buckets))
+        (
+            cur.repartition(num_buckets, bucket_id)
+            .write.bucketBy(num_buckets, "h")
+            .sortBy("h")
+            .mode("overwrite")
+            .saveAsTable(staging)
+        )
+        if _test_pre_publish_hook is not None:
+            _test_pre_publish_hook()
+        with _table_lock(spark, table):
+            # refresh first: the catalog caches the relation's file
+            # index, and a stale listing here would false-pass the
+            # drift check
+            spark.catalog.refreshTable(table)
+            if sorted(spark.table(table).inputFiles()) != expect:
+                spark.sql(f"DROP TABLE IF EXISTS {staging}")
+                raise CommitConflict(
+                    f"{table}: index files changed during compaction — a "
+                    "concurrent append landed; the rewrite was discarded "
+                    "(re-run to compact the new state)"
+                )
+            spark.sql(f"DROP TABLE {table}")
+            spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
+    return files_before, len(spark.table(table).inputFiles())
 
 
 def run_streaming_substring_scrub(
@@ -991,18 +661,10 @@ def run_streaming_substring_scrub(
             scrubbed, corpus_path, txn=("substring-corpus", epoch_id)
         )
         # index exactly what was committed: the scrubbed text's windows
-        with _band_table_lock(spark, window_table):
-            (
-                window_rows(scrubbed, id_col, text_col, k)
-                .select("h", "id")
-                .write.bucketBy(num_buckets, "h")
-                .sortBy("h")
-                .mode("append")
-                .saveAsTable(window_table)
-            )
-        # the write ran under the streaming clone session; refresh the
-        # parent so the next batch's probe (and any user read) sees it
-        spark.catalog.refreshTable(window_table)
+        _append_windows(
+            spark, window_rows(scrubbed, id_col, text_col, k), window_table,
+            num_buckets,
+        )
 
     writer = docs_stream.writeStream.outputMode("append").foreachBatch(handle)
     if checkpoint_dir:

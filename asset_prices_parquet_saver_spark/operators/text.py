@@ -1212,15 +1212,15 @@ def build_positional_index(
     num_buckets: int = 32,
 ) -> None:
     """Persist the positional postings as a managed table PHYSICALLY
-    BUCKETED by term — the retrieval twin of
-    ``dedup_increment_bucketed``'s band index: a phrase/proximity
-    query against the table is a bucket-PRUNED scan (Spark reads only
-    the buckets the term IN-predicate hashes to — plan shows
-    ``SelectedBucketsCount``) feeding the same (id, pos) equi-joins,
-    so query cost is postings-of-the-query-terms, with no tokenize
-    pass and no corpus-side shuffle or full scan. Sorted within
-    buckets by (term, id, pos) for row-group min/max skipping within
-    the selected buckets."""
+    BUCKETED by term — the retrieval twin of the substring window
+    index (``incremental_dedup.substring_increment_bucketed``): a
+    phrase/proximity query against the table is a bucket-PRUNED scan
+    (Spark reads only the buckets the term IN-predicate hashes to —
+    plan shows ``SelectedBucketsCount``) feeding the same (id, pos)
+    equi-joins, so query cost is postings-of-the-query-terms, with no
+    tokenize pass and no corpus-side shuffle or full scan. Sorted
+    within buckets by (term, id, pos) for row-group min/max skipping
+    within the selected buckets."""
     from asset_prices_parquet_saver_spark.sources.warehouse import (
         heal_table_location,
     )

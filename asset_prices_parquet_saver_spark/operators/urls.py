@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from asset_prices_parquet_saver_spark.sources.warehouse import (
-    heal_table_location,
+    ensure_bucketed_table,
 )
 
 #: query parameters that identify a CLICK, not a resource — dropped
@@ -154,26 +154,30 @@ def domain_report(df: DataFrame, url_col: str) -> DataFrame:
 URL_INDEX_SCHEMA = "canon string, first_key long"
 
 
-def ensure_url_index(spark, table: str, num_buckets: int = 32) -> None:
-    """Create the physically bucketed canonical-URL seen-set if
-    absent — bucketed by ``canon`` (the probe join key) so per-batch
-    probes read the index in place. Same ``_compacting`` crash-window
-    recovery discipline as the dedup band/window indexes: a staging
-    orphan holds the ONLY copy and must be renamed back, never
-    shadowed by an empty re-create."""
-    if not spark.catalog.tableExists(table):
-        heal_table_location(spark, table)  # orphaned dir from a killed run
-        staging = f"{table}_compacting"
-        if spark.catalog.tableExists(staging):
-            spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-            return
-        (
-            spark.createDataFrame([], URL_INDEX_SCHEMA)
-            .write.bucketBy(num_buckets, "canon")
-            .sortBy("canon")
-            .mode("overwrite")
-            .saveAsTable(table)
-        )
+def _frontier_accept(
+    spark, new_docs: DataFrame, table: str, url_col: str, key_col: str,
+    num_buckets: int,
+) -> DataFrame:
+    """The frontier probe: canonicalize, keep each canonical URL's
+    first row within the batch, probe the seen-set, and return the
+    accepted rows, materialized, with their ``_canon`` column. Creates
+    the seen-set (bucketed by ``canon``, the probe key) if absent."""
+    from asset_prices_parquet_saver_spark.operators.dedup import exact_dedup
+
+    ensure_bucketed_table(
+        spark, table, URL_INDEX_SCHEMA, ("canon",), num_buckets
+    )
+    canon = new_docs.withColumn("_canon", canonical_url(F.col(url_col)))
+    batch_first = exact_dedup(canon, ["_canon"], key_col).localCheckpoint()
+    idx = spark.table(table)
+    hits = (
+        batch_first.select("_canon")
+        .hint("shuffle_hash")
+        .join(idx, F.col("_canon") == F.col("canon"))
+        .select("_canon")
+        .distinct()
+    )
+    return batch_first.join(hits, "_canon", "left_anti").localCheckpoint()
 
 
 def frontier_filter(
@@ -200,23 +204,12 @@ def frontier_filter(
     (Spark rejects build-left for anti), so the anti semantics come
     from the small hit-set's second join. Per-batch cost is
     O(batch + colliding index rows), never O(seen URLs). Same
-    metastore-append caveats as the dedup band index (non-atomic
+    metastore-append caveats as the substring window index (non-atomic
     appends; replays are harmless for results — a replayed batch's
     canonicals are already indexed, so it accepts nothing new)."""
-    from asset_prices_parquet_saver_spark.operators.dedup import exact_dedup
-
-    ensure_url_index(spark, table, num_buckets)
-    canon = new_docs.withColumn("_canon", canonical_url(F.col(url_col)))
-    batch_first = exact_dedup(canon, ["_canon"], key_col).localCheckpoint()
-    idx = spark.table(table)
-    hits = (
-        batch_first.select("_canon")
-        .hint("shuffle_hash")
-        .join(idx, F.col("_canon") == F.col("canon"))
-        .select("_canon")
-        .distinct()
+    accepted = _frontier_accept(
+        spark, new_docs, table, url_col, key_col, num_buckets
     )
-    accepted = batch_first.join(hits, "_canon", "left_anti").localCheckpoint()
     if append:
         append_url_index(spark, accepted, table, key_col, num_buckets)
     return accepted.drop("_canon")
@@ -231,14 +224,14 @@ def append_url_index(
     (the append may run in a streaming clone session — the r10
     foreachBatch staleness lesson)."""
     from asset_prices_parquet_saver_spark.operators.incremental_dedup import (
-        _band_table_lock,
+        _table_lock,
     )
 
     rows = accepted.select(
         F.col("_canon").alias("canon"),
         F.col(key_col).cast("long").alias("first_key"),
     )
-    with _band_table_lock(spark, table):
+    with _table_lock(spark, table):
         (
             rows.write.bucketBy(num_buckets, "canon")
             .sortBy("canon")
@@ -274,22 +267,9 @@ def run_streaming_frontier(
     def handle(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
-        canon = batch.withColumn("_canon", canonical_url(F.col(url_col)))
-        from asset_prices_parquet_saver_spark.operators.dedup import (
-            exact_dedup,
+        accepted = _frontier_accept(
+            spark, batch, table, url_col, key_col, num_buckets
         )
-
-        batch_first = exact_dedup(canon, ["_canon"], key_col).localCheckpoint()
-        ensure_url_index(spark, table, num_buckets)
-        idx = spark.table(table)
-        hits = (
-            batch_first.select("_canon")
-            .hint("shuffle_hash")
-            .join(idx, F.col("_canon") == F.col("canon"))
-            .select("_canon")
-            .distinct()
-        )
-        accepted = batch_first.join(hits, "_canon", "left_anti").localCheckpoint()
         manifest.commit_append(
             accepted.drop("_canon"), corpus_path,
             txn=("url-frontier-corpus", epoch_id),

@@ -61,17 +61,29 @@ def _reference_greedy(batches, threshold=0.5):
 
 def test_incremental_matches_reference_and_appends(spark, tmp_path):
     idx = str(tmp_path / "sigindex")
-    batches = [DOCS[:3], DOCS[3:7], DOCS[7:]]
+    corpus = str(tmp_path / "corpus")
+    # doc 99 has zero shingles: never banded, always survives
+    batches = [DOCS[:3], DOCS[3:7] + [(99, "single")], DOCS[7:]]
     got = []
     for batch in batches:
-        df = spark.createDataFrame([Row(doc_id=i, text=t) for i, t in batch])
+        df = spark.createDataFrame(
+            [Row(doc_id=i, text=t) for i, t in batch], "doc_id long, text string"
+        )
         # bands=32 (1 row/band) -> candidate iff ANY minhash collides:
         # miss probability for the fixture's threshold-boundary pairs
         # (jaccard 0.5) is 0.5^32, so LSH recall is effectively exact
         # and the reference comparison is deterministic
-        out = inc.run_incremental_dedup(spark, df, idx, threshold=0.5, bands=32)
+        out = inc.run_incremental_dedup(
+            spark, df, idx, corpus, threshold=0.5, bands=32
+        )
         got.extend(r["doc_id"] for r in out.collect())
     assert sorted(got) == sorted(_reference_greedy(batches))
+    assert 99 in got
+    # the corpus holds exactly the survivors
+    stored = manifest.read_versioned(
+        spark, corpus, schema="doc_id long, text string"
+    ).collect()
+    assert sorted(r["doc_id"] for r in stored) == sorted(got)
     # index = one signature row per SURVIVOR, grown by append segments
     rows = manifest.read_versioned(spark, idx, schema=inc.INDEX_SCHEMA).collect()
     assert sorted(r["id"] for r in rows) == sorted(got)
@@ -193,153 +205,40 @@ def test_replay_after_partial_commit_loses_nothing(spark, tmp_path):
     assert sorted(r["id"] for r in rows) == expected
 
 
-def test_bucketed_index_matches_reference_and_never_shuffles_index(spark):
-    tbl = "sigband_test_e2e"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    try:
-        batches = [DOCS[:3], DOCS[3:7], DOCS[7:]]
-        got = []
-        for bi, batch in enumerate(batches):
-            rows = [Row(doc_id=i, text=t) for i, t in batch]
-            if bi == 1:  # zero-shingle doc: never banded, always survives
-                rows.append(Row(doc_id=99, text="single"))
-            df = spark.createDataFrame(rows, "doc_id long, text string")
-            out = inc.dedup_increment_bucketed(
-                spark, df, tbl, threshold=0.5, bands=32, num_buckets=8
-            )
-            got.extend(r["doc_id"] for r in out.collect())
-        expected = sorted(_reference_greedy(batches) + [99])
-        assert sorted(got) == expected
-        # index holds band rows for every bandable survivor (not 99)
-        idx_ids = {
-            r["id"] for r in spark.table(tbl).select("id").distinct().collect()
-        }
-        assert idx_ids == set(expected) - {99}
-        # plan shape: the probe join shuffles ONLY the batch side — the
-        # bucketed index streams through a ShuffledHashJoin in place
-        from pyspark.sql import functions as F
+def test_incremental_step_commits_index_rows_without_reprobing(
+    spark, tmp_path, monkeypatch
+):
+    """The index rows the per-batch step commits must come from the
+    materialized survivors and the batch's signatures. A plan that
+    still holds the LSH band join and the index scans re-runs the whole
+    probe and verification for the index commit."""
+    idx = str(tmp_path / "sigindex")
+    corpus = str(tmp_path / "corpus")
 
-        from asset_prices_parquet_saver_spark.operators.dedup import banded_keys
-
-        sig = inc.signature_frame(
-            spark.createDataFrame([Row(doc_id=1000, text="alpha beta gamma")]),
-            "doc_id", "text", 2, 32,
-        ).localCheckpoint()
-        nb = banded_keys(
-            sig.filter(F.col("n_sh") > 0), 32, 1, carry=("arr", "n_sh")
-        ).localCheckpoint()
-        probe = nb.alias("a").hint("shuffle_hash").join(
-            spark.table(tbl).alias("b"), ["band", "bucket"]
+    def mk(rows):
+        return spark.createDataFrame(
+            [Row(doc_id=i, text=t) for i, t in rows], "doc_id long, text string"
         )
-        plan = probe._jdf.queryExecution().executedPlan().toString()
-        assert "ShuffledHashJoin" in plan
-        assert plan.count("Exchange") == 1  # the batch side only
-        assert "Bucketed: true" in plan  # index read in place
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+    inc.run_incremental_dedup(spark, mk(DOCS[:3]), idx, corpus, bands=32)
+    plans = {}
+    commit_append = manifest.commit_append
+
+    def commit(df, path, *args, **kwargs):
+        plans[path] = df._jdf.queryExecution().executedPlan().toString()
+        return commit_append(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(manifest, "commit_append", commit)
+    # second batch: probes a non-empty index
+    inc.run_incremental_dedup(spark, mk(DOCS[3:7]), idx, corpus, bands=32)
+    plan = plans[idx]
+    assert plan.count("FileScan") == 0, plan  # no index scan
+    assert "band" not in plan, plan  # no LSH band join
 
 
-def test_compact_band_index_merges_append_files(spark):
-    tbl = "sigband_test_compact"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    try:
-        batches = [DOCS[:3], DOCS[3:7], DOCS[7:]]
-        for batch in batches:
-            df = spark.createDataFrame(
-                [Row(doc_id=i, text=t) for i, t in batch],
-                "doc_id long, text string",
-            )
-            inc.dedup_increment_bucketed(
-                spark, df, tbl, threshold=0.5, bands=32, num_buckets=8
-            )
-        rows_before = sorted(
-            (r["band"], r["bucket"], r["id"])
-            for r in spark.table(tbl).collect()
-        )
-        before, after = inc.compact_band_index(spark, tbl, num_buckets=8)
-        # each append adds its own files; compaction folds them into at
-        # most one file per non-empty bucket
-        assert before > after
-        assert after <= 8
-        rows_after = sorted(
-            (r["band"], r["bucket"], r["id"])
-            for r in spark.table(tbl).collect()
-        )
-        assert rows_after == rows_before
-        # the compacted table is still bucketed: a probe join reads it
-        # in place with a single (batch-side) exchange
-        from pyspark.sql import functions as F
-
-        from asset_prices_parquet_saver_spark.operators.dedup import banded_keys
-
-        sig = inc.signature_frame(
-            spark.createDataFrame([Row(doc_id=1000, text="alpha beta gamma")]),
-            "doc_id", "text", 2, 32,
-        ).localCheckpoint()
-        nb = banded_keys(
-            sig.filter(F.col("n_sh") > 0), 32, 1, carry=("arr", "n_sh")
-        ).localCheckpoint()
-        probe = nb.alias("a").hint("shuffle_hash").join(
-            spark.table(tbl).alias("b"), ["band", "bucket"]
-        )
-        plan = probe._jdf.queryExecution().executedPlan().toString()
-        assert "ShuffledHashJoin" in plan
-        assert plan.count("Exchange") == 1
-        assert "Bucketed: true" in plan
-        # and further increments keep working against the compacted index
-        df = spark.createDataFrame(
-            [Row(doc_id=50, text="the quick brown fox jumps over the lazy dog")],
-            "doc_id long, text string",
-        )
-        out = inc.dedup_increment_bucketed(
-            spark, df, tbl, threshold=0.5, bands=32, num_buckets=8
-        )
-        assert out.count() == 0  # dup of indexed 1 still caught
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}_compacting")
-
-
-def test_band_index_crash_window_recovery(spark):
-    """A compaction that dies between DROP TABLE and RENAME leaves the
-    only copy of the index in the _compacting staging table. Both
-    ensure_band_index and a rerun of compact_band_index must rename it
-    back into place — recreating an empty index there would silently
-    forget the whole dedup history."""
-    tbl = "sigband_test_crash"
-    staging = f"{tbl}_compacting"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    spark.sql(f"DROP TABLE IF EXISTS {staging}")
-    try:
-        df = spark.createDataFrame(
-            [Row(doc_id=i, text=t) for i, t in DOCS[:3]],
-            "doc_id long, text string",
-        )
-        inc.dedup_increment_bucketed(spark, df, tbl, threshold=0.5, bands=32, num_buckets=4)
-        rows = sorted(
-            (r["band"], r["bucket"], r["id"]) for r in spark.table(tbl).collect()
-        )
-        # simulate the crash window: staging holds the copy, main is gone
-        spark.sql(f"ALTER TABLE {tbl} RENAME TO {staging}")
-        inc.ensure_band_index(spark, tbl, num_buckets=4)
-        got = sorted(
-            (r["band"], r["bucket"], r["id"]) for r in spark.table(tbl).collect()
-        )
-        assert got == rows  # history intact, NOT an empty re-create
-        assert not spark.catalog.tableExists(staging)
-        # same recovery inside a rerun of the compactor itself
-        spark.sql(f"ALTER TABLE {tbl} RENAME TO {staging}")
-        inc.compact_band_index(spark, tbl, num_buckets=4)
-        got2 = sorted(
-            (r["band"], r["bucket"], r["id"]) for r in spark.table(tbl).collect()
-        )
-        assert got2 == rows
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {staging}")
-
-
-def test_cli_dedup_rerun_after_crash_does_not_double_append(spark, tmp_path):
+def test_cli_dedup_rerun_after_crash_does_not_double_append(
+    spark, tmp_path, monkeypatch
+):
     """The CLI's documented crash recovery is 're-run the command'; the
     txn protocol must make the corpus append idempotent — without it a
     re-run after a crash between the corpus and index commits appends
@@ -349,14 +248,29 @@ def test_cli_dedup_rerun_after_crash_does_not_double_append(spark, tmp_path):
     docs = spark.createDataFrame(
         [Row(doc_id=i, text=t) for i, t in DOCS[:3]], "doc_id long, text string"
     )
+    commit_append = manifest.commit_append
+    crash_before_index = False
+
+    class Crash(Exception):
+        pass
+
+    def commit(df, path, *args, **kwargs):
+        if path == index and crash_before_index:
+            raise Crash()  # killed after the corpus commit
+        return commit_append(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(manifest, "commit_append", commit)
 
     def run_batch(batch: DataFrame, commit_index: bool) -> None:
-        idx = manifest.read_versioned(spark, index, schema=inc.INDEX_SCHEMA)
-        survivors, new_rows = inc.dedup_increment(batch, idx, "doc_id", "text")
+        nonlocal crash_before_index
+        crash_before_index = not commit_index
         txn = inc.batch_txn(batch, "doc_id", "text")  # the CLI's derivation
-        manifest.commit_append(survivors.localCheckpoint(), corpus, txn=txn)
-        if commit_index:
-            manifest.commit_append(new_rows.localCheckpoint(), index, txn=txn)
+        try:
+            inc.run_incremental_dedup(
+                spark, batch, index, corpus, corpus_txn=txn, index_txn=txn
+            )
+        except Crash:
+            pass
 
     run_batch(docs, commit_index=False)  # crash between the two commits
     n_after_crash = manifest.read_versioned(spark, corpus).count()
@@ -428,221 +342,6 @@ def test_batch_txn_params_change_txn_identity(spark):
     assert t07[0] != t09[0]
     # and identical params stay idempotent
     assert t07 == inc.batch_txn(docs, "doc_id", "text", params=(0.7,))
-
-
-def test_compact_band_index_detects_concurrent_append(spark):
-    """An index append landing during the compaction rewrite was
-    historically dropped by the DROP+RENAME swap (lost update). The
-    pre-publish drift check must abort with CommitConflict, keep the
-    appended batch, and let a retry fold the merged state."""
-    import pytest
-
-    from asset_prices_parquet_saver_spark.sources.manifest import CommitConflict
-
-    tbl = "sigband_test_cas"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}_compacting")
-    try:
-        for batch in (DOCS[:3], DOCS[3:7]):
-            df = spark.createDataFrame(
-                [Row(doc_id=i, text=t) for i, t in batch],
-                "doc_id long, text string",
-            )
-            inc.dedup_increment_bucketed(
-                spark, df, tbl, threshold=0.5, bands=32, num_buckets=4
-            )
-
-        def concurrent_append():
-            late = spark.createDataFrame(
-                [Row(doc_id=777, text="a wholly novel concurrent document")],
-                "doc_id long, text string",
-            )
-            inc.dedup_increment_bucketed(
-                spark, late, tbl, threshold=0.5, bands=32, num_buckets=4
-            )
-
-        inc._test_pre_publish_hook = concurrent_append
-        try:
-            with pytest.raises(CommitConflict):
-                inc.compact_band_index(spark, tbl, num_buckets=4)
-        finally:
-            inc._test_pre_publish_hook = None
-
-        ids = {r["id"] for r in spark.table(tbl).select("id").distinct().collect()}
-        assert 777 in ids  # the concurrent append survived
-        assert not spark.catalog.tableExists(f"{tbl}_compacting")
-
-        rows_before = sorted(
-            (r["band"], r["bucket"], r["id"]) for r in spark.table(tbl).collect()
-        )
-        before, after = inc.compact_band_index(spark, tbl, num_buckets=4)
-        assert before > after
-        rows_after = sorted(
-            (r["band"], r["bucket"], r["id"]) for r in spark.table(tbl).collect()
-        )
-        assert rows_after == rows_before
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}_compacting")
-
-
-def test_manifest_banded_matches_reference_and_replays_idempotently(
-    spark, tmp_path
-):
-    """The manifest-protocol band index: same survivor semantics as the
-    metastore-bucketed path, appends as atomic epoch-idempotent commits
-    (a replayed epoch adds no segment and recomputes the identical
-    survivors), segments clustered + zone-mapped on pbucket."""
-    idx = str(tmp_path / "bandidx")
-    batches = [DOCS[:3], DOCS[3:7], DOCS[7:]]
-    got = []
-    for bi, batch in enumerate(batches):
-        rows = [Row(doc_id=i, text=t) for i, t in batch]
-        if bi == 1:  # zero-shingle doc: never banded, always survives
-            rows.append(Row(doc_id=99, text="single"))
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        out = inc.dedup_increment_manifest_banded(
-            spark, df, idx, threshold=0.5, bands=32, num_buckets=4,
-            epoch=("mb-test", bi),
-        )
-        got.extend(r["doc_id"] for r in out.collect())
-    expected = sorted(_reference_greedy(batches) + [99])
-    assert sorted(got) == expected
-
-    segs_before = manifest.segment_count(idx)
-    # replay epoch 1: txn no-op on the index, identical survivors
-    rows = [Row(doc_id=i, text=t) for i, t in batches[1]] + [
-        Row(doc_id=99, text="single")
-    ]
-    replay = inc.dedup_increment_manifest_banded(
-        spark,
-        spark.createDataFrame(rows, "doc_id long, text string"),
-        idx, threshold=0.5, bands=32, num_buckets=4, epoch=("mb-test", 1),
-    )
-    # same survivor decision (99 + the batch-2 survivors), even though
-    # their own rows are already indexed (equal-id matches excluded)
-    batch2_expected = set(_reference_greedy(batches)) & {i for i, _ in batches[1]}
-    assert {r["doc_id"] for r in replay.collect()} == batch2_expected | {99}
-    assert manifest.segment_count(idx) == segs_before  # no new segment
-
-    # index rows: every bandable survivor, clustered on pbucket
-    irows = manifest.read_versioned(
-        spark, idx, schema=inc.BAND_MANIFEST_SCHEMA
-    )
-    assert {r["id"] for r in irows.select("id").distinct().collect()} == set(
-        expected
-    ) - {99}
-    from pyspark.sql import functions as F
-
-    bad = irows.filter(
-        F.col("pbucket") != F.pmod(F.hash("band", "bucket"), F.lit(4))
-    ).count()
-    assert bad == 0
-
-
-def test_manifest_banded_compaction_is_cas_guarded(spark, tmp_path):
-    """compact_band_index_manifest folds the append log into one
-    pbucket-clustered segment; a concurrent append between its read and
-    its publish raises CommitConflict and loses nothing — the CAS
-    protocol every other state table uses, now covering the band
-    index."""
-    import pytest
-
-    from asset_prices_parquet_saver_spark.sources.manifest import CommitConflict
-
-    idx = str(tmp_path / "bandidx")
-    for bi, batch in enumerate([DOCS[:3], DOCS[3:7]]):
-        df = spark.createDataFrame(
-            [Row(doc_id=i, text=t) for i, t in batch], "doc_id long, text string"
-        )
-        inc.dedup_increment_manifest_banded(
-            spark, df, idx, threshold=0.5, bands=32, num_buckets=4,
-            epoch=("cas-test", bi),
-        )
-    assert manifest.segment_count(idx) == 2
-
-    def concurrent_append():
-        late = spark.createDataFrame(
-            [Row(doc_id=777, text="a wholly novel concurrent document")],
-            "doc_id long, text string",
-        )
-        inc.dedup_increment_manifest_banded(
-            spark, late, idx, threshold=0.5, bands=32, num_buckets=4
-        )
-
-    inc._test_pre_publish_hook = concurrent_append
-    try:
-        with pytest.raises(CommitConflict):
-            inc.compact_band_index_manifest(spark, idx, num_buckets=4)
-    finally:
-        inc._test_pre_publish_hook = None
-
-    rows_merged = sorted(
-        (r["band"], r["bucket"], r["id"])
-        for r in manifest.read_versioned(
-            spark, idx, schema=inc.BAND_MANIFEST_SCHEMA
-        ).collect()
-    )
-    assert any(r[2] == 777 for r in rows_merged)  # concurrent append kept
-
-    before, after = inc.compact_band_index_manifest(spark, idx, num_buckets=4)
-    assert before == 3 and after == 1
-    rows_after = sorted(
-        (r["band"], r["bucket"], r["id"])
-        for r in manifest.read_versioned(
-            spark, idx, schema=inc.BAND_MANIFEST_SCHEMA
-        ).collect()
-    )
-    assert rows_after == rows_merged  # fold preserved every row
-    # one file per non-empty pbucket in the folded snapshot
-    folded = manifest.read_versioned(spark, idx, schema=inc.BAND_MANIFEST_SCHEMA)
-    n_buckets = folded.select("pbucket").distinct().count()
-    assert len(folded.inputFiles()) <= max(n_buckets, 1)
-
-
-def test_streaming_dedup_banded_index_end_to_end(spark, tmp_path):
-    """The streaming twin on the manifest-banded index: same survivor
-    semantics as the flat-signature path, corpus committed first,
-    index segments pbucket-clustered and epoch-tagged."""
-    idx = str(tmp_path / "bandidx")
-    corpus = str(tmp_path / "corpus")
-    drop = tmp_path / "drop"
-    drop.mkdir()
-    spark.createDataFrame(
-        [Row(doc_id=i, text=t) for i, t in DOCS], "doc_id long, text string"
-    ).coalesce(1).write.parquet(str(drop / "all"))
-    stream = spark.readStream.schema("doc_id long, text string").parquet(
-        str(drop / "all")
-    )
-    q = inc.run_streaming_dedup(
-        spark,
-        stream,
-        idx,
-        corpus,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        available_now=True,
-        bands=32,
-        index_kind="banded",
-        num_buckets=4,
-    )
-    q.awaitTermination(120)
-    expected = sorted(_reference_greedy([DOCS]))
-    got = sorted(
-        r["doc_id"]
-        for r in manifest.read_versioned(
-            spark, corpus, schema="doc_id long, text string"
-        ).collect()
-    )
-    assert got == expected
-    rows = manifest.read_versioned(
-        spark, idx, schema=inc.BAND_MANIFEST_SCHEMA
-    )
-    assert sorted({r["id"] for r in rows.select("id").distinct().collect()}) == expected
-    from pyspark.sql import functions as F
-
-    assert rows.filter(
-        F.col("pbucket") != F.pmod(F.hash("band", "bucket"), F.lit(4))
-    ).count() == 0
 
 
 # ---------------- incremental exact-substring dedup (window index)
@@ -789,6 +488,88 @@ def test_compact_window_index_folds_files(spark):
             spark, probe, tbl, k=5, num_buckets=4
         )
         assert spans.count() == 1  # verbatim dup of indexed doc 0
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}_compacting")
+
+
+def test_window_index_crash_window_recovery(spark):
+    """A compaction that dies between DROP TABLE and RENAME leaves the
+    only copy of the index in the _compacting staging table. Both
+    ensure_window_index and a rerun of compact_window_index must rename
+    it back into place — recreating an empty index there would silently
+    forget every indexed window."""
+    tbl = "winidx_test_crash"
+    staging = f"{tbl}_compacting"
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    spark.sql(f"DROP TABLE IF EXISTS {staging}")
+    try:
+        df = spark.createDataFrame(
+            [Row(doc_id=i, text=t) for i, t in DOCS[:3]],
+            "doc_id long, text string",
+        )
+        inc.substring_increment_bucketed(spark, df, tbl, k=5, num_buckets=4)
+        rows = sorted((r["h"], r["id"]) for r in spark.table(tbl).collect())
+        assert rows
+        # simulate the crash window: staging holds the copy, main is gone
+        spark.sql(f"ALTER TABLE {tbl} RENAME TO {staging}")
+        inc.ensure_window_index(spark, tbl, num_buckets=4)
+        got = sorted((r["h"], r["id"]) for r in spark.table(tbl).collect())
+        assert got == rows  # history intact, NOT an empty re-create
+        assert not spark.catalog.tableExists(staging)
+        # same recovery inside a rerun of the compactor itself
+        spark.sql(f"ALTER TABLE {tbl} RENAME TO {staging}")
+        inc.compact_window_index(spark, tbl, num_buckets=4)
+        got2 = sorted((r["h"], r["id"]) for r in spark.table(tbl).collect())
+        assert got2 == rows
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        spark.sql(f"DROP TABLE IF EXISTS {staging}")
+
+
+def test_compact_window_index_detects_concurrent_append(spark):
+    """An index append landing during the compaction rewrite was
+    historically dropped by the DROP+RENAME swap (lost update). The
+    pre-publish drift check must abort with CommitConflict, keep the
+    appended batch, and let a retry fold the merged state."""
+    import pytest
+
+    from asset_prices_parquet_saver_spark.sources.manifest import CommitConflict
+
+    tbl = "winidx_test_cas"
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}_compacting")
+    try:
+        for batch in (DOCS[:3], DOCS[3:7]):
+            df = spark.createDataFrame(
+                [Row(doc_id=i, text=t) for i, t in batch],
+                "doc_id long, text string",
+            )
+            inc.substring_increment_bucketed(spark, df, tbl, k=5, num_buckets=4)
+
+        def concurrent_append():
+            late = spark.createDataFrame(
+                [Row(doc_id=777, text="a wholly novel concurrent document arrives")],
+                "doc_id long, text string",
+            )
+            inc.substring_increment_bucketed(spark, late, tbl, k=5, num_buckets=4)
+
+        inc._test_pre_publish_hook = concurrent_append
+        try:
+            with pytest.raises(CommitConflict):
+                inc.compact_window_index(spark, tbl, num_buckets=4)
+        finally:
+            inc._test_pre_publish_hook = None
+
+        ids = {r["id"] for r in spark.table(tbl).select("id").distinct().collect()}
+        assert 777 in ids  # the concurrent append survived
+        assert not spark.catalog.tableExists(f"{tbl}_compacting")
+
+        rows_before = sorted((r["h"], r["id"]) for r in spark.table(tbl).collect())
+        before, after = inc.compact_window_index(spark, tbl, num_buckets=4)
+        assert before > after
+        rows_after = sorted((r["h"], r["id"]) for r in spark.table(tbl).collect())
+        assert rows_after == rows_before
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         spark.sql(f"DROP TABLE IF EXISTS {tbl}_compacting")

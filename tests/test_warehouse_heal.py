@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from asset_prices_parquet_saver_spark.operators import dedup
 from asset_prices_parquet_saver_spark.operators.incremental_dedup import (
-    ensure_band_index,
+    ensure_window_index,
 )
 from asset_prices_parquet_saver_spark.sources.warehouse import (
     heal_table_location,
@@ -66,11 +66,11 @@ def test_build_ensemble_index_survives_orphaned_location(spark):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
-def test_ensure_band_index_survives_orphaned_location(spark):
-    tbl = "heal_band_idx"
+def test_ensure_window_index_survives_orphaned_location(spark):
+    tbl = "heal_window_idx"
     _plant_orphan(spark, tbl)
     try:
-        ensure_band_index(spark, tbl, num_buckets=4)
+        ensure_window_index(spark, tbl, num_buckets=4)
         assert spark.catalog.tableExists(tbl)
         assert spark.table(tbl).count() == 0
     finally:
