@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from asset_prices_parquet_saver_spark.functions.pins import pin as _pin
 from asset_prices_parquet_saver_spark.functions.pandas_ops import spread
+from asset_prices_parquet_saver_spark.operators.graph import undirected_edges
 from asset_prices_parquet_saver_spark.operators.similarity import auto_num_blocks
 
 # ---------------------------------------------------------------- exact
@@ -1341,26 +1342,22 @@ def minhash_dedup(
 # ------------------------------------------- clusters / end-to-end dedup
 
 def connected_components(
-    pairs: DataFrame, max_iter: int = 20, id_a: str = "id_a", id_b: str = "id_b"
+    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
 ) -> DataFrame:
     """Connected components of the near-duplicate pair graph by
     iterative min-label propagation: every node starts labeled with its
     own id; each round a node adopts the minimum label among itself and
     its neighbors; fixpoint = component = minimum member id.
 
-    Rounds needed = graph diameter. Near-dup clusters are dense and
-    tiny (dozens of docs sharing variants), so diameter is single-digit
-    and ``max_iter`` is a safety bound, checked per-round with an
-    early-exit count of changed labels (one action per round — the
-    standard large-graph CC loop, same shape as GraphFrames'). Output:
-    (id, component).
+    The loop runs to the fixpoint, checked per round with one 1-row
+    label-sum aggregate (one action per round — the standard
+    large-graph CC loop, same shape as GraphFrames'). Labels settle
+    after graph-diameter rounds, so it stops after at most diameter + 1
+    rounds with every component exact, however long its chains. Near-
+    dup clusters are dense and tiny, so that is a handful of rounds.
+    Output: (id, component).
     """
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        .localCheckpoint()
-    )
+    edges = undirected_edges(pairs, id_a, id_b).localCheckpoint()
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()
@@ -1383,11 +1380,12 @@ def connected_components(
     # Convergence check: labels only ever DECREASE, so the label sum
     # (exact, DECIMAL(38,0)) strictly decreases iff any node changed —
     # one 1-row aggregate replaces the changed-flag count and needs no
-    # reference to the previous round's labels.
+    # reference to the previous round's labels. A sum that can only
+    # fall and stops falling at the fixpoint bounds the loop.
     prev_sum = labels.agg(
         F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
     ).collect()[0]["s"]
-    for _ in range(max_iter):
+    while True:
         new_labels = (
             edges.join(labels, edges.src == labels.id)
             .select(F.col("dst").alias("id"), "component")
@@ -1576,9 +1574,10 @@ def simhash_near_pairs(
     # pinned: the fingerprint relation feeds BOTH self-join sides, and
     # for every caller `fp` is the simhash() pipeline — a token x bit
     # explode plus two corpus-keyed aggregations. Unpinned, that whole
-    # pipeline evaluated once per side (plan-verified 2x; the
-    # cosine_pairs_lsh mechanism — AQE broadcasting one side guarantees
-    # the duplication). The pin is O(docs) narrow rows.
+    # pipeline evaluated once per side (plan-verified 2x: the broadcast
+    # build side is a different subtree shape from the probe side, so
+    # ReuseExchange never fires, and AQE broadcasting one side
+    # guarantees the duplication). The pin is O(docs) narrow rows.
     fp = _pin(fp)
     blocked = fp.select(
         "id",

@@ -31,7 +31,6 @@ def pagerank(
     node_col: str = "node",
     iterations: int = 3,
     damping: float = 0.85,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Weighted PageRank, simple variant (dangling mass not
     redistributed): r'(v) = (1-d)/N + d * Σ_u r(u) · w(u,v)/out(u).
@@ -43,7 +42,7 @@ def pagerank(
     """
     return _pagerank_impl(
         edges, nodes, src_col, dst_col, weight_col, node_col,
-        iterations, damping, checkpoint, tol=None,
+        iterations, damping, tol=None,
     )
 
 
@@ -66,7 +65,7 @@ def pagerank_until(
     engine-portable replay matters."""
     return _pagerank_impl(
         edges, nodes, src_col, dst_col, weight_col, node_col,
-        max_iterations, damping, checkpoint=True, tol=tol,
+        max_iterations, damping, tol=tol,
     )
 
 
@@ -79,7 +78,6 @@ def _pagerank_impl(
     node_col: str,
     iterations: int,
     damping: float,
-    checkpoint: bool,
     tol: float | None,
 ) -> DataFrame:
     n_nodes = nodes.count()  # vertex-set cardinality: one tiny scalar
@@ -98,9 +96,7 @@ def _pagerank_impl(
         .select(
             src_col, dst_col, (F.col(weight_col) / F.col("_ow")).alias("_p")
         )
-    )
-    if checkpoint:
-        frac = frac.localCheckpoint()
+    ).localCheckpoint()
 
     ranks = nodes.select(
         F.col(node_col), F.lit(1.0 / n_nodes).alias("rank")
@@ -120,16 +116,15 @@ def _pagerank_impl(
                 + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
             ).alias("rank"),
         )
-        if checkpoint:
-            # fixed-iteration mode references each round's ranks exactly
-            # once (the next round's contrib join), so the checkpoint
-            # can be LAZY: the plan is still cut per round, but the
-            # blocks materialize inside the caller's single action
-            # instead of one blocking job per round. Convergence mode
-            # (tol set) reads ranks twice per round (contrib join +
-            # delta-vs-prev) — keep the eager barrier there so the
-            # second reference hits blocks, not a racing recompute.
-            ranks = ranks.localCheckpoint(eager=tol is not None)
+        # fixed-iteration mode references each round's ranks exactly
+        # once (the next round's contrib join), so the checkpoint can
+        # be LAZY: the plan is still cut per round, but the blocks
+        # materialize inside the caller's single action instead of one
+        # blocking job per round. Convergence mode (tol set) reads
+        # ranks twice per round (contrib join + delta-vs-prev) — keep
+        # the eager barrier there so the second reference hits blocks,
+        # not a racing recompute.
+        ranks = ranks.localCheckpoint(eager=tol is not None)
         if tol is not None:
             delta = (
                 ranks.join(
@@ -191,7 +186,6 @@ def khop_min_hops(
     src_col: str = "src",
     dst_col: str = "dst",
     node_col: str = "node",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Multi-source BFS: per start node, the minimum hop count (≤ k)
     to every node it can reach. Returns (start, node, hops), the start
@@ -212,7 +206,7 @@ def khop_min_hops(
     """
     if k < 0:
         raise ValueError("khop_min_hops: k must be >= 0")
-    if checkpoint and k > 0:
+    if k > 0:
         # materialize the edge relation ONCE: without this every
         # iteration re-evaluates the caller's edge pipeline (for the
         # gated trade-graph query, a 5-way fact join) — same
@@ -222,9 +216,7 @@ def khop_min_hops(
         F.col(node_col).alias("start"),
         F.col(node_col).alias("node"),
         F.lit(0).alias("hops"),
-    ).distinct()
-    if checkpoint:
-        visited = visited.localCheckpoint()
+    ).distinct().localCheckpoint()
     frontier = visited
     for i in range(1, k + 1):
         nxt = (
@@ -236,9 +228,7 @@ def khop_min_hops(
             )
             .distinct()
             .join(visited.select("start", "node"), ["start", "node"], "left_anti")
-        )
-        if checkpoint:
-            nxt = nxt.localCheckpoint()
+        ).localCheckpoint()
         if nxt.isEmpty():
             break
         # NO re-checkpoint of visited: it is a union of ≤ k relations
@@ -252,12 +242,32 @@ def khop_min_hops(
     return visited
 
 
+def undirected_edges(
+    edges: DataFrame, a: str, b: str, src: str = "src", dst: str = "dst"
+) -> DataFrame:
+    """The distinct (``src``, ``dst``) rows of every edge (``a``, ``b``)
+    in both directions, from ONE read of ``edges``: a union of two
+    selects evaluates the caller's edge pipeline once per branch
+    wherever that pipeline does not end in a reusable exchange."""
+    return (
+        edges.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col(a).alias(src), F.col(b).alias(dst)),
+                    F.struct(F.col(b).alias(src), F.col(a).alias(dst)),
+                )
+            ).alias("e")
+        )
+        .select(f"e.{src}", f"e.{dst}")
+        .distinct()
+    )
+
+
 def min_label_propagation(
     edges: DataFrame,
     iterations: int,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Synchronous min-label propagation over the UNDIRECTED closure of
     ``edges``: every node starts labeled with itself; each round a node
@@ -273,17 +283,7 @@ def min_label_propagation(
     Per round: one src-keyed join + one dst-keyed min aggregate — the
     same shuffle budget as a PageRank step; lineage truncated per round.
     """
-    und = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .unionByName(
-            edges.select(
-                F.col(dst_col).alias("a"), F.col(src_col).alias("b")
-            )
-        )
-        .distinct()
-    )
-    if checkpoint:
-        und = und.localCheckpoint()
+    und = undirected_edges(edges, src_col, dst_col, "a", "b").localCheckpoint()
     labels = (
         und.select(F.col("a").alias("node"))
         .distinct()
@@ -301,7 +301,5 @@ def min_label_propagation(
             .unionByName(labels)
             .groupBy("node")
             .agg(F.min("label").alias("label"))
-        )
-        if checkpoint:
-            labels = labels.localCheckpoint()
+        ).localCheckpoint()
     return labels

@@ -7,13 +7,20 @@ one of its hyperplane buckets. Both run ONE blocked kernel
 REPOSE (ICDE 2021) merges globally: the corpus is hash-grouped into
 blocks, the collected query set is broadcast to every block, and the
 exact variant scores all of a block's (query, vector) pairs with one
-matmul, while the LSH variant computes the block's bucket codes from
-the fixed-seed planes in the same kernel and scores only the pairs
-whose codes collide in some table. A block emits only its per-query
-top-k (plus a one-rounding-unit slack), so only B·q·k narrow rows reach
-the global window rank. The block count comes from the optimized
-plan's size estimate in bytes, so building either query runs no Spark
-job and depends on no core count.
+matmul, while the LSH variant computes the block's bucket codes
+(:func:`lsh_codes`) in the same kernel and scores only the pairs whose
+codes collide in some table. A block emits only its per-query top-k
+(plus a one-rounding-unit slack), so only B·q·k narrow rows reach the
+global window rank. The block count comes from the optimized plan's
+size estimate in bytes, so building either query runs no Spark job and
+depends on no core count.
+
+LSH near-pairs (:func:`cosine_pairs_lsh`) take the same local-then-
+global shape with the bucket as the block: :func:`lsh_codes` runs once
+per vector, each (table, bucket) is grouped once and scored with one
+matmul, and a pair is emitted only from the lowest table its codes
+collide in. Every top-k path ends in the one rank tail
+:func:`_top_k_per_query`.
 
 Kernels: all pair scoring runs as Arrow-batched numpy (one matmul or
 einsum per batch inside ``mapInPandas``) — the interpreted
@@ -27,15 +34,10 @@ lives at 1e-15, three orders below the rounding grain.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from asset_prices_parquet_saver_spark.functions.vectors import (
-    cosine_similarity,
-    dot,
-    norm,
-    to_double_array,
-)
+from asset_prices_parquet_saver_spark.functions.vectors import to_double_array
 
 
 def auto_num_blocks(
@@ -111,6 +113,22 @@ def _rowwise_cosine(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
     return df.mapInPandas(gen, schema + ", raw_cosine double")
 
 
+def _top_k_per_query(
+    scored: DataFrame, k: int, score: str, ascending: bool, id_name: str = "vec_id"
+) -> DataFrame:
+    """The rank tail of every top-k path: per ``query_id``, the first
+    ``k`` rows of ``scored`` by ``score`` with ascending id as the
+    tie-break, so the pick is the same on every engine and
+    partitioning. Output: query_id, ``id_name``, ``score``, rank."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col(id_name).asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", id_name, score, "rank")
+    )
+
+
 #: corpus bytes per top-k block (as the plan estimates them: ~65536
 #: float32 vectors at dim 64); the block's vectors and its q×block
 #: score matrix are the kernel's working set
@@ -184,12 +202,6 @@ def _blocked_topk(
         ok = n > 0
         return ids[ok], X[ok], n[ok]
 
-    def codes(X, planes):
-        """(n, T) bucket codes: bit p of table t = sign(x · planes[t, p])."""
-        bits = (X @ planes.reshape(-1, X.shape[1]).T) > 0
-        weights = 1 << np.arange(planes.shape[1], dtype="int64")
-        return bits.reshape(len(X), *planes.shape[:2]) @ weights
-
     def all_pairs(Q, qn, A, an):
         """Per query: every block row and its cosine, one matmul."""
         S = (Q @ A.T) / (qn[:, None] * an[None, :])  # (q, n)
@@ -197,10 +209,10 @@ def _blocked_topk(
         for qi in range(len(Q)):
             yield every, S[qi]
 
-    def colliding_pairs(Q, qn, qcodes, A, an, planes):
+    def colliding_pairs(Q, qn, qcodes, A, an):
         """Per query: the block rows sharing its code in any table, and
         their cosines — only those pairs are scored."""
-        acodes = codes(A, planes)
+        acodes = lsh_codes(A, *lsh)
         tables = []
         for t in range(acodes.shape[1]):
             rows = np.argsort(acodes[:, t], kind="stable")
@@ -215,25 +227,21 @@ def _blocked_topk(
             yield idx, (A[idx] @ Q[qi]) / (an[idx] * qn[qi])
 
     def score(batches):
-        probe = planes = None  # the broadcast row is identical in every block
+        probe = None  # the broadcast row is identical in every block
         for pdf in batches:
             for items, probes in zip(pdf["items"], pdf["probes"]):
                 if probe is None:
                     probe = vectors(probes, "query_id", "qv")
                     if lsh is not None and len(probe[0]):
-                        num_planes, num_tables, max_planes = lsh
-                        planes = lsh_planes(
-                            max_planes or num_planes, num_tables, probe[1].shape[1]
-                        )[:, :num_planes, :]
-                        qcodes = codes(probe[1], planes)
+                        qcodes = lsh_codes(probe[1], *lsh)
                 qids, Q, qn = probe
                 ids, A, an = vectors(items, "vec_id", "v")
                 if not len(qids) or not len(ids):
                     continue
                 pairs = (
                     all_pairs(Q, qn, A, an)
-                    if planes is None
-                    else colliding_pairs(Q, qn, qcodes, A, an, planes)
+                    if lsh is None
+                    else colliding_pairs(Q, qn, qcodes, A, an)
                 )
                 out_q, out_i, out_c = [], [], []
                 for qid, (idx, raw) in zip(qids, pairs):
@@ -270,14 +278,7 @@ def _blocked_topk(
         "vec_id",
         F.round("raw_cosine", round_decimals).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return _top_k_per_query(scored, k, "cosine", ascending=False)
 
 
 def cosine_topk(
@@ -422,56 +423,86 @@ def cosine_pairs_lsh(
     true near-dups grows with num_tables (a pair at cosine θ collides
     in one table with prob (1 - arccos(θ)/π)^num_planes).
 
+    Execution: one Arrow pass computes each vector's codes in every
+    table (:func:`lsh_codes`); the codes posexplode to (table, bucket)
+    rows, each bucket is grouped once, and one matmul per bucket scores
+    its (a<b) pairs as dot/(|a||b|). A pair colliding in several tables
+    is emitted only by the lowest of them (every row carries its codes),
+    so no vector pair goes through a join and the result needs no
+    ``distinct``. Zero-norm vectors have no cosine and take no part.
+    The final rounding and threshold run JVM-side with ``F.round``; the
+    kernel pre-filters with half a rounding unit of slack.
+
     ``num_planes=None`` → :func:`auto_num_planes` from one cheap
     count: bucket occupancy (and with it per-table candidate work per
     row) stays CONSTANT as the corpus grows — the fixed-J form is
     quadratic past n ≈ 2^J·occupancy. Planes then come from the shared
     ``AUTO_PLANES_HI`` tensor prefix so the oracle can replay J from
     COUNT(*) over the same inlined constants."""
+    import numpy as np
+    import pandas as pd
+
     max_planes = None
     if num_planes is None:
         num_planes = auto_num_planes(emb.count())
         max_planes = AUTO_PLANES_HI
-    # Pin the bucketed relation ONCE: both sides of the self-join
-    # consume it, and without the barrier the plan evaluates the
-    # hyperplane-projection kernel twice — the broadcast build side is
-    # a different subtree shape from the probe side, so ReuseExchange
-    # never fires (plan-verified: two MapInPandas gen() nodes, zero
-    # ReusedExchange). Same deliberate-barrier pattern as the shared
-    # signature/array checkpoints across the dedup family.
-    e = _with_buckets(
-        emb.select(F.col(id_col).alias("vec_id"), to_double_array(vec_col).alias("v")),
-        "vec_id",
-        "v",
-        num_planes,
-        num_tables,
-        max_planes=max_planes,
-    ).localCheckpoint()
-    cand = (
-        e.alias("a")
-        .join(e.alias("b"), ["table", "bucket"])
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("id_a"),
-            F.col("b.vec_id").alias("id_b"),
-            F.col("a.v").alias("va"),
-            F.col("b.v").alias("vb"),
-        )
+    lsh = (num_planes, num_tables, max_planes)
+    floor = threshold - 10.0 ** (-round_decimals) / 2 - 1e-9
+
+    def bucket_codes(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            V = np.array(list(pdf["v"]), dtype="float64")
+            ok = np.linalg.norm(V, axis=1) > 0
+            if ok.any():
+                out = pdf.loc[ok, ["vec_id", "v"]].copy()
+                out["codes"] = list(lsh_codes(V[ok], *lsh))
+                yield out
+
+    def score_buckets(batches):
+        for pdf in batches:
+            out_a, out_b, out_c = [], [], []
+            for table, items in zip(pdf["table"], pdf["items"]):
+                ids = np.array([r["vec_id"] for r in items], dtype="int64")
+                X = np.array([r["v"] for r in items], dtype="float64")
+                C = np.array([r["codes"] for r in items], dtype="int64")
+                n = np.linalg.norm(X, axis=1)
+                # rows in slices, so a crowded bucket's score matrix
+                # stays bounded; a slice scores its rows against
+                # themselves and every later row
+                for lo in range(0, len(ids) - 1, 4096):
+                    hi = lo + 4096
+                    S = (X[lo:hi] @ X[lo:].T) / (n[lo:hi, None] * n[None, lo:])
+                    i, j = np.nonzero(np.triu(S >= floor, 1))
+                    a, b = lo + i, lo + j
+                    # only the lowest table the pair collides in emits it
+                    first = (C[a] == C[b]).argmax(axis=1)
+                    keep = (first == table) & (ids[a] != ids[b])
+                    out_a.append(np.minimum(ids[a], ids[b])[keep])
+                    out_b.append(np.maximum(ids[a], ids[b])[keep])
+                    out_c.append(S[i, j][keep])
+            if out_a:
+                yield pd.DataFrame(
+                    {
+                        "id_a": np.concatenate(out_a),
+                        "id_b": np.concatenate(out_b),
+                        "raw_cosine": np.concatenate(out_c),
+                    }
+                )
+
+    coded = emb.select(
+        F.col(id_col).alias("vec_id"), to_double_array(vec_col).alias("v")
+    ).mapInPandas(bucket_codes, "vec_id long, v array<double>, codes array<long>")
+    buckets = (
+        coded.select("vec_id", "v", "codes", F.posexplode("codes").alias("table", "bucket"))
+        .groupBy("table", "bucket")
+        .agg(F.collect_list(F.struct("vec_id", "v", "codes")).alias("items"))
     )
-    # A pair colliding in m tables is verified m times (m ≤ num_tables)
-    # and deduped AFTER scoring: einsum scores are batch-independent, so
-    # duplicates are bit-identical and collapse in a distinct over three
-    # narrow columns — ~40× fewer shuffle bytes than deduping the
-    # vector-carrying candidate rows before verification.
     return (
-        _rowwise_cosine(cand, "va", "vb")
-        .select(
-            "id_a",
-            "id_b",
-            F.round("raw_cosine", round_decimals).alias("cosine"),
-        )
+        buckets.mapInPandas(score_buckets, "id_a long, id_b long, raw_cosine double")
+        .select("id_a", "id_b", F.round("raw_cosine", round_decimals).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
-        .distinct()
     )
 
 
@@ -567,19 +598,30 @@ def ann_ivf_topk(
     else:
         Cn = _train_centroids(e, num_cells)
 
-    corpus = _ivf_cells(e, Cn, 1)
-    probes = (
-        _ivf_cells(
-            queries.select(
-                F.col(id_col).alias("vec_id"), to_double_array(vec_col).alias("v")
-            ),
-            Cn,
-            nprobe,
-        )
-        .select(
-            F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), "cell"
-        )
+    return _ivf_probe_rerank(
+        _ivf_cells(e, Cn, 1), queries, Cn, k, nprobe, id_col, vec_col
     )
+
+
+def _ivf_probe_rerank(
+    corpus: DataFrame,
+    queries: DataFrame,
+    Cn,
+    k: int,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The IVF query body behind :func:`ann_ivf_topk` and
+    :func:`ann_ivf_topk_from_index`: each query's ``nprobe`` nearest
+    cells (broadcast — the probe set is tiny) join the (cell, vec_id,
+    v) corpus rows on the cell id, and the candidates rerank by exact
+    cosine."""
+    probes = _ivf_cells(
+        queries.select(F.col(id_col).alias("vec_id"), to_double_array(vec_col).alias("v")),
+        Cn,
+        nprobe,
+    ).select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), "cell")
     cand = (
         corpus.join(F.broadcast(probes), "cell")
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -591,14 +633,7 @@ def ann_ivf_topk(
     scored = _rowwise_cosine(cand, "qv", "v").select(
         "query_id", "vec_id", F.round("raw_cosine", 6).alias("cosine")
     ).distinct()
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return _top_k_per_query(scored, k, "cosine", ascending=False)
 
 
 def _train_centroids(
@@ -692,8 +727,7 @@ def auto_num_planes(
 
 def lsh_planes(num_planes: int, num_tables: int, dim: int):
     """The fixed-seed hyperplane tensor (num_tables, num_planes, dim)
-    every worker derives identically inside :func:`_with_buckets` and
-    the LSH mask of :func:`_blocked_topk`.
+    every worker derives identically inside :func:`lsh_codes`.
 
     Exposed so the correctness oracle can inline the SAME constants into
     SQL: the planes are data-independent, so a DuckDB mirror computing
@@ -705,69 +739,25 @@ def lsh_planes(num_planes: int, num_tables: int, dim: int):
     return rng.standard_normal((num_tables, num_planes, dim))
 
 
-def _with_buckets(
-    df: DataFrame,
-    id_name: str,
-    vec: str,
-    num_planes: int,
-    num_tables: int,
-    max_planes: int | None = None,
-) -> DataFrame:
-    """Random-hyperplane LSH bucket ids: for each of ``num_tables``
-    independent plane sets, bit p of the bucket = sign(v · plane_p).
+def lsh_codes(X, num_planes: int, num_tables: int, max_planes: int | None):
+    """Random-hyperplane LSH bucket codes of the rows of ``X``, shape
+    (n, num_tables): bit p of table t is sign(x · plane[t, p]) > 0.
+    The one place bucket bits are computed — the LSH mask of
+    :func:`_blocked_topk` and the buckets of :func:`cosine_pairs_lsh`.
 
-    One numpy matmul per Arrow batch against planes drawn from a
-    fixed-seed generator — deterministic across runs, batches, and
-    cluster sizes (every worker derives the identical planes), with a
-    plan-sized footprint instead of num_tables·num_planes inlined
-    dot-product expression trees (whose codegen alone costs seconds).
-    Output: one (id, v, table, bucket) row per table.
-
-    ``max_planes``: when set (the adaptive-J path), planes are the
-    FIRST ``num_planes`` rows of the ``max_planes``-sized fixed-seed
-    tensor, so every possible J shares one tensor and the oracle can
-    inline the max set once and gate terms on its SQL-computed J."""
+    One matmul against planes from the fixed-seed :func:`lsh_planes`,
+    so every worker, batch and cluster size gets the same codes.
+    ``max_planes``: when set (the adaptive-J path), the planes are the
+    FIRST ``num_planes`` rows of the ``max_planes``-sized tensor, so
+    every possible J shares one tensor and the oracle can inline the
+    max set once and gate terms on its SQL-computed J."""
     import numpy as np
-    import pandas as pd
 
-    # spread a low-partition scan to full parallelism before the kernel
-    # (a small parquet arrives in 1-3 partitions and would serialize
-    # the matmuls); inputs that already have enough partitions are
-    # left alone — no forced shuffle on big data
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
-
-    def gen(batches):
-        planes = None
-        weights = 1 << np.arange(num_planes, dtype="int64")
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array(list(pdf[vec]))
-            if planes is None:
-                planes = lsh_planes(
-                    max_planes or num_planes, num_tables, V.shape[1]
-                )[:, :num_planes, :]
-            out = []
-            for t in range(num_tables):
-                bits = (V @ planes[t].T) > 0
-                buckets = (bits @ weights).astype("int64")
-                out.append(
-                    pd.DataFrame(
-                        {
-                            id_name: pdf[id_name].to_numpy(),
-                            vec: pdf[vec].to_numpy(),
-                            "table": np.full(len(pdf), t, dtype="int64"),
-                            "bucket": buckets,
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
-
-    return df.mapInPandas(
-        gen, f"{id_name} long, {vec} array<double>, table long, bucket long"
-    )
+    dim = X.shape[1]
+    planes = lsh_planes(max_planes or num_planes, num_tables, dim)[:, :num_planes, :]
+    bits = (X @ planes.reshape(-1, dim).T) > 0
+    weights = 1 << np.arange(num_planes, dtype="int64")
+    return bits.reshape(len(X), num_tables, num_planes) @ weights
 
 
 def ann_lsh_topk(
@@ -972,20 +962,21 @@ def ann_pq_topk(
     )
     codes = _pq_distance_rows(e, "vec_id", books, top_only=True)
     qtable = _pq_distance_rows(q, "query_id", books, top_only=False)
+    return _adc_topk(codes, qtable, ["j", "code"], k)
+
+
+def _adc_topk(codes: DataFrame, qtable: DataFrame, keys: list[str], k: int) -> DataFrame:
+    """The ADC scan shared by the PQ paths: every (vec_id, j, code) row
+    looks up its query distances in the broadcast table on ``keys``,
+    the Σ_j per (query, candidate) is a map-side-combinable aggregate,
+    rounded, and the top-k ranks ascending by that distance."""
     adc = (
-        codes.join(F.broadcast(qtable), ["j", "code"])
+        codes.join(F.broadcast(qtable), keys)
         .filter(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", "vec_id")
         .agg(F.round(F.sum("d"), 6).alias("adc_dist"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "adc_dist", "rank")
-    )
+    return _top_k_per_query(adc, k, "adc_dist", ascending=True)
 
 
 def ann_ivfpq_topk(
@@ -1035,20 +1026,7 @@ def ann_ivfpq_topk(
     )
     codes = _pq_distance_rows(e, "vec_id", books, top_only=True)
     qtable = _pq_distance_rows(q, "query_id", books, top_only=False)
-    adc = (
-        cand.join(codes, "vec_id")
-        .join(F.broadcast(qtable), ["query_id", "j", "code"])
-        .groupBy("query_id", "vec_id")
-        .agg(F.round(F.sum("d"), 6).alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "adc_dist", "rank")
-    )
+    return _adc_topk(cand.join(codes, "vec_id"), qtable, ["query_id", "j", "code"], k)
 
 
 def quantize_embeddings_int8(
@@ -1180,20 +1158,7 @@ def ann_ivfadc_topk(
         top_only=False,
         extra_long_cols=("cell",),
     )
-    adc = (
-        codes.join(F.broadcast(qtable), ["cell", "j", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.round(F.sum("d"), 6).alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "adc_dist", "rank")
-    )
+    return _adc_topk(codes, qtable, ["cell", "j", "code"], k)
 
 
 def build_pq_index(
@@ -1246,20 +1211,7 @@ def ann_pq_topk_from_index(
         F.col(id_col).alias("query_id"), to_double_array(vec_col).alias("v")
     )
     qtable = _pq_distance_rows(q, "query_id", books, top_only=False)
-    adc = (
-        codes.join(F.broadcast(qtable), ["j", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.round(F.sum("d"), 6).alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "adc_dist", "rank")
-    )
+    return _adc_topk(codes, qtable, ["j", "code"], k)
 
 
 def mmr_rerank(
@@ -1453,30 +1405,12 @@ def ann_ivf_topk_from_index(
 
     from asset_prices_parquet_saver_spark.sources import manifest
 
-    Cn = np.asarray(centroids, dtype="float64")
     corpus = _without_tombstones(
         spark, table, manifest.read_versioned(spark, table)
     )
-    probes = _ivf_cells(
-        queries.select(F.col(id_col).alias("vec_id"), to_double_array(vec_col).alias("v")),
-        Cn,
-        nprobe,
-    ).select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), "cell")
-    cand = (
-        corpus.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "qv", "vec_id", "v")
-    )
-    scored = _rowwise_cosine(cand, "qv", "v").select(
-        "query_id", "vec_id", F.round("raw_cosine", 6).alias("cosine")
-    ).distinct()
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
+    return _ivf_probe_rerank(
+        corpus, queries, np.asarray(centroids, dtype="float64"), k, nprobe,
+        id_col, vec_col,
     )
 
 
@@ -1531,20 +1465,24 @@ def ann_hamming_topk(
         F.col("lo").alias("q_lo"),
         F.col("hi").alias("q_hi"),
     )
+    ham = (
+        F.bit_count(F.col("q_lo").bitwiseXOR(F.col("lo")))
+        + F.bit_count(F.col("q_hi").bitwiseXOR(F.col("hi")))
+    ).cast("long")
+    return _hamming_topk(sigs, q, ham, k, id_col)
+
+
+def _hamming_topk(
+    sigs: DataFrame, q: DataFrame, ham, k: int, id_col: str
+) -> DataFrame:
+    """The Hamming scan shared by both signature widths: the tiny query
+    signature set broadcasts against the corpus signatures, ``ham``
+    scores each pair, and the top-k ranks ascending (rank as long)."""
     pairs = sigs.join(F.broadcast(q), sigs["id"] != q["query_id"]).select(
-        "query_id",
-        F.col("id").alias(id_col),
-        (
-            F.bit_count(F.col("q_lo").bitwiseXOR(F.col("lo")))
-            + F.bit_count(F.col("q_hi").bitwiseXOR(F.col("hi")))
-        ).cast("long").alias("hamming"),
+        "query_id", F.col("id").alias(id_col), ham.alias("hamming")
     )
-    w = Window.partitionBy("query_id").orderBy("hamming", id_col)
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "hamming", "rank")
-    )
+    top = _top_k_per_query(pairs, k, "hamming", ascending=True, id_name=id_col)
+    return top.withColumn("rank", F.col("rank").cast("long"))
 
 
 def sign_signature_words(
@@ -1609,15 +1547,7 @@ def ann_hamming_topk_words(
         F.lit(0).cast("long"),
         lambda acc, x: acc + x.cast("long"),
     )
-    pairs = sigs.join(F.broadcast(q), sigs["id"] != q["query_id"]).select(
-        "query_id", F.col("id").alias(id_col), ham.alias("hamming")
-    )
-    w = Window.partitionBy("query_id").orderBy("hamming", id_col)
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "hamming", "rank")
-    )
+    return _hamming_topk(sigs, q, ham, k, id_col)
 
 
 def pca_project(

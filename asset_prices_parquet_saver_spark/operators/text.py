@@ -1070,7 +1070,8 @@ def winnowing_pairs(
     (id_a, id_b)."""
     # pinned: the fingerprint relation feeds BOTH self-join sides —
     # unpinned, the winnow kernel + distinct ran once per side
-    # (plan-verified 2x; the cosine_pairs_lsh mechanism), and AQE
+    # (plan-verified 2x: a broadcast build side is a different subtree
+    # shape from the probe side, so ReuseExchange never fires), and AQE
     # broadcasting one side guarantees the duplication
     fp = pin(winnowing_fingerprints(df, id_col, text_col, k, window))
     a = fp.select(F.col("id").alias("id_a"), "fingerprint")

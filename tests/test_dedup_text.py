@@ -161,6 +161,21 @@ def test_connected_components_matches_union_find(spark, sf_dir):
     assert edges, "fixture should contain near-dup pairs"
 
 
+def test_connected_components_exact_past_twenty_rounds(spark):
+    """A 30-node path has diameter 29: the label loop runs to its
+    fixpoint however many rounds that takes, so every node, the far end
+    included, is labeled with the component minimum 0."""
+    from asset_prices_parquet_saver_spark.operators.dedup import (
+        connected_components,
+    )
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(29)], "id_a long, id_b long"
+    )
+    got = {r.id: r.component for r in connected_components(pairs).collect()}
+    assert got == {i: 0 for i in range(30)}
+
+
 def test_fuzzy_dedup_end_to_end(spark, sf_dir):
     """fuzzy_dedup keeps exactly one (minimum-id) survivor per
     component and leaves unpaired docs untouched."""

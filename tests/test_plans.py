@@ -6,6 +6,8 @@ pruning, broadcast joins for dims, and partial (map-side) aggregation.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -153,11 +155,10 @@ def test_ann_lsh_topk_broadcasts_probes_into_one_kernel(spark, sf_dir):
 
 
 def test_semantic_dedup_edges_run_cosine_kernel_once(spark, sf_dir, monkeypatch):
-    """connected_components unions the LSH pair relation with its mirror
-    into an edge list. Both branches read the same pair subtree, so the
-    executed edge plan scores pairs in ONE MapInPandas and the mirror
-    branch reuses its shuffle output (ReusedExchange) rather than
-    re-running the cosine kernel."""
+    """connected_components mirrors the LSH pair relation into an edge
+    list. The mirror reads the pair relation once (one explode of both
+    directions), so the executed edge plan runs each Python kernel of
+    the pair path — bucket codes, bucket scoring — exactly once."""
     frame_cls = type(spark.range(1))
     checkpointed = []
     real = frame_cls.localCheckpoint
@@ -172,8 +173,33 @@ def test_semantic_dedup_edges_run_cosine_kernel_once(spark, sf_dir, monkeypatch)
     plan = _plan(edges)
     assert "isFinalPlan=true" in plan
     final = plan.split("== Initial Plan ==")[0]
-    assert final.count("MapInPandas") == 1
-    assert "ReusedExchange" in final
+    kernels = re.findall(r"MapInPandas (\w+)\(", final)
+    assert kernels and len(kernels) == len(set(kernels)), kernels
+
+
+def test_embedding_near_pairs_lsh_scores_inside_buckets(spark, sf_dir):
+    """LSH near-pairs group each (table, bucket) once and score it in
+    one kernel: no join of any kind (none keyed on the bucket), no
+    aggregate above the scoring MapInPandas (no post-score distinct),
+    and building the query runs only auto_num_planes' corpus count."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("plan-lsh-count", "count")
+        read_table(spark, sf_dir, "embeddings").count()
+        sc.setJobGroup("plan-lsh-build", "build")
+        df = QUERIES["embedding_near_pairs_lsh"](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(tracker.getJobIdsForGroup("plan-lsh-build")) == len(
+        tracker.getJobIdsForGroup("plan-lsh-count")
+    )
+    plan = _plan(df)
+    assert "Join" not in plan
+    kernels = re.findall(r"MapInPandas (\w+)\(", plan)
+    assert len(kernels) == 2, kernels
+    above_scoring = plan.split(f"MapInPandas {kernels[0]}(")[0]
+    assert "Aggregate" not in above_scoring
 
 
 def test_cosine_topk_never_shuffles_vectors_wide(spark, sf_dir):

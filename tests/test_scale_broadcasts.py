@@ -151,21 +151,17 @@ _BROADCAST_ALLOWLIST: dict[tuple[str, str], int] = {
      'd.join(F.broadcast(offsets), ["__pid", *group_cols])'): 1,
     # query-vector sets / pinned codebooks / probe lists / top-k cand
     ("asset_prices_parquet_saver_spark/operators/similarity.py",
-     '.join(F.broadcast(qtable), ["query_id", "j", "code"])'): 1,
-    ("asset_prices_parquet_saver_spark/operators/similarity.py",
      'c.join(F.broadcast(selected.select("id")), "id", "left_anti")'): 1,
     ("asset_prices_parquet_saver_spark/operators/similarity.py",
      'cells.join(F.broadcast(probes), "cell")'): 1,
     ("asset_prices_parquet_saver_spark/operators/similarity.py",
-     'codes.join(F.broadcast(qtable), ["cell", "j", "code"])'): 1,
+     'codes.join(F.broadcast(qtable), keys)'): 1,
     ("asset_prices_parquet_saver_spark/operators/similarity.py",
-     'codes.join(F.broadcast(qtable), ["j", "code"])'): 2,
-    ("asset_prices_parquet_saver_spark/operators/similarity.py",
-     'corpus.join(F.broadcast(probes), "cell")'): 2,
+     'corpus.join(F.broadcast(probes), "cell")'): 1,
     ("asset_prices_parquet_saver_spark/operators/similarity.py",
      'cross = blocks.crossJoin(F.broadcast(q_all))'): 1,
     ("asset_prices_parquet_saver_spark/operators/similarity.py",
-     'pairs = sigs.join(F.broadcast(q), sigs["id"] != q["query_id"]).select('): 2,
+     'pairs = sigs.join(F.broadcast(q), sigs["id"] != q["query_id"]).select('): 1,
     ("asset_prices_parquet_saver_spark/operators/similarity.py",
      'scaled = comp.join(F.broadcast(stats), "i").select('): 1,
     ("asset_prices_parquet_saver_spark/operators/similarity.py",

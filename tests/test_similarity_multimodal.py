@@ -58,20 +58,101 @@ def test_ann_lsh_recall_against_bruteforce(spark, sf_dir):
 
 
 def test_cosine_pairs_lsh_subset_of_exact(spark, sf_dir):
+    import numpy as np
+
+    from asset_prices_parquet_saver_spark.functions.vectors import to_double_array
+
     e = read_table(spark, sf_dir, "embeddings")
     exact = {
         (r.id_a, r.id_b): r.cosine for r in sim.cosine_pairs(e, 0.3).collect()
     }
-    lsh = {
-        (r.id_a, r.id_b): r.cosine
-        for r in sim.cosine_pairs_lsh(e, 0.3, num_planes=4, num_tables=8).collect()
-    }
+    rows = sim.cosine_pairs_lsh(e, 0.3, num_planes=4, num_tables=8).collect()
+    lsh = {(r.id_a, r.id_b): r.cosine for r in rows}
     # precision is exact by construction (candidates verified by true
     # cosine); recall is the tunable dial
     assert set(lsh) <= set(exact)
     assert lsh, "expected some near pairs from 8 tables"
     for k, v in lsh.items():
         assert v == exact[k]
+    # a pair colliding in several tables is emitted once
+    assert len(rows) == len(lsh)
+    # recall is exactly the exact pairs whose codes collide somewhere
+    vecs = e.select("vec_id", to_double_array("embedding").alias("v")).collect()
+    codes = dict(
+        zip(
+            (r.vec_id for r in vecs),
+            _brute_codes(np.array([r.v for r in vecs]), 4, 8, None),
+        )
+    )
+    assert set(lsh) == {
+        (a, b) for a, b in exact if (codes[a] == codes[b]).any()
+    }
+
+
+def _brute_codes(X, num_planes, num_tables, max_planes):
+    """Bucket codes one table at a time, straight from lsh_planes."""
+    import numpy as np
+
+    planes = sim.lsh_planes(max_planes or num_planes, num_tables, X.shape[1])
+    weights = 2 ** np.arange(num_planes)
+    return np.stack(
+        [((X @ planes[t, :num_planes].T) > 0) @ weights for t in range(num_tables)],
+        axis=1,
+    )
+
+
+def _half_up(x: float, places: int = 6) -> float:
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal(10) ** -places, ROUND_HALF_UP))
+
+
+@pytest.mark.parametrize("num_planes", [3, None])
+def test_cosine_pairs_lsh_matches_numpy_brute_force(spark, num_planes):
+    """The bucketed pair kernel against a numpy brute force over the same
+    fixed-seed planes: the output is every (a<b) whose half-up-rounded
+    cosine reaches the threshold and whose codes collide in at least one
+    table — once per pair, whatever the number of tables it collides in."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    base = rng.standard_normal((40, 8))
+    near = base[:12] + 0.05 * rng.standard_normal((12, 8))  # near-duplicates
+    at_threshold = np.array([[1.0, 0, 0, 0, 0, 0, 0, 0], [0.6, 0.8, 0, 0, 0, 0, 0, 0]])
+    X = np.vstack([base, near, at_threshold, np.zeros((1, 8))])
+    ids = np.arange(len(X)) * 3 + 1
+    zero_id = int(ids[-1])
+    threshold, num_tables = 0.6, 5
+    if num_planes is None:
+        planes_used, max_planes = sim.auto_num_planes(len(X)), sim.AUTO_PLANES_HI
+    else:
+        planes_used, max_planes = num_planes, None
+    codes = _brute_codes(X, planes_used, num_tables, max_planes)
+    norms = np.linalg.norm(X, axis=1)
+    want = {}
+    for i in range(len(X)):
+        for j in range(i + 1, len(X)):
+            if norms[i] == 0 or norms[j] == 0 or not (codes[i] == codes[j]).any():
+                continue
+            c = _half_up(float(X[i] @ X[j] / (norms[i] * norms[j])))
+            if c >= threshold:
+                want[(int(ids[i]), int(ids[j]))] = c
+    # the fixture exercises what it claims to
+    at = (int(ids[-3]), int(ids[-2]))
+    assert want.get(at) == threshold
+    assert any((codes[i] == codes[40 + i]).sum() > 1 for i in range(12))
+    assert (codes[-1] == codes[:-1]).any()  # the zero vector shares buckets
+
+    emb = spark.createDataFrame(
+        [Row(vec_id=int(i), embedding=[float(x) for x in v]) for i, v in zip(ids, X)]
+    )
+    rows = sim.cosine_pairs_lsh(
+        emb, threshold, num_planes=num_planes, num_tables=num_tables
+    ).collect()
+    got = {(r.id_a, r.id_b): r.cosine for r in rows}
+    assert len(rows) == len(got)
+    assert got == want
+    assert all(zero_id not in p for p in got)
 
 
 def test_ann_ivf_recall_against_bruteforce(spark, sf_dir):
@@ -594,6 +675,8 @@ def test_adaptive_planes_bound_bucket_occupancy_across_decades(spark):
     (not scale with n), and the plane count must actually grow."""
     import os
 
+    import numpy as np
+
     from asset_prices_parquet_saver_spark.functions.vectors import to_double_array
     from asset_prices_parquet_saver_spark.operators import similarity as sim
 
@@ -605,20 +688,12 @@ def test_adaptive_planes_bound_bucket_occupancy_across_decades(spark):
         e = read_table(spark, sfd, "embeddings")
         n = e.count()
         J = sim.auto_num_planes(n)
-        b = sim._with_buckets(
-            e.select(F.col("vec_id"), to_double_array("embedding").alias("v")),
-            "vec_id",
-            "v",
-            J,
-            num_tables=4,
-            max_planes=sim.AUTO_PLANES_HI,
+        X = np.array(
+            [r.v for r in e.select(to_double_array("embedding").alias("v")).collect()]
         )
-        occ = (
-            b.groupBy("table", "bucket")
-            .count()
-            .agg(F.avg("count").alias("occ"))
-            .collect()[0]["occ"]
-        )
+        codes = sim.lsh_codes(X, J, 4, sim.AUTO_PLANES_HI)
+        # mean rows per non-empty (table, bucket)
+        occ = codes.size / sum(len(np.unique(codes[:, t])) for t in range(4))
         stats[sfd] = (n, J, occ)
     (n1, j1, o1), (n2, j2, o2) = stats.values()
     assert n2 >= 20 * n1, f"scale-up fixture assumption: {stats}"
