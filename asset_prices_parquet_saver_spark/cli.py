@@ -4,8 +4,8 @@
 |---|---|---|
 | ``parquet_details.py --symbol S`` | ``details`` | head/tail/schema; top-N files by mtime when no symbol given (parquet_details.py:15-38) |
 | ``compare_parquet.py --symbol S`` | ``compare`` | schema diff + the row-level data diff the reference left as a TODO (compare_parquet.py:101-102) |
-| ``download_historical_price.py`` | ``ingest`` | symbol universe → fetch → normalize → (source, day)-partitioned prices write that ``live`` upserts into (§3.1); needs a network SDK, else exits with the FetcherUnavailable message |
-| ``update_live_price.py`` | ``live`` | Structured Streaming upsert loop (§3.2); same gating |
+| ``download_historical_price.py`` | ``ingest`` | sorted symbol universe → ``daily_bars`` read (one partition per 10-symbol request batch) → normalize → (source, day)-partitioned prices write that ``live`` upserts into (§3.1); needs the provider's SDK, else exits 2 with the FetcherUnavailable message |
+| ``update_live_price.py`` | ``live`` | Structured Streaming upsert loop (§3.2) over ticks from a parquet drop directory (``--ticks-dir``); needs no SDK |
 
 Run as ``python -m asset_prices_parquet_saver_spark <subcommand>``.
 """
@@ -57,7 +57,7 @@ def _cmd_compare(args) -> int:
 def _cmd_ingest(args) -> int:
     from asset_prices_parquet_saver_spark.operators.normalize import normalize_bars
     from asset_prices_parquet_saver_spark.operators.symbols import union_universe
-    from asset_prices_parquet_saver_spark.sources import fetchers
+    from asset_prices_parquet_saver_spark.sources import bars_datasource
     from asset_prices_parquet_saver_spark.sources.prices_daily import write_prices_daily
 
     spark = get_spark(app_name="ingest")
@@ -80,12 +80,17 @@ def _cmd_ingest(args) -> int:
         caps = spark.read.parquet(args.market_caps)
         allowed = universe_by_categories(caps, args.categories)
         universe = universe.join(F.broadcast(allowed), "symbol", "left_semi")
+    # the reference fetches sorted(set(symbols))
+    # (download_historical_price.py:253); each daily_bars partition is
+    # one request batch of that list
+    symbols = sorted(r.symbol for r in universe.collect())
+    if not symbols:
+        # an empty universe must not overwrite the output with nothing
+        print("error: the symbol universe is empty", file=sys.stderr)
+        return 2
     try:
-        if args.source == "alpaca":
-            raw = fetchers.fetch_alpaca_bars(universe)
-        else:
-            raw = fetchers.fetch_yfinance_bars(universe)
-    except fetchers.FetcherUnavailable as exc:
+        raw = bars_datasource.read_daily_bars(spark, symbols, args.source)
+    except bars_datasource.FetcherUnavailable as exc:
         print(f"error: {exc}", file=sys.stderr)
         return 2
     write_prices_daily(normalize_bars(raw, args.source), args.output)

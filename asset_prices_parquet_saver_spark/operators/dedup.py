@@ -386,7 +386,6 @@ def jaccard_pairs(
     threshold: float = 0.5,
     strategy: str = "auto",
     dense_vocab_limit: int = 4096,
-    suffix_filter: bool = False,
     _pre: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """X2 baseline: ALL pairs with shingle-set Jaccard ≥ threshold —
@@ -410,19 +409,14 @@ def jaccard_pairs(
     fits ``dense_vocab_limit``; prefix filtering assumes rare shingles
     exist, which a tiny vocabulary structurally rules out.
 
-    The prefix path layers the full PPJoin+ filter stack (see
+    The prefix path layers the PPJoin filter stack (see
     :func:`_prefix_candidates`): asymmetric prefixes, length-bucketed
-    join keys, a row-level positional pre-filter inside the join, the
-    group-stage positional + k-prefix-count filters, and the depth-1
-    suffix filter over carried order-statistic sketches
-    (``suffix_filter`` switches the last one — OFF by default since
-    round 7: with the sketches no longer riding the raw prefix rows,
-    verification of the surviving candidates is cheaper than the two
-    per-candidate sketch joins + interpreted array filter the suffix
-    bound costs, measured at both sf0.1 (2.6 s vs 3.0 s) and sf1
-    (29 s vs 40+ s) with identical output; it remains available and
-    exactness-tested for corpora where candidate:result ratios make
-    pre-verification pruning win again).
+    join keys, a row-level positional pre-filter inside the join, and
+    the group-stage positional + k-prefix-count filters. It has no
+    PPJoin+ suffix filter: verifying the surviving candidates costs
+    less than the two per-candidate sketch joins the suffix bound
+    needs (2.6 s vs 3.0 s at sf0.1, 29 s vs 40+ s at sf1, identical
+    output).
     """
     from asset_prices_parquet_saver_spark.operators.globalorder import (
         with_global_row_number,
@@ -439,7 +433,7 @@ def jaccard_pairs(
         strategy = "dense" if est <= dense_vocab_limit * 0.9 else "prefix"
     if strategy == "dense":
         # the rank-encoding pass below exists only for the PPJoin+
-        # prefix/suffix filters — the dense sweep is encoding-agnostic
+        # prefix filters — the dense sweep is encoding-agnostic
         # (Jaccard is set-cardinality arithmetic), so it reads the raw
         # per-doc hash arrays directly and skips two shuffles + a
         # distributed row_number over the vocabulary.
@@ -452,7 +446,7 @@ def jaccard_pairs(
     # a bijection, so Jaccard values are identical to the raw-hash
     # encoding, but arrays become ascending int64 sequences whose
     # element comparisons respect the global order directly (what the
-    # PPJoin+ suffix filter needs). Ranks come from the distributed
+    # prefix slices need). Ranks come from the distributed
     # range-partitioned row_number — no single-partition window over
     # the vocabulary. Materialize once (localCheckpoint, not cache():
     # the in-memory columnar cache pays a heavy batch-conversion cost
@@ -470,7 +464,7 @@ def jaccard_pairs(
         .select("id", "arr", F.size("arr").alias("n_sh"))
         .localCheckpoint()
     )
-    cand = _prefix_candidates(arrs, threshold, suffix_filter).localCheckpoint()
+    cand = _prefix_candidates(arrs, threshold).localCheckpoint()
     # Candidates materialize before verification composes: measured
     # separately the stages sum to ~1/3 of what the single fused plan
     # costs (the optimizer fuses the candidate join+agg with the
@@ -479,13 +473,7 @@ def jaccard_pairs(
     return _verified_jaccard(cand, arrs, threshold)
 
 
-#: suffix-filter sketch resolution: S+1 order statistics per document
-_SUFFIX_SKETCH_CELLS = 16
-
-
-def _prefix_candidates(
-    arrs: DataFrame, threshold: float, suffix_filter: bool = True
-) -> DataFrame:
+def _prefix_candidates(arrs: DataFrame, threshold: float) -> DataFrame:
     """Candidate (id_a, id_b) pairs for the prefix-filtered Jaccard
     join. ``arrs`` must be rank-encoded (ascending int64 arrays in the
     global frequency order — see :func:`jaccard_pairs`). Every filter
@@ -494,7 +482,6 @@ def _prefix_candidates(
     # round before ceil: fp noise in t·n must not overtighten the
     # prefix (→ missed pairs) or the k bound
     tceil = lambda c: F.ceil(F.round(F.lit(threshold) * c, 9))  # noqa: E731
-    S = _SUFFIX_SKETCH_CELLS
     # PPJoin's asymmetric prefixes (Xiao et al., "Efficient Similarity
     # Joins for Near Duplicate Detection"): order documents by
     # (n_sh, id); a pair is detected as (s = earlier/smaller, l =
@@ -523,26 +510,6 @@ def _prefix_candidates(
     b_low = F.floor(
         F.log2(F.greatest(F.ceil(F.round(F.lit(threshold) * F.col("n_sh"), 9)), F.lit(1)))
     )
-    # Equi-spaced order-statistic sketch (S+1 values at positions
-    # min(j·⌈n/S⌉, n-1)): a constant-size summary that travels with
-    # each prefix row and lets the group stage bound suffix overlap
-    # without touching the arrays (the PPJoin+ suffix filter below).
-    step = F.ceil(F.col("n_sh") / S).cast("long")
-    sketch = F.transform(
-        F.sequence(F.lit(0), F.lit(S)),
-        lambda j: F.element_at(
-            "arr",
-            F.least(j.cast("long") * step + 1, F.col("n_sh").cast("long")).cast("int"),
-        ),
-    )
-    # The sketches do NOT ride the prefix rows: the raw prefix join is
-    # the widest relation in the pipeline (O(Σ df²) rows), and carrying
-    # two (S+1)-element arrays per row multiplied its shuffle bytes ~6×
-    # — at the sf1 decade that pushed the group shuffle into spill and
-    # the measured exponent to 1.6 on a structurally LINEAR candidate
-    # count. They join back onto the (much smaller) grouped candidate
-    # set below, keyed on the doc ids.
-    sk_rel = arrs.select("id", sketch.alias("sk"))
     probe = arrs.select(
         "id",
         "n_sh",
@@ -607,37 +574,6 @@ def _prefix_candidates(
     row_bound = F.lit(1) + F.least(
         F.col("s.n_sh") - 1 - F.col("s.pos"), F.col("l.n_sh") - 1 - F.col("l.pos")
     )
-    # PPJoin+ depth-1 suffix filter, from the carried sketches only.
-    # Suffixes start after the first shared element e: Sa = a[min_ps+1:],
-    # Sb = b[min_pl+1:], and |a∩b| ≤ 1 + |Sa∩Sb|. Pick a pivot v (≈ the
-    # median of s's suffix, snapped to a sketch point) and partition:
-    # |Sa∩Sb| ≤ min(|Sa<v|, |Sb<v|) + min(|Sa≥v|, |Sb≥v|). Each term is
-    # bounded from the sketches: if m of a doc's S+1 order statistics
-    # are < v, then (m-1)·step+1 ≤ |arr<v| ≤ m·step (sound: positions
-    # are exact, values strictly increasing; both ends capped at n).
-    def _cnt_bounds(sk_col, nn, v):
-        stp = F.ceil(nn / S).cast("long")
-        m = F.size(F.filter(sk_col, lambda x: x < v)).cast("long")
-        ub = F.least(m * stp, nn)
-        lb = F.when(m > 0, F.least((m - 1) * stp + 1, nn)).otherwise(F.lit(0))
-        return ub, lb
-
-    sza = F.col("ns") - 1 - F.col("min_ps")
-    szb = F.col("nl") - 1 - F.col("min_pl")
-    s_step = F.ceil(F.col("ns") / S).cast("long")
-    mid = (F.col("min_ps") + F.col("ns")) / F.lit(2.0)
-    k_idx = F.least(
-        F.greatest(F.round(mid / s_step, 0).cast("int"), F.lit(0)), F.lit(S)
-    )
-    pivot = F.element_at("sk_s", k_idx + 1)
-    ub_a, lb_a = _cnt_bounds(F.col("sk_s"), F.col("ns"), pivot)
-    ub_b, lb_b = _cnt_bounds(F.col("sk_l"), F.col("nl"), pivot)
-    la_ub = F.least(ub_a, sza)
-    ga_ub = sza - F.greatest(lb_a - (F.col("min_ps") + 1), F.lit(0))
-    lb_ub = F.least(ub_b, szb)
-    gb_ub = szb - F.greatest(lb_b - (F.col("min_pl") + 1), F.lit(0))
-    suffix_ub = F.lit(1) + F.least(la_ub, lb_ub) + F.least(ga_ub, gb_ub)
-
     grouped = (
         probe.alias("l")
         .join(index.alias("s"), ["h", "bucket"])
@@ -660,19 +596,6 @@ def _prefix_candidates(
         # the array-free filters run FIRST, on the narrow grouped rows
         .filter((inter_ub >= alpha) & (F.col("pm") >= k_min))
     )
-    if suffix_filter:
-        # sketches join back onto the surviving candidates only
-        grouped = (
-            grouped.join(
-                sk_rel.select(F.col("id").alias("id_s"), F.col("sk").alias("sk_s")),
-                "id_s",
-            )
-            .join(
-                sk_rel.select(F.col("id").alias("id_l"), F.col("sk").alias("sk_l")),
-                "id_l",
-            )
-            .filter(suffix_ub >= alpha)
-        )
     return grouped.select(
         F.least("id_s", "id_l").alias("id_a"),
         F.greatest("id_s", "id_l").alias("id_b"),

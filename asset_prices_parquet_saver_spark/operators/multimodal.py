@@ -4,7 +4,7 @@ Image/audio/video payloads are opaque ``binary`` columns with typed
 metadata structs (schema.MEDIA_SCHEMA). The Spark-side plumbing —
 schemas, partitioning, Arrow-batched Pandas UDF signatures, batch
 shapes — is real and tested; the codec layer is IMPORT-GATED (the
-``sources/fetchers._require`` pattern) because no image/audio
+``sources/bars_datasource._require`` pattern) because no image/audio
 libraries ship in this container:
 
 - :func:`decode_image` uses Pillow when installed and raises
@@ -102,7 +102,7 @@ def _require_pillow():
 
 def decode_image(payload: bytes) -> tuple[int, int, str]:
     """Real image decode, import-gated on Pillow (the
-    ``sources/fetchers._require`` pattern): returns (width, height,
+    ``sources/bars_datasource._require`` pattern): returns (width, height,
     mode). Raises :class:`CodecUnavailable` with a clear remedy when
     Pillow is absent — the deterministic :func:`fake_decode_meta`
     remains the test/oracle path either way."""

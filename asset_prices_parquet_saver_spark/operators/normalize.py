@@ -47,7 +47,7 @@ def normalize_bars(df: DataFrame, source: str) -> DataFrame:
     # P9/P10: uppercase symbols, then normalize '-' to the canonical
     # '.' class-share form (BRK-B → BRK.B) for EVERY source — the
     # per-source translations the reference applies are REQUEST-side
-    # (sources/fetchers.py spells '.' as '-' for yfinance, '-' as '.'
+    # (sources/bars_datasource.py spells '.' as '-' for yfinance, '-' as '.'
     # for Alpaca); the stored form is uniformly dotted.
     df = df.withColumn("symbol", F.translate(F.upper(F.col("symbol")), "-", "."))
 

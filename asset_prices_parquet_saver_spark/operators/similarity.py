@@ -627,12 +627,13 @@ def _ivf_probe_rerank(
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "qv", "vec_id", "v")
     )
-    # dedupe on narrow scored rows, not vector-carrying candidates:
-    # duplicate (query, cand) collisions score bit-identically (einsum
-    # is batch-independent) and collapse here before the rank window.
+    # each corpus row sits in ONE cell and a query's probe cells are
+    # distinct, so each (query, candidate) pair arises once — no dedupe
+    # (the index path relies on append_ivf_index's one-row-per-vec_id
+    # contract for the same guarantee).
     scored = _rowwise_cosine(cand, "qv", "v").select(
         "query_id", "vec_id", F.round("raw_cosine", 6).alias("cosine")
-    ).distinct()
+    )
     return _top_k_per_query(scored, k, "cosine", ascending=False)
 
 
@@ -1373,7 +1374,13 @@ def append_ivf_index(
     quantizer and append one manifest segment (O(batch); epoch-
     idempotent under foreachBatch replay — the same protocol as
     append_pq_index). New segments are small, so their cell clustering
-    matters less; compact periodically to restore pruning."""
+    matters less; compact periodically to restore pruning.
+
+    Contract: the index holds ONE row per ``vec_id``. Appending a
+    vec_id the index already holds (a batch appended twice outside an
+    epoch, or an id re-used) makes :func:`ann_ivf_topk_from_index`
+    return that candidate twice; its rerank does not dedupe. Replays
+    must pass ``epoch``; an update is a delete + purge, then append."""
     import numpy as np
 
     from asset_prices_parquet_saver_spark.sources import manifest

@@ -1,5 +1,6 @@
 """Sources & sinks: parquet table IO, the partitioned prices dataset,
-the symbol-status table, and (stubbed) network fetchers."""
+the symbol-status table, and the Python DataSources (``daily_bars``,
+whose network providers are import-gated on their SDKs)."""
 
 from asset_prices_parquet_saver_spark.sources.tables import load_tables, read_table
 from asset_prices_parquet_saver_spark.sources.prices_daily import (

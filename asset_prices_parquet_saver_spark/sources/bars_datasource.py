@@ -1,12 +1,12 @@
-"""Daily-bars Python DataSource (S1/S2 as a first-class Spark source).
+"""Daily-bars Python DataSource: the S1/S2 historical fetch.
 
 The reference's bulk download is a driver-side asyncio loop over
-symbol batches (download_historical_price.py:309-336). The Spark-4
-re-expression is the Python DataSource API: symbol batches become
-planned ``InputPartition``s, so the cluster scheduler owns the
-fan-out — 1000 executors each fetch their own slice, stragglers get
+symbol batches (download_historical_price.py:309-336). Here symbol
+batches are planned ``InputPartition``s, so the cluster scheduler owns
+the fan-out — 1000 executors each fetch their own slice, stragglers get
 speculative retries, and the result is a plain DataFrame any
-downstream operator composes with::
+downstream operator composes with. ``cli ingest`` reads through
+:func:`read_daily_bars`::
 
     spark.dataSource.register(DailyBarsDataSource)
     bars = (spark.read.format("daily_bars")
@@ -17,20 +17,24 @@ downstream operator composes with::
 
 Providers:
 
-- ``alpaca`` / ``yfinance`` — import-gated real clients (same request
-  shapes and throttles as sources/fetchers.py; those SDKs are absent
-  in this environment, so the paths raise ``FetcherUnavailable``);
+- ``alpaca`` / ``yfinance`` — import-gated real clients (the request
+  shapes of download_historical_price.py:404-414 and :463-483); without
+  the SDK, :func:`_require` raises ``FetcherUnavailable``. Each SDK
+  response maps to rows through one pure function
+  (:func:`_alpaca_rows`, :func:`_yfinance_rows`), so only the SDK call
+  itself is untested here;
 - ``fake`` — a deterministic offline generator (md5-derived walk per
   symbol) that exercises the REAL DataSource machinery end-to-end:
   schema resolution, partition planning, per-partition readers, task
   retry idempotence (pure function of the partition).
 
-Rate limits live inside each partition read, like the mapInPandas
-fetchers: per-partition sleeps bound each task's request rate, so the
-GLOBAL rate is capped by partitions × per-partition rate — set
-``batch_size`` (symbols per partition) and the provider delays to
-match the account's limit, exactly the knobs the reference exposes
-(batch_size=10, 2 s — download_historical_price.py:322).
+Rate limits live inside each partition read: per-partition sleeps bound
+each task's request rate, so the GLOBAL rate is capped by partitions ×
+per-partition rate. ``delay_seconds`` defaults to the reference's
+throttle per provider (:data:`_DEFAULT_DELAY`: 2 s before each
+10-symbol Alpaca batch, download_historical_price.py:322-335; 0.5 s
+before each yfinance symbol, :352); set it and ``batch_size`` to match
+the account's limit.
 """
 
 from __future__ import annotations
@@ -43,13 +47,89 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-#: DDL mirror of fetchers.RAW_BAR_SCHEMA (the DataSource API wants a
-#: schema string / StructType from schema())
+#: the one raw-bar schema every provider emits (normalize_bars input)
 _BARS_DDL = (
     "symbol string, timestamp timestamp, open double, high double, "
     "low double, close double, adj_close double, volume double, "
     "trade_count double, vwap double"
 )
+_COLUMNS = [c.split()[0] for c in _BARS_DDL.split(", ")]
+
+#: seconds slept before each request: one per Alpaca batch, one per
+#: yfinance symbol (the reference's throttles)
+_DEFAULT_DELAY = {"alpaca": 2.0, "yfinance": 0.5, "fake": 0.0}
+
+
+class FetcherUnavailable(RuntimeError):
+    """Raised when an optional network client library is not installed."""
+
+
+def _require(module_name: str):
+    try:
+        return __import__(module_name)
+    except ImportError as exc:  # pragma: no cover - env without the SDK
+        raise FetcherUnavailable(
+            f"{module_name} is not installed; use Parquet fixtures instead"
+        ) from exc
+
+
+def read_daily_bars(spark, symbols: list[str], provider: str):
+    """Raw bars for ``symbols`` from ``provider`` through ``daily_bars``,
+    one InputPartition per request batch. Registers the source and runs
+    the SDK gate on the driver, so a missing client raises
+    ``FetcherUnavailable`` here instead of failing inside a task."""
+    if provider != "fake":
+        _require(provider)  # each network provider's SDK shares its name
+    spark.dataSource.register(DailyBarsDataSource)
+    return (
+        spark.read.format("daily_bars")
+        .option("symbols", ",".join(symbols))
+        .option("provider", provider)
+        .load()
+    )
+
+
+def _rows(frame):
+    """Raw-bar tuples from a frame carrying (a subset of) the schema's
+    columns by name; absent columns and NaN become NULL."""
+    import pandas as pd
+
+    frame = frame.reindex(columns=_COLUMNS)
+    for r in frame.itertuples(index=False, name=None):
+        yield (
+            r[0],
+            pd.Timestamp(r[1]).to_pydatetime(),
+            *(None if pd.isna(v) else float(v) for v in r[2:]),
+        )
+
+
+def _alpaca_rows(bars):
+    """Alpaca's ``get_stock_bars(...).df`` — indexed by (symbol,
+    timestamp) — as raw-bar rows. The request asks ``adjustment='all'``,
+    so ``close`` is already adjusted and fills both close columns."""
+    out = bars.reset_index()
+    out["adj_close"] = out["close"]
+    return _rows(out)
+
+
+def _yfinance_rows(symbol: str, history):
+    """One symbol's yfinance ``history(auto_adjust=False)`` frame —
+    indexed by Date — as raw-bar rows, mapped by column NAME (the
+    frame's column order varies: Dividends / Stock Splits may sit
+    anywhere). The output keeps the canonical input ``symbol``."""
+    out = history.reset_index().rename(
+        columns={
+            "Date": "timestamp",
+            "Open": "open",
+            "High": "high",
+            "Low": "low",
+            "Close": "close",
+            "Adj Close": "adj_close",
+            "Volume": "volume",
+        }
+    )
+    out["symbol"] = symbol
+    return _rows(out)
 
 
 class SymbolBatch(InputPartition):
@@ -101,11 +181,13 @@ class DailyBarsReader(DataSourceReader):
                 "daily_bars: option 'symbols' (comma-separated) is required"
             )
         self.provider = (options.get("provider") or "alpaca").lower()
-        if self.provider not in ("alpaca", "yfinance", "fake"):
+        if self.provider not in _DEFAULT_DELAY:
             raise ValueError(f"daily_bars: unknown provider {self.provider!r}")
         self.batch_size = int(options.get("batch_size", 10))
         self.n_days = int(options.get("fake_days", 30))
-        self.delay = float(options.get("delay_seconds", 0))
+        self.delay = float(
+            options.get("delay_seconds", _DEFAULT_DELAY[self.provider])
+        )
 
     def partitions(self):
         b = max(self.batch_size, 1)
@@ -124,10 +206,8 @@ class DailyBarsReader(DataSourceReader):
     def _read_network(self, partition):  # pragma: no cover - needs SDK+network
         import time
 
-        from asset_prices_parquet_saver_spark.sources.fetchers import _require
-
+        _require(self.provider)
         if self.provider == "alpaca":
-            _require("alpaca")
             import datetime
             import os
 
@@ -135,13 +215,16 @@ class DailyBarsReader(DataSourceReader):
             from alpaca.data.requests import StockBarsRequest
             from alpaca.data.timeframe import TimeFrame
 
+            # standard alpaca-py env credentials; raising on absence
+            # keeps ingest loud instead of writing an empty dataset
             client = StockHistoricalDataClient(
                 os.environ["APCA_API_KEY_ID"], os.environ["APCA_API_SECRET_KEY"]
             )
-            if self.delay:
-                time.sleep(self.delay)
+            time.sleep(self.delay)
             bars = client.get_stock_bars(
                 StockBarsRequest(
+                    # Alpaca takes the dotted class-share form (BRK.B);
+                    # an untranslated BRK-B 400s the whole batch
                     symbol_or_symbols=[s.replace("-", ".") for s in partition.symbols],
                     timeframe=TimeFrame.Day,
                     start=datetime.datetime(1970, 1, 1),
@@ -149,36 +232,20 @@ class DailyBarsReader(DataSourceReader):
                     feed="sip",
                 )
             ).df
-            if bars.empty:
-                return
-            out = bars.reset_index().rename(columns={"close": "adj_close"})
-            out["close"] = out["adj_close"]
-            for r in out.itertuples(index=False):
-                yield (
-                    r.symbol, r.timestamp, r.open, r.high, r.low, r.close,
-                    r.adj_close, r.volume,
-                    getattr(r, "trade_count", None), getattr(r, "vwap", None),
-                )
+            if not bars.empty:
+                yield from _alpaca_rows(bars)
         else:
-            _require("yfinance")
             import yfinance as yf
 
             for sym in partition.symbols:
-                if self.delay:
-                    time.sleep(self.delay)
+                time.sleep(self.delay)
+                # yfinance spells class shares BRK-B (the reference's
+                # :459 rule); the dotted form returns an empty frame
                 h = yf.Ticker(sym.replace(".", "-")).history(
                     period="max", auto_adjust=False
                 )
-                if h.empty:
-                    continue
-                out = h.reset_index()
-                for r in out.itertuples(index=False):
-                    yield (
-                        sym, getattr(r, "Date"), getattr(r, "Open"),
-                        getattr(r, "High"), getattr(r, "Low"),
-                        getattr(r, "Close"), getattr(r, "_5", None),
-                        getattr(r, "Volume", None), None, None,
-                    )
+                if not h.empty:
+                    yield from _yfinance_rows(sym, h)
 
 
 class DailyBarsDataSource(DataSource):

@@ -55,6 +55,12 @@ def _fake_epoch_ticks(symbols: list[str], epoch: int):
         yield (sym, price, ts)
 
 
+def _latest_trade_rows(latest) -> list:
+    """Alpaca's ``get_stock_latest_trade`` response — a mapping of
+    symbol → trade with ``price`` and ``timestamp`` — as tick rows."""
+    return [(sym, float(t.price), t.timestamp) for sym, t in latest.items()]
+
+
 class LiveTradesSimpleReader(SimpleDataSourceStreamReader):
     def __init__(self, options):
         raw = options.get("symbols", "") or ""
@@ -95,10 +101,10 @@ class LiveTradesSimpleReader(SimpleDataSourceStreamReader):
     def _ticks(self, epoch: int) -> list:
         if self.provider == "fake":
             return list(_fake_epoch_ticks(self.symbols, epoch))
-        return list(self._poll_alpaca())  # pragma: no cover - SDK absent
+        return self._poll_alpaca()  # pragma: no cover - SDK absent
 
-    def _poll_alpaca(self):  # pragma: no cover - needs SDK+network
-        from asset_prices_parquet_saver_spark.sources.fetchers import _require
+    def _poll_alpaca(self) -> list:  # pragma: no cover - needs SDK+network
+        from asset_prices_parquet_saver_spark.sources.bars_datasource import _require
 
         _require("alpaca")
         import os
@@ -109,11 +115,11 @@ class LiveTradesSimpleReader(SimpleDataSourceStreamReader):
         client = StockHistoricalDataClient(
             os.environ["APCA_API_KEY_ID"], os.environ["APCA_API_SECRET_KEY"]
         )
-        latest = client.get_stock_latest_trade(
-            StockLatestTradeRequest(symbol_or_symbols=self.symbols)
+        return _latest_trade_rows(
+            client.get_stock_latest_trade(
+                StockLatestTradeRequest(symbol_or_symbols=self.symbols)
+            )
         )
-        for sym, trade in latest.items():
-            yield (sym, float(trade.price), trade.timestamp)
 
 
 class LiveTradesDataSource(DataSource):

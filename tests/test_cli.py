@@ -96,6 +96,68 @@ def test_cli_ingest_gated_without_sdk(spark, tmp_path, capsys):
     assert "not installed" in capsys.readouterr().err
 
 
+def test_cli_ingest_reads_daily_bars(spark, tmp_path, monkeypatch):
+    """ingest end to end through the real ``daily_bars`` source on its
+    offline ``fake`` provider: the sorted universe, one planned
+    partition per 10-symbol batch, normalize_bars, and the
+    day-partitioned write."""
+    from asset_prices_parquet_saver_spark.sources import bars_datasource
+    from asset_prices_parquet_saver_spark.sources.prices_daily import (
+        read_prices_daily,
+    )
+
+    read = bars_datasource.read_daily_bars
+    seen = {}
+
+    def fake(spark, symbols, provider):
+        seen["symbols"], seen["provider"] = symbols, provider
+        seen["raw"] = read(spark, symbols, "fake")
+        return seen["raw"]
+
+    monkeypatch.setattr(bars_datasource, "read_daily_bars", fake)
+    symbols = [f"S{i:02d}" for i in range(12)] + ["brk-b"]
+    out = str(tmp_path / "prices")
+    rc = cli.main(
+        [
+            "ingest",
+            "--source", "yfinance",
+            "--symbols", ",".join(reversed(symbols)),
+            "--output", out,
+        ]
+    )
+    assert rc == 0
+    assert seen["provider"] == "yfinance"
+    assert seen["symbols"] == sorted(s.upper() for s in symbols)
+    assert seen["raw"].rdd.getNumPartitions() == 2  # 13 symbols, batches of 10
+    rows = read_prices_daily(spark, out).collect()
+    assert len(rows) == 13 * 30  # fake_days default
+    assert {r.symbol for r in rows} == {f"S{i:02d}" for i in range(12)} | {"BRK.B"}
+    assert {r.source for r in rows} == {"yfinance"}
+    assert all(r.day == r.timestamp.date() for r in rows)
+    assert all(r.adj_close is not None and r.vwap is not None for r in rows)
+
+
+def test_cli_ingest_empty_universe_writes_nothing(spark, tmp_path, capsys):
+    caps = str(tmp_path / "caps.parquet")
+    spark.createDataFrame(
+        [("AAPL", 3e12), ("TINY", 1e6)], "symbol string, market_cap double"
+    ).write.parquet(caps)
+    out = tmp_path / "out"
+    rc = cli.main(
+        [
+            "ingest",
+            "--source", "alpaca",
+            "--symbols", "TINY",
+            "--output", str(out),
+            "--categories", "mega",
+            "--market-caps", caps,
+        ]
+    )
+    assert rc == 2
+    assert "empty" in capsys.readouterr().err
+    assert not out.exists()
+
+
 def test_cli_dedup_runs(spark, tmp_path, capsys):
     docs = str(tmp_path / "docs.parquet")
     spark.createDataFrame(

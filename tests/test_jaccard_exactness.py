@@ -53,20 +53,19 @@ def test_filtered_jaccard_matches_bruteforce(spark):
         [Row(doc_id=i, text=t) for i, t in enumerate(texts)]
     )
     # every physical strategy must produce the identical logical result
-    # (auto would pick dense here — force each explicitly); the prefix
-    # path runs with and without the PPJoin+ suffix filter
-    for strategy, sfx in (("prefix", True), ("prefix", False), ("dense", True)):
+    # (auto would pick dense here — force each explicitly)
+    for strategy in ("prefix", "dense"):
         for threshold in (0.3, 0.5, 0.8):
             expected = _python_jaccard_pairs(texts, 2, threshold)
             got = {
                 (r.id_a, r.id_b): round(r.jaccard, 9)
                 for r in dedup.jaccard_pairs(
                     df, "doc_id", "text", 2, threshold,
-                    strategy=strategy, suffix_filter=sfx,
+                    strategy=strategy,
                 ).collect()
             }
             assert got == expected, (
-                f"strategy={strategy} suffix={sfx} t={threshold}: "
+                f"strategy={strategy} t={threshold}: "
                 f"missing={set(expected) - set(got)} "
                 f"extra={set(got) - set(expected)}"
             )
@@ -85,56 +84,6 @@ def test_dense_strategy_rejects_large_vocab(spark):
             df, "doc_id", "text", 2, 0.5, strategy="dense",
             dense_vocab_limit=100,
         ).collect()
-
-
-def test_suffix_filter_prunes_candidates_and_stays_exact(spark):
-    """PPJoin+ depth-1 suffix filter A/B: cross-stratum doc pairs share
-    only a rare 'bridge' shingle (a prefix hit with a huge positional
-    bound), so only the suffix sketches can prune them. The filter must
-    cut the candidate count while the verified output stays identical."""
-    rng = random.Random(11)
-    rows = []
-    doc_sets = {}
-    did = 0
-    # 6 frequency strata with disjoint rank ranges; docs within a
-    # stratum are near-dups of a template, cross-stratum pairs share
-    # only the bridge ranks at the array head
-    for g in range(6):
-        base = sorted(rng.sample(range(1000 + g * 2000, 2600 + g * 2000), 60))
-        for _ in range(12):
-            body = sorted(
-                set(base)
-                - set(rng.sample(base, 6))
-                | {rng.randrange(1000 + g * 2000, 2600 + g * 2000) for _ in range(3)}
-            )
-            arr = [1, 2] + [r for r in body if r > 6]  # shared bridges
-            doc_sets[did] = set(arr)
-            rows.append((did, arr, len(arr)))
-            did += 1
-    arrs = spark.createDataFrame(rows, "id long, arr array<long>, n_sh int")
-
-    on = dedup._prefix_candidates(arrs, 0.5, suffix_filter=True)
-    off = dedup._prefix_candidates(arrs, 0.5, suffix_filter=False)
-    n_on, n_off = on.count(), off.count()
-    assert n_on < n_off, (n_on, n_off)  # measurably fewer candidates
-    assert n_off - n_on >= 0.2 * n_off, (n_on, n_off)
-
-    # soundness: both candidate sets verify to the same exact pairs,
-    # equal to brute force over the sets
-    expected = {}
-    ids = sorted(doc_sets)
-    for i, a in enumerate(ids):
-        for b in ids[i + 1 :]:
-            sa, sb = doc_sets[a], doc_sets[b]
-            j = len(sa & sb) / len(sa | sb)
-            if j >= 0.5:
-                expected[(a, b)] = round(j, 9)
-    for cand in (on, off):
-        got = {
-            (r.id_a, r.id_b): round(r.jaccard, 9)
-            for r in dedup._verified_jaccard(cand, arrs, 0.5).collect()
-        }
-        assert got == expected
 
 
 def _python_containment_pairs(texts, n, threshold):

@@ -98,7 +98,7 @@ def test_ingest_then_live_upsert_same_dataset(spark, tmp_path, monkeypatch):
     ``ingest`` wrote (update_live_price.py:200-297 rewrites the files
     download_historical_price.py produced)."""
     from asset_prices_parquet_saver_spark import cli
-    from asset_prices_parquet_saver_spark.sources import fetchers
+    from asset_prices_parquet_saver_spark.sources import bars_datasource
 
     raw = spark.createDataFrame(
         [
@@ -108,7 +108,9 @@ def test_ingest_then_live_upsert_same_dataset(spark, tmp_path, monkeypatch):
         "symbol string, timestamp timestamp, open double, high double, "
         "low double, close double, volume double",
     )
-    monkeypatch.setattr(fetchers, "fetch_alpaca_bars", lambda universe: raw)
+    monkeypatch.setattr(
+        bars_datasource, "read_daily_bars", lambda spark, symbols, provider: raw
+    )
     prices_path = str(tmp_path / "prices")
     rc = cli.main(
         ["ingest", "--source", "alpaca", "--symbols", "AAPL,MSFT", "--output", prices_path]

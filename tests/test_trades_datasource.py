@@ -11,6 +11,7 @@ from asset_prices_parquet_saver_spark.streaming.trades_datasource import (
     LiveTradesDataSource,
     LiveTradesSimpleReader,
     _fake_epoch_ticks,
+    _latest_trade_rows,
 )
 
 
@@ -32,6 +33,20 @@ def test_fake_ticks_shape():
     assert len(rows) == 2
     for sym, price, ts in rows:
         assert price > 0 and ts.minute == (30 + 7) % 60
+
+
+def test_latest_trade_rows_map_price_and_timestamp():
+    import datetime
+    from types import SimpleNamespace
+
+    ts = datetime.datetime(2024, 1, 2, 14, 30, tzinfo=datetime.timezone.utc)
+    latest = {
+        "AAPL": SimpleNamespace(price=187, timestamp=ts, size=100),
+        "BRK.B": SimpleNamespace(price=362.5, timestamp=ts, size=5),
+    }
+    rows = _latest_trade_rows(latest)
+    assert rows == [("AAPL", 187.0, ts), ("BRK.B", 362.5, ts)]
+    assert type(rows[0][1]) is float
 
 
 @pytest.fixture(scope="module")
