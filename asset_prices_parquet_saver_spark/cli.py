@@ -226,7 +226,7 @@ def _cmd_curate(args) -> int:
 
     docs = dedup_ops.fuzzy_dedup(
         docs, args.id_col, args.text_col, threshold=args.threshold
-    ).localCheckpoint()  # truncate the iterative-CC lineage before the write
+    ).localCheckpoint()  # the count and the write read one dedup pass
     n_dedup = docs.count()
 
     n_scrubbed = 0

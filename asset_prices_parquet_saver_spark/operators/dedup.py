@@ -13,10 +13,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from asset_prices_parquet_saver_spark.functions.pins import pin as _pin
 from asset_prices_parquet_saver_spark.functions.pandas_ops import spread
-from asset_prices_parquet_saver_spark.operators.graph import undirected_edges
 from asset_prices_parquet_saver_spark.operators.similarity import auto_num_blocks
 
 # ---------------------------------------------------------------- exact
@@ -1267,63 +1267,66 @@ def minhash_dedup(
 def connected_components(
     pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
 ) -> DataFrame:
-    """Connected components of the near-duplicate pair graph by
-    iterative min-label propagation: every node starts labeled with its
-    own id; each round a node adopts the minimum label among itself and
-    its neighbors; fixpoint = component = minimum member id.
+    """Connected components of the near-duplicate pair graph: every id
+    that appears in a pair, labeled with its component's minimum id.
+    Output: (id, component), typed like the pair columns. Pairs with a
+    NULL endpoint are ignored.
 
-    The loop runs to the fixpoint, checked per round with one 1-row
-    label-sum aggregate (one action per round — the standard
-    large-graph CC loop, same shape as GraphFrames'). Labels settle
-    after graph-diameter rounds, so it stops after at most diameter + 1
-    rounds with every component exact, however long its chains. Near-
-    dup clusters are dense and tiny, so that is a handful of rounds.
-    Output: (id, component).
-    """
-    edges = undirected_edges(pairs, id_a, id_b).localCheckpoint()
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-        .localCheckpoint()
+    One lazy kernel; building it runs no Spark job. The pairs go to ONE
+    partition and one ``mapInPandas`` reads all of them, maps the ids to
+    dense indices (``np.unique``: sorted, so index order is id order)
+    and runs vectorised min-label hooking to its fixpoint. Each round
+    every edge pulls both endpoints to the smaller of their two labels,
+    each old label takes the minimum of its members' new labels, and
+    every label then jumps to its label's label. Labels only fall and
+    always name a node of the same component, so the fixpoint labels
+    each component with its minimum id. A pair needs to appear once, in
+    either direction. Pointer jumping keeps the round count near the
+    log of the longest chain (a 1000-node path settles in about 10).
+
+    Bound: one Python worker holds every pair edge (two int64 indices
+    per edge, plus the id columns) and the node arrays. Near-dup pair
+    graphs are small next to the corpus that produced them; one that
+    does not fit a worker fails here (SCALE.md)."""
+    import numpy as np
+    import pandas as pd
+
+    id_type = (
+        pairs.select(F.array(id_a, id_b).alias("ids"))
+        .schema["ids"].dataType.elementType
     )
-    # Per round: ONE join + ONE min-aggregate, one Spark job. A node's
-    # own label rides as a self-message unioned under the neighbor
-    # messages, so min(messages) == least(own, neighbor-min) and the
-    # old join-back of nbr_min onto labels (a second exchange per
-    # round) disappears. The checkpoint is LAZY because the
-    # convergence aggregate right below scans every partition — it
-    # materializes the blocks in the same job, where the old eager
-    # form paid a separate checkpoint job before its count; both
-    # references to the previous round's `labels` (message join +
-    # self-message union) read fully-materialized blocks, so laziness
-    # cannot duplicate upstream work (the blanket-lazy trap this round
-    # documented in OPTIMIZATION_r12.md).
-    #
-    # Convergence check: labels only ever DECREASE, so the label sum
-    # (exact, DECIMAL(38,0)) strictly decreases iff any node changed —
-    # one 1-row aggregate replaces the changed-flag count and needs no
-    # reference to the previous round's labels. A sum that can only
-    # fall and stops falling at the fixpoint bounds the loop.
-    prev_sum = labels.agg(
-        F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-    ).collect()[0]["s"]
-    while True:
-        new_labels = (
-            edges.join(labels, edges.src == labels.id)
-            .select(F.col("dst").alias("id"), "component")
-            .unionByName(labels)
-            .groupBy("id")
-            .agg(F.min("component").alias("component"))
-        ).localCheckpoint(eager=False)  # materialized by the sum below
-        new_sum = new_labels.agg(
-            F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    return labels
+    edges = pairs.select(
+        F.col(id_a).cast(id_type).alias("a"), F.col(id_b).cast(id_type).alias("b")
+    ).filter(F.col("a").isNotNull() & F.col("b").isNotNull())
+
+    def min_label_components(batches):
+        ends_a, ends_b = [], []
+        for batch in batches:
+            ends_a.append(batch["a"].to_numpy())
+            ends_b.append(batch["b"].to_numpy())
+        if not ends_a:
+            return
+        nodes, idx = np.unique(
+            np.concatenate(ends_a + ends_b), return_inverse=True
+        )
+        ea, eb = np.split(idx, 2)
+        lab = np.arange(nodes.size)
+        while True:
+            m = np.minimum(lab[ea], lab[eb])
+            new = lab.copy()
+            np.minimum.at(new, ea, m)
+            np.minimum.at(new, eb, m)
+            np.minimum.at(new, lab, new.copy())  # hook each old root
+            new = new[new]  # pointer jumping
+            if np.array_equal(new, lab):
+                break
+            lab = new
+        yield pd.DataFrame({"id": nodes, "component": nodes[lab]})
+
+    schema = StructType(
+        [StructField("id", id_type), StructField("component", id_type)]
+    )
+    return edges.repartition(1).mapInPandas(min_label_components, schema)
 
 
 def fuzzy_dedup(
@@ -1340,10 +1343,13 @@ def fuzzy_dedup(
     MinHash-LSH candidates → exact-Jaccard verification → connected
     components → keep one deterministic survivor per component (its
     minimum id). Rows in no near-dup pair survive untouched. Returns
-    the deduplicated ``df`` (original columns). ``hash_family="md5"``
-    makes the whole composition engine-portable (see
-    :func:`minhash_dedup`) — the oracle then reproduces even the
-    connected components, via a recursive-CTE transitive closure."""
+    the deduplicated ``df`` (original columns). The components come
+    from :func:`connected_components`, one lazy kernel over the
+    verified pairs: it adds no job while the plan is built and runs
+    inside the caller's action. ``hash_family="md5"`` makes the whole
+    composition engine-portable (see :func:`minhash_dedup`) — the oracle
+    then reproduces even the connected components, via a recursive-CTE
+    transitive closure."""
     comp = connected_components(
         minhash_dedup(
             df, id_col, text_col, n, num_hashes, bands, threshold, hash_family

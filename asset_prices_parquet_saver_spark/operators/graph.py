@@ -274,9 +274,9 @@ def min_label_propagation(
     takes the minimum of its own label and its neighbors' labels.
     Returns (node, label) after exactly ``iterations`` rounds — i.e.
     label(v) = min node id within ``iterations`` hops of v. Run to the
-    graph diameter this is connected components (the dedup family's CC
-    uses the same contraction with data-dependent stopping —
-    operators/dedup.py); the FIXED round count here keeps the result a
+    graph diameter this is connected components (the dedup family's CC,
+    operators/dedup.py, computes the exact fixpoint in one kernel
+    instead); the FIXED round count here keeps the result a
     static function of the input so a SQL oracle can replay it with
     unrolled CTEs, exactly the :func:`pagerank` trade-off.
 
@@ -293,7 +293,6 @@ def min_label_propagation(
     # rides as a self-message under the neighbor messages, so
     # min(messages) == least(own, neighbor-min) and the old join-back
     # of nbr_min onto labels (a second exchange per round) disappears
-    # — same restructure as dedup.connected_components
     for _ in range(iterations):
         labels = (
             und.join(labels, und["a"] == labels["node"])

@@ -4496,9 +4496,9 @@ def asof_tolerance_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # verify → connected components → min-id survivor per component.
 # Run with the portable md5-60 family, so the oracle replays the WHOLE
 # composition: the shared minhash CTE chain plus a recursive-CTE
-# transitive closure standing in for the iterative min-label
-# propagation (same fixpoint: a doc survives iff no reachable doc has
-# a smaller id). Spark CC is additionally verified against a
+# transitive closure standing in for the Spark connected-components
+# kernel (same fixpoint: a doc survives iff no reachable doc has a
+# smaller id). Spark CC is additionally verified against a
 # union-find reference in tests/test_dedup_text.py.
 @q(
     "fuzzy_dedup_documents",
@@ -4533,7 +4533,7 @@ def fuzzy_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Spark component pipeline with fuzzy_dedup_documents; the
 # oracle elects winners with a window over full component membership
 # (comp label = min of self and all reachable ids — the same fixpoint
-# the Spark min-label propagation converges to).
+# the Spark connected-components kernel converges to).
 @q(
     "fuzzy_dedup_keep_longest",
     f"""

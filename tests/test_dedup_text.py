@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -126,9 +129,28 @@ def test_language_id_markers(spark):
     assert out == {0: "en", 1: "es", 2: "de", 3: "und"}
 
 
+def _union_find_components(edges) -> set[tuple]:
+    """(node, minimum node of its component) for every edge endpoint:
+    the driver-side reference for ``connected_components``."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(x, find(x)) for x in parent}
+
+
 def test_connected_components_matches_union_find(spark, sf_dir):
-    """Spark min-label-propagation CC vs a driver-side union-find over
-    the same verified near-dup pairs."""
+    """Spark connected components vs a driver-side union-find over the
+    same verified near-dup pairs."""
     from asset_prices_parquet_saver_spark.operators.dedup import (
         connected_components,
         jaccard_pairs,
@@ -140,40 +162,91 @@ def test_connected_components_matches_union_find(spark, sf_dir):
     got = {
         (r.id, r.component) for r in connected_components(pairs).collect()
     }
-
-    # reference union-find
-    parent: dict[int, int] = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
     edges = [(r.id_a, r.id_b) for r in pairs.collect()]
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {(x, find(x)) for x in parent}
-    assert got == want
+    assert got == _union_find_components(edges)
     assert edges, "fixture should contain near-dup pairs"
 
 
-def test_connected_components_exact_past_twenty_rounds(spark):
-    """A 30-node path has diameter 29: the label loop runs to its
+@pytest.mark.parametrize("n", [30, 50])
+def test_connected_components_exact_past_twenty_rounds(spark, n):
+    """An n-node path has diameter n - 1: the kernel runs to its
     fixpoint however many rounds that takes, so every node, the far end
-    included, is labeled with the component minimum 0."""
+    included, is labeled with the component minimum 0. The edges come
+    shuffled, half of them reversed."""
     from asset_prices_parquet_saver_spark.operators.dedup import (
         connected_components,
     )
 
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(29)], "id_a long, id_b long"
-    )
+    rng = random.Random(n)
+    edges = [(i, i + 1) if rng.random() < 0.5 else (i + 1, i) for i in range(n - 1)]
+    rng.shuffle(edges)
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     got = {r.id: r.component for r in connected_components(pairs).collect()}
-    assert got == {i: 0 for i in range(30)}
+    assert got == {i: 0 for i in range(n)}
+
+
+def test_connected_components_random_graphs_match_union_find(spark):
+    """60 seeded random small graphs with self-loops, duplicate edges,
+    both directions of an edge and non-contiguous, interleaved ids (all
+    drawn from one sparse range), labeled in ONE call over their
+    disjoint union: components of a disjoint union are the components
+    of its parts. Arrow batches of 7 rows make the kernel concatenate
+    many batches."""
+    from asset_prices_parquet_saver_spark.operators.dedup import (
+        connected_components,
+    )
+
+    rng = random.Random(8)
+    pool = rng.sample(range(-10**12, 10**12), 60 * 12)
+    edges, want = [], set()
+    for g in range(60):
+        ids = pool[g * 12 : g * 12 + rng.randint(1, 12)]
+        graph = [(rng.choice(ids), rng.choice(ids)) for _ in range(rng.randint(1, 15))]
+        graph += [(a, a) for a in rng.sample(ids, 1)]  # a self-loop
+        graph += [(b, a) for a, b in graph[:2]] + graph[:1]  # reversed, repeated
+        edges += graph
+        want |= _union_find_components(graph)
+    rng.shuffle(edges)
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long").repartition(3)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got = {(r.id, r.component) for r in connected_components(pairs).collect()}
+    finally:
+        spark.conf.set(key, old)
+    assert got == want
+
+
+def test_connected_components_empty_pairs(spark):
+    from asset_prices_parquet_saver_spark.operators.dedup import (
+        connected_components,
+    )
+
+    pairs = spark.createDataFrame([], "id_a long, id_b long")
+    out = connected_components(pairs)
+    assert out.schema.simpleString() == "struct<id:bigint,component:bigint>"
+    assert out.collect() == []
+
+
+def test_connected_components_builds_without_a_job(spark):
+    """Labeling is one lazy kernel: building the plan runs no Spark job
+    (the labels are computed when the caller's action runs)."""
+    from asset_prices_parquet_saver_spark.operators.dedup import (
+        connected_components,
+    )
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "id_a long, id_b long")
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("cc-build", "build")
+        comp = connected_components(pairs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("cc-build")) == 0
+    assert {(r.id, r.component) for r in comp.collect()} == {
+        (1, 1), (2, 1), (3, 1), (7, 7), (8, 7)
+    }
 
 
 def test_fuzzy_dedup_end_to_end(spark, sf_dir):

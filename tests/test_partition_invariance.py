@@ -13,7 +13,7 @@ import hashlib
 from asset_prices_parquet_saver_spark.plans import QUERIES
 
 #: one representative per risk family: decimal aggregation, windowed
-#: decimal moments, weighted hash sampling, iterative connected
+#: decimal moments, weighted hash sampling, single-partition connected
 #: components, Arrow-batched numpy kernels, global ordering.
 PROBES = [
     "flagship_pricing_summary",

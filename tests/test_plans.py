@@ -154,27 +154,32 @@ def test_ann_lsh_topk_broadcasts_probes_into_one_kernel(spark, sf_dir):
     assert "bucket" not in plan and "table#" not in plan
 
 
-def test_semantic_dedup_edges_run_cosine_kernel_once(spark, sf_dir, monkeypatch):
-    """connected_components mirrors the LSH pair relation into an edge
-    list. The mirror reads the pair relation once (one explode of both
-    directions), so the executed edge plan runs each Python kernel of
-    the pair path — bucket codes, bucket scoring — exactly once."""
-    frame_cls = type(spark.range(1))
-    checkpointed = []
-    real = frame_cls.localCheckpoint
-
-    def spy(self, *args, **kwargs):
-        checkpointed.append(self)
-        return real(self, *args, **kwargs)
-
-    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
-    QUERIES["semantic_dedup_embeddings"](spark, sf_dir)
-    edges = next(df for df in checkpointed if df.columns == ["src", "dst"])
-    plan = _plan(edges)
+def test_semantic_dedup_edges_run_cosine_kernel_once(spark, sf_dir):
+    """Semantic dedup reads its LSH pair relation once: the executed
+    plan runs each Python kernel — bucket codes, bucket scoring and the
+    connected-components kernel — exactly once. Connected components
+    is lazy, so building the query runs only auto_num_planes' corpus
+    count."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("plan-semdedup-count", "count")
+        read_table(spark, sf_dir, "embeddings").count()
+        sc.setJobGroup("plan-semdedup-build", "build")
+        df = QUERIES["semantic_dedup_embeddings"](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(tracker.getJobIdsForGroup("plan-semdedup-build")) == len(
+        tracker.getJobIdsForGroup("plan-semdedup-count")
+    )
+    df.collect()
+    plan = _plan(df)
     assert "isFinalPlan=true" in plan
     final = plan.split("== Initial Plan ==")[0]
     kernels = re.findall(r"MapInPandas (\w+)\(", final)
-    assert kernels and len(kernels) == len(set(kernels)), kernels
+    assert sorted(kernels) == [
+        "bucket_codes", "min_label_components", "score_buckets"
+    ], kernels
 
 
 def test_embedding_near_pairs_lsh_scores_inside_buckets(spark, sf_dir):
