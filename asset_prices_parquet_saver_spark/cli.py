@@ -5,7 +5,7 @@
 | ``parquet_details.py --symbol S`` | ``details`` | head/tail/schema; top-N files by mtime when no symbol given (parquet_details.py:15-38) |
 | ``compare_parquet.py --symbol S`` | ``compare`` | schema diff + the row-level data diff the reference left as a TODO (compare_parquet.py:101-102) |
 | ``download_historical_price.py`` | ``ingest`` | sorted symbol universe → ``daily_bars`` read (one partition per 10-symbol request batch) → normalize → (source, day)-partitioned prices write that ``live`` upserts into (§3.1); needs the provider's SDK, else exits 2 with the FetcherUnavailable message |
-| ``update_live_price.py`` | ``live`` | Structured Streaming upsert loop (§3.2) over ticks from a parquet drop directory (``--ticks-dir``); needs no SDK |
+| ``update_live_price.py`` | ``live`` | one Structured Streaming query (§3.2) over ticks from a parquet drop directory (``--ticks-dir``): each micro-batch is validated, deduplicated and upserted into ``--output``; ``--bars`` also folds the same batch into the incremental daily-OHLC table (needs ``--checkpoint``); needs no SDK |
 
 Run as ``python -m asset_prices_parquet_saver_spark <subcommand>``.
 """
@@ -101,8 +101,14 @@ def _cmd_live(args) -> int:
     from asset_prices_parquet_saver_spark.schema import LIVE_TRADE_SCHEMA
     from asset_prices_parquet_saver_spark.streaming.live import run_live_upsert
 
-    if not args.bars and not args.output:
-        print("error: live needs --output (upsert mode) or --bars", file=sys.stderr)
+    if not args.output:
+        print("error: live needs --output", file=sys.stderr)
+        return 2
+    if args.bars and not args.checkpoint:
+        # without a checkpoint every run restarts its epochs at 0, and
+        # the bars log's ("ohlc", epoch) txn records would skip each new
+        # batch up to the previous run's last epoch as already applied
+        print("error: live --bars needs --checkpoint", file=sys.stderr)
         return 2
     spark = get_spark(app_name="live")
     # tick stream: a parquet drop directory stands in for the REST
@@ -110,15 +116,13 @@ def _cmd_live(args) -> int:
     ticks = (
         spark.readStream.schema(LIVE_TRADE_SCHEMA).parquet(args.ticks_dir)
     )
+    on_batch = None
     if args.bars:
-        # bar mode: maintain the daily-OHLC materialized view instead
-        # of the latest-price table (same epoch-idempotent commits)
-        from asset_prices_parquet_saver_spark.operators.incremental_agg import (
-            run_streaming_ohlc,
-        )
-
         from asset_prices_parquet_saver_spark.functions.portable_hash import (
             md5_int60,
+        )
+        from asset_prices_parquet_saver_spark.operators.incremental_agg import (
+            refresh_ohlc,
         )
 
         # deterministic tick id (content hash): same-timestamp ticks
@@ -131,22 +135,21 @@ def _cmd_live(args) -> int:
                 F.col("price").cast("string"),
             )
         )
-        query = run_streaming_ohlc(
-            ticks.withColumn("event_id", tick_id),
-            args.bars,
-            key_col="symbol",
-            ts_col="ts",
-            price_col="price",
-            checkpoint_dir=args.checkpoint,
-        )
-    else:
-        query = run_live_upsert(
-            spark,
-            ticks,
-            args.output,
-            trigger_seconds=args.interval,
-            checkpoint_dir=args.checkpoint,
-        )
+        ticks = ticks.withColumn("event_id", tick_id)
+
+        # folds the batch the prices merge accepted (validated and
+        # deduplicated), so bars count exactly the upserted ticks
+        def on_batch(batch, epoch_id: int) -> None:
+            refresh_ohlc(batch, args.bars, txn=("ohlc", epoch_id))
+
+    query = run_live_upsert(
+        spark,
+        ticks,
+        args.output,
+        trigger_seconds=args.interval,
+        checkpoint_dir=args.checkpoint,
+        on_batch=on_batch,
+    )
     query.awaitTermination()
     return 0
 
@@ -487,8 +490,11 @@ def main(argv: list[str] | None = None) -> int:
 
     lv = sub.add_parser("live", help="streaming live-price upsert")
     lv.add_argument("--ticks-dir", required=True)
-    lv.add_argument("--output", help="latest-price table (default mode)")
-    lv.add_argument("--bars", help="maintain the incremental daily-OHLC table at this path instead")
+    lv.add_argument("--output", help="prices table to upsert into (required)")
+    lv.add_argument(
+        "--bars",
+        help="also fold each upserted batch into the incremental daily-OHLC table at this path",
+    )
     lv.add_argument("--interval", type=int, default=60)
     lv.add_argument("--checkpoint")
     lv.set_defaults(fn=_cmd_live)

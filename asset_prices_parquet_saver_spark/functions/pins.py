@@ -11,15 +11,19 @@ tokenize), that duplication is the dominant avoidable cost at scale
 
 :func:`pin` is the repo-wide spelling of the fix: a LAZY
 ``localCheckpoint`` at the branch point — the first consuming job
-materializes the blocks in-line (no separate barrier job, the
-globalorder lesson: an eager barrier measured 8-10% slower at sf0.1)
-and every later consumer reads them. Broadcast exchanges are built on
-a separate driver thread, so in principle two consumers can race to
-materialize the same RDD; the block manager's per-partition
-getOrCompute locking de-dupes the compute (a fresh-JVM stderr audit
-of the globalorder site saw zero "Block already exists" warnings),
-and results are correct either way — both consumers share one RDD
-identity.
+materializes the blocks in-line and every later consumer reads them.
+That holds only while the pinned plan has no shuffle: under AQE,
+building the checkpoint's RDD runs the plan's shuffle stages while
+the query is BUILT, as separate jobs (``fuzzy_dedup_keep_longest``,
+which pins a joined CC output, builds with 8 jobs pinned and 3
+unpinned). On a shuffle-free subtree there is no separate barrier job
+(the globalorder lesson: an eager barrier measured 8-10% slower at
+sf0.1). Broadcast exchanges are built on a separate driver thread,
+so in principle two consumers can race to materialize the same RDD;
+the block manager's per-partition getOrCompute locking de-dupes the
+compute (a fresh-JVM stderr audit of the globalorder site saw zero
+"Block already exists" warnings), and results are correct either way
+— both consumers share one RDD identity.
 
 ``ENABLED`` is a measurement seam for scripts/ab_interleaved.py —
 flipping it False rebuilds plans in the duplicated form so the pin's

@@ -224,6 +224,65 @@ def fixed_histogram(
     )
 
 
+def ohlc_partials(
+    ticks: DataFrame,
+    key_col: str = "user_id",
+    ts_col: str = "ts",
+    price_col: str = "value",
+    id_col: str = "event_id",
+    period: str = "day",
+) -> DataFrame:
+    """The bar monoid's partial state per (key, period bucket): open
+    and close as min/max over a (ts, id, price) struct, high, low, the
+    tick count and the exact decimal price sum. Every component is
+    associative and commutative, so partial bars from any split of the
+    ticks fold (:func:`fold_ohlc_partials`) to the bar of the whole.
+    The bucket column is always named ``day`` (the period's first
+    date)."""
+    day = F.date_trunc(period, F.col(ts_col)).cast("date").alias("day")
+    sel = F.struct(F.col(ts_col), F.col(id_col), F.col(price_col).alias("p"))
+    return (
+        ticks.select(F.col(key_col), day, F.col(ts_col), F.col(id_col), F.col(price_col))
+        .groupBy(key_col, "day")
+        .agg(
+            F.min(sel).alias("_open_sel"),
+            F.max(price_col).alias("_high"),
+            F.min(price_col).alias("_low"),
+            F.max(sel).alias("_close_sel"),
+            F.count("*").cast("long").alias("_cnt"),
+            F.sum(F.col(price_col).cast("decimal(28,2)")).alias("_vol"),
+        )
+    )
+
+
+def fold_ohlc_partials(parts: DataFrame, key_col: str = "user_id") -> DataFrame:
+    """Combine partial bars to one partial bar per (key, day): the
+    struct min/max re-select open/close across the parts, the rest
+    combine as min/max/sum."""
+    return parts.groupBy(key_col, "day").agg(
+        F.min("_open_sel").alias("_open_sel"),
+        F.max("_high").alias("_high"),
+        F.min("_low").alias("_low"),
+        F.max("_close_sel").alias("_close_sel"),
+        F.sum("_cnt").cast("long").alias("_cnt"),
+        F.sum("_vol").alias("_vol"),
+    )
+
+
+def ohlc_bar_columns(key_col: str = "user_id") -> list[Column]:
+    """The finished bar (key, day, open, high, low, close, n_ticks) of
+    a partial bar state."""
+    return [
+        F.col(key_col),
+        F.col("day"),
+        F.col("_open_sel").getField("p").alias("open"),
+        F.col("_high").alias("high"),
+        F.col("_low").alias("low"),
+        F.col("_close_sel").getField("p").alias("close"),
+        F.col("_cnt").alias("n_ticks"),
+    ]
+
+
 def ohlc_bars(
     ticks: DataFrame,
     key_col: str = "user_id",
@@ -245,20 +304,11 @@ def ohlc_bars(
     ordering of the tick stream.) The id tie-break makes
     same-timestamp ticks deterministic. The bucket column is always
     named ``day`` (the period's first date) so downstream indicator
-    operators compose unchanged at any granularity."""
-    day = F.date_trunc(period, F.col(ts_col)).cast("date").alias("day")
-    sel = F.struct(F.col(ts_col), F.col(id_col), F.col(price_col).alias("p"))
-    return (
-        ticks.select(F.col(key_col), day, F.col(ts_col), F.col(id_col), F.col(price_col))
-        .groupBy(key_col, "day")
-        .agg(
-            F.min(sel).getField("p").alias("open"),
-            F.max(price_col).alias("high"),
-            F.min(price_col).alias("low"),
-            F.max(sel).getField("p").alias("close"),
-            F.count("*").cast("long").alias("n_ticks"),
-        )
-    )
+    operators compose unchanged at any granularity. It is the finished
+    :func:`ohlc_partials`; the unused price sum is pruned from the
+    plan."""
+    parts = ohlc_partials(ticks, key_col, ts_col, price_col, id_col, period)
+    return parts.select(*ohlc_bar_columns(key_col))
 
 
 def twap(

@@ -1,30 +1,26 @@
-"""Incremental aggregate maintenance: a materialized rollup kept fresh
-with O(batch) work per refresh — the "materialized view" the reference
-pipeline would need once its bar store outgrows recompute-the-world.
+"""Daily bars kept fresh with O(batch) work per refresh: the bar table
+``live --bars`` maintains next to the prices table, one fold per
+micro-batch of validated, deduplicated ticks.
 
 Design (LSM-shaped, on the manifest append-log protocol):
 
-- a refresh computes PARTIAL aggregate states for the batch only
-  (per-key count + exact decimal sums — the same commutative monoid
-  Spark's own partial aggregation uses) and ``commit_append``s them:
-  one new segment, O(batch) regardless of rollup size;
-- readers fold the partial-state log with a combinable groupBy — the
-  log is one row per (key, refresh) so the fold runs over rollup-sized
-  (not fact-sized) data;
-- compaction folds the log back to one row per key as a snapshot
-  commit, leaving readers of the old snapshot undisturbed;
+- a refresh aggregates the batch to partial bar states
+  (:func:`~.analytics.ohlc_partials`, the bar monoid) and
+  ``commit_append``s them: one new segment, O(batch) regardless of
+  table size;
+- readers fold the partial-state log with the monoid's combine step
+  (:func:`~.analytics.fold_ohlc_partials`) — the log is one row per
+  (key, day, refresh), so the fold runs over bar-sized data, never
+  over ticks;
+- compaction folds the log back to one row per (key, day) as a
+  snapshot commit, leaving readers of the old snapshot undisturbed;
 - ``txn=(app_id, epoch)`` makes refreshes exactly-once under
   foreachBatch replay (the Delta txn idiom, same as the incremental
   dedup index).
 
-The monoid is (count, sum) per measure — avg and friends derive at
-read time. Min/max also combine and could join the state; quantiles
-and distinct counts need sketches and are deliberately out of scope
-here (see approx_user_stats for the HLL story).
-
-Equivalence to a full recompute over all facts ever ingested is
+Equivalence to batch ``ohlc_bars`` over every tick ever ingested is
 asserted in tests/test_incremental_agg.py, including through crash
-replays and interleaved compactions.
+replays, arbitrary batch splits and compactions.
 """
 
 from __future__ import annotations
@@ -32,170 +28,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from asset_prices_parquet_saver_spark.operators.analytics import (
+    fold_ohlc_partials,
+    ohlc_bar_columns,
+    ohlc_partials,
+)
 from asset_prices_parquet_saver_spark.sources import manifest
-
-
-def _partial_states(
-    batch: DataFrame, keys: list[str], sum_cols: list[str]
-) -> DataFrame:
-    aggs = [F.count("*").cast("long").alias("_cnt")]
-    for c in sum_cols:
-        aggs.append(F.sum(F.col(c).cast("decimal(28,2)")).alias(f"_sum_{c}"))
-    return batch.groupBy(*keys).agg(*aggs)
-
-
-def refresh_rollup(
-    batch: DataFrame,
-    table: str,
-    keys: list[str],
-    sum_cols: list[str],
-    txn: tuple[str, int] | None = None,
-) -> int:
-    """Fold ``batch`` into the rollup at ``table``: aggregate the batch
-    to partial states and append them as one new segment. O(batch);
-    never reads or rewrites existing state. Returns the committed
-    version."""
-    return manifest.commit_append(_partial_states(batch, keys, sum_cols), table, txn=txn)
-
-
-def read_rollup(
-    spark: SparkSession,
-    table: str,
-    keys: list[str],
-    sum_cols: list[str],
-    version: int | None = None,
-) -> DataFrame:
-    """Resolve the rollup: fold the partial-state log to one row per
-    key and derive the final measures — (n, sum_<c>, avg_<c>). The
-    fold is a combinable groupBy over state-log rows (|keys| x
-    #refreshes at worst), never over facts."""
-    log = manifest.read_versioned(spark, table, version=version)
-    folded = log.groupBy(*keys).agg(
-        F.sum("_cnt").cast("long").alias("n"),
-        *[F.sum(f"_sum_{c}").alias(f"_sum_{c}") for c in sum_cols],
-    )
-    out = folded
-    for c in sum_cols:
-        out = out.withColumn(f"sum_{c}", F.col(f"_sum_{c}").cast("double")).withColumn(
-            f"avg_{c}", (F.col(f"_sum_{c}").cast("double") / F.col("n"))
-        )
-    return out.select(*keys, "n", *[x for c in sum_cols for x in (f"sum_{c}", f"avg_{c}")])
-
-
-def compact_rollup(
-    spark: SparkSession,
-    table: str,
-    keys: list[str],
-    sum_cols: list[str],
-) -> int:
-    """Fold the whole partial-state log into one row per key and
-    publish it as a snapshot commit (readers of the old snapshot are
-    undisturbed; the append-log then restarts from the folded state).
-    Run when segments accumulate — the LSM compaction step. Pinned to
-    the version it read (expect_version): an epoch appended between
-    the read and the rewrite raises CommitConflict instead of being
-    silently folded away — without the pin that lost epoch would also
-    be unrecoverable, because the rewrite carries the txn map forward
-    and a replay of the epoch would be skipped as already applied."""
-    v = manifest.current_version(table)
-    log = manifest.read_versioned(spark, table, version=v)
-    folded = log.groupBy(*keys).agg(
-        F.sum("_cnt").cast("long").alias("_cnt"),
-        *[F.sum(f"_sum_{c}").alias(f"_sum_{c}") for c in sum_cols],
-    )
-    return manifest.commit_versioned(folded, table, expect_version=v)
-
-
-def maybe_compact(
-    spark: SparkSession,
-    table: str,
-    agg_fold,
-    max_segments: int = 32,
-) -> bool:
-    """Background-maintenance policy for long-running incremental
-    streams: when the append log exceeds ``max_segments``, fold it via
-    ``agg_fold`` (a compact_* function) back to one segment. Safe to
-    interleave with epoch-tagged appends: the fold commits with
-    expect_version, so a concurrent append wins and the compaction is
-    simply skipped until the next trigger (maintenance is best-effort
-    by design). Returns whether a compaction ran."""
-    if manifest.segment_count(table) <= max_segments:
-        return False
-    try:
-        agg_fold(spark, table)
-    except manifest.CommitConflict:
-        return False
-    return True
-
-
-def run_streaming_rollup(
-    docs_stream: DataFrame,
-    table: str,
-    keys: list[str],
-    sum_cols: list[str],
-    checkpoint_dir: str | None = None,
-    available_now: bool = False,
-    app_id: str = "rollup",
-    compact_every: int | None = None,
-):
-    """Keep the rollup fresh from a stream: every micro-batch folds in
-    via :func:`refresh_rollup` inside ``foreachBatch``, tagged with the
-    epoch so crash replays are exactly-once (the same protocol as
-    run_streaming_dedup). Each epoch costs O(batch) — the rollup table
-    is never read, let alone rewritten, on the ingest path.
-    ``compact_every`` bounds the append log: once the segment count
-    exceeds it, the log folds to one row per key as a snapshot commit
-    (the LSM maintenance step, inline because local mode has no
-    background maintainer — run it out-of-band on a real cluster)."""
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        refresh_rollup(batch, table, keys, sum_cols, txn=(app_id, epoch_id))
-        if compact_every:
-            maybe_compact(
-                batch.sparkSession,
-                table,
-                lambda s, t: compact_rollup(s, t, keys, sum_cols),
-                max_segments=compact_every,
-            )
-
-    writer = docs_stream.writeStream.outputMode("append").foreachBatch(handle)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-# --------------------------------------------------------------- OHLC
-# The reference-domain materialized view: daily bars maintained from a
-# tick stream with O(batch) refreshes. The bar monoid is
-# (open_sel=min(ts,id,p), high=max p, low=min p, close_sel=max(ts,id,p),
-# n, vol) — every component associative+commutative, so partial bars
-# from any batch split fold to the same bar.
-
-def _partial_bars(
-    batch: DataFrame,
-    key_col: str,
-    ts_col: str,
-    price_col: str,
-    id_col: str,
-) -> DataFrame:
-    day = F.date_trunc("day", F.col(ts_col)).cast("date").alias("day")
-    sel = F.struct(F.col(ts_col), F.col(id_col), F.col(price_col).alias("p"))
-    return (
-        batch.select(F.col(key_col), day, F.col(ts_col), F.col(id_col), F.col(price_col))
-        .groupBy(key_col, "day")
-        .agg(
-            F.min(sel).alias("_open_sel"),
-            F.max(price_col).alias("_high"),
-            F.min(price_col).alias("_low"),
-            F.max(sel).alias("_close_sel"),
-            F.count("*").cast("long").alias("_cnt"),
-            F.sum(F.col(price_col).cast("decimal(28,2)")).alias("_vol"),
-        )
-    )
 
 
 def refresh_ohlc(
@@ -209,9 +47,10 @@ def refresh_ohlc(
 ) -> int:
     """Fold a tick batch into the incremental daily-bar table:
     aggregate the batch to partial bars and append one segment —
-    O(batch), the bar store is never read or rewritten on ingest."""
+    O(batch), the bar store is never read or rewritten on ingest.
+    Returns the committed version."""
     return manifest.commit_append(
-        _partial_bars(batch, key_col, ts_col, price_col, id_col), table, txn=txn
+        ohlc_partials(batch, key_col, ts_col, price_col, id_col), table, txn=txn
     )
 
 
@@ -222,82 +61,31 @@ def read_ohlc(
     version: int | None = None,
 ) -> DataFrame:
     """Resolve the incremental bar table: fold the partial-bar log to
-    one bar per (key, day) — struct min/max re-select open/close
-    across refreshes, high/low/count/notional combine — and derive the
-    final OHLC columns. The open/high/low/close columns equal batch
-    ohlc_bars over all ticks ever ingested (asserted in
-    tests/test_incremental_agg.py); on top of those this adds n_ticks
-    and ``notional`` (the sum of traded PRICES — the input stream has
-    no quantity column, so there is no true volume to sum; the column
-    is named for what it is)."""
+    one bar per (key, day) and finish it. The open/high/low/close
+    columns equal batch ohlc_bars over all ticks ever ingested; on top
+    of those this adds n_ticks and ``notional`` (the sum of traded
+    PRICES — the input stream has no quantity column, so there is no
+    true volume to sum; the column is named for what it is)."""
     log = manifest.read_versioned(spark, table, version=version)
-    folded = log.groupBy(key_col, "day").agg(
-        F.min("_open_sel").alias("_open_sel"),
-        F.max("_high").alias("high"),
-        F.min("_low").alias("low"),
-        F.max("_close_sel").alias("_close_sel"),
-        F.sum("_cnt").cast("long").alias("n_ticks"),
-        F.sum("_vol").cast("double").alias("notional"),
-    )
-    return folded.select(
-        key_col,
-        "day",
-        F.col("_open_sel").getField("p").alias("open"),
-        "high",
-        "low",
-        F.col("_close_sel").getField("p").alias("close"),
-        "n_ticks",
-        "notional",
+    return fold_ohlc_partials(log, key_col).select(
+        *ohlc_bar_columns(key_col), F.col("_vol").cast("double").alias("notional")
     )
 
 
 def compact_ohlc(
     spark: SparkSession, table: str, key_col: str = "symbol"
 ) -> int:
-    """Fold the partial-bar log to one row per (key, day) and publish
-    it as a snapshot commit — the same LSM compaction as
-    compact_rollup, preserving the bar monoid state and the same
-    expect_version pin against concurrent epoch appends."""
+    """Fold the partial-bar log into one row per (key, day) and publish
+    it as a snapshot commit (readers of the old snapshot are
+    undisturbed; the append log then restarts from the folded state).
+    Run when segments accumulate — the LSM compaction step. Pinned to
+    the version it read (expect_version): an epoch appended between
+    the read and the rewrite raises CommitConflict instead of being
+    silently folded away — without the pin that lost epoch would also
+    be unrecoverable, because the rewrite carries the txn map forward
+    and a replay of the epoch would be skipped as already applied."""
     v = manifest.current_version(table)
     log = manifest.read_versioned(spark, table, version=v)
-    folded = log.groupBy(key_col, "day").agg(
-        F.min("_open_sel").alias("_open_sel"),
-        F.max("_high").alias("_high"),
-        F.min("_low").alias("_low"),
-        F.max("_close_sel").alias("_close_sel"),
-        F.sum("_cnt").cast("long").alias("_cnt"),
-        F.sum("_vol").alias("_vol"),
+    return manifest.commit_versioned(
+        fold_ohlc_partials(log, key_col), table, expect_version=v
     )
-    return manifest.commit_versioned(folded, table, expect_version=v)
-
-
-def run_streaming_ohlc(
-    ticks_stream: DataFrame,
-    table: str,
-    key_col: str = "symbol",
-    ts_col: str = "ts",
-    price_col: str = "price",
-    id_col: str = "event_id",
-    checkpoint_dir: str | None = None,
-    available_now: bool = False,
-    app_id: str = "ohlc",
-):
-    """Live bar maintenance: every micro-batch folds into the
-    incremental bar table via :func:`refresh_ohlc` under the
-    epoch-idempotent commit protocol — the streaming form of the
-    reference's live-price loop, producing bars instead of
-    latest-price rows."""
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        refresh_ohlc(
-            batch, table, key_col, ts_col, price_col, id_col, txn=(app_id, epoch_id)
-        )
-
-    writer = ticks_stream.writeStream.outputMode("append").foreachBatch(handle)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

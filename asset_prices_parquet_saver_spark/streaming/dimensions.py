@@ -58,8 +58,8 @@ def run_streaming_scd2(
     """Start the streaming SCD2 maintenance query over a changelog
     stream. Returns the StreamingQuery handle.
 
-    ``app_id`` must be STABLE across restarts (like run_streaming_rollup
-    / run_streaming_dedup): the txn replay guard keys on it, and the
+    ``app_id`` must be STABLE across restarts (like run_streaming_dedup
+    and ``live --bars``): the txn replay guard keys on it, and the
     only replay scenario that exists is crash + restart — a
     per-application id (sparkContext.applicationId) changes on every
     restart, which would make the guard dead exactly when it matters

@@ -11,7 +11,8 @@ Structured Streaming expresses the same pipeline declaratively:
       → P7 validity filter
       → watermark + dropDuplicates (T7 late/dup handling)
       → foreachBatch: J4 keep-latest merge into the prices dataset
-                      + T4 blacklist side-output to symbol_status
+                      → optional fold of the same batch (``live --bars``
+                        folds it into the incremental daily bars)
 
 The 60 s poll cycle *is* ``trigger(processingTime='60 seconds')``; state
 is the prices table itself, so the sink is exactly-once per epoch via
@@ -82,7 +83,8 @@ def run_live_upsert(
     and one listing of the dataset root through the path's Hadoop
     FileSystem (so HDFS/S3 warehouses work) and collects the batch's
     affected days; everything else runs as Spark jobs. ``on_batch``, if
-    given, runs after each batch's merge with the batch and its epoch id.
+    given, runs after each batch's merge with the batch and its epoch id;
+    the batch is the validated, deduplicated one the merge accepted.
     """
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:

@@ -234,10 +234,98 @@ def test_cli_report_runs_and_gates_on_dq(spark, sf_dir, capsys):
     assert "l_quantity" in out
 
 
-def test_cli_live_requires_output_or_bars():
+def test_cli_live_requires_output_and_bars_checkpoint(tmp_path, capsys):
     from asset_prices_parquet_saver_spark.cli import main
 
-    assert main(["live", "--ticks-dir", "/tmp/nope"]) == 2
+    ticks = str(tmp_path / "ticks")
+    assert main(["live", "--ticks-dir", ticks]) == 2
+    assert "needs --output" in capsys.readouterr().err
+    # without a checkpoint a rerun restarts its epochs at 0 and the
+    # bars log would skip its batches as already applied
+    argv = ["live", "--ticks-dir", ticks, "--output", str(tmp_path / "p")]
+    assert main([*argv, "--bars", str(tmp_path / "b")]) == 2
+    assert "needs --checkpoint" in capsys.readouterr().err
+
+
+def test_cli_live_upserts_prices_and_folds_bars(spark, prices_path, tmp_path):
+    """``live --output --bars`` is one query: each micro-batch is
+    validated and deduplicated, upserted into the prices table, and the
+    same batch is folded into the bars log, so the bars count exactly
+    the accepted ticks."""
+    import threading
+    import time
+
+    from pyspark.sql import functions as F
+
+    from asset_prices_parquet_saver_spark.operators.analytics import ohlc_bars
+    from asset_prices_parquet_saver_spark.operators.incremental_agg import read_ohlc
+    from asset_prices_parquet_saver_spark.operators.merge import (
+        latest_ticks_per_day,
+        upsert_live_prices,
+    )
+    from asset_prices_parquet_saver_spark.schema import LIVE_TRADE_SCHEMA
+    from asset_prices_parquet_saver_spark.sources.prices_daily import read_prices_daily
+
+    def t(day, hour, minute=0):
+        return datetime.datetime(2024, 1, day, hour, minute)
+
+    rows = [
+        ("AAPL", None, t(3, 9)),  # earliest of its day, invalid
+        ("AAPL", 15.0, t(3, 9, 30)),
+        ("AAPL", 12.0, t(3, 10)),
+        ("AAPL", 12.0, t(3, 10)),  # repeated (symbol, ts)
+        ("AAPL", 13.0, t(4, 9)),
+        ("MSFT", 5.0, t(3, 11)),
+    ]
+    ticks = spark.createDataFrame(rows, LIVE_TRADE_SCHEMA)
+    drop = str(tmp_path / "ticks")
+    ticks.coalesce(1).write.parquet(drop)
+    existing = read_prices_daily(spark, prices_path)
+    value_cols = [c for c in existing.columns if c not in ("source", "day", "symbol", "timestamp")]
+    cols = ["source", "symbol", "timestamp", *value_cols]
+    alpaca = existing.filter(F.col("source") == "alpaca").withColumn("day", F.to_date("timestamp"))
+    want_prices = {
+        tuple(r) for r in upsert_live_prices(alpaca, latest_ticks_per_day(ticks))
+        .withColumn("source", F.lit("alpaca"))
+        .unionByName(existing.filter(F.col("source") != "alpaca").drop("day"), allowMissingColumns=True)
+        .select(*cols).collect()
+    }
+    accepted = ticks.filter(F.col("price").isNotNull()).dropDuplicates(["symbol", "ts"])
+    bar_cols = ["symbol", "day", "open", "high", "low", "close", "n_ticks"]
+    want_bars = {
+        tuple(r) for r in ohlc_bars(
+            accepted.withColumn("event_id", F.lit(0)),
+            key_col="symbol", price_col="price",
+        ).select(*bar_cols).collect()
+    }
+
+    bars = str(tmp_path / "bars")
+    rc = []
+    argv = [
+        "live", "--ticks-dir", drop, "--output", prices_path, "--bars", bars,
+        "--checkpoint", str(tmp_path / "ckpt"), "--interval", "1",
+    ]
+    before = {q.id for q in spark.streams.active}
+    runner = threading.Thread(target=lambda: rc.append(cli.main(argv)))
+    runner.start()
+    deadline = time.monotonic() + 120
+    while not (started := [q for q in spark.streams.active if q.id not in before]):
+        assert runner.is_alive() and time.monotonic() < deadline
+        time.sleep(0.2)
+    [query] = started
+    query.processAllAvailable()
+    query.stop()
+    runner.join(60)
+    assert rc == [0]
+
+    got_prices = {tuple(r) for r in read_prices_daily(spark, prices_path).select(*cols).collect()}
+    assert got_prices == want_prices
+    got_bars = {tuple(r) for r in read_ohlc(spark, bars).select(*bar_cols).collect()}
+    assert got_bars == want_bars
+    assert (datetime.date(2024, 1, 3), 15.0, 2) in {
+        (r["day"], r["open"], r["n_ticks"]) for r in read_ohlc(spark, bars).collect()
+        if r["symbol"] == "AAPL"
+    }
 
 
 def test_cli_report_reads_manifest_tables(spark, tmp_path, capsys):

@@ -1,134 +1,15 @@
-"""Incremental rollup maintenance: equivalence to full recompute,
-exactly-once refresh under crash replay, compaction invariance."""
+"""Incremental daily-bar maintenance: equivalence to the batch
+resample, exactly-once refresh under crash replay, compaction
+invariance."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
+import datetime as dt
+
 import pytest
 
 from asset_prices_parquet_saver_spark.operators import incremental_agg as ia
 from asset_prices_parquet_saver_spark.sources import manifest
-
-KEYS = ["grp"]
-SUMS = ["x"]
-
-
-def _batch(spark, rows):
-    return spark.createDataFrame(rows, "grp string, x double")
-
-
-def _full_recompute(spark, batches):
-    all_rows = batches[0]
-    for b in batches[1:]:
-        all_rows = all_rows.unionByName(b)
-    return {
-        r["grp"]: (r["n"], r["sx"], r["ax"])
-        for r in all_rows.groupBy("grp")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum(F.col("x").cast("decimal(28,2)")).cast("double").alias("sx"),
-            (
-                F.sum(F.col("x").cast("decimal(28,2)")).cast("double") / F.count("*")
-            ).alias("ax"),
-        )
-        .collect()
-    }
-
-
-def _read(spark, table):
-    return {
-        r["grp"]: (r["n"], r["sum_x"], r["avg_x"])
-        for r in ia.read_rollup(spark, table, KEYS, SUMS).collect()
-    }
-
-
-def test_incremental_equals_full_recompute(spark, tmp_path):
-    table = str(tmp_path / "rollup")
-    batches = [
-        _batch(spark, [("a", 1.5), ("a", 2.5), ("b", 10.0)]),
-        _batch(spark, [("a", 4.0), ("c", 7.25)]),
-        _batch(spark, [("b", 0.5), ("c", 0.75), ("c", 1.0)]),
-    ]
-    for i, b in enumerate(batches):
-        ia.refresh_rollup(b, table, KEYS, SUMS, txn=("job", i))
-    assert _read(spark, table) == _full_recompute(spark, batches)
-
-
-def test_refresh_is_o_batch_append(spark, tmp_path):
-    table = str(tmp_path / "rollup")
-    ia.refresh_rollup(_batch(spark, [("a", 1.0)]), table, KEYS, SUMS, txn=("job", 0))
-    segs_before = manifest._read_manifest(table)["segments"]
-    ia.refresh_rollup(_batch(spark, [("b", 2.0)]), table, KEYS, SUMS, txn=("job", 1))
-    segs_after = manifest._read_manifest(table)["segments"]
-    # append-log: the old segments are untouched, exactly one is added
-    assert segs_after[: len(segs_before)] == segs_before
-    assert len(segs_after) == len(segs_before) + 1
-
-
-def test_crash_replay_does_not_double_count(spark, tmp_path):
-    table = str(tmp_path / "rollup")
-    b0 = _batch(spark, [("a", 1.0), ("b", 2.0)])
-    ia.refresh_rollup(b0, table, KEYS, SUMS, txn=("job", 0))
-    before = _read(spark, table)
-    # foreachBatch replays the same epoch after a crash: must be a no-op
-    ia.refresh_rollup(b0, table, KEYS, SUMS, txn=("job", 0))
-    assert _read(spark, table) == before
-
-
-def test_compaction_preserves_results_and_folds_segments(spark, tmp_path):
-    table = str(tmp_path / "rollup")
-    batches = [
-        _batch(spark, [("a", 1.0), ("b", 2.0)]),
-        _batch(spark, [("a", 3.0)]),
-        _batch(spark, [("b", 4.0), ("c", 5.0)]),
-    ]
-    for i, b in enumerate(batches):
-        ia.refresh_rollup(b, table, KEYS, SUMS, txn=("job", i))
-    before = _read(spark, table)
-    ia.compact_rollup(spark, table, KEYS, SUMS)
-    assert manifest._read_manifest(table)["segments"][-1:] == manifest._read_manifest(table)["segments"]
-    assert len(manifest._read_manifest(table)["segments"]) == 1
-    assert _read(spark, table) == before
-    # the log keeps accepting appends after compaction
-    ia.refresh_rollup(_batch(spark, [("a", 10.0)]), table, KEYS, SUMS, txn=("job", 3))
-    got = _read(spark, table)
-    assert got["a"][0] == 3 and got["a"][1] == pytest.approx(14.0)
-
-
-def test_time_travel_reads_old_rollup_state(spark, tmp_path):
-    table = str(tmp_path / "rollup")
-    v0 = ia.refresh_rollup(_batch(spark, [("a", 1.0)]), table, KEYS, SUMS)
-    ia.refresh_rollup(_batch(spark, [("a", 9.0)]), table, KEYS, SUMS)
-    old = {
-        r["grp"]: r["sum_x"]
-        for r in ia.read_rollup(spark, table, KEYS, SUMS, version=v0).collect()
-    }
-    assert old == {"a": 1.0}
-
-
-def test_streaming_rollup_end_to_end(spark, tmp_path):
-    table = str(tmp_path / "rollup")
-    drop = tmp_path / "drop"
-    drop.mkdir()
-    b1 = _batch(spark, [("a", 1.0), ("b", 2.0)])
-    b2 = _batch(spark, [("a", 3.0), ("c", 4.0)])
-    b1.coalesce(1).write.mode("append").parquet(str(drop))
-    b2.coalesce(1).write.mode("append").parquet(str(drop))
-
-    stream = spark.readStream.schema("grp string, x double").parquet(str(drop))
-    q = ia.run_streaming_rollup(
-        stream,
-        table,
-        KEYS,
-        SUMS,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        available_now=True,
-    )
-    q.awaitTermination(120)
-    got = _read(spark, table)
-    assert got["a"] == (2, 4.0, 2.0)
-    assert got["b"] == (1, 2.0, 2.0)
-    assert got["c"] == (1, 4.0, 4.0)
 
 
 def _ticks(spark, rows):
@@ -137,13 +18,24 @@ def _ticks(spark, rows):
     )
 
 
+def _tick(i, minute, price, day=2, symbol="AAPL"):
+    return (i, dt.datetime(2024, 1, day, 9, minute), symbol, price)
+
+
+def _read(spark, table, version=None):
+    return {
+        (r["symbol"], str(r["day"])): (
+            r["open"], r["high"], r["low"], r["close"], r["n_ticks"], r["notional"],
+        )
+        for r in ia.read_ohlc(spark, table, version=version).collect()
+    }
+
+
 def test_incremental_ohlc_equals_batch_resample(spark, tmp_path):
     """The flagship domain composition: daily bars maintained with
     O(batch) refreshes must equal the batch OHLC resample over all
     ticks ever ingested — across arbitrary batch splits, crash
     replays, and compaction."""
-    import datetime as dt
-
     from asset_prices_parquet_saver_spark.operators import analytics as an
 
     def t(day, minute):
@@ -191,42 +83,11 @@ def test_incremental_ohlc_equals_batch_resample(spark, tmp_path):
     assert vol["AAPL"] == 41.0 and vol["MSFT"] == 11.0
 
 
-def test_streaming_ohlc_end_to_end(spark, tmp_path):
-    import datetime as dt
-
-    drop = tmp_path / "tick_drop"
-    drop.mkdir()
-    rows = [
-        (1, dt.datetime(2024, 1, 2, 9, 0), "AAPL", 10.0),
-        (2, dt.datetime(2024, 1, 2, 9, 30), "AAPL", 15.0),
-        (3, dt.datetime(2024, 1, 2, 10, 0), "AAPL", 12.0),
-    ]
-    _ticks(spark, rows[:2]).coalesce(1).write.mode("append").parquet(str(drop))
-    _ticks(spark, rows[2:]).coalesce(1).write.mode("append").parquet(str(drop))
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, symbol string, price double"
-    ).parquet(str(drop))
-    table = str(tmp_path / "bars")
-    q = ia.run_streaming_ohlc(
-        stream, table, checkpoint_dir=str(tmp_path / "ck"), available_now=True
-    )
-    q.awaitTermination(120)
-    bars = ia.read_ohlc(spark, table).collect()
-    assert len(bars) == 1
-    b = bars[0]
-    assert (b["open"], b["high"], b["low"], b["close"], b["n_ticks"]) == (
-        10.0, 15.0, 10.0, 12.0, 3,
-    )
-
-
 def test_ohlc_fold_invariant_to_random_batch_splits(spark, tmp_path):
     """Monoid property under adversarial splits: ANY partition of the
     tick set into ordered batches must fold to the batch-resample
     bars — including duplicated timestamps (id tie-break) and days
     split across many batches."""
-    import datetime as dt
-    import itertools
-
     from asset_prices_parquet_saver_spark.operators import analytics as an
 
     rows = [
@@ -259,62 +120,79 @@ def test_ohlc_fold_invariant_to_random_batch_splits(spark, tmp_path):
         assert got == want, f"split {si} diverged"
 
 
-def test_streaming_rollup_auto_compaction_bounds_segments(spark, tmp_path):
-    from asset_prices_parquet_saver_spark.sources import manifest
-
-    table = str(tmp_path / "rollup")
-    drop = tmp_path / "drop2"
-    drop.mkdir()
-    for i in range(6):
-        _batch(spark, [("a", float(i))]).coalesce(1).write.mode("append").parquet(str(drop))
-    # one file per micro-batch so six epochs append six segments
-    stream = (
-        spark.readStream.schema("grp string, x double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(drop))
-    )
-    q = ia.run_streaming_rollup(
-        stream,
-        table,
-        KEYS,
-        SUMS,
-        checkpoint_dir=str(tmp_path / "ck2"),
-        available_now=True,
-        compact_every=2,
-    )
-    q.awaitTermination(120)
-    # the log stayed bounded and the fold is unchanged
-    assert len(manifest._read_manifest(table)["segments"]) <= 3
-    got = _read(spark, table)
-    assert got["a"] == (6, 15.0, 2.5)
+def test_refresh_is_o_batch_append(spark, tmp_path):
+    table = str(tmp_path / "bars")
+    ia.refresh_ohlc(_ticks(spark, [_tick(1, 0, 1.0)]), table, txn=("job", 0))
+    segs_before = manifest._read_manifest(table)["segments"]
+    ia.refresh_ohlc(_ticks(spark, [_tick(2, 1, 2.0)]), table, txn=("job", 1))
+    segs_after = manifest._read_manifest(table)["segments"]
+    # append-log: the old segments are untouched, exactly one is added
+    assert segs_after[: len(segs_before)] == segs_before
+    assert len(segs_after) == len(segs_before) + 1
 
 
-def test_compaction_conflict_preserves_concurrent_epoch(spark, tmp_path):
+def test_crash_replay_does_not_double_count(spark, tmp_path):
+    table = str(tmp_path / "bars")
+    b0 = _ticks(spark, [_tick(1, 0, 1.0), _tick(2, 0, 2.0, symbol="MSFT")])
+    ia.refresh_ohlc(b0, table, txn=("job", 0))
+    before = _read(spark, table)
+    # foreachBatch replays the same epoch after a crash: must be a no-op
+    ia.refresh_ohlc(b0, table, txn=("job", 0))
+    assert _read(spark, table) == before
+
+
+def test_compaction_preserves_results_and_folds_segments(spark, tmp_path):
+    table = str(tmp_path / "bars")
+    batches = [
+        [_tick(1, 0, 1.0), _tick(2, 0, 2.0, symbol="MSFT")],
+        [_tick(3, 5, 3.0)],
+        [_tick(4, 5, 4.0, symbol="MSFT"), _tick(5, 0, 5.0, day=3)],
+    ]
+    for i, b in enumerate(batches):
+        ia.refresh_ohlc(_ticks(spark, b), table, txn=("job", i))
+    before = _read(spark, table)
+    ia.compact_ohlc(spark, table)
+    assert len(manifest._read_manifest(table)["segments"]) == 1
+    assert _read(spark, table) == before
+    # the log keeps accepting appends after compaction
+    ia.refresh_ohlc(_ticks(spark, [_tick(6, 9, 10.0)]), table, txn=("job", 3))
+    assert _read(spark, table)[("AAPL", "2024-01-02")] == (1.0, 10.0, 1.0, 10.0, 3, 14.0)
+
+
+def test_time_travel_reads_old_rollup_state(spark, tmp_path):
+    table = str(tmp_path / "bars")
+    v0 = ia.refresh_ohlc(_ticks(spark, [_tick(1, 0, 1.0)]), table)
+    ia.refresh_ohlc(_ticks(spark, [_tick(2, 5, 9.0)]), table)
+    assert _read(spark, table, version=v0) == {
+        ("AAPL", "2024-01-02"): (1.0, 1.0, 1.0, 1.0, 1, 1.0)
+    }
+
+
+def test_compaction_conflict_preserves_concurrent_epoch(spark, tmp_path, monkeypatch):
     """The lost-update race: an epoch appended between compaction's
-    read and its rewrite must survive. The pinned compaction raises
-    CommitConflict (maybe_compact turns that into a skip) instead of
-    folding the new epoch away while carrying its txn forward — the
-    combination that made the loss unrecoverable under replay."""
-    table = str(tmp_path / "roll")
-    ia.refresh_rollup(_batch(spark, [("a", 1.0)]), table, KEYS, SUMS)
-    ia.refresh_rollup(_batch(spark, [("a", 2.0)]), table, KEYS, SUMS)
-    v = manifest.current_version(table)
-    log = manifest.read_versioned(spark, table, version=v)
-    folded = log.groupBy("grp").agg(
-        F.sum("_cnt").cast("long").alias("_cnt"),
-        F.sum("_sum_x").alias("_sum_x"),
-    )
-    # concurrent epoch lands between the compactor's read and publish
-    ia.refresh_rollup(
-        _batch(spark, [("a", 10.0)]), table, KEYS, SUMS, txn=("app", 3)
-    )
+    read and its rewrite must survive. compact_ohlc's pinned commit
+    raises CommitConflict instead of folding the new epoch away while
+    carrying its txn forward — the combination that made the loss
+    unrecoverable under replay."""
+    table = str(tmp_path / "bars")
+    ia.refresh_ohlc(_ticks(spark, [_tick(1, 0, 1.0)]), table)
+    ia.refresh_ohlc(_ticks(spark, [_tick(2, 1, 2.0)]), table)
+    read_versioned = manifest.read_versioned
+
+    def read_then_race(*args, **kwargs):
+        log = read_versioned(*args, **kwargs)
+        # a concurrent epoch lands between the compactor's read and publish
+        monkeypatch.setattr(manifest, "read_versioned", read_versioned)
+        ia.refresh_ohlc(_ticks(spark, [_tick(3, 2, 10.0)]), table, txn=("app", 3))
+        return log
+
+    monkeypatch.setattr(manifest, "read_versioned", read_then_race)
     with pytest.raises(manifest.CommitConflict):
-        manifest.commit_versioned(folded, table, expect_version=v)
-    # nothing lost: the rollup still includes the concurrent epoch
-    assert _read(spark, table)["a"] == (3, 13.0, 13.0 / 3)
-    # maybe_compact retries cleanly on the fresh state next trigger
-    ran = ia.maybe_compact(
-        spark, table, lambda s, t: ia.compact_rollup(s, t, KEYS, SUMS),
-        max_segments=1,
-    )
-    assert ran and _read(spark, table)["a"] == (3, 13.0, 13.0 / 3)
+        ia.compact_ohlc(spark, table)
+    # nothing lost: the bars still include the concurrent epoch
+    want = {("AAPL", "2024-01-02"): (1.0, 10.0, 1.0, 10.0, 3, 13.0)}
+    assert _read(spark, table) == want
+    # the next compaction folds the fresh state cleanly
+    ia.compact_ohlc(spark, table)
+    assert len(manifest._read_manifest(table)["segments"]) == 1
+    assert _read(spark, table) == want
