@@ -25,6 +25,20 @@ compute (a fresh-JVM stderr audit of the globalorder site saw zero
 "Block already exists" warnings), and results are correct either way
 — both consumers share one RDD identity.
 
+Failure modes and limits of a pin:
+
+- Executor loss: pinned blocks live only in the executor that
+  computed them. They are not replicated and the checkpoint cuts them
+  from their lineage, so losing that executor fails the query that
+  reads them instead of recomputing them.
+- Lifetime: nothing unpersists a pin. Its blocks go only when the
+  ContextCleaner collects the checkpointed RDD after the last
+  reference dies on the driver, so a long session holding plans keeps
+  their blocks.
+- Optimization barrier: the optimizer sees a pin as a scan of
+  finished rows. Filters and projections a caller adds on top are not
+  pushed into the pinned plan.
+
 ``ENABLED`` is a measurement seam for scripts/ab_interleaved.py —
 flipping it False rebuilds plans in the duplicated form so the pin's
 win is measurable inside one session. Always True in production.

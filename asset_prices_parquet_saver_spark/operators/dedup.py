@@ -912,11 +912,10 @@ def build_ensemble_index(
     (p, band, bucket) — the contamination-check-as-a-service shape:
     build the stratified index over the 100 TB corpus ONCE, then every
     benchmark/probe batch (:func:`containment_probe_indexed`) shuffles
-    only itself; index files are read bucket-in-place (the
-    ``incremental_dedup.substring_increment_bucketed`` probe
-    discipline). Each row carries the doc's shingle array so
-    candidate verification happens inline on the join output — no
-    second corpus join, no corpus re-scan.
+    only itself; index files are read bucket-in-place. Each row
+    carries the doc's shingle array so candidate verification happens
+    inline on the join output — no second corpus join, no corpus
+    re-scan.
 
     The banding parameters (threshold, q_min, num_hashes, max_stratum,
     n, hash_family) are part of the index's identity: probes MUST pass

@@ -35,6 +35,11 @@ from the materialized survivors (one probe per batch) this layout was
 as fast as either band layout or faster. Indexes larger than about 20k
 documents were not measured: if a workload at that scale appears,
 measure it before bringing back a banded layout.
+
+The exact-substring window index (:func:`substring_increment`) is a
+manifest append-log table as well, so both incremental indexes share
+one commit protocol: txn-idempotent appends and version-pinned
+compaction (``manifest.compact_versioned``).
 """
 
 from __future__ import annotations
@@ -51,44 +56,9 @@ from asset_prices_parquet_saver_spark.operators.dedup import (
 )
 from asset_prices_parquet_saver_spark.functions.portable_hash import md5_int60
 from asset_prices_parquet_saver_spark.sources import manifest
-from asset_prices_parquet_saver_spark.sources.warehouse import (
-    ensure_bucketed_table,
-    heal_table_location,
-)
-
-#: fault-injection seam (tests only): runs between the staging rewrite
-#: and the pre-publish drift check of :func:`compact_window_index`,
-#: i.e. inside the window where a concurrent append would historically
-#: have been lost.
-_test_pre_publish_hook = None
 
 #: signature-index schema (see minhash_dedup's arrs frame)
 INDEX_SCHEMA = "id long, arr array<long>, n_sh int, sig array<long>"
-
-
-def _lock_path(spark: SparkSession, table: str, kind: str) -> str:
-    """Advisory-lock file for a catalog table, placed in the WAREHOUSE
-    ROOT (not the table directory): the table dir is deleted by the
-    compactor's DROP and moved by its RENAME, either of which would
-    destroy a held lock file mid-swap."""
-    import os
-
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    wh = wh[len("file:"):] if wh.startswith("file:") else wh
-    os.makedirs(wh, exist_ok=True)
-    return os.path.join(wh, f"{table.replace('.', '__')}.{kind}.lock")
-
-
-def _table_lock(spark: SparkSession, table: str):
-    """One advisory lock per bucketed index table, shared by appenders
-    (:func:`_append_windows`, ``urls.append_url_index``) and the
-    compactor (:func:`compact_window_index`): with both sides holding
-    it, no append can land inside the compactor's rewrite→verify→swap
-    window, closing the check-then-act race on a local filesystem. (On
-    an object-store catalog the answer is an Iceberg/Delta snapshot
-    commit instead.) The lock file keeps its ``band_index`` name, so
-    writers of earlier builds still exclude the same file."""
-    return manifest.path_lock(_lock_path(spark, table, "band_index"))
 
 
 def signature_frame(
@@ -386,98 +356,65 @@ def run_streaming_dedup(
 WINDOW_INDEX_SCHEMA = "h long, id long"
 
 
-def ensure_window_index(
-    spark: SparkSession, table: str, num_buckets: int = 32
-) -> None:
-    """Create the physically bucketed substring-window index if
-    absent: a managed table bucketed by ``h`` — the probe join key —
-    so index files are hash-partitioned on disk and the per-batch
-    probe reads them in place (no exchange, no sort of the O(corpus)
-    side). A ``_compacting`` staging orphan left by a crashed
-    :func:`compact_window_index` holds the ONLY copy of the index and
-    is renamed back, never shadowed by an empty re-create
-    (:func:`~asset_prices_parquet_saver_spark.sources.warehouse.
-    ensure_bucketed_table`)."""
-    ensure_bucketed_table(spark, table, WINDOW_INDEX_SCHEMA, ("h",), num_buckets)
+def _window_hits(wins: DataFrame, index: DataFrame) -> DataFrame:
+    """(id, pos) of the batch windows whose hash the index holds under
+    a DIFFERENT doc id. INNER join, not semi: Spark broadcasts only the
+    right side of a semi join, which here is the O(corpus) index; an
+    inner join lets the planner broadcast the smaller side, which is
+    the checkpointed batch once the index outgrows it, so the index
+    scan streams through without an exchange (the caller's distinct
+    removes the per-match duplicates)."""
+    return wins.alias("a").join(
+        index.alias("b"),
+        (F.col("a.h") == F.col("b.h")) & (F.col("a.id") != F.col("b.id")),
+    ).select(F.col("a.id").alias("id"), F.col("a.pos").alias("pos"))
 
 
-def _append_windows(
-    spark: SparkSession, wins: DataFrame, window_table: str, num_buckets: int
-) -> None:
-    """Append (h, id) window rows to the bucketed index under the
-    table lock shared with :func:`compact_window_index`, then refresh
-    THIS session's relation cache: the append may run in a cloned
-    session (streaming foreachBatch), which invalidates only the
-    clone's cache, and the next probe would otherwise see a stale
-    (possibly empty) listing."""
-    with _table_lock(spark, window_table):
-        (
-            wins.select("h", "id")
-            .write.bucketBy(num_buckets, "h")
-            .sortBy("h")
-            .mode("append")
-            .saveAsTable(window_table)
-        )
-    spark.catalog.refreshTable(window_table)
-
-
-def substring_increment_bucketed(
+def substring_increment(
     spark: SparkSession,
     new_docs: DataFrame,
-    window_table: str,
+    window_index: str,
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 5,
-    num_buckets: int = 32,
     append_windows: bool = True,
 ) -> DataFrame:
     """Incremental exact-substring dedup (the batch-arrival shape of
     :func:`~asset_prices_parquet_saver_spark.operators.dedup.
     duplicated_spans`): duplicated token spans of the NEW batch's
     documents against everything seen before — a window counts as
-    duplicated when its hash exists in the persisted index under a
-    DIFFERENT doc id, or verbatim in a second batch document. With the
+    duplicated when its hash exists in the window index at
+    ``window_index`` (a manifest append-log table,
+    :data:`WINDOW_INDEX_SCHEMA`; a missing table reads as empty) under
+    a DIFFERENT doc id, or verbatim in a second batch document. With the
     index holding exactly the prior corpus's windows this reproduces
     the from-scratch ≥2-distinct-docs semantics restricted to batch
     ids (equivalence test-pinned), without rescanning the corpus.
 
-    Appends the batch's window rows (unless ``append_windows=False``
-    — for callers that commit a TRANSFORMED batch to the corpus and
-    must index the committed text instead, e.g.
-    :func:`run_streaming_substring_scrub`) and returns the span
-    relation (id, span_start, span_end, span_tokens).
+    Appends the batch's window rows as one ``manifest.commit_append``
+    (unless ``append_windows=False`` — for callers that commit a
+    TRANSFORMED batch to the corpus and must index the committed text
+    instead, e.g. :func:`run_streaming_substring_scrub`) and returns
+    the span relation (id, span_start, span_end, span_tokens).
 
-    Scale shape: the batch tokenizes/hashes in one Arrow kernel pass;
-    the probe is a shuffled-hash join in which the BATCH builds the
-    hash side and the bucketed index streams through IN PLACE
-    (plan-asserted: one exchange — the batch's — `Bucketed: true` on
-    the index scan); per-batch cost is O(batch windows + colliding
-    index rows), never O(corpus). The appends are metastore writes,
-    not single-file-atomic commits: replays are harmless for results
-    via the equal-id exclusion but grow the index until a
-    :func:`compact_window_index` (an Iceberg/Delta table gives atomic
-    appends)."""
+    Scale shape: the batch tokenizes/hashes in one Arrow kernel pass
+    and is checkpointed, so the planner sees its size; once the index
+    is the larger side the probe (:func:`_window_hits`) broadcasts the
+    batch and streams the index scan (plan-asserted: no exchange over
+    the index scan). Per-batch cost is O(batch windows) plus one pass
+    over the index files. A batch too large to broadcast makes the
+    join shuffle the index (SCALE.md). Replays are harmless for results via the equal-id
+    exclusion; without a txn each call appends (the streaming wrapper
+    passes one), and ``manifest.compact_versioned`` folds the segments
+    when they pile up."""
     from asset_prices_parquet_saver_spark.operators.dedup import (
         _merge_spans,
         window_rows,
     )
 
-    ensure_window_index(spark, window_table, num_buckets)
     wins = window_rows(new_docs, id_col, text_col, k).localCheckpoint()
-    idx = spark.table(window_table)
-    # INNER join, not semi: a semi join must hash-build its RIGHT side
-    # (Spark rejects build-left for semi), which would build the
-    # O(corpus) index per task — the in-place probe shape (batch as
-    # the hinted build side, index streamed in place) needs inner +
-    # the downstream distinct
-    hits_corpus = (
-        wins.alias("a")
-        .hint("shuffle_hash")
-        .join(
-            idx.alias("b"),
-            (F.col("a.h") == F.col("b.h")) & (F.col("a.id") != F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id"), F.col("a.pos").alias("pos"))
+    idx = manifest.read_versioned(
+        spark, window_index, schema=WINDOW_INDEX_SCHEMA
     )
     dup_batch = (
         wins.groupBy("h")
@@ -486,134 +423,32 @@ def substring_increment_bucketed(
         .select("h")
     )
     hits_batch = wins.join(dup_batch, "h").select("id", "pos")
-    hits = hits_corpus.unionByName(hits_batch).distinct()
+    hits = _window_hits(wins, idx).unionByName(hits_batch).distinct()
     spans = _merge_spans(hits, k).localCheckpoint()
     if append_windows:
-        _append_windows(spark, wins, window_table, num_buckets)
+        manifest.commit_append(wins.select("h", "id"), window_index)
     return spans
-
-
-def compact_window_index(
-    spark: SparkSession, table: str, num_buckets: int = 32
-) -> tuple[int, int]:
-    """Compact the substring window index's accumulated append files.
-
-    Every :func:`_append_windows` append writes a fresh file per
-    (task, bucket), so after B batches the probe scan opens
-    O(B × buckets) small files — the classic small-files decay of any
-    append-log index. Rewrite into a staging table with ONE file per
-    non-empty bucket: repartition by the COMPUTED bucket id
-    (``pmod(hash(h), num_buckets)``, the writer's own Murmur3-pmod
-    bucket expression), so all rows of a bucket land on one task and
-    the bucketed writer emits a single file for it. Repartitioning on
-    the raw key column is NOT equivalent: the write-side task layout
-    doesn't preserve the shuffle's partition-per-bucket mapping, and
-    each task then spills one file per bucket it happens to hold.
-
-    Multi-writer safety, two layers:
-
-    1. **vs appenders** — a batch APPENDED to the index during the
-       rewrite would be silently dropped from the folded table (the
-       lost-update the manifest CAS exists for). The compactor records
-       the table's file listing at read time, then takes the SAME
-       advisory lock every append holds (:func:`_table_lock`) and
-       re-verifies the listing under it before the swap: an append
-       that landed during the rewrite raises
-       :class:`~..sources.manifest.CommitConflict` (staging discarded,
-       live index untouched — best-effort maintenance, re-run); an
-       append that arrives after lock acquisition blocks until the
-       swap completes, so the historical check-then-act LOST-UPDATE
-       window between re-verify and DROP is closed. Residual race,
-       read-side: an appender's PROBE scan (``spark.table(index)``
-       read while computing spans) runs outside any lock, so a scan in
-       flight across the DROP/RENAME swap can fail transiently on
-       deleted files — a retryable read error, not a lost update.
-       Holding the table lock across the probe read would close it at
-       the cost of serializing every probe with compaction; on plain
-       Parquet we accept the transient instead (an Iceberg/Delta
-       snapshot read is the zero-cost fix).
-    2. **vs other compactors** — a whole-run ``_COMPACTOR.lock``
-       serializes compactions, so two concurrent compactors can never
-       interleave their staging rewrites or DROP/RENAME swaps (lock
-       order: compactor lock, then table lock — appenders take only
-       the latter, so no deadlock).
-
-    Crash recovery: a compaction that died between its DROP and
-    RENAME leaves the only copy of the index in the ``_compacting``
-    staging table; both this function and :func:`ensure_window_index`
-    rename it back into place.
-
-    On an Iceberg / Delta catalog this whole function is a
-    rewrite-data-files action with a snapshot commit and a zero-width
-    window instead.
-
-    Returns ``(files_before, files_after)``."""
-    from asset_prices_parquet_saver_spark.sources.manifest import CommitConflict
-
-    staging = f"{table}_compacting"
-    # Recover a crashed predecessor FIRST: if the index is gone but the
-    # staging table exists, the previous compaction died between DROP
-    # and RENAME and staging holds the only copy — renaming it into
-    # place must precede the stale-staging drop below, which is safe
-    # only once the main table exists. heal first: the killed run may
-    # also have orphaned the main table's directory, which would block
-    # the rename into place.
-    if not spark.catalog.tableExists(table) and spark.catalog.tableExists(staging):
-        heal_table_location(spark, table)
-        spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-    with manifest.path_lock(_lock_path(spark, table, "compactor")):
-        spark.sql(f"DROP TABLE IF EXISTS {staging}")
-        heal_table_location(spark, staging)  # orphaned staging dir
-        cur = spark.table(table)
-        expect = sorted(cur.inputFiles())
-        files_before = len(expect)
-        bucket_id = F.pmod(F.hash("h"), F.lit(num_buckets))
-        (
-            cur.repartition(num_buckets, bucket_id)
-            .write.bucketBy(num_buckets, "h")
-            .sortBy("h")
-            .mode("overwrite")
-            .saveAsTable(staging)
-        )
-        if _test_pre_publish_hook is not None:
-            _test_pre_publish_hook()
-        with _table_lock(spark, table):
-            # refresh first: the catalog caches the relation's file
-            # index, and a stale listing here would false-pass the
-            # drift check
-            spark.catalog.refreshTable(table)
-            if sorted(spark.table(table).inputFiles()) != expect:
-                spark.sql(f"DROP TABLE IF EXISTS {staging}")
-                raise CommitConflict(
-                    f"{table}: index files changed during compaction — a "
-                    "concurrent append landed; the rewrite was discarded "
-                    "(re-run to compact the new state)"
-                )
-            spark.sql(f"DROP TABLE {table}")
-            spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-    return files_before, len(spark.table(table).inputFiles())
 
 
 def run_streaming_substring_scrub(
     spark: SparkSession,
     docs_stream: DataFrame,
-    window_table: str,
+    window_index: str,
     corpus_path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 5,
-    num_buckets: int = 32,
     checkpoint_dir: str | None = None,
     available_now: bool = False,
 ):
     """Streaming corpus ingestion with online EXACT-SUBSTRING
     scrubbing: every micro-batch's duplicated spans (vs everything
-    seen before — :func:`substring_increment_bucketed`) are excised
-    and the SCRUBBED documents appended to the corpus via an
-    epoch-idempotent manifest commit. Unlike the near-dup streaming
-    path (which drops whole documents), substring scrubbing keeps
-    every document and removes only the verbatim-repeated token runs —
-    the Lee et al. curation applied at ingestion time.
+    seen before — :func:`substring_increment`) are excised and the
+    SCRUBBED documents appended to the corpus via an epoch-idempotent
+    manifest commit. Unlike the near-dup streaming path (which drops
+    whole documents), substring scrubbing keeps every document and
+    removes only the verbatim-repeated token runs — the Lee et al.
+    curation applied at ingestion time.
 
     Index invariant: the index receives the SCRUBBED batch's windows
     (what was committed to the corpus), not the raw batch's — so
@@ -625,13 +460,14 @@ def run_streaming_substring_scrub(
     stay scrubbed for future batches because the FIRST occurrence —
     the one that survives — remains indexed.
 
-    Replay safety: the span computation is replay-deterministic (a
-    replayed batch's own indexed windows are excluded by the equal-id
-    rule), and the corpus commit carries the foreachBatch epoch in its
-    txn record, so a crashed epoch re-runs to the same scrubbed rows
-    and skips the append if it already landed. The window-index append
-    itself is a metastore write (not idempotent — replays grow it
-    harmlessly; :func:`compact_window_index` reclaims)."""
+    Replay safety: both commits carry the foreachBatch epoch in their
+    txn record (``("substring-corpus", epoch)``, then
+    ``("substring-windows", epoch)``), so a replayed epoch skips every
+    commit that already landed. The span computation is
+    replay-deterministic (a replayed batch's own indexed windows are
+    excluded by the equal-id rule), so a crash between the two commits
+    re-runs to the same scrubbed rows, skips the corpus append and
+    applies the missing index append."""
     from asset_prices_parquet_saver_spark.operators.dedup import (
         excise_spans,
         window_rows,
@@ -640,8 +476,8 @@ def run_streaming_substring_scrub(
     def handle(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
-        spans = substring_increment_bucketed(
-            spark, batch, window_table, id_col, text_col, k, num_buckets,
+        spans = substring_increment(
+            spark, batch, window_index, id_col, text_col, k,
             append_windows=False,
         )
         clean = excise_spans(batch, id_col, text_col, spans)
@@ -661,9 +497,10 @@ def run_streaming_substring_scrub(
             scrubbed, corpus_path, txn=("substring-corpus", epoch_id)
         )
         # index exactly what was committed: the scrubbed text's windows
-        _append_windows(
-            spark, window_rows(scrubbed, id_col, text_col, k), window_table,
-            num_buckets,
+        manifest.commit_append(
+            window_rows(scrubbed, id_col, text_col, k).select("h", "id"),
+            window_index,
+            txn=("substring-windows", epoch_id),
         )
 
     writer = docs_stream.writeStream.outputMode("append").foreachBatch(handle)

@@ -206,9 +206,7 @@ def tfidf_top_terms(
 
     big = _plan_size_bytes(df) >= (64 << 20)
     if big:
-        par = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < par:
-            df = df.repartition(par)  # spread the kernel across all cores
+        df = spread_narrow(df)  # spread the kernel across all cores
     # one corpus scan: doclen / dfreq / ndocs all derive from the tf
     # relation, which is materialized once (without the barrier the
     # optimizer plans four independent scans of the corpus)
@@ -730,9 +728,7 @@ def unigram_logppl(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     second doc-keyed combinable aggregation joined to the (usually
     broadcast-small) term-count relation. Two passes over the token
     stream, nothing global."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)  # unserialize the interpreted words() HOF
+    df = spread_narrow(df)  # unserialize the interpreted words() HOF
     toks = df.select(
         F.col(id_col).alias("id"), F.explode(words(F.col(text_col))).alias("term")
     )
@@ -779,9 +775,7 @@ def bigram_logppl(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     conditioning counts are two map-side-combinable shuffles; V is a
     1-row broadcast; the per-doc average is a doc-keyed combinable
     aggregation."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)  # unserialize the interpreted words() HOF
+    df = spread_narrow(df)  # unserialize the interpreted words() HOF
     toks = df.select(
         F.col(id_col).alias("id"), words(F.col(text_col)).alias("toks")
     ).filter(F.size("toks") >= 2)
@@ -928,9 +922,7 @@ def winnowing_fingerprints(
                 pd.DataFrame({"id": out_ids, "fingerprint": out_fps})
             )
 
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)  # spread the kernel across all cores
+    df = spread_narrow(df)  # spread the kernel across all cores
     return (
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
         .mapInPandas(winnow, "id long, fingerprint long")
@@ -1034,9 +1026,7 @@ def gopher_quality_flags(df: DataFrame, id_col: str, text_col: str) -> DataFrame
                 )
             yield pd.DataFrame(out)
 
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)  # spread the kernel across all cores
+    df = spread_narrow(df)  # spread the kernel across all cores
     return (
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
         .mapInPandas(
@@ -1106,9 +1096,7 @@ def positional_index(
     if spread is None:
         spread = _plan_size_bytes(df) >= (64 << 20)
     if spread:
-        par = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < par:
-            df = df.repartition(par)  # unserialize the interpreted words() HOF
+        df = spread_narrow(df)  # unserialize the interpreted words() HOF
     return df.select(
         F.col(id_col).alias("id"),
         F.posexplode(words(F.col(text_col))).alias("pos0", "term"),
@@ -1213,9 +1201,8 @@ def build_positional_index(
     num_buckets: int = 32,
 ) -> None:
     """Persist the positional postings as a managed table PHYSICALLY
-    BUCKETED by term — the retrieval twin of the substring window
-    index (``incremental_dedup.substring_increment_bucketed``): a
-    phrase/proximity query against the table is a bucket-PRUNED scan
+    BUCKETED by term: a phrase/proximity query against the table is a
+    bucket-PRUNED scan
     (Spark reads only the buckets the term IN-predicate hashes to —
     plan shows ``SelectedBucketsCount``) feeding the same (id, pos)
     equi-joins, so query cost is postings-of-the-query-terms, with no
@@ -1350,9 +1337,7 @@ def pmi_cooccurrence(
             part["c"] = part["c"].astype("int64")
             yield from chunked(part)
 
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)  # spread the kernel across all cores
+    df = spread_narrow(df)  # spread the kernel across all cores
     w = words(F.col(text_col))
     pair_parts = df.select(F.col(text_col)).mapInPandas(
         pair_counts_kernel, "a string, b string, c long"

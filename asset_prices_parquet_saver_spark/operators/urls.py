@@ -16,9 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from asset_prices_parquet_saver_spark.sources.warehouse import (
-    ensure_bucketed_table,
-)
+from asset_prices_parquet_saver_spark.sources import manifest
 
 #: query parameters that identify a CLICK, not a resource — dropped
 #: during canonicalization (the standard tracking-param scrub list).
@@ -154,127 +152,113 @@ def domain_report(df: DataFrame, url_col: str) -> DataFrame:
 URL_INDEX_SCHEMA = "canon string, first_key long"
 
 
-def _frontier_accept(
-    spark, new_docs: DataFrame, table: str, url_col: str, key_col: str,
-    num_buckets: int,
-) -> DataFrame:
-    """The frontier probe: canonicalize, keep each canonical URL's
-    first row within the batch, probe the seen-set, and return the
-    accepted rows, materialized, with their ``_canon`` column. Creates
-    the seen-set (bucketed by ``canon``, the probe key) if absent."""
-    from asset_prices_parquet_saver_spark.operators.dedup import exact_dedup
-
-    ensure_bucketed_table(
-        spark, table, URL_INDEX_SCHEMA, ("canon",), num_buckets
-    )
-    canon = new_docs.withColumn("_canon", canonical_url(F.col(url_col)))
-    batch_first = exact_dedup(canon, ["_canon"], key_col).localCheckpoint()
-    idx = spark.table(table)
-    hits = (
+def _seen_hits(batch_first: DataFrame, index: DataFrame) -> DataFrame:
+    """The batch canonicals the seen-set already holds. INNER join, not
+    anti: Spark broadcasts only the right side of an anti join, which
+    here is the O(seen URLs) index; an inner join lets the planner
+    broadcast the smaller side, which is the checkpointed batch once
+    the seen-set outgrows it, so the index scan streams through without
+    an exchange. The anti semantics come from the small hit-set's
+    second join (:func:`_frontier_accept`)."""
+    return (
         batch_first.select("_canon")
-        .hint("shuffle_hash")
-        .join(idx, F.col("_canon") == F.col("canon"))
+        .join(index, F.col("_canon") == F.col("canon"))
         .select("_canon")
         .distinct()
     )
+
+
+def _frontier_accept(
+    spark, new_docs: DataFrame, seen_index: str, url_col: str, key_col: str
+) -> DataFrame:
+    """The frontier probe: canonicalize, keep each canonical URL's
+    first row within the batch, probe the seen-set (a missing table
+    reads as empty), and return the accepted rows, materialized, with
+    their ``_canon`` column."""
+    from asset_prices_parquet_saver_spark.operators.dedup import exact_dedup
+
+    canon = new_docs.withColumn("_canon", canonical_url(F.col(url_col)))
+    batch_first = exact_dedup(canon, ["_canon"], key_col).localCheckpoint()
+    idx = manifest.read_versioned(spark, seen_index, schema=URL_INDEX_SCHEMA)
+    hits = _seen_hits(batch_first, idx)
     return batch_first.join(hits, "_canon", "left_anti").localCheckpoint()
+
+
+def _seen_rows(accepted: DataFrame, key_col: str) -> DataFrame:
+    """Seen-set rows (:data:`URL_INDEX_SCHEMA`) for accepted rows."""
+    return accepted.select(
+        F.col("_canon").alias("canon"),
+        F.col(key_col).cast("long").alias("first_key"),
+    )
 
 
 def frontier_filter(
     spark,
     new_docs: DataFrame,
-    table: str,
+    seen_index: str,
     url_col: str,
     key_col: str,
-    num_buckets: int = 32,
     append: bool = True,
 ) -> DataFrame:
     """Crawl-frontier URL dedup: of a batch of candidate URLs, the
     rows whose CANONICAL URL is both new within the batch (smallest
     ``key_col`` claims it, full-row tie-broken — :func:`url_dedup`'s
-    survivor rule) and absent from the persisted seen-set. Appends the
-    accepted canonicals (unless ``append=False`` — the streaming
+    survivor rule) and absent from the seen-set at ``seen_index`` (a
+    manifest append-log table). Appends the accepted canonicals as one
+    ``manifest.commit_append`` (unless ``append=False`` — the streaming
     wrapper commits the corpus FIRST, then indexes what it committed)
     and returns the accepted rows with the batch's original columns.
 
-    Scale shape: batch canonicalization is a narrow map; the seen-set
-    probe is an INNER join in which the BATCH builds the hash side
-    (``shuffle_hash`` hint) and the bucketed index streams through IN
-    PLACE — an anti join would hash-build the O(corpus) index per task
-    (Spark rejects build-left for anti), so the anti semantics come
-    from the small hit-set's second join. Per-batch cost is
-    O(batch + colliding index rows), never O(seen URLs). Same
-    metastore-append caveats as the substring window index (non-atomic
-    appends; replays are harmless for results — a replayed batch's
-    canonicals are already indexed, so it accepts nothing new)."""
-    accepted = _frontier_accept(
-        spark, new_docs, table, url_col, key_col, num_buckets
-    )
+    Scale shape: batch canonicalization is a narrow map; once the
+    seen-set is the larger side, its probe (:func:`_seen_hits`)
+    broadcasts the checkpointed batch and streams the index scan with
+    no exchange over it (a seen-set smaller than the batch is the side
+    broadcast instead). Per-batch cost is O(batch) plus one pass over
+    the index files; a batch too large to broadcast makes the join
+    shuffle the index (SCALE.md). Replays are
+    harmless for results: a replayed batch's canonicals are already
+    indexed, so it accepts nothing new."""
+    accepted = _frontier_accept(spark, new_docs, seen_index, url_col, key_col)
     if append:
-        append_url_index(spark, accepted, table, key_col, num_buckets)
+        manifest.commit_append(_seen_rows(accepted, key_col), seen_index)
     return accepted.drop("_canon")
-
-
-def append_url_index(
-    spark, accepted: DataFrame, table: str, key_col: str,
-    num_buckets: int = 32,
-) -> None:
-    """Append accepted (``_canon``, key) rows to the seen-set under
-    the shared table lock, then refresh THIS session's relation cache
-    (the append may run in a streaming clone session — the r10
-    foreachBatch staleness lesson)."""
-    from asset_prices_parquet_saver_spark.operators.incremental_dedup import (
-        _table_lock,
-    )
-
-    rows = accepted.select(
-        F.col("_canon").alias("canon"),
-        F.col(key_col).cast("long").alias("first_key"),
-    )
-    with _table_lock(spark, table):
-        (
-            rows.write.bucketBy(num_buckets, "canon")
-            .sortBy("canon")
-            .mode("append")
-            .saveAsTable(table)
-        )
-    spark.catalog.refreshTable(table)
 
 
 def run_streaming_frontier(
     spark,
     docs_stream: DataFrame,
-    table: str,
+    seen_index: str,
     corpus_path: str,
     url_col: str = "url",
     key_col: str = "doc_id",
-    num_buckets: int = 32,
     checkpoint_dir: str | None = None,
     available_now: bool = False,
 ):
     """Streaming crawl ingestion with online frontier dedup: every
     micro-batch keeps only first-seen canonical URLs (vs everything
-    ever accepted) and appends them to the corpus via an
-    epoch-idempotent manifest commit; the seen-set indexes exactly
-    what was committed. Corpus commit goes FIRST (the streaming-dedup
-    crash discipline): a crash between the two commits replays the
-    batch, accepts the same rows (their canonicals are still absent
-    from the index), skips the corpus append via its txn record, and
-    applies the missing index append — no window loses or duplicates
+    ever accepted) and appends them to the corpus; the seen-set indexes
+    exactly what was committed. Both commits carry the foreachBatch
+    epoch in their txn record (``("url-frontier-corpus", epoch)``, then
+    ``("url-frontier-index", epoch)``), so a replayed epoch skips every
+    commit that already landed. Corpus commit goes FIRST (the
+    streaming-dedup crash discipline): a crash between the two commits
+    replays the batch, accepts the same rows (their canonicals are
+    still absent from the index), skips the corpus append and applies
+    the missing index append — no epoch loses or duplicates
     documents."""
-    from asset_prices_parquet_saver_spark.sources import manifest
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
-        accepted = _frontier_accept(
-            spark, batch, table, url_col, key_col, num_buckets
-        )
+        accepted = _frontier_accept(spark, batch, seen_index, url_col, key_col)
         manifest.commit_append(
             accepted.drop("_canon"), corpus_path,
             txn=("url-frontier-corpus", epoch_id),
         )
-        append_url_index(spark, accepted, table, key_col, num_buckets)
+        manifest.commit_append(
+            _seen_rows(accepted, key_col), seen_index,
+            txn=("url-frontier-index", epoch_id),
+        )
 
     writer = docs_stream.writeStream.outputMode("append").foreachBatch(handle)
     if checkpoint_dir:

@@ -8576,7 +8576,7 @@ def ann_pq_topk_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- X+ crawl frontier, gated END-TO-END: seed the persisted
 # canonical-URL seen-set from the docs with doc_id < 250, probe the
 # rest as an arriving batch through urls.frontier_filter (throwaway
-# temp metastore table), and return the ACCEPTED rows. The oracle
+# manifest table in a temp dir), and return the ACCEPTED rows. The oracle
 # replays the construction + canonicalization rule: batch rows whose
 # canonical is absent from the seed set and first (min doc_id) within
 # the batch. By the synthetic URL rule, canon is a function of
@@ -8600,26 +8600,28 @@ def ann_pq_topk_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def url_frontier_new(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X+: crawl-frontier URL dedup against a persisted bucketed
+    """X+: crawl-frontier URL dedup against a persisted manifest
     seen-set (urls.frontier_filter): accepted = first-seen canonical
-    URLs only; probe cost O(batch), never O(seen URLs)."""
+    URLs only; the probe broadcasts the smaller of batch and seen-set.
+    The returned rows are checkpointed, so the seen-set directory can
+    go before they are read."""
+    import shutil as _shutil
     import tempfile as _tempfile
-    import uuid as _uuid
 
     from asset_prices_parquet_saver_spark.operators import urls as url_ops
 
     u = _synthetic_urls(spark, sf_dir)
-    table = "url_frontier_gate_" + _uuid.uuid4().hex[:12]
+    seen = _tempfile.mkdtemp(prefix="url_frontier_gate_")
     try:
         url_ops.frontier_filter(
-            spark, u.filter(F.col("doc_id") < 250), table, "url", "doc_id"
+            spark, u.filter(F.col("doc_id") < 250), seen, "url", "doc_id"
         )
         return url_ops.frontier_filter(
-            spark, u.filter(F.col("doc_id") >= 250), table, "url", "doc_id",
+            spark, u.filter(F.col("doc_id") >= 250), seen, "url", "doc_id",
             append=False,
         )
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        _shutil.rmtree(seen, ignore_errors=True)
 
 
 # --- J4 generalization: three-clause MERGE INTO (matched-update /

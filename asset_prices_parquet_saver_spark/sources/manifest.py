@@ -57,11 +57,19 @@ LOCK_TIMEOUT_SECONDS = 600.0
 
 
 @contextlib.contextmanager
-def path_lock(lock: str):
-    """O_CREAT|O_EXCL advisory lock on an arbitrary lock-file path —
-    the POSIX atomic-claim primitive this module's commit lock is built
-    on, exposed for other local-FS state mutators (the bucketed band
-    index's append/compaction path takes one per table)."""
+def _commit_lock(table: str):
+    """Serialize committers of one table on a local filesystem.
+
+    ``os.replace`` publishes atomically but last-writer-wins: two
+    concurrent committers would both read the OLD manifest and the
+    second publish would silently drop the first one's segment list
+    (lost update — fatal for append-log tables). The whole
+    read-manifest → write-segment → publish sequence runs under an
+    O_CREAT|O_EXCL lock file (the POSIX atomic-claim primitive).
+    Against S3/GCS the lock is unnecessary — the publish becomes a
+    conditional PUT (if-match), turning races into first-writer-wins
+    errors."""
+    lock = _manifest_path(table) + ".lock"
     deadline = time.monotonic() + LOCK_TIMEOUT_SECONDS
     while True:
         try:
@@ -86,22 +94,6 @@ def path_lock(lock: str):
             os.remove(lock)
         except OSError:
             pass
-
-
-@contextlib.contextmanager
-def _commit_lock(table: str):
-    """Serialize committers of one table on a local filesystem.
-
-    ``os.replace`` publishes atomically but last-writer-wins: two
-    concurrent committers would both read the OLD manifest and the
-    second publish would silently drop the first one's segment list
-    (lost update — fatal for append-log tables). The whole
-    read-manifest → write-segment → publish sequence runs under a
-    :func:`path_lock`. Against S3/GCS the lock is unnecessary — the
-    publish becomes a conditional PUT (if-match), turning races into
-    first-writer-wins errors."""
-    with path_lock(_manifest_path(table) + ".lock"):
-        yield
 
 
 def _manifest_path(table: str) -> str:
@@ -175,16 +167,12 @@ def _all_version_dirs(table: str) -> list[int]:
 
 def _legacy_files(table: str) -> list[str]:
     """Loose pre-manifest data files, including Hive-partitioned
-    (``key=value``) subdirectories — everything except snapshot dirs
-    and the DataSource writer's ``_staging`` scratch space."""
+    (``key=value``) subdirectories — everything except snapshot dirs."""
     out: list[str] = []
     for root, dirs, files in os.walk(table):
         if root == table:
             dirs[:] = [
-                d
-                for d in dirs
-                if not (d.startswith("v") and d[1:].isdigit())
-                and d != "_staging"
+                d for d in dirs if not (d.startswith("v") and d[1:].isdigit())
             ]
         out.extend(
             os.path.join(root, f) for f in files if f.endswith(".parquet")
@@ -350,126 +338,88 @@ def _commit(
     """
     os.makedirs(table, exist_ok=True)
     with _commit_lock(table):
-        return _commit_under_lock(
-            df, table, append, txn, stats_cols, expect_version, meta
-        )
-
-
-def _commit_under_lock(
-    df: DataFrame,
-    table: str,
-    append: bool,
-    txn: tuple[str, int] | None,
-    stats_cols: list[str] | None = None,
-    expect_version: int | None = None,
-    meta: dict | None = None,
-) -> int:
-    return _publish_under_lock(
-        lambda seg_path: df.write.mode("overwrite").parquet(seg_path),
-        table, append, txn, stats_cols, expect_version, meta,
-    )
-
-
-def _publish_under_lock(
-    materialize,
-    table: str,
-    append: bool,
-    txn: tuple[str, int] | None,
-    stats_cols: list[str] | None = None,
-    expect_version: int | None = None,
-    meta: dict | None = None,
-) -> int:
-    """The commit sequence with segment materialization abstracted:
-    ``materialize(seg_path)`` must populate the new segment directory —
-    either a Spark parquet write (:func:`_commit_under_lock`) or a move
-    of executor-staged files (:func:`commit_staged_files`). Everything
-    else (txn idempotence, version numbering, manifest publish, GC) is
-    identical."""
-    prev = _read_manifest(table)
-    if expect_version is not None:
-        cur = None if prev is None else int(prev["version"])
-        if cur != expect_version:
-            raise CommitConflict(
-                f"{table}: expected version {expect_version}, found {cur} — "
-                "a concurrent commit landed; re-read and retry"
+        prev = _read_manifest(table)
+        if expect_version is not None:
+            cur = None if prev is None else int(prev["version"])
+            if cur != expect_version:
+                raise CommitConflict(
+                    f"{table}: expected version {expect_version}, found "
+                    f"{cur} — a concurrent commit landed; re-read and retry"
+                )
+        if txn is not None:
+            app_id, txn_v = txn
+            applied = ((prev or {}).get("txn") or {}).get(app_id, -1)
+            if int(applied) >= int(txn_v):
+                return int(prev["version"])  # epoch already applied — no-op
+        if prev is None and append and _legacy_files(table):
+            raise ValueError(
+                f"append commit onto legacy directory {table}: absorb the "
+                "loose files with a rewrite commit_versioned first"
             )
-    if txn is not None:
-        app_id, txn_v = txn
-        if int(((prev or {}).get("txn") or {}).get(app_id, -1)) >= int(txn_v):
-            return int(prev["version"])  # epoch already applied — no-op
-    if prev is None and append and _legacy_files(table):
-        raise ValueError(
-            f"append commit onto legacy directory {table}: absorb the loose "
-            "files with a rewrite commit_versioned first"
-        )
-    prev_segments = prev["segments"] if prev else []
-    seen = _all_version_dirs(table)
-    new_v = max([(prev or {}).get("version", 0), *seen, 0]) + 1
-    new_seg = f"v{new_v:08d}"
-    # the segment lands directly at its final, never-reused path; the
-    # source-of-truth for readers is still the old manifest until the
-    # publish below, so a failure anywhere in this write is invisible
-    materialize(os.path.join(table, new_seg))
-    segments = [*prev_segments, new_seg] if append else [new_seg]
-    doc = {"version": new_v, "segments": segments}
-    # application metadata rides IN the manifest document, so it is
-    # published in the same atomic os.replace as the segment list — a
-    # crash can never separate state from the metadata describing it
-    # (the MV spec rode in a sibling file before; the legacy sweep
-    # below deleted it every commit, and a crash between commit and
-    # spec-rewrite bricked the view). None = carry the previous doc's
-    # metadata forward (appends, compaction); a dict replaces it.
-    eff_meta = meta if meta is not None else (prev or {}).get("meta")
-    if eff_meta is not None:
-        doc["meta"] = eff_meta
-    # segment-level zone map: carried forward on append (old segments
-    # are immutable), rebuilt from scratch on rewrite
-    stats = dict((prev or {}).get("stats") or {}) if append else {}
-    if stats_cols:
-        seg_stats = _segment_stats(table, new_seg, stats_cols)
-        if seg_stats:
-            stats[new_seg] = seg_stats
-    stats = {s: v for s, v in stats.items() if s in segments}
-    if stats:
-        doc["stats"] = stats
-    txns = dict((prev or {}).get("txn") or {})
-    if txn is not None:
-        txns[txn[0]] = int(txn[1])
-    if txns:
-        doc["txn"] = txns
-    _write_json_atomic(_manifest_path(table), doc)
-    # immutable history copy for time-travel reads (small; never GC'd);
-    # same tmp+replace path so a crash cannot leave a torn .vN copy
-    _write_json_atomic(_manifest_path(table) + f".v{new_v:08d}", doc)
-    # ---- post-publish GC (best-effort; failures leave only garbage) --
-    live = {int(s[1:]) for s in segments} | {int(s[1:]) for s in prev_segments}
-    for v in _all_version_dirs(table):
-        if v not in live:
-            shutil.rmtree(_version_dir(table, v), ignore_errors=True)
-    # legacy sweep: once a manifest exists, everything in the table dir
-    # that is neither a segment nor the manifest is superseded data
-    # (loose part files, Hive partition dirs, _SUCCESS markers).
-    # DEFERRED past the transition commit: the FIRST versioned commit
-    # (prev is None) leaves the legacy files in place so an in-flight
-    # legacy reader (whose plan pinned those exact file paths) survives
-    # it — the same one-commit grace the segment GC gives snapshot
-    # readers; the next commit sweeps them.
-    if prev is not None:
-        for n in os.listdir(table):
-            if n == MANIFEST or n.startswith(MANIFEST + "."):
-                continue
-            if n.startswith("v") and n[1:].isdigit():
-                continue
-            if n == "_staging":
-                # DataSource-writer scratch: may hold ANOTHER in-flight
-                # write's staged files — each writer cleans its own
-                continue
-            p = os.path.join(table, n)
-            try:
-                shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
-            except OSError:
-                pass
-    return new_v
+        prev_segments = prev["segments"] if prev else []
+        seen = _all_version_dirs(table)
+        new_v = max([(prev or {}).get("version", 0), *seen, 0]) + 1
+        new_seg = f"v{new_v:08d}"
+        # the segment lands directly at its final, never-reused path; the
+        # source-of-truth for readers is still the old manifest until the
+        # publish below, so a failure anywhere in this write is invisible
+        df.write.mode("overwrite").parquet(os.path.join(table, new_seg))
+        segments = [*prev_segments, new_seg] if append else [new_seg]
+        doc = {"version": new_v, "segments": segments}
+        # application metadata rides IN the manifest document, so it is
+        # published in the same atomic os.replace as the segment list — a
+        # crash can never separate state from the metadata describing it
+        # (the MV spec rode in a sibling file before; the legacy sweep
+        # below deleted it every commit, and a crash between commit and
+        # spec-rewrite bricked the view). None = carry the previous doc's
+        # metadata forward (appends, compaction); a dict replaces it.
+        eff_meta = meta if meta is not None else (prev or {}).get("meta")
+        if eff_meta is not None:
+            doc["meta"] = eff_meta
+        # segment-level zone map: carried forward on append (old segments
+        # are immutable), rebuilt from scratch on rewrite
+        stats = dict((prev or {}).get("stats") or {}) if append else {}
+        if stats_cols:
+            seg_stats = _segment_stats(table, new_seg, stats_cols)
+            if seg_stats:
+                stats[new_seg] = seg_stats
+        stats = {s: v for s, v in stats.items() if s in segments}
+        if stats:
+            doc["stats"] = stats
+        txns = dict((prev or {}).get("txn") or {})
+        if txn is not None:
+            txns[txn[0]] = int(txn[1])
+        if txns:
+            doc["txn"] = txns
+        _write_json_atomic(_manifest_path(table), doc)
+        # immutable history copy for time-travel reads (small; never GC'd);
+        # same tmp+replace path so a crash cannot leave a torn .vN copy
+        _write_json_atomic(_manifest_path(table) + f".v{new_v:08d}", doc)
+        # ---- post-publish GC (best-effort; failures leave only garbage) --
+        live = {int(s[1:]) for s in [*segments, *prev_segments]}
+        for v in _all_version_dirs(table):
+            if v not in live:
+                shutil.rmtree(_version_dir(table, v), ignore_errors=True)
+        # legacy sweep: once a manifest exists, everything in the table dir
+        # that is neither a segment nor the manifest is superseded data
+        # (loose part files, Hive partition dirs, _SUCCESS markers).
+        # DEFERRED past the transition commit: the FIRST versioned commit
+        # (prev is None) leaves the legacy files in place so an in-flight
+        # legacy reader (whose plan pinned those exact file paths) survives
+        # it — the same one-commit grace the segment GC gives snapshot
+        # readers; the next commit sweeps them.
+        if prev is not None:
+            for n in os.listdir(table):
+                if n == MANIFEST or n.startswith(MANIFEST + "."):
+                    continue
+                if n.startswith("v") and n[1:].isdigit():
+                    continue
+                p = os.path.join(table, n)
+                try:
+                    shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
+                except OSError:
+                    pass
+        return new_v
 
 
 def commit_versioned(
@@ -507,36 +457,6 @@ def commit_append(
     into one segment when small files accumulate. Pass
     ``txn=(app_id, epoch)`` from foreachBatch for exactly-once appends."""
     return _commit(df, table, append=True, txn=txn, stats_cols=stats_cols)
-
-
-def commit_staged_files(
-    files: list[str],
-    table: str,
-    append: bool = True,
-    txn: tuple[str, int] | None = None,
-) -> int | None:
-    """Commit executor-staged parquet files as the next segment — the
-    publish half of a DataSourceV2-style write (the Iceberg shape: tasks
-    write immutable data files, ONE driver-side metadata swap commits
-    them all). ``files`` are moved (``os.replace``, same filesystem)
-    into the new immutable segment directory under the commit lock,
-    then the manifest publishes exactly as a DataFrame commit would —
-    txn idempotence, version numbering, GC included.
-
-    Returns the new version, or None when ``files`` is empty (nothing
-    to commit — no manifest touch, so replayed empty epochs stay
-    no-ops without spending a txn record)."""
-    if not files:
-        return None
-
-    def materialize(seg_path: str) -> None:
-        os.makedirs(seg_path, exist_ok=True)
-        for f in files:
-            os.replace(f, os.path.join(seg_path, os.path.basename(f)))
-
-    os.makedirs(table, exist_ok=True)
-    with _commit_lock(table):
-        return _publish_under_lock(materialize, table, append, txn)
 
 
 def delete_rows(

@@ -1,4 +1,5 @@
-"""Managed-table hygiene for the bucketed index writers.
+"""Managed-table hygiene for the bucketed index builders
+(``dedup.build_ensemble_index``, ``text.build_positional_index``).
 
 A killed JVM can leave a managed table's warehouse directory
 (``<warehouse>/<table>/``) on disk while a fresh Derby catalog has no
@@ -45,36 +46,3 @@ def heal_table_location(spark: SparkSession, *tables: str) -> None:
         if fs.exists(path):
             fs.delete(path, True)
 
-
-def ensure_bucketed_table(
-    spark: SparkSession,
-    table: str,
-    schema: str,
-    keys: tuple[str, ...],
-    num_buckets: int = 32,
-) -> None:
-    """Create ``table`` if absent as an empty managed table with
-    ``schema``, bucketed and sorted by ``keys`` — the probe join keys
-    of a per-batch index (the substring window index, the URL
-    seen-set), so index files are hash-partitioned on disk and a probe
-    reads them in place.
-
-    Recovery before the create: heal an orphaned directory left by a
-    killed run; then, if the ``<table>_compacting`` staging table
-    exists, a compaction died between its DROP and RENAME and staging
-    holds the ONLY copy of the index — rename it back. Creating a
-    fresh empty table there would silently forget every indexed row."""
-    if spark.catalog.tableExists(table):
-        return
-    heal_table_location(spark, table)
-    staging = f"{table}_compacting"
-    if spark.catalog.tableExists(staging):
-        spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-        return
-    (
-        spark.createDataFrame([], schema)
-        .write.bucketBy(num_buckets, *keys)
-        .sortBy(*keys)
-        .mode("overwrite")
-        .saveAsTable(table)
-    )

@@ -344,15 +344,49 @@ def test_batch_txn_params_change_txn_identity(spark):
     assert t07 == inc.batch_txn(docs, "doc_id", "text", params=(0.7,))
 
 
+
+
 # ---------------- incremental exact-substring dedup (window index)
 
-def test_substring_increment_matches_from_scratch(spark):
+def _windows(spark, path):
+    return manifest.read_versioned(spark, path, schema=inc.WINDOW_INDEX_SCHEMA)
+
+
+def _exchanges_over(plan: str, marker: str) -> list[str]:
+    """Exchange nodes on the path from the first plan line containing
+    ``marker`` up to the root of a ``executedPlan().toString()`` tree."""
+    lines = plan.splitlines()
+    at = next(i for i, line in enumerate(lines) if marker in line)
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    d, out = depth(lines[at]), []
+    for line in reversed(lines[:at]):
+        if depth(line) < d:
+            d = depth(line)
+            if "Exchange" in line:
+                out.append(line.strip())
+    return out
+
+
+def _replay_last_epoch(ckpt: str) -> None:
+    """Forget the last epoch's commit-log entry: the state a query
+    killed after its sink ran but before Spark logged the epoch done.
+    The restarted query re-runs that epoch with the same id and rows."""
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+
+
+def test_substring_increment_matches_from_scratch(spark, tmp_path):
     """Batch-vs-index spans must equal the from-scratch
     duplicated_spans over corpus ∪ batch, restricted to batch ids."""
     from asset_prices_parquet_saver_spark.operators import dedup
 
-    tbl = "winidx_test_equiv"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    tbl = str(tmp_path / "winidx")
     corpus = spark.createDataFrame(
         [
             Row(doc_id=0, text="a b c d e f g corpus tail"),
@@ -369,35 +403,27 @@ def test_substring_increment_matches_from_scratch(spark):
         ],
         "doc_id long, text string",
     )
-    try:
-        # seed the index with the corpus windows
-        inc.substring_increment_bucketed(
-            spark, corpus, tbl, k=5, num_buckets=4
-        )
-        got = {
-            (r.id, r.span_start, r.span_end, r.span_tokens)
-            for r in inc.substring_increment_bucketed(
-                spark, batch, tbl, k=5, num_buckets=4
-            ).collect()
-        }
-        ref = {
-            (r.id, r.span_start, r.span_end, r.span_tokens)
-            for r in dedup.duplicated_spans(
-                corpus.unionByName(batch), "doc_id", "text", k=5
-            ).collect()
-            if r.id >= 10
-        }
-        assert got == ref and got  # non-trivial and identical
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    # seed the index with the corpus windows
+    inc.substring_increment(spark, corpus, tbl, k=5)
+    got = {
+        (r.id, r.span_start, r.span_end, r.span_tokens)
+        for r in inc.substring_increment(spark, batch, tbl, k=5).collect()
+    }
+    ref = {
+        (r.id, r.span_start, r.span_end, r.span_tokens)
+        for r in dedup.duplicated_spans(
+            corpus.unionByName(batch), "doc_id", "text", k=5
+        ).collect()
+        if r.id >= 10
+    }
+    assert got == ref and got  # non-trivial and identical
 
 
-def test_substring_increment_replay_is_idempotent_on_results(spark):
+def test_substring_increment_replay_is_idempotent_on_results(spark, tmp_path):
     """Re-running the SAME batch after its append must return the same
     spans (its own indexed windows are excluded by the equal-id rule),
     not mark the whole batch duplicated."""
-    tbl = "winidx_test_replay"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    tbl = str(tmp_path / "winidx")
     batch = spark.createDataFrame(
         [
             Row(doc_id=1, text="m n o p q r shared run one"),
@@ -406,178 +432,163 @@ def test_substring_increment_replay_is_idempotent_on_results(spark):
         ],
         "doc_id long, text string",
     )
-    try:
-        first = {
-            (r.id, r.span_start, r.span_end)
-            for r in inc.substring_increment_bucketed(
-                spark, batch, tbl, k=5, num_buckets=4
-            ).collect()
-        }
-        replay = {
-            (r.id, r.span_start, r.span_end)
-            for r in inc.substring_increment_bucketed(
-                spark, batch, tbl, k=5, num_buckets=4
-            ).collect()
-        }
-        assert replay == first
-        assert {i for i, *_ in first} == {1, 2}  # doc 3 never flagged
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    first = {
+        (r.id, r.span_start, r.span_end)
+        for r in inc.substring_increment(spark, batch, tbl, k=5).collect()
+    }
+    replay = {
+        (r.id, r.span_start, r.span_end)
+        for r in inc.substring_increment(spark, batch, tbl, k=5).collect()
+    }
+    assert replay == first
+    assert {i for i, *_ in first} == {1, 2}  # doc 3 never flagged
 
 
-def test_substring_increment_probe_shuffles_only_the_batch(spark):
-    """The probe's index side must be the in-place bucketed scan: one
-    exchange total (the batch's), `Bucketed: true` on the index."""
-    from pyspark.sql import functions as F
-
+def test_substring_increment_probe_shuffles_only_the_batch(spark, tmp_path):
+    """With the index larger than the batch, the probe broadcasts the
+    checkpointed batch and streams the index scan: no Exchange of any
+    kind sits over the index FileScan. The batch is read from parquet,
+    as a file-stream micro-batch is, so the planner knows its size (a
+    frame built from Python rows reports an unknown size)."""
     from asset_prices_parquet_saver_spark.operators.dedup import window_rows
 
-    tbl = "winidx_test_plan"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    batch = spark.createDataFrame(
-        [Row(doc_id=1, text="a b c d e f g h i j")],
+    tbl = str(tmp_path / "winidx")
+    corpus = spark.createDataFrame(
+        [
+            Row(doc_id=i, text=" ".join(f"w{i}_{j}" for j in range(40)))
+            for i in range(50)
+        ],
         "doc_id long, text string",
     )
-    try:
-        inc.substring_increment_bucketed(spark, batch, tbl, k=5, num_buckets=4)
-        wins = window_rows(batch, "doc_id", "text", 5).localCheckpoint()
-        probe = (
-            wins.alias("a")
-            .hint("shuffle_hash")
-            .join(
-                spark.table(tbl).alias("b"),
-                (F.col("a.h") == F.col("b.h"))
-                & (F.col("a.id") != F.col("b.id")),
-            )
-        )
-        plan = probe._jdf.queryExecution().executedPlan().toString()
-        assert "ShuffledHashJoin" in plan
-        assert plan.count("Exchange") == 1
-        assert "Bucketed: true" in plan
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    inc.substring_increment(spark, corpus, tbl, k=5)
+    spark.createDataFrame(
+        [Row(doc_id=100, text="a b c d e f g h i j")],
+        "doc_id long, text string",
+    ).write.parquet(str(tmp_path / "batch"))
+    batch = spark.read.parquet(str(tmp_path / "batch"))
+    wins = window_rows(batch, "doc_id", "text", 5).localCheckpoint()
+    probe = inc._window_hits(wins, _windows(spark, tbl))
+    probe.collect()
+    plan = probe._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "BuildLeft" in plan
+    assert _exchanges_over(plan, "FileScan parquet") == []
 
 
-def test_compact_window_index_folds_files(spark):
-    tbl = "winidx_test_compact"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}_compacting")
-    try:
-        for i in range(3):  # three appends -> three file generations
-            batch = spark.createDataFrame(
-                [Row(doc_id=10 * i + j, text=f"w{i} x{j} common run of words {j}")
-                 for j in range(2)],
-                "doc_id long, text string",
-            )
-            inc.substring_increment_bucketed(spark, batch, tbl, k=5, num_buckets=4)
-        rows_before = sorted(
-            (r["h"], r["id"]) for r in spark.table(tbl).collect()
-        )
-        before, after = inc.compact_window_index(spark, tbl, num_buckets=4)
-        assert after < before
-        assert after <= 4  # at most one file per non-empty bucket
-        assert sorted(
-            (r["h"], r["id"]) for r in spark.table(tbl).collect()
-        ) == rows_before
-        # probes keep working against the compacted index
-        probe = spark.createDataFrame(
-            [Row(doc_id=99, text="w0 x0 common run of words 0")],
+def test_compact_window_index_folds_files(spark, tmp_path):
+    """manifest.compact_versioned folds the window index's append
+    segments into one and leaves its rows and probe results as they
+    were."""
+    tbl = str(tmp_path / "winidx")
+    for i in range(3):  # three appends -> three segments
+        batch = spark.createDataFrame(
+            [Row(doc_id=10 * i + j, text=f"w{i} x{j} common run of words {j}")
+             for j in range(2)],
             "doc_id long, text string",
         )
-        spans = inc.substring_increment_bucketed(
-            spark, probe, tbl, k=5, num_buckets=4
+        inc.substring_increment(spark, batch, tbl, k=5)
+    probe = spark.createDataFrame(
+        [
+            Row(doc_id=99, text="w0 x0 common run of words 0"),
+            Row(doc_id=98, text="prefix w2 x1 common run of words 1 tail"),
+            Row(doc_id=97, text="nothing here matches any indexed window"),
+        ],
+        "doc_id long, text string",
+    )
+
+    def spans():
+        return sorted(
+            tuple(r)
+            for r in inc.substring_increment(
+                spark, probe, tbl, k=5, append_windows=False
+            ).collect()
         )
-        assert spans.count() == 1  # verbatim dup of indexed doc 0
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}_compacting")
+
+    rows_before = sorted(tuple(r) for r in _windows(spark, tbl).collect())
+    spans_before = spans()
+    assert manifest.segment_count(tbl) == 3
+    manifest.compact_versioned(spark, tbl, schema=inc.WINDOW_INDEX_SCHEMA)
+    assert manifest.segment_count(tbl) == 1
+    assert sorted(tuple(r) for r in _windows(spark, tbl).collect()) == rows_before
+    assert spans() == spans_before
+    assert {r[0] for r in spans_before} == {98, 99}  # non-trivial probe
 
 
-def test_window_index_crash_window_recovery(spark):
-    """A compaction that dies between DROP TABLE and RENAME leaves the
-    only copy of the index in the _compacting staging table. Both
-    ensure_window_index and a rerun of compact_window_index must rename
-    it back into place — recreating an empty index there would silently
-    forget every indexed window."""
-    tbl = "winidx_test_crash"
-    staging = f"{tbl}_compacting"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    spark.sql(f"DROP TABLE IF EXISTS {staging}")
-    try:
-        df = spark.createDataFrame(
-            [Row(doc_id=i, text=t) for i, t in DOCS[:3]],
-            "doc_id long, text string",
-        )
-        inc.substring_increment_bucketed(spark, df, tbl, k=5, num_buckets=4)
-        rows = sorted((r["h"], r["id"]) for r in spark.table(tbl).collect())
-        assert rows
-        # simulate the crash window: staging holds the copy, main is gone
-        spark.sql(f"ALTER TABLE {tbl} RENAME TO {staging}")
-        inc.ensure_window_index(spark, tbl, num_buckets=4)
-        got = sorted((r["h"], r["id"]) for r in spark.table(tbl).collect())
-        assert got == rows  # history intact, NOT an empty re-create
-        assert not spark.catalog.tableExists(staging)
-        # same recovery inside a rerun of the compactor itself
-        spark.sql(f"ALTER TABLE {tbl} RENAME TO {staging}")
-        inc.compact_window_index(spark, tbl, num_buckets=4)
-        got2 = sorted((r["h"], r["id"]) for r in spark.table(tbl).collect())
-        assert got2 == rows
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {staging}")
-
-
-def test_compact_window_index_detects_concurrent_append(spark):
-    """An index append landing during the compaction rewrite was
-    historically dropped by the DROP+RENAME swap (lost update). The
-    pre-publish drift check must abort with CommitConflict, keep the
-    appended batch, and let a retry fold the merged state."""
+def test_compact_window_index_detects_concurrent_append(spark, tmp_path, monkeypatch):
+    """An index append landing between compaction's read and its
+    publish must not be folded away: compact_versioned is pinned to the
+    version it read, so it raises CommitConflict, the append survives,
+    and a retry folds the merged state."""
     import pytest
 
     from asset_prices_parquet_saver_spark.sources.manifest import CommitConflict
 
-    tbl = "winidx_test_cas"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}_compacting")
-    try:
-        for batch in (DOCS[:3], DOCS[3:7]):
-            df = spark.createDataFrame(
-                [Row(doc_id=i, text=t) for i, t in batch],
-                "doc_id long, text string",
-            )
-            inc.substring_increment_bucketed(spark, df, tbl, k=5, num_buckets=4)
+    tbl = str(tmp_path / "winidx")
+    for batch in (DOCS[:3], DOCS[3:7]):
+        df = spark.createDataFrame(
+            [Row(doc_id=i, text=t) for i, t in batch],
+            "doc_id long, text string",
+        )
+        inc.substring_increment(spark, df, tbl, k=5)
 
-        def concurrent_append():
-            late = spark.createDataFrame(
-                [Row(doc_id=777, text="a wholly novel concurrent document arrives")],
-                "doc_id long, text string",
-            )
-            inc.substring_increment_bucketed(spark, late, tbl, k=5, num_buckets=4)
+    publish = manifest.commit_versioned
 
-        inc._test_pre_publish_hook = concurrent_append
-        try:
-            with pytest.raises(CommitConflict):
-                inc.compact_window_index(spark, tbl, num_buckets=4)
-        finally:
-            inc._test_pre_publish_hook = None
+    def concurrent_append_then_publish(*args, **kwargs):
+        late = spark.createDataFrame(
+            [Row(doc_id=777, text="a wholly novel concurrent document arrives")],
+            "doc_id long, text string",
+        )
+        inc.substring_increment(spark, late, tbl, k=5)
+        return publish(*args, **kwargs)
 
-        ids = {r["id"] for r in spark.table(tbl).select("id").distinct().collect()}
-        assert 777 in ids  # the concurrent append survived
-        assert not spark.catalog.tableExists(f"{tbl}_compacting")
+    monkeypatch.setattr(manifest, "commit_versioned", concurrent_append_then_publish)
+    with pytest.raises(CommitConflict):
+        manifest.compact_versioned(spark, tbl, schema=inc.WINDOW_INDEX_SCHEMA)
+    monkeypatch.setattr(manifest, "commit_versioned", publish)
 
-        rows_before = sorted((r["h"], r["id"]) for r in spark.table(tbl).collect())
-        before, after = inc.compact_window_index(spark, tbl, num_buckets=4)
-        assert before > after
-        rows_after = sorted((r["h"], r["id"]) for r in spark.table(tbl).collect())
-        assert rows_after == rows_before
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}_compacting")
+    assert manifest.segment_count(tbl) == 3
+    rows_before = sorted(tuple(r) for r in _windows(spark, tbl).collect())
+    assert 777 in {r[1] for r in rows_before}  # the concurrent append survived
+    manifest.compact_versioned(spark, tbl, schema=inc.WINDOW_INDEX_SCHEMA)
+    assert manifest.segment_count(tbl) == 1
+    assert sorted(tuple(r) for r in _windows(spark, tbl).collect()) == rows_before
+
+
+def test_window_index_survives_orphaned_segment(spark, tmp_path):
+    """A writer killed mid-append leaves a segment directory that no
+    manifest names. Probes must not read it, and the next append must
+    number past it and garbage-collect it."""
+    tbl = str(tmp_path / "winidx")
+
+    def plant(seg: str) -> str:
+        d = os.path.join(tbl, seg)
+        os.makedirs(d, exist_ok=True)
+        with open(os.path.join(d, "part-orphan.parquet"), "wb") as fh:
+            fh.write(b"junk")  # a torn file: reading it would fail
+        return d
+
+    first = plant("v00000001")  # killed before the first publish
+    df = spark.createDataFrame(
+        [Row(doc_id=i, text=t) for i, t in DOCS[:3]], "doc_id long, text string"
+    )
+    inc.substring_increment(spark, df, tbl, k=5)  # reads no junk
+    assert manifest.current_version(tbl) == 2
+    assert not os.path.exists(first)
+    rows = sorted(tuple(r) for r in _windows(spark, tbl).collect())
+    assert rows
+
+    later = plant("v00000003")  # killed after a good commit
+    probe = spark.createDataFrame(
+        [Row(doc_id=50, text=DOCS[0][1])], "doc_id long, text string"
+    )
+    assert inc.substring_increment(spark, probe, tbl, k=5).count() == 1
+    assert manifest.current_version(tbl) == 4
+    assert not os.path.exists(later)
+    got = sorted(tuple(r) for r in _windows(spark, tbl).collect())
+    assert set(rows) < set(got)
 
 
 def test_streaming_substring_scrub_end_to_end(spark, tmp_path):
-    tbl = "winidx_test_stream"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    tbl = str(tmp_path / "winidx")
     corpus = str(tmp_path / "scrubbed")
     drop = tmp_path / "drop"
     drop.mkdir()
@@ -592,61 +603,45 @@ def test_streaming_substring_scrub_end_to_end(spark, tmp_path):
     stream = spark.readStream.schema("doc_id long, text string").parquet(
         str(drop / "all")
     )
-    try:
-        q = inc.run_streaming_substring_scrub(
-            spark,
-            stream,
-            tbl,
-            corpus,
-            k=5,
-            num_buckets=4,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            available_now=True,
-        )
-        q.awaitTermination(120)
-        got = {
-            r["doc_id"]: r["text"]
-            for r in manifest.read_versioned(
-                spark, corpus, schema="doc_id long, text string"
-            ).collect()
-        }
-        # every document kept; only the verbatim run excised
-        assert got == {
-            0: "tail1 tail2",
-            1: "pre1 pre2",
-            2: "q r s t u v w x y z",
-        }
-        # index invariant: the window index holds exactly the STORED
-        # (scrubbed) corpus's windows, so a from-scratch run over the
-        # saved corpus reproduces the streaming decisions
-        from asset_prices_parquet_saver_spark.operators.dedup import (
-            window_rows,
-        )
-
-        stored = manifest.read_versioned(
+    q = inc.run_streaming_substring_scrub(
+        spark,
+        stream,
+        tbl,
+        corpus,
+        k=5,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    q.awaitTermination(120)
+    got = {
+        r["doc_id"]: r["text"]
+        for r in manifest.read_versioned(
             spark, corpus, schema="doc_id long, text string"
-        )
-        expect = {
-            (r["h"], r["id"])
-            for r in window_rows(stored, "doc_id", "text", 5).collect()
-        }
-        indexed = {
-            (r["h"], r["id"]) for r in spark.table(tbl).collect()
-        }
-        assert indexed == expect
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        ).collect()
+    }
+    # every document kept; only the verbatim run excised
+    assert got == {
+        0: "tail1 tail2",
+        1: "pre1 pre2",
+        2: "q r s t u v w x y z",
+    }
+    # index invariant: the window index holds exactly the STORED
+    # (scrubbed) corpus's windows, so a from-scratch run over the
+    # saved corpus reproduces the streaming decisions
+    from asset_prices_parquet_saver_spark.operators.dedup import window_rows
+
+    stored = manifest.read_versioned(
+        spark, corpus, schema="doc_id long, text string"
+    )
+    expect = {
+        (r["h"], r["id"])
+        for r in window_rows(stored, "doc_id", "text", 5).collect()
+    }
+    indexed = {(r["h"], r["id"]) for r in _windows(spark, tbl).collect()}
+    assert indexed == expect
 
 
-def test_streaming_substring_scrub_across_batches(spark, tmp_path):
-    """Cross-batch scrubbing: a run indexed by batch 1 must be excised
-    from batch 2 — pins the parent-session refreshTable after the
-    clone-session index append (without it the parent's cached empty
-    listing makes every later batch probe see an empty index)."""
-    tbl = "winidx_test_stream2"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    corpus = str(tmp_path / "scrubbed2")
-    drop = tmp_path / "drop2"
+def _two_batch_scrub_stream(spark, drop):
     drop.mkdir()
     spark.createDataFrame(
         [Row(doc_id=0, text="a b c d e f g tail1 tail2")],
@@ -656,31 +651,75 @@ def test_streaming_substring_scrub_across_batches(spark, tmp_path):
         [Row(doc_id=1, text="pre1 pre2 a b c d e f g")],
         "doc_id long, text string",
     ).coalesce(1).write.parquet(str(drop / "b2"))
-    stream = (
+    return (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(str(drop / "*"))
     )
-    try:
+
+
+def test_streaming_substring_scrub_across_batches(spark, tmp_path):
+    """Cross-batch scrubbing: a run indexed by batch 1 must be excised
+    from batch 2 — each micro-batch's probe reads the index as the
+    previous epoch committed it."""
+    tbl = str(tmp_path / "winidx")
+    corpus = str(tmp_path / "scrubbed2")
+    stream = _two_batch_scrub_stream(spark, tmp_path / "drop2")
+    q = inc.run_streaming_substring_scrub(
+        spark,
+        stream,
+        tbl,
+        corpus,
+        k=5,
+        checkpoint_dir=str(tmp_path / "ckpt2"),
+        available_now=True,
+    )
+    q.awaitTermination(120)
+    got = {
+        r["doc_id"]: r["text"]
+        for r in manifest.read_versioned(
+            spark, corpus, schema="doc_id long, text string"
+        ).collect()
+    }
+    # doc 0 arrived first (b1 sorts before b2) and survives whole;
+    # doc 1's copy of the run must be excised against the index
+    assert got == {0: "a b c d e f g tail1 tail2", 1: "pre1 pre2"}
+
+
+def test_streaming_substring_scrub_epoch_replay_appends_nothing(spark, tmp_path):
+    """A query restarted after its last epoch's sink ran, but before
+    Spark logged the epoch done, re-runs that epoch: both commits are
+    skipped by their txn records, so the window index and the corpus
+    keep their segments and rows."""
+    tbl = str(tmp_path / "winidx")
+    corpus = str(tmp_path / "scrubbed")
+    ckpt = str(tmp_path / "ckpt")
+    stream = _two_batch_scrub_stream(spark, tmp_path / "drop")
+
+    def run():
         q = inc.run_streaming_substring_scrub(
-            spark,
-            stream,
-            tbl,
-            corpus,
-            k=5,
-            num_buckets=4,
-            checkpoint_dir=str(tmp_path / "ckpt2"),
+            spark, stream, tbl, corpus, k=5, checkpoint_dir=ckpt,
             available_now=True,
         )
         q.awaitTermination(120)
-        got = {
-            r["doc_id"]: r["text"]
-            for r in manifest.read_versioned(
-                spark, corpus, schema="doc_id long, text string"
-            ).collect()
-        }
-        # doc 0 arrived first (b1 sorts before b2) and survives whole;
-        # doc 1's copy of the run must be excised against the index
-        assert got == {0: "a b c d e f g tail1 tail2", 1: "pre1 pre2"}
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        return [(p["batchId"], p["numInputRows"]) for p in q.recentProgress]
+
+    def state():
+        return (
+            manifest.segment_count(tbl),
+            sorted(tuple(r) for r in _windows(spark, tbl).collect()),
+            manifest.segment_count(corpus),
+            sorted(
+                tuple(r)
+                for r in manifest.read_versioned(
+                    spark, corpus, schema="doc_id long, text string"
+                ).collect()
+            ),
+        )
+
+    run()
+    before = state()
+    assert before[0] == 2 and before[2] == 2  # one segment per epoch
+    _replay_last_epoch(ckpt)
+    assert any(b == 1 and n > 0 for b, n in run())  # epoch 1 ran again
+    assert state() == before

@@ -124,50 +124,46 @@ def test_domain_report_rates(spark):
     assert rows == {"example.com": (3, 2, 0.333333), "x.co": (1, 1, 0.0)}
 
 
-def test_frontier_filter_cross_batch_and_replay(spark):
-    tbl = "urlidx_test_frontier"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    try:
-        b1 = spark.createDataFrame(
-            [
-                Row(doc_id=1, url="https://www.example.com/a/"),
-                Row(doc_id=2, url="https://example.com/a"),  # same page as 1
-                Row(doc_id=3, url="https://example.com/b?utm_source=x"),
-            ],
-            "doc_id long, url string",
-        )
-        acc1 = urls.frontier_filter(spark, b1, tbl, "url", "doc_id")
-        assert sorted(r.doc_id for r in acc1.collect()) == [1, 3]
-        b2 = spark.createDataFrame(
-            [
-                Row(doc_id=9, url="HTTPS://EXAMPLE.com:443/a"),  # seen
-                Row(doc_id=10, url="https://example.com/b"),     # seen
-                Row(doc_id=11, url="https://example.com/c"),     # new
-            ],
-            "doc_id long, url string",
-        )
-        acc2 = urls.frontier_filter(spark, b2, tbl, "url", "doc_id")
-        assert [r.doc_id for r in acc2.collect()] == [11]
-        # replayed batch accepts nothing (its canonicals are indexed)
-        assert urls.frontier_filter(spark, b2, tbl, "url", "doc_id").count() == 0
-        # index holds exactly the accepted canonicals with claiming keys
-        idx = {(r.canon, r.first_key) for r in spark.table(tbl).collect()}
-        assert idx == {
-            ("https://example.com/a", 1),
-            ("https://example.com/b", 3),
-            ("https://example.com/c", 11),
-        }
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-
-
-def test_streaming_frontier_end_to_end(spark, tmp_path):
+def _seen(spark, path):
     from asset_prices_parquet_saver_spark.sources import manifest
 
-    tbl = "urlidx_test_stream"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    corpus = str(tmp_path / "crawl")
-    drop = tmp_path / "drop"
+    return manifest.read_versioned(spark, path, schema=urls.URL_INDEX_SCHEMA)
+
+
+def test_frontier_filter_cross_batch_and_replay(spark, tmp_path):
+    tbl = str(tmp_path / "seen")
+    b1 = spark.createDataFrame(
+        [
+            Row(doc_id=1, url="https://www.example.com/a/"),
+            Row(doc_id=2, url="https://example.com/a"),  # same page as 1
+            Row(doc_id=3, url="https://example.com/b?utm_source=x"),
+        ],
+        "doc_id long, url string",
+    )
+    acc1 = urls.frontier_filter(spark, b1, tbl, "url", "doc_id")
+    assert sorted(r.doc_id for r in acc1.collect()) == [1, 3]
+    b2 = spark.createDataFrame(
+        [
+            Row(doc_id=9, url="HTTPS://EXAMPLE.com:443/a"),  # seen
+            Row(doc_id=10, url="https://example.com/b"),     # seen
+            Row(doc_id=11, url="https://example.com/c"),     # new
+        ],
+        "doc_id long, url string",
+    )
+    acc2 = urls.frontier_filter(spark, b2, tbl, "url", "doc_id")
+    assert [r.doc_id for r in acc2.collect()] == [11]
+    # replayed batch accepts nothing (its canonicals are indexed)
+    assert urls.frontier_filter(spark, b2, tbl, "url", "doc_id").count() == 0
+    # index holds exactly the accepted canonicals with claiming keys
+    idx = {(r.canon, r.first_key) for r in _seen(spark, tbl).collect()}
+    assert idx == {
+        ("https://example.com/a", 1),
+        ("https://example.com/b", 3),
+        ("https://example.com/c", 11),
+    }
+
+
+def _two_batch_url_stream(spark, drop):
     drop.mkdir()
     spark.createDataFrame(
         [
@@ -183,24 +179,72 @@ def test_streaming_frontier_end_to_end(spark, tmp_path):
         ],
         "doc_id long, url string",
     ).coalesce(1).write.parquet(str(drop / "b2"))
-    stream = (
+    return (
         spark.readStream.schema("doc_id long, url string")
         .option("maxFilesPerTrigger", 1)
         .parquet(str(drop / "*"))
     )
-    try:
+
+
+def test_streaming_frontier_end_to_end(spark, tmp_path):
+    from asset_prices_parquet_saver_spark.sources import manifest
+
+    tbl = str(tmp_path / "seen")
+    corpus = str(tmp_path / "crawl")
+    stream = _two_batch_url_stream(spark, tmp_path / "drop")
+    q = urls.run_streaming_frontier(
+        spark, stream, tbl, corpus,
+        checkpoint_dir=str(tmp_path / "ckpt"), available_now=True,
+    )
+    q.awaitTermination(120)
+    got = sorted(
+        r.doc_id
+        for r in manifest.read_versioned(
+            spark, corpus, schema="doc_id long, url string"
+        ).collect()
+    )
+    # b1 sorts first: doc 1 claims /a; doc 3's copy rejected in b2
+    assert got == [1, 4]
+
+
+def test_streaming_frontier_epoch_replay_appends_nothing(spark, tmp_path):
+    """A query restarted after its last epoch's sink ran, but before
+    Spark logged the epoch done, re-runs that epoch: both commits are
+    skipped by their txn records, so the seen-set and the corpus keep
+    their segments and rows."""
+    from asset_prices_parquet_saver_spark.sources import manifest
+
+    tbl = str(tmp_path / "seen")
+    corpus = str(tmp_path / "crawl")
+    ckpt = tmp_path / "ckpt"
+    stream = _two_batch_url_stream(spark, tmp_path / "drop")
+
+    def run():
         q = urls.run_streaming_frontier(
-            spark, stream, tbl, corpus,
-            checkpoint_dir=str(tmp_path / "ckpt"), available_now=True,
+            spark, stream, tbl, corpus, checkpoint_dir=str(ckpt),
+            available_now=True,
         )
         q.awaitTermination(120)
-        got = sorted(
-            r.doc_id
-            for r in manifest.read_versioned(
-                spark, corpus, schema="doc_id long, url string"
-            ).collect()
+        return [(p["batchId"], p["numInputRows"]) for p in q.recentProgress]
+
+    def state():
+        return (
+            manifest.segment_count(tbl),
+            sorted(tuple(r) for r in _seen(spark, tbl).collect()),
+            manifest.segment_count(corpus),
+            sorted(
+                tuple(r)
+                for r in manifest.read_versioned(
+                    spark, corpus, schema="doc_id long, url string"
+                ).collect()
+            ),
         )
-        # b1 sorts first: doc 1 claims /a; doc 3's copy rejected in b2
-        assert got == [1, 4]
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+    run()
+    before = state()
+    assert before[0] == 2 and len(before[1]) == 2  # /a and /new
+    # forget epoch 1's commit-log entry, as a kill after the sink would
+    for name in ("1", ".1.crc"):
+        (ckpt / "commits" / name).unlink(missing_ok=True)
+    assert any(b == 1 and n > 0 for b, n in run())  # epoch 1 ran again
+    assert state() == before

@@ -14,9 +14,6 @@ from urllib.parse import urlparse
 from pyspark.sql import functions as F
 
 from asset_prices_parquet_saver_spark.operators import dedup
-from asset_prices_parquet_saver_spark.operators.incremental_dedup import (
-    ensure_window_index,
-)
 from asset_prices_parquet_saver_spark.sources.warehouse import (
     heal_table_location,
 )
@@ -65,13 +62,3 @@ def test_build_ensemble_index_survives_orphaned_location(spark):
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
-
-def test_ensure_window_index_survives_orphaned_location(spark):
-    tbl = "heal_window_idx"
-    _plant_orphan(spark, tbl)
-    try:
-        ensure_window_index(spark, tbl, num_buckets=4)
-        assert spark.catalog.tableExists(tbl)
-        assert spark.table(tbl).count() == 0
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
