@@ -320,6 +320,10 @@ def run_streaming_dedup(
     replayed epoch skips any commit that already landed instead of
     double-appending, and a crash between the commits loses no
     document."""
+    if not checkpoint_dir:
+        # the txn records are keyed by epoch: without a checkpoint a new
+        # run restarts at epoch 0 and its commits would be skipped
+        raise ValueError("run_streaming_dedup needs checkpoint_dir")
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
@@ -340,9 +344,11 @@ def run_streaming_dedup(
             bands=bands,
         )
 
-    writer = docs_stream.writeStream.outputMode("append").foreachBatch(handle)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
+    writer = (
+        docs_stream.writeStream.outputMode("append")
+        .foreachBatch(handle)
+        .option("checkpointLocation", checkpoint_dir)
+    )
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
@@ -467,11 +473,19 @@ def run_streaming_substring_scrub(
     replay-deterministic (a replayed batch's own indexed windows are
     excluded by the equal-id rule), so a crash between the two commits
     re-runs to the same scrubbed rows, skips the corpus append and
-    applies the missing index append."""
+    applies the missing index append. Each epoch adds one index
+    segment; after the index append ``manifest.maybe_compact`` folds
+    them into one once they pass its threshold, so probes read a
+    bounded number of segments."""
     from asset_prices_parquet_saver_spark.operators.dedup import (
         excise_spans,
         window_rows,
     )
+
+    if not checkpoint_dir:
+        # the txn records are keyed by epoch: without a checkpoint a new
+        # run restarts at epoch 0 and its commits would be skipped
+        raise ValueError("run_streaming_substring_scrub needs checkpoint_dir")
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
@@ -502,10 +516,14 @@ def run_streaming_substring_scrub(
             window_index,
             txn=("substring-windows", epoch_id),
         )
+        # one segment per epoch: fold them before probes read many
+        manifest.maybe_compact(spark, window_index, schema=WINDOW_INDEX_SCHEMA)
 
-    writer = docs_stream.writeStream.outputMode("append").foreachBatch(handle)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
+    writer = (
+        docs_stream.writeStream.outputMode("append")
+        .foreachBatch(handle)
+        .option("checkpointLocation", checkpoint_dir)
+    )
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()

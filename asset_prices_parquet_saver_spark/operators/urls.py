@@ -152,22 +152,6 @@ def domain_report(df: DataFrame, url_col: str) -> DataFrame:
 URL_INDEX_SCHEMA = "canon string, first_key long"
 
 
-def _seen_hits(batch_first: DataFrame, index: DataFrame) -> DataFrame:
-    """The batch canonicals the seen-set already holds. INNER join, not
-    anti: Spark broadcasts only the right side of an anti join, which
-    here is the O(seen URLs) index; an inner join lets the planner
-    broadcast the smaller side, which is the checkpointed batch once
-    the seen-set outgrows it, so the index scan streams through without
-    an exchange. The anti semantics come from the small hit-set's
-    second join (:func:`_frontier_accept`)."""
-    return (
-        batch_first.select("_canon")
-        .join(index, F.col("_canon") == F.col("canon"))
-        .select("_canon")
-        .distinct()
-    )
-
-
 def _frontier_accept(
     spark, new_docs: DataFrame, seen_index: str, url_col: str, key_col: str
 ) -> DataFrame:
@@ -180,7 +164,18 @@ def _frontier_accept(
     canon = new_docs.withColumn("_canon", canonical_url(F.col(url_col)))
     batch_first = exact_dedup(canon, ["_canon"], key_col).localCheckpoint()
     idx = manifest.read_versioned(spark, seen_index, schema=URL_INDEX_SCHEMA)
-    hits = _seen_hits(batch_first, idx)
+    # INNER join, not anti: Spark broadcasts only the right side of an
+    # anti join, which here is the O(seen URLs) index; an inner join
+    # lets the planner broadcast the smaller side, which is the
+    # checkpointed batch once the seen-set outgrows it, so the index
+    # scan streams through without an exchange. The anti semantics
+    # come from the small hit-set's second join.
+    hits = (
+        batch_first.select("_canon")
+        .join(idx, F.col("_canon") == F.col("canon"))
+        .select("_canon")
+        .distinct()
+    )
     return batch_first.join(hits, "_canon", "left_anti").localCheckpoint()
 
 
@@ -210,8 +205,8 @@ def frontier_filter(
     and returns the accepted rows with the batch's original columns.
 
     Scale shape: batch canonicalization is a narrow map; once the
-    seen-set is the larger side, its probe (:func:`_seen_hits`)
-    broadcasts the checkpointed batch and streams the index scan with
+    seen-set is the larger side, its probe (an inner join in
+    :func:`_frontier_accept`) broadcasts the checkpointed batch and streams the index scan with
     no exchange over it (a seen-set smaller than the batch is the side
     broadcast instead). Per-batch cost is O(batch) plus one pass over
     the index files; a batch too large to broadcast makes the join
@@ -245,7 +240,13 @@ def run_streaming_frontier(
     replays the batch, accepts the same rows (their canonicals are
     still absent from the index), skips the corpus append and applies
     the missing index append — no epoch loses or duplicates
-    documents."""
+    documents. Each epoch adds one seen-set segment; after the index
+    append ``manifest.maybe_compact`` folds them into one once they
+    pass its threshold, so probes read a bounded number of segments."""
+    if not checkpoint_dir:
+        # the txn records are keyed by epoch: without a checkpoint a new
+        # run restarts at epoch 0 and its commits would be skipped
+        raise ValueError("run_streaming_frontier needs checkpoint_dir")
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
@@ -259,10 +260,14 @@ def run_streaming_frontier(
             _seen_rows(accepted, key_col), seen_index,
             txn=("url-frontier-index", epoch_id),
         )
+        # one segment per epoch: fold them before probes read many
+        manifest.maybe_compact(spark, seen_index, schema=URL_INDEX_SCHEMA)
 
-    writer = docs_stream.writeStream.outputMode("append").foreachBatch(handle)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
+    writer = (
+        docs_stream.writeStream.outputMode("append")
+        .foreachBatch(handle)
+        .option("checkpointLocation", checkpoint_dir)
+    )
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()

@@ -4,6 +4,7 @@ reference, and the index must grow by append-log commits."""
 
 import os
 
+import pytest
 from pyspark.sql import DataFrame, Row
 
 from asset_prices_parquet_saver_spark.operators import incremental_dedup as inc
@@ -97,8 +98,6 @@ def test_incremental_matches_reference_and_appends(spark, tmp_path):
 
 
 def test_append_requires_absorbed_legacy(spark, tmp_path):
-    import pytest
-
     t = str(tmp_path / "tbl")
     spark.createDataFrame([(1,)], "x long").write.parquet(t)
     df = spark.createDataFrame([(2,)], "x long")
@@ -518,8 +517,6 @@ def test_compact_window_index_detects_concurrent_append(spark, tmp_path, monkeyp
     publish must not be folded away: compact_versioned is pinned to the
     version it read, so it raises CommitConflict, the append survives,
     and a retry folds the merged state."""
-    import pytest
-
     from asset_prices_parquet_saver_spark.sources.manifest import CommitConflict
 
     tbl = str(tmp_path / "winidx")
@@ -723,3 +720,13 @@ def test_streaming_substring_scrub_epoch_replay_appends_nothing(spark, tmp_path)
     _replay_last_epoch(ckpt)
     assert any(b == 1 and n > 0 for b, n in run())  # epoch 1 ran again
     assert state() == before
+
+
+@pytest.mark.parametrize(
+    "wrapper", [inc.run_streaming_dedup, inc.run_streaming_substring_scrub]
+)
+def test_streaming_wrappers_require_checkpoint(wrapper, tmp_path):
+    """Without a checkpoint a restarted query would reuse epoch ids
+    whose txn records already exist and skip its commits; refuse it."""
+    with pytest.raises(ValueError, match="checkpoint_dir"):
+        wrapper(None, None, str(tmp_path / "idx"), str(tmp_path / "corpus"))

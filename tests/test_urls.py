@@ -248,3 +248,37 @@ def test_streaming_frontier_epoch_replay_appends_nothing(spark, tmp_path):
         (ckpt / "commits" / name).unlink(missing_ok=True)
     assert any(b == 1 and n > 0 for b, n in run())  # epoch 1 ran again
     assert state() == before
+
+
+def test_streaming_frontier_requires_checkpoint(tmp_path):
+    """Without a checkpoint a restarted query would reuse epoch ids
+    whose txn records already exist and skip its commits; refuse it."""
+    with pytest.raises(ValueError, match="checkpoint_dir"):
+        urls.run_streaming_frontier(
+            None, None, str(tmp_path / "seen"), str(tmp_path / "crawl")
+        )
+
+
+def test_streaming_frontier_folds_index_segments(spark, tmp_path):
+    """Each epoch appends one seen-set segment; past maybe_compact's
+    threshold the stream folds them into one, rows unchanged."""
+    from asset_prices_parquet_saver_spark.sources import manifest
+
+    tbl = str(tmp_path / "seen")
+    for i in range(16):
+        manifest.commit_append(
+            spark.createDataFrame(
+                [(f"https://old.example/{i}", 100 + i)], urls.URL_INDEX_SCHEMA
+            ),
+            tbl,
+        )
+    assert manifest.segment_count(tbl) == 16
+    stream = _two_batch_url_stream(spark, tmp_path / "drop")
+    q = urls.run_streaming_frontier(
+        spark, stream, tbl, str(tmp_path / "crawl"),
+        checkpoint_dir=str(tmp_path / "ckpt"), available_now=True,
+    )
+    q.awaitTermination(120)
+    # epoch 0 made 17 segments and was folded to 1; epoch 1 appended one
+    assert manifest.segment_count(tbl) == 2
+    assert _seen(spark, tbl).count() == 18
